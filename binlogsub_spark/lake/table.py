@@ -41,11 +41,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from binlogsub_spark.operators.dedup import (
-    bucket_local_lww,
-    lww_reduce,
-    partial_lww_reduce,
-)
+from binlogsub_spark.operators.dedup import lww_reduce, partial_lww_reduce
 from binlogsub_spark.plans.envelope import MERGE_KEY, VERSION_COLUMNS
 
 
@@ -77,17 +73,10 @@ def bucket_expr(col, buckets: int):
 
 
 class LakeTable:
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        buckets: int = 32,
-        merge_strategy: str = "jvm",
-    ):
+    def __init__(self, spark: SparkSession, path: str, buckets: int = 32):
         self.spark = spark
         self.path = os.path.abspath(path)
         self.buckets = buckets
-        self.merge_strategy = merge_strategy
         self.manifest_dir = os.path.join(self.path, "_manifests")
         self.data_dir = os.path.join(self.path, "data")
         self.lineage_dir = os.path.join(self.path, "_lineage")
@@ -599,16 +588,13 @@ class LakeTable:
         Returns {applied, superseded, replayed, snapshot_id}. Replaying an
         already-committed batch_id is a committed no-op.
 
-        Two merge strategies (EngineConfig.merge_strategy / ctor arg):
-
-        * ``jvm`` (default): salted partial reduce -> final hash-agg reduce
-          -> bucket repartition -> write. Three exchanges, all whole-stage
-          codegen; measured fastest in local mode, where exchange = memcpy.
-        * ``arrow_local``: salted partial reduce -> ONE bucket-colocation
-          exchange of (partials ∪ touched current rows) -> partition-local
-          Arrow finalize -> shuffle-free write. One fewer full exchange —
-          the right trade on a real cluster where exchanges cross the
-          network, at the cost of an Arrow/Python boundary pass.
+        One strategy, two full exchanges: the salted partial reduce
+        (``partial_lww_reduce``, map-side combine bounds a hot key's share)
+        -> ONE bucket-colocation exchange of (partials ∪ touched current
+        rows) -> a partition-local final LWW reduce (grouping by
+        ``(_bucket, key)`` is satisfied by the colocation's hash
+        partitioning) -> a shuffle-free write, one file per bucket dir
+        (plan-asserted in tests/test_plans.py).
 
         ``touched_buckets``: a pre-computed SUPERSET of the hash buckets the
         batch touches (``bucket_expr`` over the batch's merge keys). With it
@@ -733,27 +719,13 @@ class LakeTable:
             # double-ups rare; empty slots cost nothing; each bucket still
             # lands WHOLE in exactly one task (one file per bucket dir).
             n_parts = max(4 * (self.buckets if touched is None else len(touched)), 1)
-            if self.merge_strategy == "arrow_local":
-                colocated = unioned.repartition(n_parts, "_bucket")
-                merged = bucket_local_lww(colocated)
-            elif self.merge_strategy == "jvm_legacy":
-                # pre-r6 shape (final reduce BEFORE the bucket exchange):
-                # kept for A/B measurement only
-                merged = lww_reduce(unioned, salt=1).repartition(
-                    max(len(touched), 1), "_bucket"
-                )
-            else:
-                # one bucket-colocation exchange, then a PARTITION-LOCAL
-                # complete reduce: grouping by (_bucket, key) is satisfied
-                # by the repartition's HashPartitioning(_bucket), so the
-                # final LWW aggregation adds NO second exchange (one fewer
-                # full shuffle + one fewer pre-exchange sort pass than the
-                # legacy reduce-then-repartition shape; plan-asserted in
-                # tests/test_plans.py)
-                colocated = unioned.repartition(n_parts, "_bucket")
-                merged = lww_reduce(
-                    colocated, key=MERGE_KEY + ["_bucket"], salt=1
-                )
+            # one bucket-colocation exchange, then a PARTITION-LOCAL
+            # complete reduce: grouping by (_bucket, key) is satisfied by
+            # the repartition's HashPartitioning(_bucket), so the final LWW
+            # aggregation adds NO second exchange (plan-asserted in
+            # tests/test_plans.py)
+            colocated = unioned.repartition(n_parts, "_bucket")
+            merged = lww_reduce(colocated, key=MERGE_KEY + ["_bucket"], salt=1)
 
             snapshot_id = (snap["snapshot_id"] + 1) if snap else 1
             bucket_locations = dict(snap["bucket_locations"]) if snap else {

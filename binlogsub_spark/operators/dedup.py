@@ -73,9 +73,10 @@ def partial_lww_reduce(
 ) -> DataFrame:
     """Phase one only: salted per-(key, salt) winners. Collapses hot keys
     (a conversation holding 30% of a batch reduces to <= salt rows per
-    turn) while leaving the authoritative reduce to the bucket-local pass —
-    this is the 'salted repartitioning before the merge-apply stage'. The
-    output still has at most ``salt`` rows per key."""
+    turn) while leaving the authoritative reduce to the merge's
+    partition-local pass after its bucket-colocation exchange — this is
+    the 'salted repartitioning before the merge-apply stage'. The output
+    still has at most ``salt`` rows per key."""
     key = key or MERGE_KEY
     order = order or LWW_ORDER
     payload = [c for c in df.columns if c not in key]
@@ -93,36 +94,3 @@ def partial_lww_reduce(
         *key, *[F.col(f"_w.{c}").alias(c) for c in ordered_payload]
     ).select(*df.columns)
 
-
-def bucket_local_lww(
-    df: DataFrame,
-    key: list[str] | None = None,
-    order: list[str] | None = None,
-) -> DataFrame:
-    """Partition-local LWW finalization — NO shuffle.
-
-    Precondition: the DataFrame is already partitioned such that all rows
-    of a key live in one partition (repartition by ``_bucket`` where
-    bucket = f(conv_id) and conv_id is a key prefix). One vectorized pandas
-    pass per partition: stable sort by (order desc, _origin desc), keep the
-    first row per key. With this, the whole merge-apply is exactly TWO
-    full-data shuffles (salt partial reduce + bucket colocation) instead of
-    four (reduce, reduce, join, repartition)."""
-    key = key or MERGE_KEY
-    order = order or LWW_ORDER
-    sort_cols = list(order) + (["_origin"] if "_origin" in df.columns else [])
-    out_schema = df.schema
-    names = [f.name for f in out_schema.fields]
-
-    def _finalize(batches):
-        import pandas as pd
-
-        parts = [b for b in batches]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-        pdf = pdf.sort_values(sort_cols, ascending=False, kind="stable")
-        pdf = pdf.drop_duplicates(subset=key, keep="first")
-        yield pdf[names]
-
-    return df.mapInPandas(_finalize, schema=out_schema)

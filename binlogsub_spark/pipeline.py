@@ -11,28 +11,20 @@ decoded columns runs immediately after the Arrow decode — before shuffle.
 
 from __future__ import annotations
 
+import json
 import os
+import re
+import tempfile
+import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from binlogsub_spark.config import EngineConfig
-from binlogsub_spark.lake.table import LakeTable
+from binlogsub_spark.config import EngineConfig, SchemaScope
+from binlogsub_spark.lake.table import LakeTable, bucket_expr
 from binlogsub_spark.operators.dedup import partial_lww_reduce
-from binlogsub_spark.plans.envelope import OP_DELETE
-
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("batch_id", T.LongType()),
-        T.StructField("file_seq", T.IntegerType()),
-        T.StructField("max_log_pos", T.LongType()),
-        T.StructField("events", T.LongType()),
-        T.StructField("applied", T.LongType()),
-        T.StructField("skipped", T.LongType()),
-        T.StructField("replayed", T.BooleanType()),
-        T.StructField("snapshot_id", T.LongType()),
-    ]
-)
+from binlogsub_spark.plans.envelope import OP_DELETE, RAW_SCHEMA
 
 
 def scope_filter(events: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -53,24 +45,33 @@ def flatten_envelope(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     configured ordinal->name map (/root/reference/row.cc:61-89) happens
     here — only configured columns survive into the sink.
     """
+    img = F.when(F.col("op") == OP_DELETE, F.col("before")).otherwise(
+        F.col("after")
+    )
+    return events.select(*_upsert_projection(lambda c: img[c], cfg))
+
+
+def _upsert_projection(field, cfg: EngineConfig) -> list:
+    """The upsert row shape every decoder lands in: key, configured
+    payload (NULL on deletes), ``ts``, then the LWW version columns.
+    ``field(name)`` resolves a column of the change's row image."""
     is_del = F.col("op") == OP_DELETE
-    img = F.when(is_del, F.col("before")).otherwise(F.col("after"))
     payload = [
-        F.when(~is_del, img[c]).alias(c)
+        F.when(~is_del, field(c)).alias(c)
         for c in cfg.scope.column_names
         if c not in ("conv_id", "turn_idx", "ts")
     ]
-    return events.select(
-        img["conv_id"].alias("conv_id"),
-        img["turn_idx"].alias("turn_idx"),
+    return [
+        field("conv_id").alias("conv_id"),
+        field("turn_idx").alias("turn_idx"),
         *payload,
-        img["ts"].alias("ts"),
+        field("ts").alias("ts"),
         F.col("op").alias("_op"),
-        img["ts"].alias("_ts"),
+        field("ts").alias("_ts"),
         F.col("file_seq").alias("_file_seq"),
         F.col("log_pos").alias("_log_pos"),
         F.col("schema_version"),
-    )
+    ]
 
 
 def project_schema_epoch(upserts: DataFrame) -> DataFrame:
@@ -90,15 +91,145 @@ def prepare_upserts(events: DataFrame, cfg: EngineConfig) -> DataFrame:
 
 
 def _plan_parses_json(df: DataFrame) -> bool:
-    """True when the plan contains a ``from_json`` parse — the marker of an
-    expensive computed source whose re-evaluation per job dominates (the
-    JSON-lines landing zones). Detection reads the ANALYZED plan string
-    (cheap: no optimization run); any failure means "not detectably
-    expensive" rather than an error."""
+    """True when the analyzed plan holds a ``JsonToStructs`` node (a
+    ``from_json`` parse) — the marker of an expensive computed source whose
+    re-evaluation per job dominates (the JSON-lines landing zones). One JVM
+    call reads the plan's tree-pattern bits (no optimization run, no
+    per-node walk), so a column merely NAMED like ``from_json_x`` does not
+    count; any failure means "not detectably expensive" rather than an
+    error."""
     try:
-        return "from_json" in df._jdf.queryExecution().analyzed().toString()
+        trees = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+        json_to_struct = getattr(getattr(trees, "TreePattern$"), "MODULE$")
+        return df._jdf.queryExecution().analyzed().containsPattern(
+            json_to_struct.JSON_TO_STRUCT()
+        )
     except Exception:
         return False
+
+
+def _per_file(source: DataFrame, bucket_key=None, buckets: int = 0) -> list:
+    """Per-file_seq offset frontier + event counts (the per-partition
+    lineage of the north rule) over the pruned (file_seq, log_pos)
+    projection — never the payload columns. With ``bucket_key`` the same
+    pass hashes the merge key to its COW bucket (``bucket_expr``) and
+    collects each file's bucket SET: a superset of the buckets the merge
+    touches (superset because scope filtering happens later), which lets
+    the merge skip its own distinct-buckets job."""
+    sel = [F.col("file_seq"), F.col("log_pos")]
+    aggs = [F.max("log_pos").alias("max_log_pos"), F.count("*").alias("events")]
+    if bucket_key is not None:
+        sel.append(bucket_expr(bucket_key, buckets).alias("_b"))
+        aggs.append(F.collect_set("_b").alias("buckets"))
+    return source.select(*sel).groupBy("file_seq").agg(*aggs).collect()
+
+
+def _write_by_batch(df: DataFrame, batch_id: int, path: str) -> int:
+    """Idempotent side sink (dead letters, the MySQL transaction stash):
+    partition by batch_id and dynamically overwrite ONLY this batch's
+    partition, so a replayed micro-batch rewrites its own rows instead of
+    appending duplicates (the merge is checkpoint-idempotent; the side
+    sinks must be too). Returns the row count, observed on the write."""
+    obs = Observation()
+    (
+        df.observe(obs, F.count(F.lit(1)).alias("n"))
+        .withColumn("batch_id", F.lit(batch_id))
+        .write.partitionBy("batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite")
+        .parquet(path)
+    )
+    return obs.get["n"]
+
+
+def _commit(
+    table: LakeTable,
+    source: DataFrame,
+    batch_id: int,
+    cfg: EngineConfig,
+    frontier,
+    upserts,
+    persist: bool = False,
+    audit=None,
+    stage_timings: dict | None = None,
+) -> dict:
+    """The one commit core every apply path ends in (the reference's
+    "keyed sink + checkpoint" stage). A path supplies only what differs:
+
+    * ``frontier(source, fresh) -> (per_file, touched)``: the per-file
+      rows of :func:`_per_file` and a superset of the touched COW buckets,
+      or None to leave bucket discovery to the merge — on a ``fresh``
+      (empty) table the exact set rides the merge write's Observation;
+    * ``upserts(source) -> (partials, extra)``: pre-reduced upserts plus
+      path-specific metric keys merged into the result.
+
+    The core then runs, once and in this order: persist ``source`` (when
+    asked), frontier, watermark, ``LakeTable.merge``, the audit gate,
+    unpersist, compaction every ``cfg.compact_every`` snapshots,
+    ``append_lineage``, and the metrics dict. ``stage_timings`` receives
+    ``lineage_sec`` (the frontier jobs + their driver collect barrier) and
+    ``merge_sec`` (upsert build + MERGE + audit)."""
+    if persist:
+        source.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        t0 = time.time()
+        fresh = table.snapshot() is None
+        per_file, touched = frontier(source, fresh)
+        watermark = None
+        if per_file:
+            top = max(per_file, key=lambda r: (r["file_seq"], r["max_log_pos"]))
+            watermark = {"file_seq": top["file_seq"], "log_pos": top["max_log_pos"]}
+        t1 = time.time()
+        partials, extra = upserts(source)
+        res = table.merge(
+            partials,
+            batch_id=batch_id,
+            watermark=watermark,
+            pre_reduced=True,
+            touched_buckets=touched,
+            observe_buckets=fresh,
+            publish=audit is None,
+        )
+        if audit is not None and not res["replayed"]:
+            if audit(table, res["snapshot_id"]):
+                table.publish_staged(res["snapshot_id"])
+            else:
+                table.abort_staged(res["snapshot_id"])
+                raise ValueError(
+                    f"audit rejected batch {batch_id} (staged snapshot "
+                    f"{res['snapshot_id']} aborted; table state unchanged)"
+                )
+        if stage_timings is not None:
+            stage_timings["lineage_sec"] = round(t1 - t0, 3)
+            stage_timings["merge_sec"] = round(time.time() - t1, 3)
+    finally:
+        if persist:
+            source.unpersist(blocking=False)
+    applied, replayed, snapshot_id = (
+        res["applied"], res["replayed"], res["snapshot_id"]
+    )
+    if cfg.compact_every and not replayed and snapshot_id % cfg.compact_every == 0:
+        # bound the number of live commit dirs a read must union; commits
+        # stay immutable, so this is safe mid-stream (new snapshot only)
+        table.compact()
+    total = sum(r["events"] for r in per_file)
+    skipped = total - applied  # scope-filtered + LWW losers + replays
+    table.append_lineage(
+        [
+            (batch_id, r["file_seq"], r["max_log_pos"], r["events"], applied,
+             skipped, replayed, snapshot_id)
+            for r in per_file
+        ]
+    )
+    return {
+        "batch_id": batch_id,
+        "events": total,
+        "applied": applied,
+        "skipped": skipped,
+        "replayed": replayed,
+        "snapshot_id": snapshot_id,
+        **extra,
+    }
 
 
 def apply_batch(
@@ -106,7 +237,7 @@ def apply_batch(
     events: DataFrame,
     batch_id: int,
     cfg: EngineConfig | None = None,
-    persist_source: bool = False,
+    persist_source: bool | None = None,
     stage_timings: dict | None = None,
     audit=None,
 ) -> dict:
@@ -130,134 +261,43 @@ def apply_batch(
     same aggregation collects the touched-bucket SET per file, so the merge
     runs as ONE job over the source (no winners persist, no distinct-buckets
     job: exactly one full scan of the batch, zero block-store traffic).
-    ``persist_source=True`` is for callers whose input is an EXPENSIVE
-    computed plan (e.g. an in-flight encode), where recomputing it even
-    twice (pruned + full) would dominate.
+    On a first batch into an empty table the lineage job drops the bucket
+    hash entirely and the touched set rides the merge's Observation.
+
+    ``persist_source`` is tri-state. ``None`` (default) auto-detects: a
+    source whose plan parses JSON (a ``from_json`` / ``JsonToStructs``
+    node — the Debezium/Canal/Maxwell landing zones) is persisted so each
+    line is tokenized once instead of in both jobs (guide §4.4's
+    duplication trap — measured 3.96 s -> 3.24 s on a 2M-line Debezium
+    batch, local[32]); any other source is not. ``True`` always persists
+    (for callers whose input is some other EXPENSIVE computed plan, e.g.
+    an in-flight encode); ``False`` never does (e.g. memory-constrained
+    executors on a huge batch).
 
     ``stage_timings`` (a mutable dict) receives wall seconds of the two
     jobs — ``lineage_sec`` (the pruned per-file aggregation + its driver
     collect barrier) and ``merge_sec`` (the one-pass MERGE write) — so
     scaling runs can attribute parallel-efficiency loss to a stage."""
-    import time as _time
-
     cfg = cfg or EngineConfig()
-    from pyspark import StorageLevel
+    if persist_source is None:
+        persist_source = _plan_parses_json(events)
 
-    if not persist_source and _plan_parses_json(events):
-        # a from_json source (Debezium/Canal/Maxwell landing zones) would
-        # tokenize every line in BOTH jobs this function runs (the pruned
-        # lineage aggregation + the merge); persisting the decoded events
-        # makes the parse run exactly once (guide §4.4's duplication trap —
-        # measured 3.96 s -> 3.24 s on a 2M-line Debezium batch, local[32])
-        persist_source = True
-    if persist_source:
-        events.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        _t0 = _time.time()
-        # per-file_seq offset frontier + counts (the per-partition lineage
-        # of the north rule) — pruned projection, never the payload columns.
-        # The same pass hashes the merge key to its COW bucket: the union of
-        # per-file bucket sets is a superset of the buckets the merge will
-        # touch (superset because scope filtering happens later), which lets
-        # the merge skip its own distinct-buckets job entirely.
-        from binlogsub_spark.lake.table import bucket_expr
-
-        fresh = table.snapshot() is None
+    def frontier(src: DataFrame, fresh: bool):
         if fresh:
-            # first batch into an empty table: no current state to union,
-            # so the touched set can ride the merge write's Observation —
-            # the lineage aggregation drops the per-row bucket hash +
-            # collect_set entirely (merge observe mode, lake/table.py)
-            sel = ["file_seq", "log_pos"]
-            aggs = [
-                F.max("log_pos").alias("max_log_pos"),
-                F.count("*").alias("events"),
-            ]
-        else:
-            img_conv = F.when(
-                F.col("op") == OP_DELETE, F.col("before.conv_id")
-            ).otherwise(F.col("after.conv_id"))
-            sel = [
-                F.col("file_seq"),
-                F.col("log_pos"),
-                bucket_expr(img_conv, table.buckets).alias("_b"),
-            ]
-            aggs = [
-                F.max("log_pos").alias("max_log_pos"),
-                F.count("*").alias("events"),
-                F.collect_set("_b").alias("buckets"),
-            ]
-        per_file = events.select(*sel).groupBy("file_seq").agg(*aggs).collect()
-        total = sum(r["events"] for r in per_file)
-        touched = (
-            None if fresh else sorted({b for r in per_file for b in r["buckets"]})
-        )
-        watermark = None
-        if per_file:
-            top = max(per_file, key=lambda r: (r["file_seq"], r["max_log_pos"]))
-            watermark = {"file_seq": top["file_seq"], "log_pos": top["max_log_pos"]}
+            return _per_file(src), None
+        img_conv = F.when(
+            F.col("op") == OP_DELETE, F.col("before.conv_id")
+        ).otherwise(F.col("after.conv_id"))
+        per_file = _per_file(src, img_conv, table.buckets)
+        return per_file, sorted({b for r in per_file for b in r["buckets"]})
 
-        _t1 = _time.time()
-        upserts = prepare_upserts(events, cfg)
-        partials = partial_lww_reduce(upserts, salt=cfg.skew_salt)
-        res = table.merge(
-            partials,
-            batch_id=batch_id,
-            watermark=watermark,
-            pre_reduced=True,
-            touched_buckets=touched,
-            observe_buckets=touched is None,
-            publish=audit is None,
-        )
-        if audit is not None and not res["replayed"]:
-            if audit(table, res["snapshot_id"]):
-                table.publish_staged(res["snapshot_id"])
-            else:
-                table.abort_staged(res["snapshot_id"])
-                raise ValueError(
-                    f"audit rejected batch {batch_id} (staged snapshot "
-                    f"{res['snapshot_id']} aborted; table state unchanged)"
-                )
-        if stage_timings is not None:
-            stage_timings["lineage_sec"] = round(_t1 - _t0, 3)
-            stage_timings["merge_sec"] = round(_time.time() - _t1, 3)
-    finally:
-        if persist_source:
-            events.unpersist(blocking=False)
-    applied = res["applied"]
-    if (
-        cfg.compact_every
-        and not res["replayed"]
-        and res["snapshot_id"] % cfg.compact_every == 0
-    ):
-        # bound the number of live commit dirs a read must union; commits
-        # stay immutable, so this is safe mid-stream (new snapshot only)
-        table.compact()
-    metrics = {
-        "batch_id": batch_id,
-        "events": total,
-        "applied": applied,
-        "skipped": total - applied,  # scope-filtered + LWW losers + replays
-        "replayed": res["replayed"],
-        "snapshot_id": res["snapshot_id"],
-    }
+    def upserts(src: DataFrame):
+        return partial_lww_reduce(prepare_upserts(src, cfg), salt=cfg.skew_salt), {}
 
-    table.append_lineage(
-        [
-            (
-                batch_id,
-                r["file_seq"],
-                r["max_log_pos"],
-                r["events"],
-                applied,
-                total - applied,
-                res["replayed"],
-                res["snapshot_id"],
-            )
-            for r in per_file
-        ]
+    return _commit(
+        table, events, batch_id, cfg, frontier, upserts,
+        persist=persist_source, audit=audit, stage_timings=stage_timings,
     )
-    return metrics
 
 
 def bootstrap_from_snapshot(
@@ -329,12 +369,6 @@ def apply_batch_multi(
     ``table_name == name`` filter runs regardless, so even a broad shared
     scope cannot cross-route rows.
     """
-    import re
-
-    from pyspark import StorageLevel
-
-    from binlogsub_spark.config import SchemaScope
-
     if persist_source:
         events.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -351,6 +385,36 @@ def apply_batch_multi(
         if persist_source:
             events.unpersist(blocking=False)
     return out
+
+
+def _start(reader, fn, checkpoint_dir: str, available_now: bool):
+    """Run ``fn(batch_df, batch_id)`` per micro-batch of ``reader`` under
+    ``checkpoint_dir``; ``available_now`` drains what is there and stops."""
+    writer = reader.writeStream.foreachBatch(fn).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _liveness_monitor(spark, liveness, source_path: str, table: LakeTable):
+    """A LivenessConfig becomes a monitor wired with a Hadoop-FS probe of
+    ``source_path`` and a ``_heartbeats`` log next to the table; a
+    pre-built monitor (or None) passes through."""
+    from binlogsub_spark.liveness import (
+        LivenessConfig,
+        SourceLivenessMonitor,
+        hadoop_fs_probe,
+    )
+
+    if not isinstance(liveness, LivenessConfig):
+        return liveness
+    return SourceLivenessMonitor(
+        probe=lambda: hadoop_fs_probe(spark, source_path),
+        cfg=liveness,
+        heartbeat_dir=os.path.join(table.path, "_heartbeats"),
+    )
 
 
 def run_stream_multi(
@@ -380,12 +444,7 @@ def run_stream_multi(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_batch_multi(tables, batch_df, batch_id, cfgs)
 
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, _apply, checkpoint_dir, available_now)
 
 
 def run_stream(
@@ -435,24 +494,7 @@ def run_stream(
     cfg = cfg or EngineConfig()
     if source_schema is None:
         source_schema = spark.read.parquet(source_path).schema
-
-    monitor = None
-    if liveness is not None:
-        from binlogsub_spark.liveness import (
-            LivenessConfig,
-            SourceLivenessMonitor,
-            hadoop_fs_probe,
-        )
-
-        if isinstance(liveness, LivenessConfig):
-            monitor = SourceLivenessMonitor(
-                probe=lambda: hadoop_fs_probe(spark, source_path),
-                cfg=liveness,
-                heartbeat_dir=os.path.join(table.path, "_heartbeats"),
-            )
-        else:
-            monitor = liveness
-
+    monitor = _liveness_monitor(spark, liveness, source_path, table)
     reader = (
         spark.readStream.schema(source_schema)
         .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -466,12 +508,7 @@ def run_stream(
         if monitor is not None:
             monitor.on_batch(batch_id, m["events"])
 
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, _apply, checkpoint_dir, available_now)
 
 
 def run_stream_jsonlines(
@@ -496,24 +533,7 @@ def run_stream_jsonlines(
     path, so exactly-once, schema evolution and LWW semantics are
     byte-identical to the native paths."""
     cfg = cfg or EngineConfig()
-
-    monitor = None
-    if liveness is not None:
-        from binlogsub_spark.liveness import (
-            LivenessConfig,
-            SourceLivenessMonitor,
-            hadoop_fs_probe,
-        )
-
-        if isinstance(liveness, LivenessConfig):
-            monitor = SourceLivenessMonitor(
-                probe=lambda: hadoop_fs_probe(spark, source_path),
-                cfg=liveness,
-                heartbeat_dir=os.path.join(table.path, "_heartbeats"),
-            )
-        else:
-            monitor = liveness
-
+    monitor = _liveness_monitor(spark, liveness, source_path, table)
     reader = (
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .text(source_path)
@@ -527,12 +547,7 @@ def run_stream_jsonlines(
         if monitor is not None:
             monitor.on_batch(batch_id, m["events"])
 
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, _apply, checkpoint_dir, available_now)
 
 
 def run_stream_debezium(spark, source_path, table, checkpoint_dir, **kw):
@@ -577,43 +592,15 @@ def run_stream_maxwell(spark, source_path, table, checkpoint_dir, **kw):
     )
 
 
-def flat_to_upserts(
-    decoded: DataFrame, cfg: EngineConfig, pre_scoped: bool = False
-) -> DataFrame:
+def flat_to_upserts(decoded: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Decoded flat change records (codec.DECODED_SCHEMA) -> upsert rows.
 
-    The raw-path analog of flatten_envelope: scope filter FIRST (P2 before
-    any shuffle — /root/reference/packet.cc:201-205), then version columns.
-    ``pre_scoped=True`` skips the rlike filter — the decode kernel already
-    dropped out-of-scope frames on their scope byte (``scope_codes``), so
-    db_name/table_name need not even exist in ``decoded``."""
-    scoped = (
-        decoded
-        if pre_scoped
-        else decoded.where(
-            F.col("db_name").rlike(cfg.scope.db_regex)
-            & F.col("table_name").rlike(cfg.scope.table_regex)
-        )
-    )
-    is_del = F.col("op") == OP_DELETE
-    payload = [
-        F.when(~is_del, F.col(c)).alias(c)
-        for c in cfg.scope.column_names
-        if c not in ("conv_id", "turn_idx", "ts")
-    ]
-    return project_schema_epoch(
-        scoped.select(
-            "conv_id",
-            "turn_idx",
-            *payload,
-            F.col("ts"),
-            F.col("op").alias("_op"),
-            F.col("ts").alias("_ts"),
-            F.col("file_seq").alias("_file_seq"),
-            F.col("log_pos").alias("_log_pos"),
-            F.col("schema_version"),
-        )
-    )
+    The raw-path analog of flatten_envelope. No scope filter here: the
+    decode kernel already dropped out-of-scope frames on their scope byte
+    (``scope_codes``, P2 before any shuffle —
+    /root/reference/packet.cc:201-205), so db_name/table_name need not
+    even exist in ``decoded``."""
+    return project_schema_epoch(decoded.select(*_upsert_projection(F.col, cfg)))
 
 
 def apply_raw_batch(
@@ -641,7 +628,10 @@ def apply_raw_batch(
          DISTINCT bucket ids — at most ``table.buckets`` rows per Arrow
          batch cross into the JVM (the r4 shape shipped one (file_seq,
          log_pos, conv_id) row PER FRAME here and spent ~70% of the raw
-         path's wall time on it);
+         path's wall time on it). Skipped on a first batch into an empty
+         table: there is no current state to prune, so the merge observes
+         the EXACT set on its write job (one fewer pass over every
+         payload byte);
       3. full decode (pruned to the scoped columns, scope filter in-kernel
          on the scope byte) -> salted partial LWW -> one-pass MERGE.
     ``persist_source=True`` restores caching for callers whose input is an
@@ -652,8 +642,6 @@ def apply_raw_batch(
     dynamic-overwrite contract as the MySQL path) instead of letting the
     kernel's validity mask drop them silently; metrics then carry a
     ``dead_letter`` count."""
-    from pyspark import StorageLevel
-
     from binlogsub_spark.codec import (
         DECODED_SCHEMA,
         decode_raw_events,
@@ -663,107 +651,37 @@ def apply_raw_batch(
     )
 
     cfg = cfg or EngineConfig()
-    if persist_source:
-        raw_events.persist(StorageLevel.MEMORY_AND_DISK)
-    dead_count = None
-    try:
-        codes = scope_codes_for(cfg.scope.db_regex, cfg.scope.table_regex)
-        per_file = (
-            raw_events.select("file_seq", "log_pos")
-            .groupBy("file_seq")
-            .agg(
-                F.max("log_pos").alias("max_log_pos"),
-                F.count("*").alias("events"),
-            )
-            .collect()
-        )
-        total = sum(r["events"] for r in per_file)
-        if table.snapshot() is None:
-            # first batch into an empty table: the touched-bucket set is
-            # only needed BEFORE the job to prune the current-state union,
-            # and there is no current state — skip the bucket kernel pass
-            # (a full payload scan) and let the merge observe the EXACT
-            # set on its write job (one fewer pass over every payload byte)
-            touched = None
-        else:
-            touched = sorted(
-                r["bucket"]
-                for r in raw_touched_buckets_df(
-                    raw_events, table.buckets, scope_codes=codes
-                )
-                .distinct()
-                .collect()
-            )
-        watermark = None
-        if per_file:
-            top = max(per_file, key=lambda r: (r["file_seq"], r["max_log_pos"]))
-            watermark = {"file_seq": top["file_seq"], "log_pos": top["max_log_pos"]}
+    codes = scope_codes_for(cfg.scope.db_regex, cfg.scope.table_regex)
+    decodable = {f.name for f in DECODED_SCHEMA.fields}
+    need = [
+        c
+        for c in ["file_seq", "log_pos", "op", "schema_version", "ts"]
+        + [c for c in cfg.scope.column_names if c != "ts"]
+        if c in decodable
+    ]
 
-        decodable = {f.name for f in DECODED_SCHEMA.fields}
-        need = [
-            c
-            for c in ["file_seq", "log_pos", "op", "schema_version", "ts"]
-            + [c for c in cfg.scope.column_names if c != "ts"]
-            if c in decodable
-        ]
-        decode_src, skip_invalid = raw_events, True
+    def frontier(src: DataFrame, fresh: bool):
+        per_file = _per_file(src)
+        if fresh:
+            return per_file, None
+        touched = raw_touched_buckets_df(src, table.buckets, scope_codes=codes)
+        return per_file, sorted(r["bucket"] for r in touched.distinct().collect())
+
+    def upserts(src: DataFrame):
+        extra, skip_invalid = {}, True
         if dead_letter_path is not None:
-            from pyspark.sql import Observation
-
-            valid, dead = split_deadletter(raw_events)
-            obs = Observation()
-            dead = dead.observe(obs, F.count(F.lit(1)).alias("n"))
-            (
-                dead.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dead_letter_path)
-            )
-            dead_count = obs.get["n"]
-            decode_src, skip_invalid = valid, False  # already verified
+            src, dead = split_deadletter(src)
+            extra["dead_letter"] = _write_by_batch(dead, batch_id, dead_letter_path)
+            skip_invalid = False  # already verified
         decoded = decode_raw_events(
-            decode_src, columns=need, scope_codes=codes, skip_invalid=skip_invalid
+            src, columns=need, scope_codes=codes, skip_invalid=skip_invalid
         )
-        partials = partial_lww_reduce(
-            flat_to_upserts(decoded, cfg, pre_scoped=True), salt=cfg.skew_salt
-        )
-        res = table.merge(
-            partials,
-            batch_id=batch_id,
-            watermark=watermark,
-            pre_reduced=True,
-            touched_buckets=touched,
-            observe_buckets=touched is None,
-        )
-    finally:
-        if persist_source:
-            raw_events.unpersist(blocking=False)
-    applied = res["applied"]
-    if (
-        cfg.compact_every
-        and not res["replayed"]
-        and res["snapshot_id"] % cfg.compact_every == 0
-    ):
-        table.compact()
-    table.append_lineage(
-        [
-            (batch_id, r["file_seq"], r["max_log_pos"], r["events"], applied,
-             total - applied, res["replayed"], res["snapshot_id"])
-            for r in per_file
-        ]
+        partials = partial_lww_reduce(flat_to_upserts(decoded, cfg), salt=cfg.skew_salt)
+        return partials, extra
+
+    return _commit(
+        table, raw_events, batch_id, cfg, frontier, upserts, persist=persist_source
     )
-    metrics = {
-        "batch_id": batch_id,
-        "events": total,
-        "applied": applied,
-        "skipped": total - applied,
-        "replayed": res["replayed"],
-        "snapshot_id": res["snapshot_id"],
-    }
-    if dead_count is not None:
-        metrics["dead_letter"] = dead_count
-    return metrics
 
 
 def run_stream_raw(
@@ -779,8 +697,6 @@ def run_stream_raw(
     """Structured Streaming over the BINARY wire table (payload:binary):
     the full reference-equivalent path — framing columns outside the
     payload, Arrow decode inside foreachBatch."""
-    from binlogsub_spark.plans.envelope import RAW_SCHEMA
-
     cfg = cfg or EngineConfig()
     reader = (
         spark.readStream.schema(RAW_SCHEMA)
@@ -793,12 +709,7 @@ def run_stream_raw(
             table, batch_df, batch_id, cfg, dead_letter_path=dead_letter_path
         )
 
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, _apply, checkpoint_dir, available_now)
 
 
 # -------------------------------------------------- genuine MySQL frames --
@@ -808,8 +719,6 @@ def scope_registry(registry: dict, cfg: EngineConfig) -> dict:
     skipped inside the decode kernel before any value parse (the exact
     analog of the reference skipping row decode for unmatched tables,
     /root/reference/packet.cc:201-205)."""
-    import re
-
     db_re, tbl_re = re.compile(cfg.scope.db_regex), re.compile(cfg.scope.table_regex)
     return {
         tid: tm
@@ -899,7 +808,6 @@ def apply_mysql_batch(
     raw_frames: DataFrame,
     batch_id: int,
     cfg: EngineConfig | None = None,
-    registry: dict | None = None,
     name_map: dict | None = None,
     checksum: bool = True,
     registry_cache: dict | None = None,
@@ -912,11 +820,12 @@ def apply_mysql_batch(
     atomic_commits: bool = False,
     stash_path: str | None = None,
 ) -> dict:
-    """One micro-batch of GENUINE MySQL binlog frames: registry extract (or
-    reuse a pre-extracted one — cheaper per batch) -> scope filter at the
-    registry level -> broadcast -> vectorized wave decode -> salted LWW ->
-    COW MERGE. Frame counts in lineage include control events (table maps
-    etc.), matching how binlog positions advance over them.
+    """One micro-batch of GENUINE MySQL binlog frames: registry extract ->
+    scope filter at the registry level -> broadcast -> vectorized wave
+    decode -> salted LWW -> COW MERGE. Frame counts in lineage include
+    control events (table maps etc.), matching how binlog positions
+    advance over them. Bucket discovery is left to the merge (its
+    Observation on a fresh table, a distinct job over the winners after).
 
     ``registry_cache`` (a mutable dict) persists table maps ACROSS
     micro-batches — the reference's table-map cache (packet.cc:194-200):
@@ -956,8 +865,6 @@ def apply_mysql_batch(
     would otherwise leave the next batch's leading rows with a NULL
     gtid (un-taggable, un-skippable); the cached frontier seeds the
     as-of assignment instead."""
-    from pyspark import StorageLevel
-
     from binlogsub_spark.mysql_binlog import (
         decode_mysql_events,
         extract_table_maps,
@@ -965,90 +872,45 @@ def apply_mysql_batch(
     )
 
     cfg = cfg or EngineConfig()
-    n_deferred = None
+    deferred = {}
     if atomic_commits:
         from binlogsub_spark.mysql_binlog import split_uncommitted
-        from binlogsub_spark.plans.envelope import RAW_SCHEMA
 
-        spark = raw_frames.sparkSession
         if stash_path is not None:
             prev_dir = os.path.join(stash_path, f"batch_id={batch_id - 1}")
             if os.path.isdir(prev_dir):
                 raw_frames = (
-                    spark.read.schema(RAW_SCHEMA)
+                    raw_frames.sparkSession.read.schema(RAW_SCHEMA)
                     .parquet(prev_dir)
                     .unionByName(raw_frames)
                 )
-        committed, deferred = split_uncommitted(raw_frames, checksum=checksum)
+        raw_frames, uncommitted = split_uncommitted(raw_frames, checksum=checksum)
         if stash_path is not None:
-            from pyspark.sql import Observation
+            deferred["deferred"] = _write_by_batch(uncommitted, batch_id, stash_path)
 
-            obs_d = Observation()
-            (
-                deferred.observe(obs_d, F.count(F.lit(1)).alias("n"))
-                .withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(stash_path)
-            )
-            n_deferred = obs_d.get["n"]
-        raw_frames = committed
-    if persist_source:
-        raw_frames.persist(StorageLevel.MEMORY_AND_DISK)
-    dead_count = None
-    try:
-        per_file = (
-            raw_frames.select("file_seq", "log_pos")
-            .groupBy("file_seq")
-            .agg(F.max("log_pos").alias("max_log_pos"), F.count("*").alias("events"))
-            .collect()
-        )
-        total = sum(r["events"] for r in per_file)
-        watermark = None
-        if per_file:
-            top = max(per_file, key=lambda r: (r["file_seq"], r["max_log_pos"]))
-            watermark = {"file_seq": top["file_seq"], "log_pos": top["max_log_pos"]}
-
-        if registry is None:
-            registry = extract_table_maps(raw_frames, checksum=checksum)
-            if registry_cache is not None:
-                registry_cache.update(registry)
-                registry = dict(registry_cache)
+    def upserts(src: DataFrame):
+        extra = {}
+        registry = extract_table_maps(src, checksum=checksum)
+        if registry_cache is not None:
+            registry_cache.update(registry)
+            registry = dict(registry_cache)
         known_ids = set(registry)
         registry = scope_registry(registry, cfg)
         overrides = (
             override_columns_by_table(registry, name_map) if name_map else None
         )
-        decode_src, skip_invalid = raw_frames, True
+        decode_src, skip_invalid = src, True
         if dead_letter_path is not None:
-            from pyspark.sql import Observation
-
-            valid, dead = split_deadletter_mysql(
-                raw_frames, checksum=checksum,
+            decode_src, dead = split_deadletter_mysql(
+                src, checksum=checksum,
                 registry=registry, known_table_ids=known_ids,
             )
-            obs = Observation()
-            dead = dead.observe(obs, F.count(F.lit(1)).alias("n"))
-            # idempotent dead-letter sink: partition by batch_id and
-            # dynamically overwrite ONLY this batch's partition, so a
-            # replayed micro-batch rewrites its own rows instead of
-            # appending duplicates (the merge is checkpoint-idempotent;
-            # the dead-letter side must be too)
-            (
-                dead.withColumn("batch_id", F.lit(batch_id))
-                .write.partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(dead_letter_path)
-            )
-            dead_count = obs.get["n"]
-            decode_src, skip_invalid = valid, False  # already fully verified
+            extra["dead_letter"] = _write_by_batch(dead, batch_id, dead_letter_path)
+            skip_invalid = False  # already fully verified
         decoded = decode_mysql_events(
             decode_src, registry, column_overrides=overrides, checksum=checksum,
             skip_invalid=skip_invalid, known_table_ids=known_ids,
         )
-        gtid_exec_str = None
         if (
             gtid_lineage
             or skip_gtids is not None
@@ -1057,13 +919,13 @@ def apply_mysql_batch(
         ):
             from binlogsub_spark.mysql_binlog import assign_gtids, extract_gtids
 
-            gtids_df = extract_gtids(raw_frames, checksum=checksum)
+            gtids_df = extract_gtids(src, checksum=checksum)
             assign_src = gtids_df
             if gtid_cache:
                 # seed with the per-file GTID frontier of earlier batches:
                 # rows before this batch's first GTID frame belong to the
                 # previous batch's last (open) transaction
-                seed = raw_frames.sparkSession.createDataFrame(
+                seed = src.sparkSession.createDataFrame(
                     [(fs, lp, g) for fs, (lp, g) in gtid_cache.items()],
                     "file_seq int, log_pos long, gtid string",
                 )
@@ -1102,7 +964,7 @@ def apply_mysql_batch(
                     split_gtid,
                 )
 
-                gtid_exec_str = format_gtid_set(
+                extra["gtid_executed"] = format_gtid_set(
                     collect_gtid_set(
                         gtid_executed_intervals(
                             gtids_df.select(*split_gtid(F.col("gtid")))
@@ -1112,57 +974,34 @@ def apply_mysql_batch(
         partials = partial_lww_reduce(
             mysql_decoded_to_upserts(decoded, cfg), salt=cfg.skew_salt
         )
-        res = table.merge(
-            partials, batch_id=batch_id, watermark=watermark, pre_reduced=True,
-            # fresh table: one-job merge with the touched set observed on
-            # the write — skips the winners persist + distinct-buckets job
-            observe_buckets=table.snapshot() is None,
-        )
-    finally:
-        if persist_source:
-            raw_frames.unpersist(blocking=False)
-    applied = res["applied"]
-    if (
-        cfg.compact_every
-        and not res["replayed"]
-        and res["snapshot_id"] % cfg.compact_every == 0
-    ):
-        table.compact()
-    table.append_lineage(
-        [
-            (batch_id, r["file_seq"], r["max_log_pos"], r["events"], applied,
-             total - applied, res["replayed"], res["snapshot_id"])
-            for r in per_file
-        ]
+        return partials, {**extra, **deferred}
+
+    metrics = _commit(
+        table, raw_frames, batch_id, cfg, lambda src, fresh: (_per_file(src), None),
+        upserts, persist=persist_source,
     )
-    metrics = {
-        "batch_id": batch_id,
-        "events": total,
-        "applied": applied,
-        "skipped": total - applied,
-        "replayed": res["replayed"],
-        "snapshot_id": res["snapshot_id"],
-    }
-    if dead_count is not None:
-        metrics["dead_letter"] = dead_count
-    if gtid_exec_str is not None:
-        metrics["gtid_executed"] = gtid_exec_str
-    if n_deferred is not None:
-        metrics["deferred"] = n_deferred
+    if deferred:
         # stash partitions <= batch_id-2 can never be read again (batch N
         # only ever unions partition N-1); drop them driver-side AFTER the
         # merge committed so a replay window never loses its input
-        if stash_path is not None and os.path.isdir(stash_path):
-            import shutil
+        import shutil
 
-            for d in os.listdir(stash_path):
-                if d.startswith("batch_id="):
-                    try:
-                        if int(d.split("=", 1)[1]) <= batch_id - 2:
-                            shutil.rmtree(os.path.join(stash_path, d))
-                    except ValueError:
-                        pass
+        for d in os.listdir(stash_path) if os.path.isdir(stash_path) else ():
+            if d.startswith("batch_id="):
+                try:
+                    if int(d.split("=", 1)[1]) <= batch_id - 2:
+                        shutil.rmtree(os.path.join(stash_path, d))
+                except ValueError:
+                    pass
     return metrics
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Write-then-rename: readers (and a restart) never see a torn file."""
+    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def run_stream_mysql(
@@ -1196,11 +1035,12 @@ def run_stream_mysql(
     START are dropped before the merge — so a table restored onto a new
     source (different binlog file numbering, same GTIDs) resumes without
     double-applying, which a (file, position) watermark cannot express."""
-    import os
-    import tempfile
-
     from binlogsub_spark.mysql_binlog import registry_from_json, registry_to_json
-    from binlogsub_spark.plans.envelope import RAW_SCHEMA
+    from binlogsub_spark.operators.gtid import (
+        format_gtid_set,
+        gtid_set_union,
+        parse_gtid_set,
+    )
 
     cfg = cfg or EngineConfig()
     reader = (
@@ -1225,15 +1065,11 @@ def run_stream_mysql(
         # and its rows-events (or a restart) still tag the leading rows
         gtid_cache = {}
         if os.path.exists(gtid_pos_path):
-            import json as _json
-
             with open(gtid_pos_path) as f:
                 gtid_cache.update(
-                    {int(k): tuple(v) for k, v in _json.load(f).items()}
+                    {int(k): tuple(v) for k, v in json.load(f).items()}
                 )
     if gtid_auto_position:
-        from binlogsub_spark.operators.gtid import parse_gtid_set
-
         if os.path.exists(gtid_path):
             with open(gtid_path) as f:
                 executed_acc = parse_gtid_set(f.read())
@@ -1258,34 +1094,16 @@ def run_stream_mysql(
         )
         os.makedirs(checkpoint_dir, exist_ok=True)
         if gtid_auto_position and m.get("gtid_executed"):
-            from binlogsub_spark.operators.gtid import (
-                format_gtid_set,
-                gtid_set_union,
-                parse_gtid_set,
-            )
-
             executed_acc = gtid_set_union(
                 executed_acc, parse_gtid_set(m["gtid_executed"])
             )
-            fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".gtids")
-            with os.fdopen(fd, "w") as f:
-                f.write(format_gtid_set(executed_acc))
-            os.replace(tmp, gtid_path)  # atomic + idempotent (set union)
+            # idempotent on replay: set union
+            _atomic_write(gtid_path, format_gtid_set(executed_acc))
         if gtid_cache:
-            import json as _json
+            _atomic_write(
+                gtid_pos_path,
+                json.dumps({str(k): list(v) for k, v in gtid_cache.items()}),
+            )
+        _atomic_write(maps_path, registry_to_json(registry_cache))
 
-            fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".gpos")
-            with os.fdopen(fd, "w") as f:
-                f.write(_json.dumps({str(k): list(v) for k, v in gtid_cache.items()}))
-            os.replace(tmp, gtid_pos_path)
-        fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".maps")
-        with os.fdopen(fd, "w") as f:
-            f.write(registry_to_json(registry_cache))
-        os.replace(tmp, maps_path)  # atomic: readers never see a torn file
-
-    writer = reader.writeStream.foreachBatch(_apply).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(reader, _apply, checkpoint_dir, available_now)

@@ -72,7 +72,6 @@ def main(argv: list[str] | None = None) -> int:
         "their binlog file's last XID are stashed (never half-applied) "
         "and land when the commit marker arrives",
     )
-    ap.add_argument("--merge-strategy", choices=["jvm", "arrow_local"], default="jvm")
     ap.add_argument(
         "--gtid", action="store_true",
         help="mysql mode: tag applied rows with their transaction GTID "
@@ -244,9 +243,7 @@ def main(argv: list[str] | None = None) -> int:
         else:
             write_binlog(spark, args.source, params, n_files=16)
 
-    table = LakeTable(
-        spark, args.table, buckets=args.buckets, merge_strategy=args.merge_strategy
-    )
+    table = LakeTable(spark, args.table, buckets=args.buckets)
     extra_kw = {}
     runner = run_stream
     if args.mysql:

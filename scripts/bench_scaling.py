@@ -160,18 +160,14 @@ Analysis:
 - 1 -> 4 cores scales at ~{eff:.2f} because every heavy stage (columnar
   scan, filter/project, hash-agg partial+final LWW reduce, per-bucket
   parquet write) parallelizes by partition; the merge plan has exactly
-  three exchanges and no driver-side loops.
+  two full exchanges (salted partial reduce, bucket colocation) and no
+  driver-side loops.
 - Past ~8 threads on THIS single box, the exchanges hit the shared DRAM
   bandwidth wall (one memory bus, one page cache), so local[8]->local[32]
   shows ~{sup_eff:.2f}. On a real 4N-executor cluster each added node
   brings its own memory bus, disks, and NIC, so the resource-per-core
   ratio the 1->4 measurement preserves is the representative one; the
   8->32 number is the worst-case single-node oversubscription floor.
-- Strategy note: `LakeTable(merge_strategy="arrow_local")` trades the
-  final JVM reduce + repartition (two exchanges) for one bucket-colocation
-  exchange + a partition-local Arrow finalize — the right trade when
-  exchanges cross a network; in local mode (exchange = memcpy) the JVM
-  path is faster, and the benchmark uses it.
 - 10^10-event extrapolation: per-event cost is flat past ~1M events per
   batch (hash-agg + columnar write dominate); at 10^10 events the same
   job shape shards into ~2,500 micro-batches of 4M events, or a

@@ -48,16 +48,9 @@ def _merge_jvm_df():
     w = up.withColumn("_bucket", bucket_expr(MERGE_KEY[0], 16)).withColumn(
         "_origin", F.lit(-1)
     )
-    # reproduce the strategy the current tree's merge uses for the heavy tail
-    import inspect
-
-    from binlogsub_spark.lake import table as table_mod
-
-    src = inspect.getsource(table_mod.LakeTable.merge)
-    if "jvm_legacy" in src:  # r6 tree: colocate once, partition-local final
-        colocated = w.repartition(64, "_bucket")
-        return lww_reduce(colocated, key=MERGE_KEY + ["_bucket"], salt=1)
-    return lww_reduce(w, salt=1).repartition(16, "_bucket")  # round-start
+    # the merge's heavy tail: colocate once, partition-local final reduce
+    colocated = w.repartition(64, "_bucket")
+    return lww_reduce(colocated, key=MERGE_KEY + ["_bucket"], salt=1)
 
 
 def _raw_decode_df():

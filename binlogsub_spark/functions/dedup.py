@@ -18,7 +18,7 @@ Scale design notes:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from binlogsub_spark.functions.text import fingerprint, normalize_text
 
@@ -403,7 +403,19 @@ def incremental_minhash_pairs(
     and get back a clean scan of the written result. An executor loss can
     always recompute either form — there is no executor-local
     (``localCheckpoint``) state whose loss would strand the result.
+
+    The store's ``bh`` type must match ``hash_fn`` (BIGINT for xxhash64,
+    STRING for md5), else a TypeError: Spark would compare the two through
+    doubles, which silently drops candidate pairs above 2^53.
     """
+    want = T.StringType() if hash_fn == "md5" else T.LongType()
+    got = store.schema["bh"].dataType
+    if got != want:
+        raise TypeError(
+            f"band store column 'bh' is {got.simpleString()} but "
+            f"hash_fn={hash_fn!r} band keys are {want.simpleString()}; rebuild "
+            "the store with minhash_band_store(hash_fn=...) matching this call"
+        )
     rows_per_band = num_hashes // bands
     materialize = result_path is not None
     cand_cached = False

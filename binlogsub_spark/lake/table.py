@@ -41,8 +41,18 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from binlogsub_spark.operators.dedup import lww_reduce, partial_lww_reduce
+from binlogsub_spark.operators.dedup import lww_reduce
 from binlogsub_spark.plans.envelope import MERGE_KEY, VERSION_COLUMNS
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Write-then-rename: readers (and a restart) never see a torn file.
+    The dot-prefixed temp name never matches a ``snap-`` listing."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 def bucket_expr(col, buckets: int):
@@ -109,6 +119,18 @@ class LakeTable:
         with open(os.path.join(self.manifest_dir, name)) as f:
             return json.load(f)
 
+    def _require(self, snapshot_id: int | None = None) -> dict:
+        """:meth:`snapshot`, or a ValueError naming what is missing."""
+        snap = self.snapshot(snapshot_id)
+        if snap is not None:
+            return snap
+        if snapshot_id is not None:
+            raise ValueError(
+                f"snapshot {snapshot_id} does not exist (never committed, "
+                f"or expired by vacuum()) for table {self.path}"
+            )
+        raise ValueError(f"table {self.path} has no committed snapshot")
+
     def history(self) -> list[dict]:
         if not os.path.isdir(self.manifest_dir):
             return []
@@ -142,7 +164,7 @@ class LakeTable:
         if cur is not None and cur["snapshot_id"] >= manifest["snapshot_id"]:
             raise RuntimeError(
                 f"concurrent commit detected: snapshot {manifest['snapshot_id']}"
-                f" already superseded by {cur['snapshot_id']}"
+                f" already overtaken by {cur['snapshot_id']}"
             )
         manifest["committed_at"] = time.time()  # wall clock of the publish
         if not publish:
@@ -150,13 +172,8 @@ class LakeTable:
         with open(os.path.join(self.manifest_dir, name), "x") as f:
             json.dump(manifest, f, indent=1, default=str)
         if publish:
-            self._swap_current(name)
+            _atomic_write(self._current_pointer(), name)
 
-    def _swap_current(self, name: str) -> None:
-        tmp = self._current_pointer() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(name)
-        os.replace(tmp, self._current_pointer())  # atomic swap
 
     # ------------------------------------------------ write-audit-publish
     def publish_staged(self, snapshot_id: int) -> dict:
@@ -177,11 +194,11 @@ class LakeTable:
             )
         m.pop("staged")
         name = f"snap-{snapshot_id:08d}.json"
-        tmp = os.path.join(self.manifest_dir, f".{name}.tmp-{uuid.uuid4().hex}")
-        with open(tmp, "w") as f:
-            json.dump(m, f, indent=1, default=str)
-        os.replace(tmp, os.path.join(self.manifest_dir, name))
-        self._swap_current(name)
+        _atomic_write(
+            os.path.join(self.manifest_dir, name),
+            json.dumps(m, indent=1, default=str),
+        )
+        _atomic_write(self._current_pointer(), name)
         return m
 
     def abort_staged(self, snapshot_id: int) -> None:
@@ -293,14 +310,9 @@ class LakeTable:
         """All rows incl. tombstones + version cols + _bucket, optionally
         restricted to a bucket subset (merge-time pruning) and/or pinned to
         a historical snapshot (time travel)."""
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            if snapshot_id is not None:
-                raise ValueError(
-                    f"snapshot {snapshot_id} does not exist (never committed, "
-                    f"or expired by vacuum()) for table {self.path}"
-                )
-            raise ValueError(f"table {self.path} has no committed snapshot")
+        return self._scan(self._require(snapshot_id), buckets)
+
+    def _scan(self, snap: dict, buckets: list[int] | None = None) -> DataFrame:
         schema = self._schema(snap)
         locs: dict[str, str | None] = snap["bucket_locations"]
         # "all buckets" means the SNAPSHOT's bucket space, not the current
@@ -326,21 +338,18 @@ class LakeTable:
     def read(self, snapshot_id: int | None = None) -> DataFrame:
         """User-facing view: live rows only, no internal columns.
         ``snapshot_id`` pins a historical state (time travel)."""
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            if snapshot_id is not None:
-                raise ValueError(
-                    f"snapshot {snapshot_id} does not exist (never committed, "
-                    f"or expired by vacuum()) for table {self.path}"
-                )
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
+        snap = self._require(snapshot_id)
         return (
-            self.read_internal(snapshot_id=snapshot_id)
+            self._scan(snap)
             .where(F.col("_op") != "D")
-            .select(*user_cols)
+            .select(*self._user_cols(snap))
         )
+
+    def _user_cols(self, snap: dict) -> list[str]:
+        return [
+            f.name for f in self._schema(snap).fields
+            if f.name not in VERSION_COLUMNS
+        ]
 
     def changes(
         self,
@@ -368,23 +377,10 @@ class LakeTable:
         changed buckets before reading a byte — a 1-conversation commit on
         a 100 TB table diffs 1/buckets of it. ``from_snapshot_id=None``
         means "from the empty table" (everything live is an I)."""
-        to_snap = self.snapshot(to_snapshot_id)
-        if to_snap is None:
-            if to_snapshot_id is not None:
-                raise ValueError(
-                    f"snapshot {to_snapshot_id} does not exist (never "
-                    f"committed, or expired by vacuum()) for table {self.path}"
-                )
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        to_id = to_snap["snapshot_id"]
+        to_snap = self._require(to_snapshot_id)
         from_snap = (
-            self.snapshot(from_snapshot_id) if from_snapshot_id is not None else None
+            self._require(from_snapshot_id) if from_snapshot_id is not None else None
         )
-        if from_snapshot_id is not None and from_snap is None:
-            raise ValueError(
-                f"snapshot {from_snapshot_id} does not exist (never committed, "
-                f"or expired by vacuum()) for table {self.path}"
-            )
         locs_to: dict = to_snap["bucket_locations"]
         locs_from: dict = from_snap["bucket_locations"] if from_snap else {}
         same_space = from_snap is None or from_snap.get("buckets") == to_snap.get(
@@ -428,7 +424,7 @@ class LakeTable:
                 "from_snapshot or raise vacuum's keep_snapshots"
             )
         schema = self._schema(to_snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
+        user_cols = self._user_cols(to_snap)
         payload = [c for c in user_cols if c not in MERGE_KEY]
         out_fields = (
             [T.StructField("change_op", T.StringType())]
@@ -467,7 +463,7 @@ class LakeTable:
         # an outbound subscriber replaying the feed with LWW needs the
         # delete to strictly beat the row it removes.
         new = _side(
-            self.read_internal(buckets=to_changed, snapshot_id=to_id),
+            self._scan(to_snap, to_changed),
             "n",
             live_only=False,
         )
@@ -492,9 +488,7 @@ class LakeTable:
                 ),
             )
         old = _side(
-            self.read_internal(
-                buckets=from_changed, snapshot_id=from_snap["snapshot_id"]
-            ),
+            self._scan(from_snap, from_changed),
             "o",
             live_only=True,
         )
@@ -545,53 +539,27 @@ class LakeTable:
             )
         )
 
-    def read_for_keys(
-        self, keys: list[str], snapshot_id: int | None = None
-    ) -> DataFrame:
-        """Point-lookup read: prune the scan to ONLY the hash buckets the
-        given merge keys live in (the read-side payoff of bucket
-        clustering — at 100 TB a conversation lookup touches 1/buckets of
-        the table, visible as PartitionFilters in the plan)."""
-        key_col = MERGE_KEY[0]
-        kdf = self.spark.createDataFrame([(k,) for k in keys], [key_col])
-        buckets = sorted(
-            r["_b"]
-            for r in kdf.select(
-                bucket_expr(key_col, self.buckets).alias("_b")
-            ).distinct().collect()
-        )
-        snap = self.snapshot(snapshot_id)
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
-        return (
-            self.read_internal(buckets=buckets, snapshot_id=snapshot_id)
-            .where((F.col("_op") != "D") & F.col(key_col).isin(keys))
-            .select(*user_cols)
-        )
-
     # --------------------------------------------------------------- merge
     def merge(
         self,
         upserts: DataFrame,
         batch_id: int,
         watermark: dict | None = None,
-        pre_reduced: bool = False,
         touched_buckets: list[int] | None = None,
         publish: bool = True,
-        observe_buckets: bool = False,
     ) -> dict:
         """MERGE INTO … USING upserts ON (conv_id, turn_idx) with LWW.
 
-        ``upserts``: user columns + VERSION_COLUMNS (tombstones as _op='D').
-        Returns {applied, superseded, replayed, snapshot_id}. Replaying an
-        already-committed batch_id is a committed no-op.
+        ``upserts``: user columns + VERSION_COLUMNS (tombstones as _op='D'),
+        any number of rows per key — callers with hot keys pass them
+        through the salted ``partial_lww_reduce`` first. Returns
+        {applied, replayed, snapshot_id}. Replaying an already-committed
+        batch_id is a committed no-op.
 
-        One strategy, two full exchanges: the salted partial reduce
-        (``partial_lww_reduce``, map-side combine bounds a hot key's share)
-        -> ONE bucket-colocation exchange of (partials ∪ touched current
-        rows) -> a partition-local final LWW reduce (grouping by
+        One strategy, two full exchanges: the caller's salted partial
+        reduce (map-side combine bounds a hot key's share) -> ONE
+        bucket-colocation exchange of (upserts ∪ touched current rows) ->
+        a partition-local complete LWW reduce (grouping by
         ``(_bucket, key)`` is satisfied by the colocation's hash
         partitioning) -> a shuffle-free write, one file per bucket dir
         (plan-asserted in tests/test_plans.py).
@@ -603,19 +571,17 @@ class LakeTable:
         key column cheaply (column-pruned parquet scan) piggyback the bucket
         set on their lineage aggregation. A superset only rewrites extra
         buckets byte-identically — never wrong, at worst slightly wasteful.
-        Without it the merge persists the reduced winners and runs a small
-        distinct job (the right trade when ``upserts`` is an expensive
-        computed plan whose recomputation would dominate).
+        Without it the merge persists ``upserts`` and runs a small distinct
+        job (the right trade when ``upserts`` is an expensive computed plan
+        whose recomputation would dominate).
 
         Applied/skipped metrics ride the write job via Observation — the
         merge never runs a separate metrics join or count over the data.
 
-        ``observe_buckets=True`` (valid only while the table has NO
-        committed snapshot, i.e. a first batch): the touched-bucket set is
-        not needed BEFORE the job when there is no current state to union
-        in, so instead of a caller-side pre-scan (the raw path's bucket
-        kernel pass reads every payload byte once just for this) the
-        EXACT set rides the write job's Observation (``collect_set`` of
+        Observe mode is chosen automatically: on a table with NO committed
+        snapshot and no ``touched_buckets``, the touched-bucket set is not
+        needed BEFORE the job (there is no current state to union in), so
+        the EXACT set rides the write job's Observation (``collect_set`` of
         ``_bucket`` — bounded by the bucket count) and the whole merge is
         ONE job over ``upserts`` with zero pre-jobs.
 
@@ -628,25 +594,11 @@ class LakeTable:
         """
         snap = self.snapshot()
         if snap is not None and batch_id <= snap["batch_id"]:
-            # superseded=None, not upserts.count(): a replayed batch_id is a
-            # committed no-op, and launching a full job over the batch plan
-            # for a diagnostic metric would make the CHEAP path the slow one
-            return {
-                "applied": 0,
-                "superseded": None,
-                "replayed": True,
-                "snapshot_id": snap["snapshot_id"],
-            }
+            # a replayed batch_id is a committed no-op: no job over the batch
+            return {"applied": 0, "replayed": True, "snapshot_id": snap["snapshot_id"]}
 
-        observe = observe_buckets and touched_buckets is None
-        if observe and snap is not None:
-            raise ValueError(
-                "observe_buckets requires a table with no committed snapshot "
-                "(the touched set must be known BEFORE the job once current "
-                "rows need to be unioned in)"
-            )
-        winners = upserts if pre_reduced else partial_lww_reduce(upserts)
-        winners = winners.withColumn(
+        observe = snap is None and touched_buckets is None
+        winners = upserts.withColumn(
             "_bucket", bucket_expr(MERGE_KEY[0], self.buckets)
         )
         one_pass = touched_buckets is not None or observe
@@ -708,7 +660,7 @@ class LakeTable:
 
             w2 = _align(winners, -1)
             if snap is not None and touched:
-                unioned = _align(self.read_internal(touched), 0).unionByName(w2)
+                unioned = _align(self._scan(snap, touched), 0).unionByName(w2)
             else:
                 unioned = w2
             # Bucket-colocation partition count: len(touched) slots for
@@ -725,14 +677,14 @@ class LakeTable:
             # aggregation adds NO second exchange (plan-asserted in
             # tests/test_plans.py)
             colocated = unioned.repartition(n_parts, "_bucket")
-            merged = lww_reduce(colocated, key=MERGE_KEY + ["_bucket"], salt=1)
+            merged = lww_reduce(colocated, key=MERGE_KEY + ["_bucket"])
 
             snapshot_id = (snap["snapshot_id"] + 1) if snap else 1
             bucket_locations = dict(snap["bucket_locations"]) if snap else {
                 str(b): None for b in range(self.buckets)
             }
             commit_rel = f"commit-{snapshot_id:08d}"
-            applied, n_winners, batch_max_ts = 0, (None if one_pass else 0), None
+            applied, batch_max_ts = 0, None
             if touched is None or touched:
                 obs = Observation(f"merge-{batch_id}")
                 out_cols = [
@@ -770,13 +722,6 @@ class LakeTable:
                 batch_max_ts = obs.get["max_event_ts"]
                 if touched is None:
                     touched = sorted(int(b) for b in obs.get["touched"])
-                # one-pass mode never materializes `winners` separately, so
-                # the pre-reduce winner count (a diagnostic, not a contract
-                # metric — applied/skipped come from the Observation and the
-                # caller's lineage job) is not known. An Observation BELOW
-                # the union never resolves under the streaming foreachBatch
-                # listener (hangs), so it stays unknown rather than clever.
-                n_winners = None if one_pass else winners.count()  # cached
                 if obs.get["live_rows"] > 0:
                     for b in touched:
                         bucket_locations[str(b)] = commit_rel
@@ -800,7 +745,6 @@ class LakeTable:
                 ),
                 "metrics": {
                     "applied": applied,
-                    "upsert_keys": n_winners,
                     "max_event_ts": self._advance_event_ts(
                         (snap or {}).get("metrics", {}).get("max_event_ts"),
                         batch_max_ts,
@@ -810,9 +754,6 @@ class LakeTable:
             self._commit(manifest, publish=publish)
             return {
                 "applied": applied,
-                "superseded": (
-                    None if n_winners is None else n_winners - applied
-                ),
                 "replayed": False,
                 "snapshot_id": snapshot_id,
                 **({} if publish else {"staged": True}),
@@ -854,9 +795,7 @@ class LakeTable:
         position, not time)."""
         from datetime import datetime
 
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
+        snap = self._require()
         max_ts = snap.get("metrics", {}).get("max_event_ts")
         committed = snap.get("committed_at")
         lag = None
@@ -874,10 +813,20 @@ class LakeTable:
             "ingest_lag_seconds": lag,
         }
 
-    def delete_keys(self, keys, batch_id: int, key_col: str = "conv_id") -> dict:
+    def _buckets_of(self, keys_df: DataFrame) -> list[int]:
+        """The sorted distinct buckets a one-column key frame hashes to
+        (one small job; bounded by the bucket count, never the key count)."""
+        return sorted(
+            r["b"]
+            for r in keys_df.select(bucket_expr(MERGE_KEY[0], self.buckets).alias("b"))
+            .distinct()
+            .collect()
+        )
+
+    def delete_keys(self, keys, batch_id: int) -> dict:
         """Targeted erasure (right-to-be-forgotten): tombstone every live
-        row whose ``key_col`` is in ``keys`` (a Python list or a
-        single-column DataFrame), through the NORMAL LWW MERGE — no
+        row whose ``conv_id`` is in ``keys`` (a Python list or a DataFrame
+        with a ``conv_id`` column), through the NORMAL LWW MERGE — no
         special-case table surgery, so replays, time travel, changelog
         scans and downstream CDC feeds all see the deletion as ordinary
         tombstones.
@@ -895,27 +844,18 @@ class LakeTable:
         The reference has no deletion surface at all (it forwards D
         events, business.cc; it cannot originate one) — this is lake-side
         lifecycle the Spark engine adds."""
-        spark = self.spark
+        key_col = MERGE_KEY[0]
         if isinstance(keys, (list, tuple, set)):
-            keys_df = spark.createDataFrame(
+            keys_df = self.spark.createDataFrame(
                 [(k,) for k in sorted(keys)], f"{key_col} string"
             )
         else:
             keys_df = keys.select(key_col).distinct()
-        touched = sorted(
-            r["b"]
-            for r in keys_df.select(
-                bucket_expr(key_col, self.buckets).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
+        touched = self._buckets_of(keys_df)
+        snap = self._require()
         schema = self._schema(snap)
         live = (
-            self.read_internal(buckets=touched)
+            self._scan(snap, touched)
             .where(F.col("_op") != "D")
             .join(F.broadcast(keys_df), key_col, "left_semi")
         )
@@ -934,12 +874,7 @@ class LakeTable:
         )
         # keys are unique live rows -> already reduced; the bucket list is
         # exact (not a superset), so this is the one-pass merge
-        return self.merge(
-            tombstones,
-            batch_id=batch_id,
-            pre_reduced=True,
-            touched_buckets=touched,
-        )
+        return self.merge(tombstones, batch_id=batch_id, touched_buckets=touched)
 
     # ----------------------------------------------------------- lineage
     LINEAGE_ARROW_FIELDS = [
@@ -1011,35 +946,24 @@ class LakeTable:
                 os.remove(os.path.join(self.manifest_dir, n))
         return {"removed_dirs": removed, "kept_snapshots": len(keep)}
 
-    def read_keys(self, keys, key_col: str = "conv_id") -> DataFrame:
-        """Point lookup: live rows of the listed key values, reading ONLY
-        the buckets those keys hash to — a handful-of-conversations fetch
+    def read_keys(self, keys) -> DataFrame:
+        """Point lookup: live rows of the listed ``conv_id`` values, reading
+        ONLY the buckets those keys hash to — a handful-of-conversations fetch
         touches a handful of bucket files of an arbitrarily large table
         (then, post-compaction, a handful of ROW GROUPS inside them,
         thanks to the clustered sort + parquet min/max pushdown). Same
         pruning shape as :meth:`delete_keys`, read-only."""
         keys = sorted(set(keys))
-        buckets = sorted(
-            {
-                r["b"]
-                for r in self.spark.createDataFrame(
-                    [(k,) for k in keys], f"{key_col} string"
-                )
-                .select(bucket_expr(key_col, self.buckets).alias("b"))
-                .distinct()
-                .collect()
-            }
+        key_col = MERGE_KEY[0]
+        buckets = self._buckets_of(
+            self.spark.createDataFrame([(k,) for k in keys], f"{key_col} string")
         )
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError(f"table {self.path} has no committed snapshot")
-        schema = self._schema(snap)
-        user_cols = [f.name for f in schema.fields if f.name not in VERSION_COLUMNS]
+        snap = self._require()
         return (
-            self.read_internal(buckets=buckets)
+            self._scan(snap, buckets)
             .where(F.col("_op") != "D")
             .where(F.col(key_col).isin(keys))
-            .select(*user_cols)
+            .select(*self._user_cols(snap))
         )
 
     # ----------------------------------------------------------------- tags
@@ -1058,28 +982,16 @@ class LakeTable:
         """Name a snapshot (default: current). Tagged snapshots survive
         ``vacuum`` regardless of the retention window — the Iceberg-tag
         shape: 'the table as of release X' stays readable forever."""
-        if snapshot_id is None:
-            snap = self.snapshot()
-            if snap is None:
-                raise ValueError("tag() on a table with no snapshot")
-            snapshot_id = snap["snapshot_id"]
-        elif self.snapshot(snapshot_id) is None:
-            raise ValueError(f"snapshot {snapshot_id} does not exist")
+        snapshot_id = self._require(snapshot_id)["snapshot_id"]
         refs = self.tags()
         refs[name] = int(snapshot_id)
-        tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(refs, f, indent=1)
-        os.replace(tmp, self._refs_path())
+        _atomic_write(self._refs_path(), json.dumps(refs, indent=1))
         return int(snapshot_id)
 
     def drop_tag(self, name: str) -> None:
         refs = self.tags()
         refs.pop(name, None)
-        tmp = self._refs_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(refs, f, indent=1)
-        os.replace(tmp, self._refs_path())
+        _atomic_write(self._refs_path(), json.dumps(refs, indent=1))
 
     def read_tag(self, name: str) -> DataFrame:
         refs = self.tags()
@@ -1087,104 +999,96 @@ class LakeTable:
             raise ValueError(f"unknown tag {name!r} (have {sorted(refs)})")
         return self.read(snapshot_id=refs[name])
 
-    # ------------------------------------------------------------- backfill
-    def backfill(self, name: str, expr, publish: bool = True) -> dict:
+    # ------------------------------------------------------ full rewrites
+    def _rewrite(
+        self,
+        snap: dict,
+        df: DataFrame,
+        metrics: dict,
+        buckets: int | None = None,
+        schema: T.StructType | None = None,
+        compression: str | None = None,
+    ) -> int:
+        """Commit ``df`` (all rows, with ``_bucket``) as the next snapshot,
+        replacing every bucket: the shared tail of compact, backfill and
+        rebucket. The bucket map comes from the ``_bucket=`` dirs actually
+        written, so a bucket with no rows stays ``None``. ``buckets`` and
+        ``schema`` default to the snapshot's."""
+        snapshot_id = snap["snapshot_id"] + 1
+        commit_rel = f"commit-{snapshot_id:08d}"
+        commit_dir = os.path.join(self.data_dir, commit_rel)
+        written = set()
+        if any(snap["bucket_locations"].values()):
+            w = df.write.partitionBy("_bucket").mode("overwrite")
+            if compression:
+                w = w.option("compression", compression)
+            w.parquet(commit_dir)
+            written = {
+                d.split("=", 1)[1]
+                for d in os.listdir(commit_dir)
+                if d.startswith("_bucket=")
+            }
+        n = buckets or self.buckets
+        manifest = dict(
+            snap,
+            snapshot_id=snapshot_id,
+            parent=snap["snapshot_id"],
+            buckets=n,
+            bucket_locations={
+                str(b): (commit_rel if str(b) in written else None)
+                for b in range(n)
+            },
+            schema_json=json.dumps((schema or self._schema(snap)).jsonValue()),
+            metrics=metrics,
+        )
+        self._commit(manifest)
+        return snapshot_id
+
+    def backfill(self, name: str, expr) -> dict:
         """Add (or recompute) a derived column for EVERY live row as one
         atomic snapshot — schema evolution at rest, the job a 100 TB
         table runs when a new training signal must exist for historical
         rows too. ``expr``: a Column or SQL string over the existing
         columns. One bucket-colocated rewrite (same plan shape as
         compact — no join, no window: the derivation rides the scan);
-        time travel still shows the pre-backfill schema, and
-        ``publish=False`` stages the result for a write-audit-publish
-        gate like any merge."""
+        time travel still shows the pre-backfill schema."""
         if name in VERSION_COLUMNS or name == "_bucket":
             raise ValueError(f"cannot backfill internal column {name!r}")
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError("backfill() on a table with no snapshot")
+        snap = self._require()
         col = F.expr(expr) if isinstance(expr, str) else expr
-        df = self.read_internal().withColumn(name, col)
-        snapshot_id = snap["snapshot_id"] + 1
-        commit_rel = f"commit-{snapshot_id:08d}"
-        (
-            df.repartition(self.buckets, "_bucket")
-            .write.partitionBy("_bucket")
-            .mode("overwrite")
-            .parquet(os.path.join(self.data_dir, commit_rel))
+        df = self._scan(snap).withColumn(name, col)
+        schema = T.StructType([f for f in df.schema.fields if f.name != "_bucket"])
+        sid = self._rewrite(
+            snap, df.repartition(self.buckets, "_bucket"), {"backfill": name},
+            schema=schema,
         )
-        new_schema = T.StructType(
-            [f for f in df.schema.fields if f.name != "_bucket"]
-        )
-        live = {
-            str(b): (commit_rel if snap["bucket_locations"].get(str(b)) else None)
-            for b in range(self.buckets)
-        }
-        manifest = dict(
-            snap,
-            snapshot_id=snapshot_id,
-            parent=snap["snapshot_id"],
-            bucket_locations=live,
-            schema_json=json.dumps(new_schema.jsonValue()),
-            metrics={"backfill": name},
-        )
-        manifest.pop("staged", None)
-        self._commit(manifest, publish=publish)
-        return {"snapshot_id": snapshot_id, **({} if publish else {"staged": True})}
+        return {"snapshot_id": sid}
 
-    def compact(
-        self,
-        cluster_by: tuple = ("conv_id", "turn_idx"),
-        codec: str = "zstd",
-    ) -> dict:
+    def compact(self) -> dict:
         """Rewrite all live buckets into a single commit dir — bounds the
         number of commit dirs a read must union (small-files problem).
 
-        ``cluster_by`` sorts rows WITHIN each bucket file before the
-        rewrite (default: the merge key). Clustered files get parquet
-        row-group min/max statistics that actually discriminate — a
-        point lookup on ``conv_id`` prunes to one row group instead of
-        scanning the bucket — and sorted keys compress markedly better.
-        The sort is partition-local (``sortWithinPartitions`` after the
-        bucket colocation), no extra exchange. Pass ``cluster_by=None``
-        to skip (fastest possible compaction).
+        Rows are sorted by the merge key WITHIN each bucket file. Clustered
+        files get parquet row-group min/max statistics that actually
+        discriminate — a point lookup on ``conv_id`` prunes to one row
+        group instead of scanning the bucket — and sorted keys compress
+        markedly better. The sort is partition-local
+        (``sortWithinPartitions`` after the bucket colocation), no extra
+        exchange.
 
-        ``codec``: at-rest rewrites default to zstd — compaction is the
-        one write whose output lives long and is read many times, so it
-        trades a little write CPU for markedly smaller cold data (the
-        hot merge path keeps Spark's default codec: ingest throughput is
-        the SLO there, storage is the SLO here)."""
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError("compact() on a table with no snapshot")
-        schema = self._schema(snap)
-        df = self.read_internal()
-        snapshot_id = snap["snapshot_id"] + 1
-        commit_rel = f"commit-{snapshot_id:08d}"
-        colocated = df.repartition(self.buckets, "_bucket")
-        if cluster_by:
-            colocated = colocated.sortWithinPartitions(*cluster_by)
-        (
-            colocated
-            .write.partitionBy("_bucket")
-            .option("compression", codec)
-            .mode("overwrite")
-            .parquet(os.path.join(self.data_dir, commit_rel))
+        The rewrite is zstd-compressed: compaction is the one write whose
+        output lives long and is read many times, so it trades a little
+        write CPU for markedly smaller cold data (the hot merge path keeps
+        Spark's default codec: ingest throughput is the SLO there, storage
+        is the SLO here)."""
+        snap = self._require()
+        df = (
+            self._scan(snap)
+            .repartition(self.buckets, "_bucket")
+            .sortWithinPartitions(*MERGE_KEY)
         )
-        live = {
-            str(b): (commit_rel if snap["bucket_locations"].get(str(b)) else None)
-            for b in range(self.buckets)
-        }
-        manifest = dict(
-            snap,
-            snapshot_id=snapshot_id,
-            parent=snap["snapshot_id"],
-            bucket_locations=live,
-            schema_json=json.dumps(schema.jsonValue()),
-            metrics={"compaction": True},
-        )
-        self._commit(manifest)
-        return {"snapshot_id": snapshot_id}
+        sid = self._rewrite(snap, df, {"compaction": True}, compression="zstd")
+        return {"snapshot_id": sid}
 
     def rebucket(self, new_buckets: int) -> dict:
         """Online bucket-count rescale — the operational gap a day-1 bucket
@@ -1208,51 +1112,17 @@ class LakeTable:
         the manifest (``__init__``)."""
         if new_buckets < 1:
             raise ValueError(f"new_buckets must be >= 1, got {new_buckets}")
-        snap = self.snapshot()
-        if snap is None:
-            raise ValueError("rebucket() on a table with no snapshot")
+        snap = self._require()
         old_buckets = self.buckets
         if new_buckets == old_buckets:
             return {"snapshot_id": snap["snapshot_id"], "rebucketed": False}
-        schema = self._schema(snap)
-        snapshot_id = snap["snapshot_id"] + 1
-        commit_rel = f"commit-{snapshot_id:08d}"
-        has_rows = any(v is not None for v in snap["bucket_locations"].values())
-        if has_rows:
-            df = self.read_internal().drop("_bucket").withColumn(
-                "_bucket", bucket_expr(MERGE_KEY[0], new_buckets)
-            )
-            aligned = new_buckets % old_buckets == 0 or old_buckets % new_buckets == 0
-            if not aligned:
-                df = df.repartition(new_buckets, "_bucket")
-            (
-                df.write.partitionBy("_bucket")
-                .mode("overwrite")
-                .parquet(os.path.join(self.data_dir, commit_rel))
-            )
-            written = {
-                int(d.split("=", 1)[1])
-                for d in os.listdir(os.path.join(self.data_dir, commit_rel))
-                if d.startswith("_bucket=")
-            }
-        else:
-            written = set()
-        manifest = dict(
-            snap,
-            snapshot_id=snapshot_id,
-            parent=snap["snapshot_id"],
-            buckets=new_buckets,
-            bucket_locations={
-                str(b): (commit_rel if b in written else None)
-                for b in range(new_buckets)
-            },
-            schema_json=json.dumps(schema.jsonValue()),
-            metrics={"rebucket": [old_buckets, new_buckets]},
+        df = self._scan(snap).drop("_bucket").withColumn(
+            "_bucket", bucket_expr(MERGE_KEY[0], new_buckets)
         )
-        self._commit(manifest)
+        if new_buckets % old_buckets and old_buckets % new_buckets:
+            df = df.repartition(new_buckets, "_bucket")
+        sid = self._rewrite(
+            snap, df, {"rebucket": [old_buckets, new_buckets]}, buckets=new_buckets
+        )
         self.buckets = new_buckets
-        return {
-            "snapshot_id": snapshot_id,
-            "rebucketed": True,
-            "buckets": new_buckets,
-        }
+        return {"snapshot_id": sid, "rebucketed": True, "buckets": new_buckets}

@@ -33,7 +33,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from binlogsub_spark.lake.table import LakeTable, bucket_expr
+from binlogsub_spark.lake.table import LakeTable, _atomic_write, bucket_expr
 from binlogsub_spark.plans.envelope import MERGE_KEY
 
 GROUP_KEY = MERGE_KEY[0]  # conv_id — the view key; turn_idx is pinned to 0
@@ -84,10 +84,7 @@ class IncrementalView:
 
     def _save_state(self, snapshot_id: int) -> None:
         os.makedirs(self.path, exist_ok=True)
-        tmp = self._state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"source_snapshot_id": snapshot_id}, f)
-        os.replace(tmp, self._state_path)
+        _atomic_write(self._state_path, json.dumps({"source_snapshot_id": snapshot_id}))
 
     # -------------------------------------------------------------------
     def _dirty_keys(self, last: int | None, cur_id: int, full: bool) -> DataFrame:
@@ -175,10 +172,8 @@ class IncrementalView:
                 F.lit("D").alias("_op"),
                 *stamp,
             )
-            # one row per (conv_id, 0) by construction -> pre_reduced
-            res = self.table.merge(
-                ups.unionByName(tombs), batch_id=cur_id, pre_reduced=True
-            )
+            # one row per (conv_id, 0) by construction
+            res = self.table.merge(ups.unionByName(tombs), batch_id=cur_id)
         finally:
             dirty.unpersist(blocking=False)
         self._save_state(cur_id)

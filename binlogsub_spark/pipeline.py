@@ -14,7 +14,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import tempfile
 import time
 
 from pyspark import StorageLevel
@@ -22,7 +21,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
 from binlogsub_spark.config import EngineConfig, SchemaScope
-from binlogsub_spark.lake.table import LakeTable, bucket_expr
+from binlogsub_spark.lake.table import LakeTable, _atomic_write, bucket_expr
 from binlogsub_spark.operators.dedup import partial_lww_reduce
 from binlogsub_spark.plans.envelope import OP_DELETE, RAW_SCHEMA
 
@@ -185,9 +184,7 @@ def _commit(
             partials,
             batch_id=batch_id,
             watermark=watermark,
-            pre_reduced=True,
             touched_buckets=touched,
-            observe_buckets=fresh,
             publish=audit is None,
         )
         if audit is not None and not res["replayed"]:
@@ -343,7 +340,6 @@ def bootstrap_from_snapshot(
         stamped,
         batch_id=batch_id,
         watermark={"file_seq": file_seq, "log_pos": log_pos},
-        observe_buckets=table.snapshot() is None,
     )
 
 
@@ -994,14 +990,6 @@ def apply_mysql_batch(
                 except ValueError:
                     pass
     return metrics
-
-
-def _atomic_write(path: str, text: str) -> None:
-    """Write-then-rename: readers (and a restart) never see a torn file."""
-    fd, tmp = tempfile.mkstemp(dir=os.path.dirname(path), suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        f.write(text)
-    os.replace(tmp, path)
 
 
 def run_stream_mysql(

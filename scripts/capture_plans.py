@@ -50,7 +50,7 @@ def _merge_jvm_df():
     )
     # the merge's heavy tail: colocate once, partition-local final reduce
     colocated = w.repartition(64, "_bucket")
-    return lww_reduce(colocated, key=MERGE_KEY + ["_bucket"], salt=1)
+    return lww_reduce(colocated, key=MERGE_KEY + ["_bucket"])
 
 
 def _raw_decode_df():

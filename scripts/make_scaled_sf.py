@@ -16,8 +16,9 @@ SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 DST = sys.argv[2] if len(sys.argv) > 2 else "/tmp/sfbench/sf1.0"
 REPL = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 
-# (table, id columns shifted per replica) — FK pairs shift together so
-# join densities survive the replication
+# (table, id columns shifted per replica) — every column shifts by the SAME
+# amount, so FK pairs (o_orderkey/l_orderkey) stay aligned and join
+# densities survive the replication
 SHIFTS = {
     "documents": ["doc_id"],
     "events": ["event_id"],
@@ -31,11 +32,19 @@ spark = get_spark(app_name="make-scaled-sf", master="local[32]")
 from pyspark.sql import functions as F
 
 os.makedirs(DST, exist_ok=True)
+# one replica shift past every shifted id, so no replica collides with
+# another's ids, whatever their range
+SHIFT = 1 + max(
+    spark.read.parquet(os.path.join(SRC, f"{t}.parquet")).agg(F.max(c)).first()[0]
+    for t, ids in SHIFTS.items()
+    for c in ids
+)
+print("replica id shift", SHIFT, flush=True)
 reps = spark.range(REPL).select(F.col("id").alias("_rep"))
 for t, ids in SHIFTS.items():
     df = spark.read.parquet(os.path.join(SRC, f"{t}.parquet")).crossJoin(reps)
     for c in ids:
-        df = df.withColumn(c, F.col(c) + F.col("_rep") * 10_000_000)
+        df = df.withColumn(c, F.col(c) + F.col("_rep") * SHIFT)
     (
         df.drop("_rep")
         .repartition(32)

@@ -10,8 +10,6 @@ unions the touched buckets' current rows).
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -118,38 +116,23 @@ def _apply(spark, root, path: str, table_dir, i: int, registry_cache: dict):
     return apply_batch(table, src, batch_id, cfg), src
 
 
-def _count_jobs(spark, fn) -> int:
-    """Spark jobs launched while ``fn`` runs (job group on this thread)."""
-    sc = spark.sparkContext
-    group = f"apply-core-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group, interruptOnCancel=False)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker is fed by the listener bus asynchronously
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 # Spark jobs per apply call: (fresh table, non-fresh table). Any job the
 # commit core adds or drops shows up here.
 JOBS = {
     "structured": (6, 7),
     "debezium": (6, 7),
     "raw": (6, 9),
-    "mysql": (7, 13),
+    "mysql": (7, 11),
     "multi": (12, 14),
 }
 
 
 @pytest.mark.parametrize("path", sorted(JOBS))
-def test_jobs_per_apply_path(spark, tmp_path, inputs, path):
+def test_jobs_per_apply_path(spark, tmp_path, inputs, count_jobs, path):
     got, cache = [], {}
     for i in (1, 2):
-        got.append(_count_jobs(
-            spark, lambda: _apply(spark, inputs, path, tmp_path / "t", i, cache)
+        got.append(count_jobs(
+            lambda: _apply(spark, inputs, path, tmp_path / "t", i, cache)
         ))
     assert tuple(got) == JOBS[path], f"{path}: jobs (fresh, non-fresh) = {got}"
 

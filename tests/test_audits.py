@@ -31,7 +31,7 @@ def test_row_count_guard_blocks_mass_delete(spark, tmp_path):
         (F.col("_ts") + F.expr("INTERVAL 1 HOUR")).alias("_ts"),
         F.col("_file_seq"), F.col("_log_pos"),
     )
-    res = table.merge(storm, batch_id=2, pre_reduced=True, publish=False)
+    res = table.merge(storm, batch_id=2, publish=False)
     guard = row_count_guard(max_drop_frac=0.5)
     assert not guard(table, res["snapshot_id"])
     table.abort_staged(res["snapshot_id"])
@@ -39,7 +39,7 @@ def test_row_count_guard_blocks_mass_delete(spark, tmp_path):
 
     # a normal (growing) staged batch passes the same guard
     res2 = table.merge(
-        storm.limit(0), batch_id=2, pre_reduced=True, publish=False
+        storm.limit(0), batch_id=2, publish=False
     )
     assert guard(table, res2["snapshot_id"])
     table.abort_staged(res2["snapshot_id"])
@@ -66,7 +66,7 @@ def test_null_key_guard_and_composition(spark, tmp_path):
         F.current_timestamp().alias("_ts"),
         F.lit(99).alias("_file_seq"), F.lit(1).cast("long").alias("_log_pos"),
     )
-    res = table.merge(poison, batch_id=2, pre_reduced=True, publish=False)
+    res = table.merge(poison, batch_id=2, publish=False)
     sid = res["snapshot_id"]
     assert not no_null_keys_guard()(table, sid)
     # composition short-circuits to the rejection

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import datetime as dt
 
-from binlogsub_spark.operators.dedup import lww_reduce
+from binlogsub_spark.operators.dedup import lww_reduce, partial_lww_reduce
 
 TS = dt.datetime(2023, 11, 14, 22, 13, 20)
 
@@ -50,8 +50,8 @@ def test_salted_equals_unsalted(spark):
         ("hot", 0, f"t{i}", "U", TS + dt.timedelta(seconds=i % 7), 0, i) for i in range(200)
     ] + [("c2", 3, "y", "I", TS, 0, 1)]
     df = _df(spark, rows)
-    a = sorted(map(tuple, lww_reduce(df, salt=1).collect()))
-    b = sorted(map(tuple, lww_reduce(df, salt=8).collect()))
+    a = sorted(map(tuple, lww_reduce(df).collect()))
+    b = sorted(map(tuple, lww_reduce(partial_lww_reduce(df, salt=8)).collect()))
     assert a == b
 
 
@@ -120,3 +120,18 @@ def test_dedup_clusters_reliable_checkpoint(spark, tmp_path):
     import os
 
     assert os.listdir(str(tmp_path / "ckpt"))  # rounds really hit storage
+
+
+def test_band_store_key_type_must_match_hash_fn(spark):
+    """A band store whose ``bh`` type does not match ``hash_fn`` fails
+    loudly instead of joining through a lossy implicit cast."""
+    import pytest
+
+    from binlogsub_spark.functions.dedup import incremental_minhash_pairs
+
+    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
+    string_store = spark.createDataFrame([(2, 0, "7")], "doc_id long, band int, bh string")
+    with pytest.raises(TypeError, match="'bh' is string.*bigint"):
+        incremental_minhash_pairs(docs, docs, string_store, hash_fn="xxhash64")
+    # the matching pair builds its (lazy) plan
+    incremental_minhash_pairs(docs, docs, string_store, hash_fn="md5")

@@ -142,6 +142,54 @@ def test_compaction_preserves_state(spark, tmp_path):
     assert len(locs) == 1
 
 
+@pytest.mark.parametrize("rewrite", ["compact", "backfill", "rebucket"])
+def test_full_rewrite_commits_written_buckets(spark, tmp_path, rewrite):
+    """Every full-table rewrite commits one child of the current snapshot
+    whose bucket map points exactly the buckets holding rows at the new
+    commit (the rest None), with the expected schema and the same live
+    content."""
+    import json
+    import os
+
+    def _cols(s):
+        return [(f["name"], f["type"]) for f in json.loads(s["schema_json"])["fields"]]
+
+    # 6 conversations over 16 buckets: some buckets are certainly empty
+    ev = generate_binlog(spark, GeneratorParams(n_events=600, n_convs=6, dup_tail=0))
+    table = LakeTable(spark, str(tmp_path / "tbl"), buckets=16)
+    apply_batch(table, ev, batch_id=1)
+    parent = table.snapshot()
+    before = sorted(table.read().collect())
+    if rewrite == "compact":
+        sid = table.compact()["snapshot_id"]
+    elif rewrite == "backfill":
+        sid = table.backfill("text_len", "length(text)")["snapshot_id"]
+    else:
+        sid = table.rebucket(32)["snapshot_id"]
+    snap = table.snapshot()
+    assert snap["snapshot_id"] == sid == parent["snapshot_id"] + 1
+    assert snap["parent"] == parent["snapshot_id"]
+    if rewrite == "backfill":
+        assert _cols(snap) == _cols(parent) + [("text_len", "integer")]
+    else:
+        assert snap["schema_json"] == parent["schema_json"]
+    commit = f"commit-{sid:08d}"
+    with_rows = {
+        r["_bucket"] for r in table.read_internal().select("_bucket").distinct().collect()
+    }
+    written = {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(tmp_path / "tbl" / "data" / commit)
+        if d.startswith("_bucket=")
+    }
+    assert written == with_rows and 0 < len(written) < table.buckets
+    assert snap["bucket_locations"] == {
+        str(b): (commit if b in written else None) for b in range(table.buckets)
+    }
+    after = table.read().drop("text_len") if rewrite == "backfill" else table.read()
+    assert before == sorted(after.collect())
+
+
 def test_time_travel_read(spark, tmp_path):
     """Every committed snapshot stays readable (immutable manifests)."""
     ev = generate_binlog(spark, GeneratorParams(n_events=3000, dup_tail=0)).cache()
@@ -215,7 +263,7 @@ def test_salted_partial_reduce_bounds_hot_key(spark):
 def test_bucket_pruned_plans_and_point_lookup(spark, tmp_path):
     """Scale audit: bucket subsets land as PartitionFilters in the parquet
     scan (COW pruning is real, not logical), user predicates are
-    PushedFilters, and read_for_keys prunes to the key's bucket."""
+    PushedFilters, and read_keys prunes to the key's bucket."""
     from binlogsub_spark.config import EngineConfig
     from binlogsub_spark.lake.table import LakeTable
     from binlogsub_spark.pipeline import apply_batch
@@ -230,7 +278,7 @@ def test_bucket_pruned_plans_and_point_lookup(spark, tmp_path):
     assert "PartitionFilters: [_bucket" in plan
     assert "(3,7)" in plan or "3, 7" in plan
 
-    point = table.read_for_keys(["conv_hot"])
+    point = table.read_keys(["conv_hot"])
     pplan = point._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in pplan
     import re
@@ -481,8 +529,7 @@ def test_merge_rejects_foreign_bucket_modulus(spark, tmp_path):
     table = LakeTable(spark, str(tmp_path / "t"), buckets=8)
     partials = partial_lww_reduce(prepare_upserts(ev, EngineConfig()))
     with pytest.raises(ValueError, match="different bucket count"):
-        table.merge(partials, batch_id=1, pre_reduced=True,
-                    touched_buckets=[0, 3, 97])  # 97 >= 8
+        table.merge(partials, batch_id=1, touched_buckets=[0, 3, 97])  # 97 >= 8
 
 
 def test_delete_keys_targeted_erasure(spark, tmp_path):
@@ -532,7 +579,7 @@ def test_delete_keys_targeted_erasure(spark, tmp_path):
         (F.unix_timestamp() + 10**6).cast("timestamp").alias("_ts"),
         F.lit(0).alias("_file_seq"), F.lit(0).cast("long").alias("_log_pos"),
     )
-    table.merge(later, batch_id=3, pre_reduced=True)
+    table.merge(later, batch_id=3)
     assert (
         table.read().where(F.col("conv_id") == doomed[0]).count() == 1
     )

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from binlogsub_spark.config import EngineConfig
 from binlogsub_spark.lake.table import LakeTable, bucket_expr
 from binlogsub_spark.operators.dedup import lww_reduce, partial_lww_reduce
-from binlogsub_spark.pipeline import apply_batch, prepare_upserts
+from binlogsub_spark.pipeline import prepare_upserts
 from binlogsub_spark.plans.envelope import MERGE_KEY
 from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
 
@@ -29,9 +29,7 @@ def test_merge_final_reduce_adds_no_exchange(spark):
     w = up.withColumn("_bucket", bucket_expr(MERGE_KEY[0], 16)).withColumn(
         "_origin", F.lit(-1)
     )
-    merged = lww_reduce(
-        w.repartition(64, "_bucket"), key=MERGE_KEY + ["_bucket"], salt=1
-    )
+    merged = lww_reduce(w.repartition(64, "_bucket"), key=MERGE_KEY + ["_bucket"])
     plan = _plan(merged)
     assert plan.count("Exchange") == 2, plan
     # the final aggregate sits ABOVE the bucket exchange with no exchange
@@ -40,9 +38,10 @@ def test_merge_final_reduce_adds_no_exchange(spark):
     assert "partial_max" in above_bucket_exchange
 
 
-def test_observe_mode_fresh_merge_matches_precomputed(spark, tmp_path):
-    """observe_buckets=True (fresh table) must commit the identical state
-    and bucket_locations as a merge given the precomputed touched set."""
+def test_observe_mode_fresh_merge_matches_precomputed(spark, tmp_path, count_jobs):
+    """A fresh-table merge with no touched set (observe mode, chosen by the
+    merge itself) must commit the identical state and bucket_locations as
+    a merge given the precomputed touched set, in as many Spark jobs."""
     ev = generate_binlog(
         spark, GeneratorParams(n_events=4000, n_convs=60, dup_tail=200)
     )
@@ -50,7 +49,8 @@ def test_observe_mode_fresh_merge_matches_precomputed(spark, tmp_path):
     up = partial_lww_reduce(prepare_upserts(ev, cfg), salt=cfg.skew_salt)
 
     t_obs = LakeTable(spark, str(tmp_path / "obs"), buckets=16)
-    r_obs = t_obs.merge(up, batch_id=1, pre_reduced=True, observe_buckets=True)
+    r_obs = {}
+    jobs_obs = count_jobs(lambda: r_obs.update(t_obs.merge(up, batch_id=1)))
 
     touched = sorted(
         r["b"]
@@ -59,28 +59,19 @@ def test_observe_mode_fresh_merge_matches_precomputed(spark, tmp_path):
         .collect()
     )
     t_pre = LakeTable(spark, str(tmp_path / "pre"), buckets=16)
-    r_pre = t_pre.merge(
-        up, batch_id=1, pre_reduced=True, touched_buckets=touched
+    r_pre = {}
+    jobs_pre = count_jobs(
+        lambda: r_pre.update(t_pre.merge(up, batch_id=1, touched_buckets=touched))
     )
 
     assert r_obs["applied"] == r_pre["applied"]
+    assert jobs_obs == jobs_pre
     assert (
         t_obs.snapshot()["bucket_locations"] == t_pre.snapshot()["bucket_locations"]
     )
     a = sorted(t_obs.read().collect())
     b = sorted(t_pre.read().collect())
     assert a == b
-
-
-def test_observe_mode_rejected_on_non_fresh_table(spark, tmp_path):
-    ev = generate_binlog(spark, GeneratorParams(n_events=500, dup_tail=0))
-    t = LakeTable(spark, str(tmp_path / "t"), buckets=8)
-    apply_batch(t, ev, batch_id=1, cfg=EngineConfig(), persist_source=True)
-    up = partial_lww_reduce(prepare_upserts(ev, EngineConfig()))
-    import pytest
-
-    with pytest.raises(ValueError, match="observe_buckets"):
-        t.merge(up, batch_id=2, pre_reduced=True, observe_buckets=True)
 
 
 def test_gtid_intervals_stitch_across_blocks(spark):

@@ -48,6 +48,13 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from binlogsub_spark.codec import (
+    _binary_buffers,
+    _gather_headers,
+    read_lenenc_int,
+    uint_korr,
+    write_lenenc_int,
+)
 from binlogsub_spark.codec_mysql import (
     DIG2BYTES,
     DIG_PER_DEC,
@@ -260,12 +267,6 @@ def _col_meta_bytes(col: MysqlColumn) -> bytes:
     return b""  # DATE/NEWDATE/TIME/DATETIME/TIMESTAMP v1: no metadata
 
 
-def _lenenc(v: int) -> bytes:
-    from binlogsub_spark.codec import write_lenenc_int
-
-    return write_lenenc_int(v)
-
-
 def encode_table_map(tmap: TableMap, checksum: bool = False, **kw) -> bytes:
     """TABLE_MAP_EVENT frame (layout parity: event.cc:104-221)."""
     db_b, tbl_b = tmap.db.encode(), tmap.table.encode()
@@ -279,9 +280,9 @@ def encode_table_map(tmap: TableMap, checksum: bool = False, **kw) -> bytes:
         + struct.pack("<H", 1)
         + bytes([len(db_b)]) + db_b + b"\x00"
         + bytes([len(tbl_b)]) + tbl_b + b"\x00"
-        + _lenenc(len(tmap.columns))
+        + write_lenenc_int(len(tmap.columns))
         + bytes(c.ctype for c in tmap.columns)
-        + _lenenc(len(meta_block)) + meta_block
+        + write_lenenc_int(len(meta_block)) + meta_block
         + bytes(null_bits)
     )
     return _finish_event(TABLE_MAP_EVENT, body, checksum=checksum, **kw)
@@ -413,7 +414,7 @@ def encode_rows_event(
     body = tmap.table_id.to_bytes(6, "little") + struct.pack("<H", 0)
     if type_code >= WRITE_ROWS_EVENT_V2:
         body += struct.pack("<H", 2)  # extra-data length (includes itself)
-    body += _lenenc(width) + _bits(present)
+    body += write_lenenc_int(width) + _bits(present)
     if type_code in UPDATE_ROWS_EVENTS:
         p2 = present2 if present2 is not None else present
         body += _bits(p2)  # bitmap2 (after image)
@@ -510,8 +511,6 @@ def parse_event_header(frame: bytes) -> dict:
 def parse_table_map(frame: bytes, checksum: bool = False) -> TableMap:
     """Scalar table-map parse (control events are rare; parsed on the
     driver and broadcast). Parity: event.cc:104-221."""
-    from binlogsub_spark.codec import read_lenenc_int
-
     body = frame[HEADER_LEN : len(frame) - (4 if checksum else 0)]
     table_id = int.from_bytes(body[0:6], "little")
     pos = 8  # table_id + flags
@@ -567,13 +566,6 @@ def parse_table_map(frame: bytes, checksum: bool = False) -> TableMap:
 
 
 # ----------------------------------------------------- vectorized decode --
-def _u_le(data: np.ndarray, pos: np.ndarray, width: int) -> np.ndarray:
-    acc = np.zeros(pos.shape, dtype=np.uint64)
-    for i in range(width):
-        acc |= data[pos + i].astype(np.uint64) << np.uint64(8 * i)
-    return acc
-
-
 def _u_be(data: np.ndarray, pos: np.ndarray, width: int) -> np.ndarray:
     acc = np.zeros(pos.shape, dtype=np.uint64)
     for i in range(width):
@@ -619,6 +611,28 @@ def _decimal_layout(prec: int, scale: int) -> list[tuple[int, int]]:
     return groups
 
 
+def _decimal_walk(data, pos, prec: int, scale: int, zero: np.ndarray, lift):
+    """The packed-decimal group walk both decimal kernels share
+    (mydecimal.cc:33-131): un-flip the sign bit, then fold each big-endian
+    digit group into ``zero`` (the accumulator: int64 or object) through
+    ``lift`` (each group's int64 digits -> the accumulator's type).
+    Returns (signed scaled values, byte size)."""
+    size = decimal_bin_size(prec, scale)
+    m = _gather_fixed(data, pos, size).astype(np.uint8).copy()
+    positive = (m[:, 0] & 0x80) != 0
+    m[:, 0] ^= 0x80
+    m[~positive] ^= 0xFF
+    scaled = zero
+    off = 0
+    for nbytes, ndigits in _decimal_layout(prec, scale):
+        g = np.zeros(len(pos), dtype=np.int64)
+        for b in range(nbytes):
+            g = (g << 8) | m[:, off + b].astype(np.int64)
+        scaled = scaled * (10**ndigits) + lift(g)
+        off += nbytes
+    return np.where(positive, scaled, -scaled), size
+
+
 def _decode_newdecimal_scaled(
     data: np.ndarray, pos: np.ndarray, prec: int, scale: int
 ) -> tuple[np.ndarray, int]:
@@ -628,50 +642,27 @@ def _decode_newdecimal_scaled(
     max 65 needs int256 — out of scope)."""
     if prec > 18:
         raise ValueError("NEWDECIMAL precision > 18 not supported by the vector path")
-    size = decimal_bin_size(prec, scale)
-    m = _gather_fixed(data, pos, size).astype(np.uint8).copy()
-    positive = (m[:, 0] & 0x80) != 0
-    m[:, 0] ^= 0x80
-    m[~positive] ^= 0xFF
-    scaled = np.zeros(len(pos), dtype=np.int64)
-    off = 0
-    for nbytes, ndigits in _decimal_layout(prec, scale):
-        g = np.zeros(len(pos), dtype=np.int64)
-        for b in range(nbytes):
-            g = (g << 8) | m[:, off + b].astype(np.int64)
-        scaled = scaled * (10**ndigits) + g
-        off += nbytes
-    return np.where(positive, scaled, -scaled), size
+    return _decimal_walk(
+        data, pos, prec, scale, np.zeros(len(pos), dtype=np.int64), lambda g: g
+    )
 
 
 def _decode_newdecimal_wide(
     data: np.ndarray, pos: np.ndarray, prec: int, scale: int
 ) -> tuple[np.ndarray, int]:
     """Wide packed-decimal decode (precision 19..38) -> object array of
-    EXACT scaled Python ints (arbitrary precision): same group walk as the
-    int64 kernel but accumulating through object arithmetic — the rare-type
+    EXACT scaled Python ints (arbitrary precision): the int64 kernel's
+    group walk accumulating through object arithmetic — the rare-type
     fallback that keeps 30-digit decimals exact instead of aborting
     (parity with bin2decimal's full 65-digit range, mydecimal.cc:33-131,
     full 65-digit range: <=38 lands in DecimalType, wider in exact
     canonical strings)."""
-    size = decimal_bin_size(prec, scale)
-    m = _gather_fixed(data, pos, size).astype(np.uint8).copy()
-    positive = (m[:, 0] & 0x80) != 0
-    m[:, 0] ^= 0x80
-    m[~positive] ^= 0xFF
-    scaled = np.zeros(len(pos), dtype=object)
-    off = 0
-    for nbytes, ndigits in _decimal_layout(prec, scale):
-        g = np.zeros(len(pos), dtype=np.int64)
-        for b in range(nbytes):
-            g = (g << 8) | m[:, off + b].astype(np.int64)
-        # g must become PYTHON ints before the object-array add: numpy
-        # coerces object+int64 through float64, silently rounding >2^53
-        scaled = scaled * (10**ndigits) + np.array(g.tolist(), dtype=object)
-        off += nbytes
-    neg = np.flatnonzero(~positive)
-    scaled[neg] = [-int(x) for x in scaled[neg]]
-    return scaled, size
+    # g must become PYTHON ints before the object-array add: numpy
+    # coerces object+int64 through float64, silently rounding >2^53
+    return _decimal_walk(
+        data, pos, prec, scale, np.zeros(len(pos), dtype=object),
+        lambda g: np.array(g.tolist(), dtype=object),
+    )
 
 
 class _VarlenAcc:
@@ -705,7 +696,7 @@ def _read_column_values(
     c = col.ctype
     if c in _INT_WIDTH:
         w = _INT_WIDTH[c]
-        vals = _signed(_u_le(data, p, w), w)
+        vals = _signed(uint_korr(data, p, w), w)
         return vals, np.full(len(p), w, dtype=np.int64)
     if c == MYSQL_TYPE_YEAR:
         return data[p].astype(np.int64) + 1900, np.ones(len(p), dtype=np.int64)
@@ -721,21 +712,21 @@ def _read_column_values(
         )
     if c in (MYSQL_TYPE_VARCHAR, MYSQL_TYPE_VAR_STRING):
         lp = 1 if int(col.meta) < 256 else 2
-        lens = _u_le(data, p, lp).astype(np.int64)
+        lens = uint_korr(data, p, lp).astype(np.int64)
         return ("varlen", p + lp, lens), lens + lp
     if c in (MYSQL_TYPE_BLOB, MYSQL_TYPE_JSON):  # JSON stores blob-style
         lp = int(col.meta or (4 if c == MYSQL_TYPE_JSON else 2))
-        lens = _u_le(data, p, lp).astype(np.int64)
+        lens = uint_korr(data, p, lp).astype(np.int64)
         return ("varlen", p + lp, lens), lens + lp
     if c == MYSQL_TYPE_STRING:  # ENUM/SET codes or CHAR text (event.cc:607-636)
         real, size = col.meta
         if real in (MYSQL_TYPE_ENUM, MYSQL_TYPE_SET):
             return (
-                _u_le(data, p, size).astype(np.int64),
+                uint_korr(data, p, size).astype(np.int64),
                 np.full(len(p), size, dtype=np.int64),
             )
         lp = 1 if size < 256 else 2  # CHAR: length-prefixed like VARCHAR
-        lens = _u_le(data, p, lp).astype(np.int64)
+        lens = uint_korr(data, p, lp).astype(np.int64)
         return ("varlen", p + lp, lens), lens + lp
     if c == MYSQL_TYPE_NEWDECIMAL:
         prec, scale = col.meta
@@ -744,14 +735,14 @@ def _read_column_values(
         return vals, np.full(len(p), size, dtype=np.int64)
     if c in (MYSQL_TYPE_DATE, MYSQL_TYPE_NEWDATE):
         # 3-byte packed (year << 9 | month << 5 | day), event.cc:563-598
-        v = _u_le(data, p, 3).astype(np.int64)
+        v = uint_korr(data, p, 3).astype(np.int64)
         days = _days_from_civil(v >> 9, (v >> 5) & 15, v & 31)
         return days, np.full(len(p), 3, dtype=np.int64)
     if c == MYSQL_TYPE_TIMESTAMP:  # v1: u32 LE epoch seconds (event.cc:534-541)
-        secs = _u_le(data, p, 4).astype(np.int64)
+        secs = uint_korr(data, p, 4).astype(np.int64)
         return secs * 1_000_000, np.full(len(p), 4, dtype=np.int64)
     if c == MYSQL_TYPE_DATETIME:  # v1: u64 LE YYYYMMDDHHMMSS (event.cc:542-554)
-        v = _u_le(data, p, 8).astype(np.int64)
+        v = uint_korr(data, p, 8).astype(np.int64)
         d, t = v // 1_000_000, v % 1_000_000
         days = _days_from_civil(d // 10000, (d // 100) % 100, d % 100)
         secs = (t // 10000) * 3600 + ((t // 100) % 100) * 60 + t % 100
@@ -760,7 +751,7 @@ def _read_column_values(
         # v1: SIGNED 3-byte LE HHMMSS pack (sint3korr in MySQL; the
         # reference reads it unsigned, event.cc:555-562 — a negative-TIME
         # bug there; we follow the server) -> signed microseconds
-        v = _signed(_u_le(data, p, 3), 3)
+        v = _signed(uint_korr(data, p, 3), 3)
         av = np.abs(v)
         us = ((av // 10000) * 3600 + ((av // 100) % 100) * 60 + av % 100) * 1_000_000
         return np.where(v < 0, -us, us), np.full(len(p), 3, dtype=np.int64)
@@ -883,7 +874,7 @@ def _rows_post_header_pos(
     is_v2 = type_codes >= WRITE_ROWS_EVENT_V2
     if is_v2.any():
         extra = np.zeros(len(pos), dtype=np.int64)
-        extra[is_v2] = _u_le(data, pos[is_v2], 2).astype(np.int64)
+        extra[is_v2] = uint_korr(data, pos[is_v2], 2).astype(np.int64)
         pos = pos + extra  # extra-data length includes its own two bytes
     return pos
 
@@ -932,7 +923,6 @@ def decode_rows_frames(
     body_end = ends - (4 if checksum else 0)
 
     pos = _rows_post_header_pos(data, starts, type_codes)
-    from binlogsub_spark.codec import read_lenenc_int
 
     width_vals, pos = read_lenenc_int(data, pos)
     if n and not (width_vals == width).all():
@@ -1364,8 +1354,6 @@ def extract_gtids(raw_df: DataFrame, checksum: bool = False) -> DataFrame:
     vectorized parse per Arrow batch."""
     import pyarrow as pa
 
-    from binlogsub_spark.codec import _binary_buffers
-
     schema = T.StructType(
         [
             T.StructField("file_seq", T.IntegerType()),
@@ -1384,7 +1372,7 @@ def extract_gtids(raw_df: DataFrame, checksum: bool = False) -> DataFrame:
             if len(starts) == 0:
                 continue
             sids = _gather_fixed(data, starts + HEADER_LEN + 1, 16)
-            gnos = _u_le(data, starts + HEADER_LEN + 17, 8).astype(np.int64)
+            gnos = uint_korr(data, starts + HEADER_LEN + 17, 8).astype(np.int64)
             uu = _uuid_strings(sids)
             gtids = np.char.add(np.char.add(uu, ":"), gnos.astype("U20"))
             yield pa.RecordBatch.from_pydict(
@@ -1476,13 +1464,13 @@ def validate_mysql_frames(
     reasons[lens < HEADER_LEN] = 1  # short_frame
     ok = np.flatnonzero(reasons == 0)
     if len(ok):
-        event_len = _u_le(data, starts[ok] + 9, 4).astype(np.int64)
+        event_len = uint_korr(data, starts[ok] + 9, 4).astype(np.int64)
         reasons[ok[event_len != lens[ok]]] = 2  # len_mismatch
     if checksum and verify_crc:
         ok = np.flatnonzero(reasons == 0)
         if len(ok):
             got = crc32_frames(data, starts[ok], lens[ok] - 4)
-            want = _u_le(data, ends[ok] - 4, 4).astype(np.uint32)
+            want = uint_korr(data, ends[ok] - 4, 4).astype(np.uint32)
             reasons[ok[got != want]] = 3  # bad_crc
     return reasons
 
@@ -1520,10 +1508,8 @@ def probe_mysql_semantics(
     ridx = ok[np.isin(tcodes, ROWS_EVENTS)]
     if len(ridx) == 0:
         return reasons
-    from binlogsub_spark.codec import read_lenenc_int
-
     rcodes = tcodes[np.isin(tcodes, ROWS_EVENTS)]
-    tids = _u_le(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
+    tids = uint_korr(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
     for tid in np.unique(tids):
         sel = ridx[tids == tid]
         tm = registry.get(int(tid))
@@ -1556,8 +1542,6 @@ def split_deadletter_mysql(
     silently inside the decode kernel."""
     import pyarrow as pa
 
-    from binlogsub_spark.codec import _binary_buffers
-
     flag_schema = T.StructType(
         list(raw_df.schema.fields)
         + [T.StructField("_valid", T.BooleanType()), T.StructField("_reason", T.StringType())]
@@ -1587,26 +1571,37 @@ def split_deadletter_mysql(
 BINLOG_MAGIC = b"\xfebin"  # the 4-byte file header every binlog starts with
 
 
+def _frame_offsets(buf, label: str = "") -> list[int]:
+    """The event_len walk over one binlog file's bytes (the framing walk
+    the reference does off the socket, packet.cc:313-358) -> frame
+    boundary offsets ``[4, end_1, ..., len(buf)]``, i.e. REAL binlog
+    positions. Raises on a missing magic, a corrupt event_len and trailing
+    garbage (``label`` prefixes the message). An int-offset loop over a
+    memoryview (~100 ns/event, no per-event bytes objects)."""
+    mv = memoryview(buf)
+    n = len(mv)
+    if n < 4 or bytes(mv[:4]) != BINLOG_MAGIC:
+        raise ValueError(f"{label}not a binlog file (missing 0xfe 'bin' magic)")
+    offs, pos, unpack = [4], 4, struct.unpack_from
+    while pos + HEADER_LEN <= n:
+        (event_len,) = unpack("<I", mv, pos + 9)
+        if event_len < HEADER_LEN or pos + event_len > n:
+            raise ValueError(f"{label}corrupt frame length {event_len} at offset {pos}")
+        pos += event_len
+        offs.append(pos)
+    if pos != n:
+        raise ValueError(f"{label}trailing garbage: {n - pos} bytes after last frame")
+    return offs
+
+
 def split_binlog_bytes(blob: bytes) -> list[tuple[int, bytes]]:
     """Split one binlog FILE's bytes into (byte_offset, frame) pairs using
-    each event's own event_len (the framing walk the reference does off the
-    socket, /root/reference/packet.cc:313-358). Offsets are the REAL binlog
-    positions (log_pos in MySQL is a byte offset). Sequential by nature —
-    each file is one unit of parallelism (binaryFile rows fan out across
-    executors)."""
-    if blob[:4] != BINLOG_MAGIC:
-        raise ValueError("not a binlog file (missing 0xfe 'bin' magic)")
-    out = []
-    pos, n = 4, len(blob)
-    while pos + HEADER_LEN <= n:
-        event_len = int.from_bytes(blob[pos + 9 : pos + 13], "little")
-        if event_len < HEADER_LEN or pos + event_len > n:
-            raise ValueError(f"corrupt frame length {event_len} at offset {pos}")
-        out.append((pos, blob[pos : pos + event_len]))
-        pos += event_len
-    if pos != n:
-        raise ValueError(f"trailing garbage: {n - pos} bytes after last frame")
-    return out
+    each event's own event_len (``_frame_offsets``). Offsets are the REAL
+    binlog positions (log_pos in MySQL is a byte offset). Sequential by
+    nature — each file is one unit of parallelism (binaryFile rows fan out
+    across executors)."""
+    offs = _frame_offsets(blob)
+    return [(a, blob[a:b]) for a, b in zip(offs, offs[1:])]
 
 
 def binlog_files_to_frames(spark, path_glob: str) -> DataFrame:
@@ -1617,16 +1612,13 @@ def binlog_files_to_frames(spark, path_glob: str) -> DataFrame:
     (packet.cc:120-139) recovered from names.
 
     Zero-copy: the file bytes stay in the Arrow batch's own buffer — the
-    walk is an int-offset loop (struct.unpack_from over a memoryview,
-    ~100 ns/event, no per-event bytes objects), and the output payload
+    walk is ``_frame_offsets`` over a view of it, and the output payload
     column is built DIRECTLY over a view of the file's buffer region
     (frames are back-to-back on disk, so the walk's offsets ARE the Arrow
     offsets). The round-2 version materialized each file via as_py() plus
     one Python bytes per event — a per-task memory spike and millions of
     allocations per GB."""
     import pyarrow as pa
-
-    from binlogsub_spark.codec import _binary_buffers
 
     files = spark.read.format("binaryFile").load(path_glob)
 
@@ -1635,34 +1627,14 @@ def binlog_files_to_frames(spark, path_glob: str) -> DataFrame:
             paths = rb.column(rb.schema.get_field_index("path")).to_pylist()
             contents = rb.column(rb.schema.get_field_index("content"))
             starts, ends, data = _binary_buffers(contents)
-            mv = memoryview(data)
-            unpack = struct.unpack_from
             for i, p in enumerate(paths):
                 seq = int(p.rsplit(".", 1)[-1])
                 fs, fe = int(starts[i]), int(ends[i])
-                if fe - fs < 4 or bytes(mv[fs : fs + 4]) != BINLOG_MAGIC:
-                    raise ValueError(
-                        f"{p}: not a binlog file (missing 0xfe 'bin' magic)"
-                    )
                 if fe - fs > np.iinfo(np.int32).max:
                     raise ValueError(
                         f"{p}: >2 GiB binlog file exceeds Arrow int32 offsets"
                     )
-                offs = [4]
-                pos = fs + 4
-                while pos + HEADER_LEN <= fe:
-                    (event_len,) = unpack("<I", mv, pos + 9)
-                    if event_len < HEADER_LEN or pos + event_len > fe:
-                        raise ValueError(
-                            f"{p}: corrupt frame length {event_len} "
-                            f"at offset {pos - fs}"
-                        )
-                    pos += event_len
-                    offs.append(pos - fs)
-                if pos != fe:
-                    raise ValueError(
-                        f"{p}: trailing garbage: {fe - pos} bytes after last frame"
-                    )
+                offs = _frame_offsets(data[fs:fe], f"{p}: ")
                 n = len(offs) - 1
                 if n == 0:
                     continue
@@ -1746,8 +1718,6 @@ def _rows_signatures(
     NOBLOB row images coexist with FULL ones in a single batch."""
     nbm = (width + 7) // 8
     pos = _rows_post_header_pos(data, starts, type_codes)
-    from binlogsub_spark.codec import read_lenenc_int
-
     _, pos = read_lenenc_int(data, pos)
     pres1 = _gather_fixed(data, pos, nbm)
     pos = pos + nbm
@@ -1824,17 +1794,15 @@ def decode_mysql_events(
     include_before: bool = False,
     on_error: str = "skip",
     known_table_ids: set[int] | None = None,
-    verify_crc: bool = False,
 ) -> DataFrame:
     """Framed MySQL binlog events -> typed change records via mapInArrow.
 
-    NOTE ``skip_invalid`` drops frames on LENGTH checks only by default —
-    CRC is NOT verified on the hot path (parity with the reference, which
-    only strips the trailer, packet.cc:117-119). A bit-flipped frame with
-    self-consistent lengths would decode into garbage values; direct
-    callers that need CRC-checked dropping (and are not routing through
-    split_deadletter_mysql, which always verifies fully) must pass
-    ``verify_crc=True``.
+    NOTE ``skip_invalid`` drops frames on LENGTH checks only — CRC is NOT
+    verified on the hot path (parity with the reference, which only strips
+    the trailer, packet.cc:117-119). A bit-flipped frame with
+    self-consistent lengths would decode into garbage values; callers that
+    need CRC-checked dropping route through split_deadletter_mysql first,
+    which always verifies fully.
 
     ``registry`` maps table_id -> TableMap (extracted+broadcast if omitted);
     ``column_overrides`` replaces a table's parsed columns with named/
@@ -2047,8 +2015,6 @@ def decode_mysql_events(
     known_ids = frozenset(known_table_ids) if known_table_ids is not None else None
 
     def _decode(batches):
-        from binlogsub_spark.codec import _binary_buffers
-
         reg = b_registry.value
         for rb in batches:
             arr = rb.column(rb.schema.get_field_index("payload"))
@@ -2065,8 +2031,7 @@ def decode_mysql_events(
                 # strips the trailer, packet.cc:117-119)
                 keep = (
                     validate_mysql_frames(
-                        data, starts, ends, checksum=checksum,
-                        verify_crc=verify_crc,
+                        data, starts, ends, checksum=checksum, verify_crc=False
                     )
                     == 0
                 )
@@ -2075,15 +2040,13 @@ def decode_mysql_events(
                     file_seq, log_pos = file_seq[keep], log_pos[keep]
                 if len(starts) == 0:
                     continue
-            headers = np.ascontiguousarray(
-                _gather_fixed(data, starts, HEADER_LEN)
-            ).view(_HEADER_DT).reshape(len(starts))
+            headers = _gather_headers(data, starts, _HEADER_DT)
             tcodes = headers["type_code"]
             rows_mask = np.isin(tcodes, ROWS_EVENTS)
             if not rows_mask.any():
                 continue
             ridx = np.flatnonzero(rows_mask)
-            table_ids = _u_le(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
+            table_ids = uint_korr(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
             for tid in np.unique(table_ids):
                 tm = reg.get(int(tid))
                 if tm is None:

@@ -6,7 +6,7 @@ cluster over ~100 TB):
 * AQE on: runtime coalescing of the post-dedup shuffle and skew-join
   splitting are load-bearing at cluster scale (hot conv_id partitions).
 * Arrow on + a large-but-bounded Arrow batch size: the decode stage is a
-  ``mapInPandas`` kernel; batch size bounds executor-side Python memory the
+  ``mapInArrow`` kernel; batch size bounds executor-side Python memory the
   same way the reference bounds its single packet buffer
   (/root/reference/packet.cc:288-301 grows one buffer; we cap batch rows).
 * shuffle.partitions defaults to the local core count; a real deployment

@@ -206,65 +206,53 @@ def test_in_kernel_scope_filter_matches_rlike(spark):
     assert a == b
 
 
-def test_raw_frame_stats_alignment(spark):
-    """raw_frame_stats_df: one row per input frame (valid or not), conv_id
-    null exactly for invalid/out-of-scope frames, header columns passed
-    through untouched."""
-    from pyspark.sql import functions as F
+def test_decode_preserves_embedded_nuls():
+    """Only TRAILING NUL padding strips from conv_id; an embedded NUL is
+    part of the key (first-NUL truncation would collapse distinct merge
+    keys)."""
+    import pandas as pd
 
     from binlogsub_spark.codec import (
-        encode_decoded_events,
-        raw_frame_stats_df,
-        scope_codes_for,
-    )
-    from binlogsub_spark.sources.generator import (
-        GeneratorParams,
-        flatten_for_wire,
-        generate_binlog,
+        decode_payload_batch,
+        encode_record,
+        validate_payload_batch,
     )
 
-    raw = encode_decoded_events(
-        flatten_for_wire(generate_binlog(spark, GeneratorParams(n_events=2000, dup_tail=0)))
-    ).localCheckpoint(eager=True)
-    # corrupt a deterministic subset
-    # log_pos = 4 + k*128, so corrupt on the step index
-    bad = (F.col("log_pos") - 4) / 128 % 37 == 5
-    corrupted = raw.withColumn(
-        "payload",
-        F.when(bad, F.expr("substring(payload, 1, 5)"))
-        .otherwise(F.col("payload")),
-    )
-    stats = raw_frame_stats_df(
-        corrupted, scope_codes=scope_codes_for("^test$", "^transcripts$")
-    )
-    assert stats.count() == corrupted.count()  # every frame accounted for
-    n_bad = corrupted.where(bad).count()
-    n_null = stats.where(F.col("conv_id").isNull()).count()
-    assert n_null >= n_bad > 0  # invalid + out-of-scope frames are null
-    # header columns intact
-    assert (
-        stats.select(F.sum("log_pos")).first()[0]
-        == corrupted.select(F.sum("log_pos")).first()[0]
-    )
+    keys = ["ab\x00cd", "ab\x00ce", "plain", "", "\x00\x00"]
+    batch = pd.Series([
+        encode_record(1, 4 + i, 0, "I", 2, 0, "user", None, i, k, "t")
+        for i, k in enumerate(keys)
+    ])
+    assert validate_payload_batch(batch).all()
+    out = decode_payload_batch(batch).sort_values("log_pos")
+    assert out["conv_id"].tolist() == ["ab\x00cd", "ab\x00ce", "plain", "", ""]
 
 
-def test_fixed_to_string_preserves_embedded_nuls():
-    """rstrip parity: only TRAILING NUL padding strips; an embedded NUL is
-    part of the key (round-4 review finding — first-NUL truncation would
-    collapse distinct merge keys)."""
-    import numpy as np
-    import pyarrow as pa
+def test_decode_unvalidated_short_frame_raises(spark):
+    """decode_raw_events(skip_invalid=False) trusts its caller's
+    validation; a frame shorter than its header must raise instead of
+    decoding the next frame's bytes into a row."""
+    import pytest
 
-    from binlogsub_spark.codec import _fixed_to_string_arrow
+    from binlogsub_spark.codec import HEADER_LEN, decode_raw_events, encode_record
+    from binlogsub_spark.plans.envelope import RAW_SCHEMA
 
-    vals = [b"ab\x00cd", b"ab\x00ce", b"plain", b"", b"\x00\x00"]
-    fixed = np.array([v.ljust(8, b"\x00") for v in vals], dtype="S8")
-    out = _fixed_to_string_arrow(fixed).to_pylist()
-    assert out == ["ab\x00cd", "ab\x00ce", "plain", "", ""]
-    legacy = [
-        s.decode() for s in np.char.rstrip(fixed, b"\x00").tolist()
+    frames = [
+        encode_record(1, 4 + i, 0, "I", 2, 0, "user", None, i, f"c{i}", "text")
+        for i in range(3)
     ]
-    assert out == legacy
+    for cut, msg in [
+        (HEADER_LEN - 15, "frame shorter than its 55-byte"),  # has a version
+        (10, "frame without a known schema_version"),
+    ]:
+        short = list(frames)
+        short[1] = frames[1][:cut]
+        raw = spark.createDataFrame(
+            [(1, 4 + i, f) for i, f in enumerate(short)], RAW_SCHEMA
+        ).coalesce(1)
+        assert decode_raw_events(raw).count() == 2  # validated: dropped
+        with pytest.raises(Exception, match=msg):
+            decode_raw_events(raw, skip_invalid=False).collect()
 
 
 def test_crc32_of_fixed_matches_zlib_and_spark(spark):

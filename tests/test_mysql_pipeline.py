@@ -90,6 +90,49 @@ def test_mysql_stream_resumes_to_same_state(spark, tmp_path):
     assert _final(table.read()) == _final(t2.read())
 
 
+def test_binlog_frame_walk_errors(spark, tmp_path):
+    """Both binlog file entry points walk frames the same way and raise on
+    each framing error: missing magic, corrupt event_len, trailing
+    garbage."""
+    import re
+
+    import pytest
+
+    from binlogsub_spark.mysql_binlog import (
+        BINLOG_MAGIC,
+        binlog_files_to_frames,
+        encode_format_description,
+        encode_rotate,
+        split_binlog_bytes,
+    )
+
+    fd = encode_format_description(checksum=True)
+    good = BINLOG_MAGIC + fd + encode_rotate("binlog.000002", checksum=True)
+    split = split_binlog_bytes(good)
+    assert [o for o, _ in split] == [4, 4 + len(fd)]
+    d = tmp_path / "good"
+    d.mkdir()
+    (d / "binlog.000001").write_bytes(good)
+    rows = binlog_files_to_frames(spark, str(d)).orderBy("log_pos").collect()
+    assert [(r["log_pos"], bytes(r["payload"])) for r in rows] == split
+
+    corrupt_len = bytearray(good)
+    corrupt_len[4 + len(fd) + 9 : 4 + len(fd) + 13] = (5).to_bytes(4, "little")
+    cases = {
+        "not a binlog file (missing 0xfe 'bin' magic)": b"\xfeBIN" + good[4:],
+        f"corrupt frame length 5 at offset {4 + len(fd)}": bytes(corrupt_len),
+        "trailing garbage: 3 bytes after last frame": good + b"xyz",
+    }
+    for i, (msg, blob) in enumerate(cases.items()):
+        with pytest.raises(ValueError, match=re.escape(msg)):
+            split_binlog_bytes(blob)
+        d = tmp_path / f"bad{i}"
+        d.mkdir()
+        (d / "binlog.000001").write_bytes(blob)
+        with pytest.raises(Exception, match=re.escape(f"binlog.000001: {msg}")):
+            binlog_files_to_frames(spark, str(d)).collect()
+
+
 def test_binlog_files_source_end_to_end(spark, tmp_path):
     """REAL .binlog files (magic, FD with checksum byte, byte-offset
     positions) -> frame split -> full engine: final table equals the

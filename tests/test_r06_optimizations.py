@@ -148,9 +148,10 @@ def _is_utf8(b: bytes) -> bool:
 def test_headers_from_arrow_matches_numpy_gather():
     """The C++ header-slice gather must produce the byte-identical
     structured header view the numpy fancy gather produced (every field,
-    both epoch layouts), and report ragged input as None."""
+    both epoch layouts), and raise on ragged input."""
     import numpy as np
     import pyarrow as pa
+    import pytest
 
     from binlogsub_spark.codec import (
         _HEADER_DTYPES,
@@ -177,7 +178,8 @@ def test_headers_from_arrow_matches_numpy_gather():
         assert a is not None
         for name in dt.names:
             assert np.array_equal(a[name], b[name]), (v, name)
-    # ragged (a frame shorter than the header) -> defensive None
+    # ragged (a frame shorter than the header) raises
     dt = list(_HEADER_DTYPES.values())[0]
     short = pa.array([frames[0], b"tiny"], type=pa.binary())
-    assert _headers_from_arrow(short, dt) is None
+    with pytest.raises(ValueError, match="frame shorter than"):
+        _headers_from_arrow(short, dt)

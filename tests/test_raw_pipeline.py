@@ -231,3 +231,31 @@ def test_cli_raw_dead_letter(spark, tmp_path, monkeypatch, capsys):
     assert out["events_seen"] == 1500
     assert spark.read.parquet(str(tmp_path / "dead")).count() == n_bad > 0
     assert out["rows"] > 0
+
+
+def test_embedded_nul_key_update_lands(spark, tmp_path):
+    """A key with an embedded NUL must hash to the same bucket in the
+    touched-bucket kernel as in the merge: batch 2 on a non-fresh table
+    updates ``conv_1\\x00x`` and a plain key, and both updates are read
+    back (a kernel that cut the key at its first NUL marked the wrong
+    bucket, and the update was silently lost)."""
+    from binlogsub_spark.codec import encode_record
+    from binlogsub_spark.plans.envelope import RAW_SCHEMA
+
+    keys = ["conv_1\x00x", "conv_plain"]
+
+    def batch(file_seq, op, text):
+        rows = [
+            (file_seq, 4 + 128 * i, encode_record(
+                file_seq, 4 + 128 * i, 1_700_000_000_000_000 + file_seq * 10 + i,
+                op, 2, 0, "user", None, 0, k, text,
+            ))
+            for i, k in enumerate(keys)
+        ]
+        return spark.createDataFrame(rows, RAW_SCHEMA)
+
+    table = LakeTable(spark, str(tmp_path / "tbl"), buckets=32)
+    apply_raw_batch(table, batch(1, "I", "v1"), batch_id=1)
+    apply_raw_batch(table, batch(2, "U", "v2"), batch_id=2)
+    got = {r["conv_id"]: r["text"] for r in table.read().collect()}
+    assert got == {k: "v2" for k in keys}

@@ -128,10 +128,8 @@ def q_cdc_applied_skipped_metrics(spark, sf):
 
 
 def q_cdc_windowed_metrics(spark, sf):
-    """Event-time tumbling-window rates (the streaming metrics layer's
-    aggregation shape, binlogsub_spark/streaming.py, run in batch form so
-    DuckDB can replay it — window boundaries are epoch-aligned in both
-    engines)."""
+    """Event-time tumbling-window rates (run in batch form so DuckDB can
+    replay it — window boundaries are epoch-aligned in both engines)."""
     ev = _t(spark, sf, "events")
     return (
         ev.groupBy(F.window("ts", "10 minutes"), "user_id")
@@ -152,11 +150,11 @@ def q_cdc_windowed_metrics(spark, sf):
 
 
 def q_cdc_session_windows(spark, sf):
-    """Gap-based sessionization (streaming.py session_metrics's
-    F.session_window aggregation, run in batch form so DuckDB can replay
-    it): consecutive events of one user within the gap merge into a
-    session — an event exactly ON the end boundary (ts - prev == gap)
-    still MERGES (pinned empirically in the boundary-semantics test);
+    """Gap-based sessionization (an F.session_window aggregation, run in
+    batch form so DuckDB can replay it): consecutive events of one user
+    within the gap merge into a session — an event exactly ON the end
+    boundary (ts - prev == gap) still MERGES (pinned empirically in
+    tests/test_streaming.py::test_session_metrics_boundary_semantics);
     session_end = last event + gap. The oracle rebuilds sessions with
     lag + a cumulative break counter (break when the gap is exceeded)."""
     ev = _t(spark, sf, "events")

@@ -11,17 +11,14 @@ format documentation:
   fields with 0-6 fractional digits in 0-3 trailing bytes. Reference:
   /root/reference/my_time.cc:12-155, dispatch event.cc:748-800.
 
-These kernels are the slow-path scalar truth plus numpy batch wrappers;
-the engine's own wire format (codec.py) stays the hot path. They exist so
-a real MySQL-binlog source could be decoded by this engine with verified
-semantics.
+These kernels are the scalar truth for the vectorized decode in
+mysql_binlog.py (which shares the decimal size tables); the engine's own
+wire format (codec.py) stays the hot path.
 """
 
 from __future__ import annotations
 
 from decimal import Decimal
-
-import numpy as np
 
 DIG_PER_DEC = 9
 DIG2BYTES = [0, 1, 1, 2, 2, 3, 3, 4, 4, 4]
@@ -200,28 +197,3 @@ def encode_time2(sign, h, mi, s, micros=0, fsp=0) -> bytes:
         out += frac.to_bytes(nbytes, "big")
     return out
 
-
-# ----------------------------------------------------------- batch wrapper
-def bin_to_decimal_batch(
-    bufs: np.ndarray, precision: int, scale: int
-) -> np.ndarray:
-    """Arrow-batch wrapper (object array of bytes -> object array of
-    Decimal). precision <= 18 routes through the fully vectorized kernel
-    the hot decode path uses (mysql_binlog._decode_newdecimal_scaled on one
-    contiguous buffer); wider decimals fall back to the scalar truth."""
-    from decimal import Decimal
-
-    if precision <= 18 and len(bufs):
-        from binlogsub_spark.mysql_binlog import _decode_newdecimal_scaled
-
-        size = decimal_bin_size(precision, scale)
-        data = np.frombuffer(b"".join(bytes(b[:size]) for b in bufs), dtype=np.uint8)
-        pos = np.arange(len(bufs), dtype=np.int64) * size
-        scaled, _ = _decode_newdecimal_scaled(data, pos, precision, scale)
-        # exact: Decimal from the scaled INTEGER, never through float
-        return np.array(
-            [Decimal(int(s)).scaleb(-scale) for s in scaled], dtype=object
-        )
-    return np.array(
-        [bin_to_decimal(b, precision, scale) for b in bufs], dtype=object
-    )

@@ -64,7 +64,6 @@ from binlogsub_spark.codec_mysql import (
 # ------------------------------------------------------------ constants --
 HEADER_LEN = 19
 
-QUERY_EVENT = 2
 ROTATE_EVENT = 4
 FORMAT_DESCRIPTION_EVENT = 15
 XID_EVENT = 16
@@ -443,71 +442,7 @@ def encode_format_description(checksum: bool = False, **kw) -> bytes:
     return _finish_event(FORMAT_DESCRIPTION_EVENT, body, checksum=checksum, **kw)
 
 
-def fd_checksum_enabled(frame: bytes) -> bool:
-    """Read the checksum-algorithm byte out of a FORMAT_DESCRIPTION frame:
-    the in-band replacement for the reference's `SHOW GLOBAL VARIABLES
-    LIKE 'BINLOG_CHECKSUM'` probe. When checksums are ON, the FD event
-    itself carries alg byte + its own CRC as the last 5 bytes; when OFF,
-    the alg byte (0) is last."""
-    h = parse_event_header(frame)
-    if h["type_code"] != FORMAT_DESCRIPTION_EVENT:
-        raise ValueError("not a FORMAT_DESCRIPTION event")
-    # try checksum-on layout first: [... alg][crc32 of frame[:-4]]
-    if len(frame) >= 24 and frame[-5] == 1:
-        if zlib.crc32(frame[:-4]) == int.from_bytes(frame[-4:], "little"):
-            return True
-    return False
-
-
-# ----------------------------------------------------- protocol packets --
-def encode_error_packet(errcode: int, sqlstate: str, message: str) -> bytes:
-    """MySQL wire ERR packet: 0xff + errcode u16 LE + '#' + 5-char
-    sqlstate + message (parity: /root/reference/packet.cc:16-30)."""
-    return (
-        b"\xff"
-        + errcode.to_bytes(2, "little")
-        + b"#"
-        + sqlstate.encode()[:5].ljust(5, b"0")
-        + message.encode()
-    )
-
-
-def parse_error_packet(payload: bytes) -> dict:
-    """Decode the server's ERR packet so a dead-lettered/aborted dump
-    session is explainable (the reference logs errcode+message then
-    aborts; we surface the same fields as data)."""
-    if not payload or payload[0] != 0xFF:
-        raise ValueError("not an ERR packet (leading byte != 0xff)")
-    errcode = int.from_bytes(payload[1:3], "little")
-    pos, sqlstate = 3, None
-    if len(payload) > 3 and payload[3:4] == b"#":
-        sqlstate = payload[4:9].decode(errors="replace")
-        pos = 9
-    return {
-        "errcode": errcode,
-        "sqlstate": sqlstate,
-        "message": payload[pos:].decode(errors="replace"),
-    }
-
-
-def parse_rotate(frame: bytes, checksum: bool = False) -> tuple[str, int]:
-    """ROTATE_EVENT -> (next_file, next_pos): the control event that
-    advances the file frontier (the reference folds this into its position
-    context, /root/reference/packet.cc:120-139; the Spark source model
-    carries file_seq as a framing column, so rotate handling is the
-    SOURCE's job — this parser exists for a source implementation and for
-    parity tests)."""
-    body = frame[HEADER_LEN : len(frame) - (4 if checksum else 0)]
-    pos = int.from_bytes(body[0:8], "little")
-    return body[8:].decode(), pos
-
-
 # ------------------------------------------------------------- parsing --
-def parse_event_header(frame: bytes) -> dict:
-    vals = struct.unpack_from("<IBIIIH", frame, 0)
-    return dict(zip(("ts", "type_code", "server_id", "event_len", "next_pos", "flags"), vals))
-
-
 def parse_table_map(frame: bytes, checksum: bool = False) -> TableMap:
     """Scalar table-map parse (control events are rare; parsed on the
     driver and broadcast). Parity: event.cc:104-221."""
@@ -1594,16 +1529,6 @@ def _frame_offsets(buf, label: str = "") -> list[int]:
     return offs
 
 
-def split_binlog_bytes(blob: bytes) -> list[tuple[int, bytes]]:
-    """Split one binlog FILE's bytes into (byte_offset, frame) pairs using
-    each event's own event_len (``_frame_offsets``). Offsets are the REAL
-    binlog positions (log_pos in MySQL is a byte offset). Sequential by
-    nature — each file is one unit of parallelism (binaryFile rows fan out
-    across executors)."""
-    offs = _frame_offsets(blob)
-    return [(a, blob[a:b]) for a, b in zip(offs, offs[1:])]
-
-
 def binlog_files_to_frames(spark, path_glob: str) -> DataFrame:
     """Real .binlog files -> the engine's framed-event table
     (file_seq, log_pos, payload): `binaryFile` source (one file per task),
@@ -1665,30 +1590,6 @@ MYSQL_RAW_SCHEMA = T.StructType(
         T.StructField("payload", T.BinaryType(), False),
     ]
 )
-
-
-def demux_event_types(raw_df: DataFrame) -> DataFrame:
-    """P1 over genuine frames: per-event-type accounting (rows vs control
-    events) straight off the type byte at header offset 4 — a JVM substring
-    expression, so the demux never ships payloads to Python
-    (/root/reference/packet.cc:70-109's switch, as one groupBy)."""
-    code = F.ascii(F.expr("substring(payload, 5, 1)"))
-    name = (
-        F.when(code == QUERY_EVENT, "query")
-        .when(code == ROTATE_EVENT, "rotate")
-        .when(code == FORMAT_DESCRIPTION_EVENT, "format_description")
-        .when(code == XID_EVENT, "xid")
-        .when(code == TABLE_MAP_EVENT, "table_map")
-        .when(code.isin(WRITE_ROWS_EVENT_V1, WRITE_ROWS_EVENT_V2), "write_rows")
-        .when(code.isin(UPDATE_ROWS_EVENT_V1, UPDATE_ROWS_EVENT_V2), "update_rows")
-        .when(code.isin(DELETE_ROWS_EVENT_V1, DELETE_ROWS_EVENT_V2), "delete_rows")
-        .when(code == GTID_LOG_EVENT, "gtid")
-        .otherwise("other")
-    )
-    return raw_df.groupBy(name.alias("event_type")).agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.octet_length("payload")).alias("n_bytes"),
-    )
 
 
 def extract_table_maps(raw_df: DataFrame, checksum: bool = False) -> dict[int, TableMap]:

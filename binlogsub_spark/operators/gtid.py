@@ -130,21 +130,6 @@ def gtid_set_contains(gset: GtidSet, uuid: str, gno: int) -> bool:
     return False
 
 
-def check_resume_gap(purged: GtidSet | str, executed: GtidSet | str) -> GtidSet:
-    """The transactions LOST if a subscriber with ``executed`` resumes
-    against a server whose ``gtid_purged`` is ``purged``: everything the
-    server has already discarded that the subscriber never applied —
-    ``purged - executed``. Empty means the resume is gapless (the check a
-    real auto-position dump performs before streaming; a non-empty result
-    here is permanent data loss and the caller should bootstrap from a
-    snapshot instead, cf. pipeline.bootstrap_from_snapshot)."""
-    if isinstance(purged, str):
-        purged = parse_gtid_set(purged)
-    if isinstance(executed, str):
-        executed = parse_gtid_set(executed)
-    return gtid_set_subtract(purged, executed)
-
-
 def split_gtid(col):
     """``uuid:gno`` string column -> (server_uuid, gno) columns."""
     return (

@@ -413,36 +413,6 @@ def _liveness_monitor(spark, liveness, source_path: str, table: LakeTable):
     )
 
 
-def run_stream_multi(
-    spark: SparkSession,
-    source_path: str,
-    tables: dict[str, LakeTable],
-    checkpoint_dir: str,
-    cfgs: EngineConfig | dict[str, EngineConfig] | None = None,
-    max_files_per_trigger: int = 4,
-    available_now: bool = True,
-    source_schema: T.StructType | None = None,
-):
-    """Structured Streaming fan-out: one envelope stream, N destination
-    tables, a single shared checkpoint. Each micro-batch is routed with
-    :func:`apply_batch_multi`; every destination's merge is idempotent on
-    the shared streaming batch_id, so a kill/restart replay is a committed
-    no-op on tables that already applied it — per-table exactly-once with
-    one checkpoint."""
-    if source_schema is None:
-        source_schema = spark.read.parquet(source_path).schema
-    reader = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
-    )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch_multi(tables, batch_df, batch_id, cfgs)
-
-    return _start(reader, _apply, checkpoint_dir, available_now)
-
-
 def run_stream(
     spark: SparkSession,
     source_path: str,

@@ -37,30 +37,31 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--max-files-per-trigger", type=int, default=4)
     ap.add_argument("--master", default=None)
     ap.add_argument("--timeout-sec", type=int, default=3600)
-    ap.add_argument(
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument(
         "--raw", action="store_true",
         help="binary wire mode: source rows are (file_seq, log_pos, "
         "payload:binary); decode runs as an Arrow kernel inside each batch",
     )
-    ap.add_argument(
+    mode.add_argument(
         "--mysql", action="store_true",
         help="genuine MySQL binlog-frame mode: source rows are (file_seq, "
         "log_pos, payload) where payload is a full binlog event frame "
         "(19-byte header, TABLE_MAP control frames, rows events v2, CRC32)",
     )
-    ap.add_argument(
+    mode.add_argument(
         "--debezium", action="store_true",
         help="Debezium-JSON mode: source is a JSON-lines landing zone of "
         "connector value documents (before/after/source/op); parsed with "
         "from_json into the engine envelope per micro-batch",
     )
-    ap.add_argument(
+    mode.add_argument(
         "--canal", action="store_true",
         help="Canal flatMessage mode: JSON-lines landing zone of "
         "file_seq\\tlog_pos\\tflatMessage lines (data/old string arrays, "
         "type INSERT/UPDATE/DELETE); parsed with from_json per micro-batch",
     )
-    ap.add_argument(
+    mode.add_argument(
         "--maxwell", action="store_true",
         help="Maxwell-JSON mode: JSON-lines landing zone of maxwell "
         "records (data/old, type insert/update/delete, in-band "
@@ -151,6 +152,7 @@ def main(argv: list[str] | None = None) -> int:
         "live rows of the listed conv_ids as JSON lines",
     )
     args = ap.parse_args(argv)
+    _check_flags(ap, args)
 
     spark = get_spark(app_name="binlogsub-ingest", master=args.master)
     if args.changes is not None:
@@ -210,11 +212,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(r, default=str))
         spark.stop()
         return 0
-    if not args.source or not args.checkpoint:
-        ap.error(
-            "--source and --checkpoint are required unless "
-            "--changes/--rebucket/--delete-keys"
-        )
     if args.generate:
         params = GeneratorParams(n_events=args.generate)
         if args.mysql:
@@ -274,8 +271,6 @@ def main(argv: list[str] | None = None) -> int:
     elif args.maxwell:
         from binlogsub_spark.pipeline import run_stream_maxwell as runner
     if args.audit_max_drop is not None:
-        if runner is not run_stream:
-            ap.error("--audit-max-drop is only wired for structured mode")
         from binlogsub_spark.audits import row_count_guard
 
         extra_kw["audit"] = row_count_guard(args.audit_max_drop)
@@ -311,6 +306,38 @@ def main(argv: list[str] | None = None) -> int:
     print(json.dumps(out, default=str))
     spark.stop()
     return 0
+
+
+# flag -> the ingest modes that use it (None = structured mode)
+_MODE_FLAGS = {
+    "dead_letter": ("mysql", "raw"),
+    "atomic": ("mysql",),
+    "gtid": ("mysql",),
+    "gtid_auto_position": ("mysql",),
+    "audit_max_drop": (None,),
+}
+_MAINTENANCE = ("changes", "rebucket", "freshness", "compact", "vacuum", "get", "delete_keys")
+
+
+def _check_flags(ap, args) -> None:
+    """Reject flag combinations the chosen mode would silently ignore,
+    before a Spark session starts or --generate writes anything."""
+
+    def given(flag: str) -> bool:
+        return getattr(args, flag) != ap.get_default(flag)
+
+    mode = next(
+        (m for m in ("raw", "mysql", "debezium", "canal", "maxwell") if given(m)), None
+    )
+    for flag, modes in _MODE_FLAGS.items():
+        if given(flag) and mode not in modes:
+            wired = "/".join(m or "structured" for m in modes)
+            ap.error(f"--{flag.replace('_', '-')} is only wired for {wired} mode")
+    if not any(map(given, _MAINTENANCE)) and not (args.source and args.checkpoint):
+        ap.error(
+            "--source and --checkpoint are required unless "
+            "--" + "/--".join(f.replace("_", "-") for f in _MAINTENANCE)
+        )
 
 
 def _run_changes(spark, args) -> dict:

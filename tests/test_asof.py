@@ -45,10 +45,10 @@ def test_gtid_extraction_and_assignment(spark):
     """GTID control events tag every row of their transaction — the
     'GTID+log-position ordering' recovered relationally (as-of join)."""
     from binlogsub_spark.mysql_binlog import (
+        GTID_LOG_EVENT,
         WRITE_ROWS_EVENT_V2,
         assign_gtids,
         decode_mysql_events,
-        demux_event_types,
         encode_gtid,
         encode_rows_event,
         extract_gtids,
@@ -78,8 +78,9 @@ def test_gtid_extraction_and_assignment(spark):
     gt = extract_gtids(df)
     rows = {r["log_pos"]: r["gtid"] for r in gt.collect()}
     assert rows == {100: f"{sid1}:1", 300: f"{sid2}:7"}
-    assert {r["event_type"] for r in demux_event_types(df).collect()} == {
-        "gtid", "write_rows"
+    type_byte = F.hex(F.expr("substring(payload, 5, 1)")).alias("type_byte")
+    assert {r["type_byte"] for r in df.select(type_byte).distinct().collect()} == {
+        f"{GTID_LOG_EVENT:02X}", f"{WRITE_ROWS_EVENT_V2:02X}"
     }
 
     decoded = decode_mysql_events(df, registry={7: tm})

@@ -17,7 +17,6 @@ from binlogsub_spark.pipeline import (
     apply_batch,
     apply_batch_multi,
     bootstrap_from_snapshot,
-    run_stream_multi,
 )
 from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
 
@@ -103,35 +102,3 @@ def test_multi_table_routing_batch(spark, tmp_path):
     replay = apply_batch_multi(dests, ev, batch_id=1)
     assert all(m["replayed"] for m in replay.values())
     ev.unpersist()
-
-
-def test_multi_table_routing_stream(spark, tmp_path):
-    """Streaming fan-out with one shared checkpoint converges both tables."""
-    ev = generate_binlog(spark, GeneratorParams(n_events=1500, n_convs=30)).withColumn(
-        "table_name",
-        F.when(F.col("delivery_seq") % 3 == 0, F.lit("transcripts_audit")).otherwise(
-            F.lit("transcripts")
-        ),
-    )
-    src = str(tmp_path / "src")
-    ev.repartitionByRange(6, "delivery_seq").write.parquet(src)
-    dests = {
-        "transcripts": LakeTable(spark, str(tmp_path / "t1"), buckets=8),
-        "transcripts_audit": LakeTable(spark, str(tmp_path / "t2"), buckets=8),
-    }
-    q = run_stream_multi(spark, src, dests, str(tmp_path / "ckpt"))
-    q.awaitTermination()
-    evc = ev.cache()
-    for name in dests:
-        solo = LakeTable(spark, str(tmp_path / f"solo_{name}"), buckets=8)
-        apply_batch(
-            solo,
-            evc.where(F.col("table_name") == name).withColumn(
-                "table_name", F.lit("transcripts")
-            ),
-            batch_id=1,
-        )
-        pd.testing.assert_frame_equal(
-            _state(dests[name]), _state(solo), check_dtype=False
-        )
-    evc.unpersist()

@@ -238,19 +238,6 @@ def test_stream_gtid_auto_position_frontier(spark, tmp_path):
     assert t2.snapshot() is None or t2.read().count() == 0
 
 
-def test_check_resume_gap():
-    from binlogsub_spark.operators.gtid import check_resume_gap
-
-    # server purged 1-100; we executed 1-80 -> 81-100 are lost
-    lost = check_resume_gap(f"{U1}:1-100", f"{U1}:1-80")
-    assert lost == {U1: [(81, 100)]}
-    # fully-covered purge window -> gapless resume
-    assert check_resume_gap(f"{U1}:1-80", f"{U1}:1-100") == {}
-    # an unknown server uuid in purged is wholly lost
-    lost2 = check_resume_gap(f"{U1}:1-5,{U2}:1-3", f"{U1}:1-5")
-    assert lost2 == {U2: [(1, 3)]}
-
-
 def test_atomic_and_auto_position_compose(spark, tmp_path):
     """XID transaction-atomic batching and GTID auto-positioning ride the
     same stream: GTIDs are extracted from the COMMITTED side only (a

@@ -12,7 +12,9 @@ from decimal import Decimal
 import numpy as np
 import pytest
 
+from binlogsub_spark.codec import _gather_headers
 from binlogsub_spark.mysql_binlog import (
+    _HEADER_DT,
     DELETE_ROWS_EVENT_V2,
     MYSQL_TYPE_BLOB,
     MYSQL_TYPE_DATETIME2,
@@ -44,7 +46,6 @@ from binlogsub_spark.mysql_binlog import (
     encode_rows_event,
     encode_table_map,
     extract_table_maps,
-    parse_event_header,
     parse_table_map,
 )
 
@@ -202,10 +203,10 @@ def test_remaining_type_dispatch():
 def test_header_and_control_events():
     fd = encode_format_description()
     rot = encode_rotate("binlog.000002", pos=4)
-    h = parse_event_header(fd)
-    assert h["type_code"] == 15 and h["event_len"] == len(fd)
-    h2 = parse_event_header(rot)
-    assert h2["type_code"] == 4 and h2["event_len"] == len(rot)
+    data, starts, _ = _frames_np([fd, rot])
+    h = _gather_headers(data, starts, _HEADER_DT)
+    assert list(h["type_code"]) == [15, 4]
+    assert list(h["event_len"]) == [len(fd), len(rot)]
 
 
 def test_spark_end_to_end_with_registry_extraction(spark):
@@ -254,61 +255,6 @@ def test_spark_end_to_end_with_registry_extraction(spark):
     assert got.count() == ev.count()
     assert want.exceptAll(got).count() == 0
     assert got.exceptAll(want).count() == 0
-
-
-def test_error_packet_roundtrip():
-    from binlogsub_spark.mysql_binlog import encode_error_packet, parse_error_packet
-
-    p = encode_error_packet(1236, "HY000", "Could not find first log file")
-    got = parse_error_packet(p)
-    assert got == {
-        "errcode": 1236,
-        "sqlstate": "HY000",
-        "message": "Could not find first log file",
-    }
-    with pytest.raises(ValueError):
-        parse_error_packet(b"\x00ok")
-
-
-def test_rotate_parse_roundtrip():
-    from binlogsub_spark.mysql_binlog import encode_rotate, parse_rotate
-
-    for cs in (False, True):
-        f = encode_rotate("binlog.000042", pos=4, checksum=cs)
-        assert parse_rotate(f, checksum=cs) == ("binlog.000042", 4)
-
-
-def test_demux_event_types(spark):
-    from pyspark.sql import functions as F
-
-    from binlogsub_spark.mysql_binlog import (
-        demux_event_types,
-        encode_format_description,
-        encode_rotate,
-        encode_rows_event,
-        encode_table_map,
-    )
-
-    tm = _tmap()
-    frames = [
-        encode_format_description(),
-        encode_table_map(tm),
-        encode_rows_event(WRITE_ROWS_EVENT_V2, tm, [
-            (1, 1, 1, Decimal("1.0000"), datetime(2024, 1, 1), 1, "a", "b", b"c", 1.0)
-        ]),
-        # v1 generation frames must demux under the same rows-event labels
-        # as v2 — the decoder handles both, the accounting must agree
-        encode_rows_event(WRITE_ROWS_EVENT_V1, tm, [
-            (2, 2, 2, Decimal("2.0000"), datetime(2024, 1, 2), 2, "d", "e", b"f", 2.0)
-        ]),
-        encode_rotate("binlog.000002"),
-    ]
-    df = spark.createDataFrame(
-        [(0, i, bytearray(f)) for i, f in enumerate(frames)],
-        "file_seq INT, log_pos LONG, payload BINARY",
-    )
-    got = {r["event_type"]: r["n_events"] for r in demux_event_types(df).collect()}
-    assert got == {"format_description": 1, "table_map": 1, "write_rows": 2, "rotate": 1}
 
 
 from hypothesis import given, settings, strategies as st
@@ -432,9 +378,9 @@ def test_validate_verify_crc_flag():
 
 
 def test_full_type_matrix_decode():
-    """DATE/NEWDATE, SET, BIT, CHAR, temporal v1 (TIMESTAMP/DATETIME/TIME)
-    and a wide DECIMAL(30,10) — the rest of the ParseColumnValue matrix
-    (event.cc:534-710) through the wave kernel."""
+    """DATE/NEWDATE, SET, BIT, CHAR, temporal v1 (TIMESTAMP/DATETIME/TIME),
+    a wide DECIMAL(30,10) and a narrow DECIMAL(10,2) — the rest of the
+    ParseColumnValue matrix (event.cc:534-710) through the wave kernel."""
     from datetime import date
 
     from binlogsub_spark.mysql_binlog import (
@@ -463,15 +409,16 @@ def test_full_type_matrix_decode():
             MysqlColumn("dt1", MYSQL_TYPE_DATETIME),
             MysqlColumn("tm1", MYSQL_TYPE_TIME),
             MysqlColumn("wd", MYSQL_TYPE_NEWDECIMAL, meta=(30, 10)),
+            MysqlColumn("nd", MYSQL_TYPE_NEWDECIMAL, meta=(10, 2)),
         ],
     )
     rows = [
         (date(2024, 2, 29), date(1970, 1, 1), 0b100001101, 0xABC, "hi", "x" * 300,
          1_700_000_000, datetime(2024, 12, 31, 23, 59, 58), (1, 100, 30, 9),
-         Decimal("12345678901234567890.0123456789")),
+         Decimal("12345678901234567890.0123456789"), Decimal("-3.50")),
         (date(1999, 12, 31), date(2038, 1, 19), 0, 0, "", "",
          0, datetime(1000, 1, 1, 0, 0, 0), (-1, 0, 0, 1),
-         Decimal("-0.0000000001")),
+         Decimal("-0.0000000001"), Decimal("0")),
     ]
     frames = [encode_rows_event(WRITE_ROWS_EVENT_V2, tm, rows)]
     data, starts, ends = _frames_np(frames)
@@ -502,6 +449,8 @@ def test_full_type_matrix_decode():
     assert wd.dtype == object
     assert int(wd[0]) == 123456789012345678900123456789
     assert int(wd[1]) == -1
+    # a narrow DECIMAL(10,2): the scaled int64 path, negative and zero
+    assert list(dec["nd"][0]) == [-350, 0]
 
 
 def test_full_type_matrix_spark(spark):

@@ -10,7 +10,6 @@ from hypothesis import given, settings, strategies as st
 
 from binlogsub_spark.codec_mysql import (
     bin_to_decimal,
-    bin_to_decimal_batch,
     decimal_bin_size,
     decimal_to_bin,
     decode_datetime2,
@@ -76,12 +75,6 @@ def test_decimal_sign_bit_semantics():
     neg = decimal_to_bin(Decimal("-1"), 9, 0)
     assert pos[0] & 0x80
     assert not (neg[0] & 0x80)
-
-
-def test_decimal_batch():
-    bufs = [decimal_to_bin(Decimal(x), 10, 2) for x in ("1.25", "-3.50", "0")]
-    out = bin_to_decimal_batch(bufs, 10, 2)
-    assert list(out) == [Decimal("1.25"), Decimal("-3.50"), Decimal("0.00")]
 
 
 def test_datetime2_roundtrip_and_fields():

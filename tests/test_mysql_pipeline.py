@@ -91,25 +91,26 @@ def test_mysql_stream_resumes_to_same_state(spark, tmp_path):
 
 
 def test_binlog_frame_walk_errors(spark, tmp_path):
-    """Both binlog file entry points walk frames the same way and raise on
-    each framing error: missing magic, corrupt event_len, trailing
-    garbage."""
+    """The binlog file source frames a file exactly where the event_len
+    walk (``_frame_offsets``) puts the boundaries, and both raise on each
+    framing error: missing magic, corrupt event_len, trailing garbage."""
     import re
 
     import pytest
 
     from binlogsub_spark.mysql_binlog import (
         BINLOG_MAGIC,
+        _frame_offsets,
         binlog_files_to_frames,
         encode_format_description,
         encode_rotate,
-        split_binlog_bytes,
     )
 
     fd = encode_format_description(checksum=True)
     good = BINLOG_MAGIC + fd + encode_rotate("binlog.000002", checksum=True)
-    split = split_binlog_bytes(good)
-    assert [o for o, _ in split] == [4, 4 + len(fd)]
+    offs = _frame_offsets(good)
+    assert offs == [4, 4 + len(fd), len(good)]
+    split = [(a, good[a:b]) for a, b in zip(offs, offs[1:])]
     d = tmp_path / "good"
     d.mkdir()
     (d / "binlog.000001").write_bytes(good)
@@ -125,7 +126,7 @@ def test_binlog_frame_walk_errors(spark, tmp_path):
     }
     for i, (msg, blob) in enumerate(cases.items()):
         with pytest.raises(ValueError, match=re.escape(msg)):
-            split_binlog_bytes(blob)
+            _frame_offsets(blob)
         d = tmp_path / f"bad{i}"
         d.mkdir()
         (d / "binlog.000001").write_bytes(blob)
@@ -137,11 +138,14 @@ def test_binlog_files_source_end_to_end(spark, tmp_path):
     """REAL .binlog files (magic, FD with checksum byte, byte-offset
     positions) -> frame split -> full engine: final table equals the
     structured path's on the same logical stream."""
+    import numpy as np
+
     from binlogsub_spark.mysql_binlog import (
+        FORMAT_DESCRIPTION_EVENT,
+        TABLE_MAP_EVENT,
+        _frame_offsets,
         binlog_files_to_frames,
-        demux_event_types,
-        fd_checksum_enabled,
-        split_binlog_bytes,
+        validate_mysql_frames,
     )
     from binlogsub_spark.sources.generator import write_mysql_binlog_files
 
@@ -150,15 +154,18 @@ def test_binlog_files_source_end_to_end(spark, tmp_path):
     paths = write_mysql_binlog_files(spark, d, params, checksum=True)
     assert len(paths) >= 1 and paths[0].endswith("binlog.000000")
 
-    # checksum mode is discoverable from the file itself (S3 probe analog)
-    first = split_binlog_bytes(open(paths[0], "rb").read())
-    assert first[0][0] == 4  # first frame right after the magic
-    assert fd_checksum_enabled(first[0][1]) is True
+    # every frame of the first file carries a valid CRC32 trailer
+    blob = open(paths[0], "rb").read()
+    offs = np.array(_frame_offsets(blob), dtype=np.int64)
+    assert offs[0] == 4  # first frame right after the magic
+    data = np.frombuffer(blob, dtype=np.uint8)
+    assert not validate_mysql_frames(data, offs[:-1], offs[1:], checksum=True).any()
 
     frames = binlog_files_to_frames(spark, d)
-    got = {r["event_type"]: r["n_events"] for r in demux_event_types(frames).collect()}
-    assert got["format_description"] == len(paths)
-    assert got["table_map"] == 3 * len(paths)
+    type_byte = F.hex(F.expr("substring(payload, 5, 1)")).alias("type_byte")
+    got = {r["type_byte"]: r["count"] for r in frames.groupBy(type_byte).count().collect()}
+    assert got[f"{FORMAT_DESCRIPTION_EVENT:02X}"] == len(paths)
+    assert got[f"{TABLE_MAP_EVENT:02X}"] == 3 * len(paths)
 
     t_files = LakeTable(spark, str(tmp_path / "tf"), buckets=16)
     m = apply_mysql_batch(

@@ -150,3 +150,35 @@ def test_raw_stream_kill_and_restart(spark, tmp_path):
     )
     exp = expected_final_state(generate_binlog(spark, p).toPandas())
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+
+
+def test_session_metrics_boundary_semantics(spark):
+    """Pins Spark's session_window boundary rule: an event exactly gap
+    after the previous one MERGES into the session (boundary-inclusive);
+    the end is last event + gap. The cdc_session_windows DuckDB oracle
+    mirrors exactly this rule — if Spark ever changes it, this fails
+    before scripts/check_contract.py does."""
+    from datetime import datetime
+
+    from pyspark.sql import functions as F
+
+    def ev(minute, second=0):
+        return ("c1", datetime(2026, 1, 1, 12, minute, second))
+
+    df = spark.createDataFrame(
+        # 9:59 merges (within gap); 30 breaks (>gap after 9:59);
+        # 40 lands exactly ON 30's boundary -> MERGES (inclusive);
+        # 50:01 is 1s past 40's boundary -> new session
+        [ev(0), ev(9, 59), ev(30), ev(40), ev(50, 1)],
+        "conv_id string, server_ts timestamp",
+    )
+    sessions = df.groupBy(F.session_window("server_ts", "10 minutes"), "conv_id").agg(
+        F.count("*").alias("n_changes")
+    )
+    rows = sorted(sessions.collect(), key=lambda r: r["session_window"]["start"])
+    assert len(rows) == 3
+    assert rows[0]["n_changes"] == 2  # 12:00 + 12:09:59
+    assert rows[0]["session_window"]["end"] == datetime(2026, 1, 1, 12, 19, 59)
+    assert rows[1]["n_changes"] == 2  # 12:30 + 12:40 (boundary merges)
+    assert rows[1]["session_window"]["end"] == datetime(2026, 1, 1, 12, 50, 0)
+    assert rows[2]["n_changes"] == 1

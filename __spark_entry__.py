@@ -1831,7 +1831,7 @@ def q_cdc_txn_atomic_ingest(spark, sf):
     value-checked by DuckDB: changes are framed with XID commit markers
     (one per three changes, plus a final commit per binlog file), and the
     stream is cut MID-TRANSACTION at each file's midpoint. With
-    atomic_commits=True the first batch defers every row past its file's
+    a stash_path the first batch defers every row past its file's
     last XID (stashing them instead of half-applying a transaction); the
     second batch unions the stash back in and the trailing commits land
     everything. The final table must equal the plain full-replay LWW —
@@ -1893,7 +1893,7 @@ def q_cdc_txn_atomic_ingest(spark, sf):
     ):
         apply_mysql_batch(
             table, part, batch_id=i + 1, cfg=EngineConfig(), name_map=name_map,
-            registry_cache=cache, atomic_commits=True,
+            registry_cache=cache,
             stash_path=os.path.join(tmp, "stash"), persist_source=True,
         )
     return table.read().select(

@@ -68,10 +68,6 @@ class EngineConfig:
     # 0/1 disables salting. At cluster scale this should be ~#cores in the
     # stage divided by expected distinct hot keys.
     skew_salt: int = 8
-    # Number of hash buckets the lake table clusters conv_id into. MERGE
-    # rewrites only touched buckets (copy-on-write granularity). At 100 TB
-    # this is the knob that bounds per-commit rewrite volume.
-    table_buckets: int = 32
     # Auto-compact after this many commits: a long-running stream otherwise
     # accumulates one commit dir per micro-batch and the read-side union
     # grows without bound. 0 disables.

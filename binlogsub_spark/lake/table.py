@@ -687,11 +687,6 @@ class LakeTable:
             applied, batch_max_ts = 0, None
             if touched is None or touched:
                 obs = Observation(f"merge-{batch_id}")
-                out_cols = [
-                    F.col(f.name) if f.name in merged.columns
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in schema.fields
-                ]
                 obs_metrics = [
                     F.count(F.when(F.col("_origin") == -1, 1)).alias("applied"),
                     F.count("*").alias("live_rows"),
@@ -708,7 +703,7 @@ class LakeTable:
                         F.collect_set(F.col("_bucket")).alias("touched")
                     )
                 to_write = merged.observe(obs, *obs_metrics).select(
-                    *out_cols, "_bucket"
+                    *schema.fieldNames(), "_bucket"
                 )
                 (
                     # already bucket-colocated by the merge shuffle: each

@@ -1163,70 +1163,41 @@ def encode_xid(xid_no: int, checksum: bool = False, **kw) -> bytes:
     )
 
 
-def encode_xids_df(commits: DataFrame, checksum: bool = False) -> DataFrame:
-    """(file_seq, log_pos, xid) rows -> framed XID events in RAW_SCHEMA —
-    the fixture half of transaction framing (per-frame Python is fine:
-    fixture generation, not the hot path)."""
+def _encode_frames_df(df: DataFrame, col: str, encode) -> DataFrame:
+    """(file_seq, log_pos, ``col``) rows -> one framed event per row,
+    ``encode(int(value))``, in ``MYSQL_RAW_SCHEMA`` — the fixture half of
+    transaction framing (per-frame Python is fine: fixture generation, not
+    the hot path)."""
     import pyarrow as pa
-
-    schema = T.StructType(
-        [
-            T.StructField("file_seq", T.IntegerType(), False),
-            T.StructField("log_pos", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
-    )
 
     def _enc(batches):
         for rb in batches:
             pdf = rb.to_pandas()
-            payloads = [
-                encode_xid(int(x), checksum=checksum) for x in pdf["xid"]
-            ]
             yield pa.RecordBatch.from_pydict(
                 {
                     "file_seq": pdf["file_seq"].astype("int32"),
                     "log_pos": pdf["log_pos"].astype("int64"),
-                    "payload": payloads,
+                    "payload": [encode(int(v)) for v in pdf[col]],
                 }
             )
 
-    return commits.select("file_seq", "log_pos", "xid").mapInArrow(
-        _enc, schema
+    return df.select("file_seq", "log_pos", col).mapInArrow(_enc, MYSQL_RAW_SCHEMA)
+
+
+def encode_xids_df(commits: DataFrame, checksum: bool = False) -> DataFrame:
+    """(file_seq, log_pos, xid) rows -> framed XID events."""
+    return _encode_frames_df(
+        commits, "xid", lambda x: encode_xid(x, checksum=checksum)
     )
 
 
 def encode_gtids_df(
     txs: DataFrame, sid: bytes = b"\x12" * 16, checksum: bool = False
 ) -> DataFrame:
-    """(file_seq, log_pos, gno) rows -> framed GTID_LOG_EVENTs in
-    RAW_SCHEMA — the fixture half of GTID auto-positioning (per-frame
-    Python is fine: fixture generation, not the hot path)."""
-    import pyarrow as pa
-
-    schema = T.StructType(
-        [
-            T.StructField("file_seq", T.IntegerType(), False),
-            T.StructField("log_pos", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    """(file_seq, log_pos, gno) rows -> framed GTID_LOG_EVENTs."""
+    return _encode_frames_df(
+        txs, "gno", lambda g: encode_gtid(sid, g, checksum=checksum)
     )
-
-    def _enc(batches):
-        for rb in batches:
-            pdf = rb.to_pandas()
-            payloads = [
-                encode_gtid(sid, int(g), checksum=checksum) for g in pdf["gno"]
-            ]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "file_seq": pdf["file_seq"].astype("int32"),
-                    "log_pos": pdf["log_pos"].astype("int64"),
-                    "payload": payloads,
-                }
-            )
-
-    return txs.select("file_seq", "log_pos", "gno").mapInArrow(_enc, schema)
 
 
 def split_uncommitted(
@@ -1241,7 +1212,7 @@ def split_uncommitted(
     GTID frames past the file's last XID (or in a file with no XID yet)
     are deferred — the pipeline stashes them and re-presents them with the
     next batch, where their commit marker lands (``apply_mysql_batch(
-    atomic_commits=True)``). Control frames (FORMAT_DESCRIPTION,
+    stash_path=...)``). Control frames (FORMAT_DESCRIPTION,
     TABLE_MAP, ROTATE, QUERY) always pass: they are metadata, not
     transactional effects, and the registry cache needs them immediately.
 

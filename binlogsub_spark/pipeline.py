@@ -23,7 +23,7 @@ from pyspark.sql import types as T
 from binlogsub_spark.config import EngineConfig, SchemaScope
 from binlogsub_spark.lake.table import LakeTable, _atomic_write, bucket_expr
 from binlogsub_spark.operators.dedup import partial_lww_reduce
-from binlogsub_spark.plans.envelope import OP_DELETE, RAW_SCHEMA
+from binlogsub_spark.plans.envelope import ENVELOPE_SCHEMA, OP_DELETE, RAW_SCHEMA
 
 
 def scope_filter(events: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -383,34 +383,68 @@ def apply_batch_multi(
     return out
 
 
-def _start(reader, fn, checkpoint_dir: str, available_now: bool):
-    """Run ``fn(batch_df, batch_id)`` per micro-batch of ``reader`` under
-    ``checkpoint_dir``; ``available_now`` drains what is there and stops."""
-    writer = reader.writeStream.foreachBatch(fn).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def _stream(
+    spark: SparkSession,
+    source_path: str,
+    table: LakeTable,
+    checkpoint_dir: str,
+    apply,
+    schema: T.StructType | None,
+    max_files_per_trigger: int,
+    available_now: bool,
+    liveness=None,
+    views: list | None = None,
+):
+    """The one stream driver every ``run_stream*`` shares: read -> decode
+    -> sink -> checkpoint (one idempotent ``foreachBatch`` sink under any
+    source).
 
+    The file source reads parquet with the fixed ``schema`` (never
+    inferred, so a stream may start on an empty landing zone), or text
+    lines when ``schema`` is None (the JSON-lines zones). Each micro-batch
+    runs ``apply(batch_df, batch_id) -> metrics``, then refreshes
+    ``views`` and feeds the liveness monitor. Spark's checkpoint gives
+    at-least-once batch replay after a kill (the same epoch id re-fires);
+    ``LakeTable.merge``'s batch_id high-water mark plus LWW makes the
+    replay a committed no-op. ``available_now`` drains what is there and
+    stops.
 
-def _liveness_monitor(spark, liveness, source_path: str, table: LakeTable):
-    """A LivenessConfig becomes a monitor wired with a Hadoop-FS probe of
-    ``source_path`` and a ``_heartbeats`` log next to the table; a
-    pre-built monitor (or None) passes through."""
+    ``liveness``: a :class:`~binlogsub_spark.liveness.LivenessConfig`
+    (wired with a Hadoop-FS probe of ``source_path`` and a
+    ``_heartbeats`` log next to the table) or a pre-built
+    :class:`~binlogsub_spark.liveness.SourceLivenessMonitor`."""
     from binlogsub_spark.liveness import (
         LivenessConfig,
         SourceLivenessMonitor,
         hadoop_fs_probe,
     )
 
-    if not isinstance(liveness, LivenessConfig):
-        return liveness
-    return SourceLivenessMonitor(
-        probe=lambda: hadoop_fs_probe(spark, source_path),
-        cfg=liveness,
-        heartbeat_dir=os.path.join(table.path, "_heartbeats"),
+    monitor = liveness
+    if isinstance(liveness, LivenessConfig):
+        monitor = SourceLivenessMonitor(
+            probe=lambda: hadoop_fs_probe(spark, source_path),
+            cfg=liveness,
+            heartbeat_dir=os.path.join(table.path, "_heartbeats"),
+        )
+    reader = spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
+    if schema is None:
+        reader = reader.text(source_path)
+    else:
+        reader = reader.schema(schema).parquet(source_path)
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        m = apply(batch_df, batch_id)
+        for v in views or ():
+            v.refresh()
+        if monitor is not None:
+            monitor.on_batch(batch_id, m["events"])
+
+    writer = reader.writeStream.foreachBatch(_batch).option(
+        "checkpointLocation", checkpoint_dir
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def run_stream(
@@ -421,27 +455,20 @@ def run_stream(
     cfg: EngineConfig | None = None,
     max_files_per_trigger: int = 4,
     available_now: bool = True,
-    source_schema: T.StructType | None = None,
     liveness=None,
     views: list | None = None,
     audit=None,
 ):
-    """Structured Streaming over the binlog event table.
-
-    File source + foreachBatch: Spark's checkpoint gives at-least-once batch
-    replay after a kill (same epoch id re-fires); LakeTable.merge's batch_id
-    high-water mark plus LWW makes the replay a committed no-op — the
+    """Structured Streaming over the binlog event table (parquet in
+    ``ENVELOPE_SCHEMA``) through :func:`apply_batch` — the
     exactly-once-effective contract the reference lacks
     (/root/reference/process.cc:178-183 can silently skip to live head; we
     never lose events, we only skip duplicates and count them).
 
-    ``liveness``: a :class:`~binlogsub_spark.liveness.LivenessConfig` (the
-    monitor is auto-wired with a Hadoop-FS probe of ``source_path`` and a
-    ``_heartbeats`` log next to the table) or a pre-built
-    :class:`~binlogsub_spark.liveness.SourceLivenessMonitor` — the T7
-    mysql_ping analog: empty batches past the idle interval probe the
-    source; repeated probe failure fails the query so the supervisor
-    restarts from checkpoint (see liveness.py).
+    ``liveness`` (see :func:`_stream`): the T7 mysql_ping analog — empty
+    batches past the idle interval probe the source; repeated probe
+    failure fails the query so the supervisor restarts from checkpoint
+    (see liveness.py).
 
     ``views``: :class:`~binlogsub_spark.operators.ivm.IncrementalView`
     instances over ``table``, refreshed after every applied micro-batch —
@@ -455,97 +482,66 @@ def run_stream(
     then publishes (see :mod:`binlogsub_spark.audits` for built-in
     guards). A rejected batch aborts its staged snapshot and fails the
     query; the supervisor restarts from checkpoint with the table
-    unchanged.
+    unchanged. Every ``run_stream*`` takes the same ``audit``.
     """
-    cfg = cfg or EngineConfig()
-    if source_schema is None:
-        source_schema = spark.read.parquet(source_path).schema
-    monitor = _liveness_monitor(spark, liveness, source_path, table)
-    reader = (
-        spark.readStream.schema(source_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
+
+    def apply(batch_df: DataFrame, batch_id: int) -> dict:
+        return apply_batch(table, batch_df, batch_id, cfg, audit=audit)
+
+    return _stream(
+        spark, source_path, table, checkpoint_dir, apply, ENVELOPE_SCHEMA,
+        max_files_per_trigger, available_now, liveness, views,
     )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        m = apply_batch(table, batch_df, batch_id, cfg, audit=audit)
-        for v in views or ():
-            v.refresh()
-        if monitor is not None:
-            monitor.on_batch(batch_id, m["events"])
 
-    return _start(reader, _apply, checkpoint_dir, available_now)
-
-
-def run_stream_jsonlines(
+def _json_lines(
+    decode,
     spark: SparkSession,
     source_path: str,
     table: LakeTable,
     checkpoint_dir: str,
-    decoder,
     cfg: EngineConfig | None = None,
     max_files_per_trigger: int = 4,
     available_now: bool = True,
-    schema_version: int = 2,
     liveness=None,
+    audit=None,
 ):
-    """Structured Streaming over a JSON-lines CDC landing zone (one
-    connector value document per line — the file-sink shape of a
-    connector->Kafka->files pipeline). ``decoder`` is any
-    ``(df, value_col, schema_version) -> ENVELOPE_SCHEMA`` function
-    (sources/debezium.py, sources/canal.py, sources/maxwell.py). Each
-    micro-batch parses with ``from_json`` (JVM codegen, inside the scan
-    stage) into the engine envelope and goes through the identical apply
-    path, so exactly-once, schema evolution and LWW semantics are
-    byte-identical to the native paths."""
-    cfg = cfg or EngineConfig()
-    monitor = _liveness_monitor(spark, liveness, source_path, table)
-    reader = (
-        spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
-        .text(source_path)
+    """A JSON-lines CDC landing zone (one connector value document per
+    line — the file-sink shape of a connector->Kafka->files pipeline) read
+    as text: ``decode(text_df)`` parses each micro-batch with
+    ``from_json`` (JVM codegen, inside the scan stage) into the engine
+    envelope, which goes through :func:`apply_batch`, so exactly-once,
+    schema evolution, LWW and the ``audit`` gate are identical to the
+    native paths."""
+
+    def apply(batch_df: DataFrame, batch_id: int) -> dict:
+        return apply_batch(table, decode(batch_df), batch_id, cfg, audit=audit)
+
+    return _stream(
+        spark, source_path, table, checkpoint_dir, apply, None,
+        max_files_per_trigger, available_now, liveness,
     )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        envelope = decoder(
-            batch_df, value_col="value", schema_version=schema_version
-        )
-        m = apply_batch(table, envelope, batch_id, cfg)
-        if monitor is not None:
-            monitor.on_batch(batch_id, m["events"])
-
-    return _start(reader, _apply, checkpoint_dir, available_now)
 
 
 def run_stream_debezium(spark, source_path, table, checkpoint_dir, **kw):
-    """Debezium-JSON landing zone -> lake table (see sources/debezium.py)."""
+    """Debezium-JSON landing zone -> lake table (see sources/debezium.py);
+    ``kw`` as in :func:`_json_lines`."""
     from binlogsub_spark.sources.debezium import decode_debezium
 
-    return run_stream_jsonlines(
-        spark, source_path, table, checkpoint_dir, decode_debezium, **kw
-    )
+    return _json_lines(decode_debezium, spark, source_path, table, checkpoint_dir, **kw)
 
 
-def run_stream_canal(
-    spark, source_path, table, checkpoint_dir, framed: bool = True, **kw
-):
+def run_stream_canal(spark, source_path, table, checkpoint_dir, **kw):
     """Canal flatMessage landing zone -> lake table (see sources/canal.py).
-
-    ``framed=True`` expects ``write_canal_json``'s
-    ``file_seq\\tlog_pos\\tjson`` lines (the flat format carries no binlog
-    position, so the zone carries the Kafka-offset analog out-of-band);
-    ``framed=False`` consumes bare flatMessage lines, ordering on the
-    message id."""
+    Lines are ``write_canal_json``'s ``file_seq\\tlog_pos\\tjson`` (the
+    flat format carries no binlog position, so the zone carries the
+    Kafka-offset analog out-of-band)."""
     from binlogsub_spark.sources.canal import decode_canal
     from binlogsub_spark.sources.generator import read_canal_lines
 
-    def _decode(df, value_col="value", schema_version=2):
-        framed_df = read_canal_lines(df) if framed else df
-        return decode_canal(
-            framed_df, value_col=value_col, schema_version=schema_version
-        )
-
-    return run_stream_jsonlines(
-        spark, source_path, table, checkpoint_dir, _decode, **kw
+    return _json_lines(
+        lambda df: decode_canal(read_canal_lines(df)),
+        spark, source_path, table, checkpoint_dir, **kw,
     )
 
 
@@ -553,9 +549,7 @@ def run_stream_maxwell(spark, source_path, table, checkpoint_dir, **kw):
     """Maxwell-JSON landing zone -> lake table (see sources/maxwell.py)."""
     from binlogsub_spark.sources.maxwell import decode_maxwell
 
-    return run_stream_jsonlines(
-        spark, source_path, table, checkpoint_dir, decode_maxwell, **kw
-    )
+    return _json_lines(decode_maxwell, spark, source_path, table, checkpoint_dir, **kw)
 
 
 def flat_to_upserts(decoded: DataFrame, cfg: EngineConfig) -> DataFrame:
@@ -574,8 +568,8 @@ def apply_raw_batch(
     raw_events: DataFrame,
     batch_id: int,
     cfg: EngineConfig | None = None,
-    persist_source: bool = False,
     dead_letter_path: str | None = None,
+    audit=None,
 ) -> dict:
     """Raw wire path: payload:binary -> Arrow decode -> scope filter ->
     salted partial LWW -> MERGE. The per-partition lineage stats come from
@@ -600,8 +594,6 @@ def apply_raw_batch(
          payload byte);
       3. full decode (pruned to the scoped columns, scope filter in-kernel
          on the scope byte) -> salted partial LWW -> one-pass MERGE.
-    ``persist_source=True`` restores caching for callers whose input is an
-    expensive computed plan.
 
     ``dead_letter_path`` routes structurally corrupt frames to a
     reason-coded, batch_id-partitioned parquet sink (same idempotent
@@ -645,9 +637,7 @@ def apply_raw_batch(
         partials = partial_lww_reduce(flat_to_upserts(decoded, cfg), salt=cfg.skew_salt)
         return partials, extra
 
-    return _commit(
-        table, raw_events, batch_id, cfg, frontier, upserts, persist=persist_source
-    )
+    return _commit(table, raw_events, batch_id, cfg, frontier, upserts, audit=audit)
 
 
 def run_stream_raw(
@@ -659,23 +649,22 @@ def run_stream_raw(
     max_files_per_trigger: int = 4,
     available_now: bool = True,
     dead_letter_path: str | None = None,
+    audit=None,
 ):
-    """Structured Streaming over the BINARY wire table (payload:binary):
+    """Structured Streaming over the BINARY wire table (``RAW_SCHEMA``):
     the full reference-equivalent path — framing columns outside the
-    payload, Arrow decode inside foreachBatch."""
-    cfg = cfg or EngineConfig()
-    reader = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
-    )
+    payload, Arrow decode inside foreachBatch (:func:`apply_raw_batch`)."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_raw_batch(
-            table, batch_df, batch_id, cfg, dead_letter_path=dead_letter_path
+    def apply(batch_df: DataFrame, batch_id: int) -> dict:
+        return apply_raw_batch(
+            table, batch_df, batch_id, cfg,
+            dead_letter_path=dead_letter_path, audit=audit,
         )
 
-    return _start(reader, _apply, checkpoint_dir, available_now)
+    return _stream(
+        spark, source_path, table, checkpoint_dir, apply, RAW_SCHEMA,
+        max_files_per_trigger, available_now,
+    )
 
 
 # -------------------------------------------------- genuine MySQL frames --
@@ -783,8 +772,8 @@ def apply_mysql_batch(
     skip_gtids=None,
     track_gtid_set: bool = False,
     gtid_cache: dict | None = None,
-    atomic_commits: bool = False,
     stash_path: str | None = None,
+    audit=None,
 ) -> dict:
     """One micro-batch of GENUINE MySQL binlog frames: registry extract ->
     scope filter at the registry level -> broadcast -> vectorized wave
@@ -802,9 +791,9 @@ def apply_mysql_batch(
     mismatch, unsupported type) to a reason-coded parquet sink before
     decode; metrics then carry a ``dead_letter`` count.
 
-    ``atomic_commits=True`` enforces TRANSACTION-atomic visibility: frames
-    past the last XID_EVENT of their binlog file (a transaction the batch
-    boundary cut in half) are split off before the merge and stashed under
+    ``stash_path`` enforces TRANSACTION-atomic visibility: frames past the
+    last XID_EVENT of their binlog file (a transaction the batch boundary
+    cut in half) are split off before the merge and stashed under
     ``stash_path`` (hive-partitioned by batch_id); the next batch unions
     its predecessor's stash back in, where the commit marker lands. The
     stash write is deterministic and dynamically overwritten per batch_id,
@@ -830,7 +819,9 @@ def apply_mysql_batch(
     that cuts between a GTID_LOG_EVENT and its transaction's rows-events
     would otherwise leave the next batch's leading rows with a NULL
     gtid (un-taggable, un-skippable); the cached frontier seeds the
-    as-of assignment instead."""
+    as-of assignment instead.
+
+    ``audit``: the write-audit-publish gate, as in :func:`apply_batch`."""
     from binlogsub_spark.mysql_binlog import (
         decode_mysql_events,
         extract_table_maps,
@@ -839,20 +830,18 @@ def apply_mysql_batch(
 
     cfg = cfg or EngineConfig()
     deferred = {}
-    if atomic_commits:
+    if stash_path is not None:
         from binlogsub_spark.mysql_binlog import split_uncommitted
 
-        if stash_path is not None:
-            prev_dir = os.path.join(stash_path, f"batch_id={batch_id - 1}")
-            if os.path.isdir(prev_dir):
-                raw_frames = (
-                    raw_frames.sparkSession.read.schema(RAW_SCHEMA)
-                    .parquet(prev_dir)
-                    .unionByName(raw_frames)
-                )
+        prev_dir = os.path.join(stash_path, f"batch_id={batch_id - 1}")
+        if os.path.isdir(prev_dir):
+            raw_frames = (
+                raw_frames.sparkSession.read.schema(RAW_SCHEMA)
+                .parquet(prev_dir)
+                .unionByName(raw_frames)
+            )
         raw_frames, uncommitted = split_uncommitted(raw_frames, checksum=checksum)
-        if stash_path is not None:
-            deferred["deferred"] = _write_by_batch(uncommitted, batch_id, stash_path)
+        deferred["deferred"] = _write_by_batch(uncommitted, batch_id, stash_path)
 
     def upserts(src: DataFrame):
         extra = {}
@@ -944,7 +933,7 @@ def apply_mysql_batch(
 
     metrics = _commit(
         table, raw_frames, batch_id, cfg, lambda src, fresh: (_per_file(src), None),
-        upserts, persist=persist_source,
+        upserts, persist=persist_source, audit=audit,
     )
     if deferred:
         # stash partitions <= batch_id-2 can never be read again (batch N
@@ -976,6 +965,7 @@ def run_stream_mysql(
     gtid_lineage: bool = False,
     gtid_auto_position: bool = False,
     atomic_commits: bool = False,
+    audit=None,
 ):
     """Structured Streaming over a table of genuine MySQL binlog frames —
     the FULL reference-equivalent path, end to end. The table-map registry
@@ -992,19 +982,16 @@ def run_stream_mysql(
     checkpoint replay), and transactions already in the set AT STREAM
     START are dropped before the merge — so a table restored onto a new
     source (different binlog file numbering, same GTIDs) resumes without
-    double-applying, which a (file, position) watermark cannot express."""
+    double-applying, which a (file, position) watermark cannot express.
+
+    ``atomic_commits=True`` stashes each batch's uncommitted transaction
+    tail under ``<checkpoint>/txn_stash`` (see :func:`apply_mysql_batch`'s
+    ``stash_path``); ``audit`` gates every commit as in :func:`run_stream`."""
     from binlogsub_spark.mysql_binlog import registry_from_json, registry_to_json
     from binlogsub_spark.operators.gtid import (
         format_gtid_set,
         gtid_set_union,
         parse_gtid_set,
-    )
-
-    cfg = cfg or EngineConfig()
-    reader = (
-        spark.readStream.schema(RAW_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_path)
     )
 
     maps_path = os.path.join(checkpoint_dir, "table_maps.json")
@@ -1033,8 +1020,9 @@ def run_stream_mysql(
                 executed_acc = parse_gtid_set(f.read())
         if executed_acc:
             skip_gtids = executed_acc
+    stash_path = os.path.join(checkpoint_dir, "txn_stash") if atomic_commits else None
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def apply(batch_df: DataFrame, batch_id: int) -> dict:
         nonlocal executed_acc
         m = apply_mysql_batch(
             table, batch_df, batch_id, cfg, name_map=name_map, checksum=checksum,
@@ -1043,12 +1031,8 @@ def run_stream_mysql(
             skip_gtids=skip_gtids,
             track_gtid_set=gtid_auto_position,
             gtid_cache=gtid_cache,
-            atomic_commits=atomic_commits,
-            stash_path=(
-                os.path.join(checkpoint_dir, "txn_stash")
-                if atomic_commits
-                else None
-            ),
+            stash_path=stash_path,
+            audit=audit,
         )
         os.makedirs(checkpoint_dir, exist_ok=True)
         if gtid_auto_position and m.get("gtid_executed"):
@@ -1063,5 +1047,9 @@ def run_stream_mysql(
                 json.dumps({str(k): list(v) for k, v in gtid_cache.items()}),
             )
         _atomic_write(maps_path, registry_to_json(registry_cache))
+        return m
 
-    return _start(reader, _apply, checkpoint_dir, available_now)
+    return _stream(
+        spark, source_path, table, checkpoint_dir, apply, RAW_SCHEMA,
+        max_files_per_trigger, available_now,
+    )

@@ -20,18 +20,46 @@ import argparse
 import json
 import sys
 
-from binlogsub_spark.config import EngineConfig
+from binlogsub_spark import pipeline
 from binlogsub_spark.lake.table import LakeTable
-from binlogsub_spark.pipeline import run_stream
 from binlogsub_spark.session import get_spark
-from binlogsub_spark.sources.generator import GeneratorParams, write_binlog
+from binlogsub_spark.sources import generator
+
+# ingest mode -> (fixture writer for --generate, stream runner,
+# {flag only this mode takes: the runner keyword it sets})
+_MODES = {
+    "structured": (generator.write_binlog, pipeline.run_stream, {}),
+    "raw": (
+        generator.write_raw_binlog, pipeline.run_stream_raw,
+        {"dead_letter": "dead_letter_path"},
+    ),
+    "mysql": (
+        generator.write_mysql_binlog, pipeline.run_stream_mysql,
+        {
+            "dead_letter": "dead_letter_path",
+            "atomic": "atomic_commits",
+            "gtid": "gtid_lineage",
+            "gtid_auto_position": "gtid_auto_position",
+        },
+    ),
+    "debezium": (generator.write_debezium_json, pipeline.run_stream_debezium, {}),
+    "canal": (generator.write_canal_json, pipeline.run_stream_canal, {}),
+    "maxwell": (generator.write_maxwell_json, pipeline.run_stream_maxwell, {}),
+}
+_MODE_ONLY = list(dict.fromkeys(f for _, _, flags in _MODES.values() for f in flags))
+# flags that only an ingest run reads
+_INGEST = (
+    "source", "checkpoint", "generate", "max_files_per_trigger", "timeout_sec",
+    "audit_max_drop", *(m for m in _MODES if m != "structured"), *_MODE_ONLY,
+)
+_MAINTENANCE = ("changes", "rebucket", "freshness", "compact", "vacuum", "get", "delete_keys")
 
 
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
-    ap.add_argument("--source", default=None, help="required unless --changes")
+    ap.add_argument("--source", default=None, help="ingest only (required there)")
     ap.add_argument("--table", required=True)
-    ap.add_argument("--checkpoint", default=None, help="required unless --changes")
+    ap.add_argument("--checkpoint", default=None, help="ingest only (required there)")
     ap.add_argument("--generate", type=int, default=0)
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--max-files-per-trigger", type=int, default=4)
@@ -112,7 +140,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--audit-max-drop", type=float, default=None, metavar="FRAC",
-        help="structured mode: write-audit-publish gate — stage every "
+        help="any ingest mode: write-audit-publish gate — stage every "
         "micro-batch and refuse to publish one that shrinks the live "
         "table by more than FRAC (0..1); a rejected batch aborts with "
         "the table unchanged",
@@ -156,133 +184,99 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark(app_name="binlogsub-ingest", master=args.master)
     if args.changes is not None:
-        print(json.dumps(_run_changes(spark, args), default=str))
-        spark.stop()
-        return 0
-    if args.rebucket is not None:
-        # maintenance mode: bucket count adopted from the manifest, target
-        # from the flag; LakeTable.rebucket commits one atomic snapshot
+        out = _run_changes(spark, args)
+    else:
+        # the constructor adopts a committed manifest's bucket count, so
+        # --buckets only shapes a table this run creates
         table = LakeTable(spark, args.table, buckets=args.buckets)
-        r = table.rebucket(args.rebucket)
-        r["rows"] = table.read().count()
-        print(json.dumps(r, default=str))
-        spark.stop()
-        return 0
-    def _open_table():
-        # maintenance modes: the committed manifest knows the table's true
-        # bucket count — never trust the CLI default for an existing table
-        t = LakeTable(spark, args.table, buckets=args.buckets)
-        snap = t.snapshot()
-        if snap and snap.get("buckets"):
-            t = LakeTable(spark, args.table, buckets=int(snap["buckets"]))
-        return t
-
-    if args.freshness:
-        print(json.dumps(_open_table().freshness(), default=str))
-        spark.stop()
-        return 0
-    if args.compact:
-        table = _open_table()
-        r = table.compact()
-        r["rows"] = table.read().count()
-        print(json.dumps(r, default=str))
-        spark.stop()
-        return 0
-    if args.vacuum is not None:
-        r = _open_table().vacuum(keep_snapshots=args.vacuum)
-        print(json.dumps(r, default=str))
-        spark.stop()
-        return 0
-    if args.get is not None:
-        keys = [k for k in args.get.split(",") if k]
-        for row in _open_table().read_keys(keys).toJSON().collect():
-            print(row)
-        spark.stop()
-        return 0
-    if args.delete_keys is not None:
-        # maintenance mode: targeted erasure through the normal LWW merge
-        # (ordinary tombstones; batch_id defaults to current + 1)
-        table = _open_table()
-        snap = table.snapshot()
-        if snap is None:
-            ap.error("--delete-keys needs a committed table")
-        keys = [k for k in args.delete_keys.split(",") if k]
-        r = table.delete_keys(keys, batch_id=snap["batch_id"] + 1)
-        r["rows"] = table.read().count()
-        print(json.dumps(r, default=str))
-        spark.stop()
-        return 0
-    if args.generate:
-        params = GeneratorParams(n_events=args.generate)
-        if args.mysql:
-            from binlogsub_spark.sources.generator import write_mysql_binlog
-
-            write_mysql_binlog(
-                spark, args.source, params, n_files=16, xids=args.atomic,
-                gtids=args.gtid or args.gtid_auto_position,
-            )
-        elif args.raw:
-            from binlogsub_spark.sources.generator import write_raw_binlog
-
-            write_raw_binlog(spark, args.source, params, n_files=16)
-        elif args.debezium:
-            from binlogsub_spark.sources.generator import write_debezium_json
-
-            write_debezium_json(spark, args.source, params, n_files=16)
-        elif args.canal:
-            from binlogsub_spark.sources.generator import write_canal_json
-
-            write_canal_json(spark, args.source, params, n_files=16)
-        elif args.maxwell:
-            from binlogsub_spark.sources.generator import write_maxwell_json
-
-            write_maxwell_json(spark, args.source, params, n_files=16)
+        if args.rebucket is not None:
+            out = {**table.rebucket(args.rebucket), "rows": table.read().count()}
+        elif args.freshness:
+            out = table.freshness()
+        elif args.compact:
+            out = {**table.compact(), "rows": table.read().count()}
+        elif args.vacuum is not None:
+            out = table.vacuum(keep_snapshots=args.vacuum)
+        elif args.get is not None:
+            keys = [k for k in args.get.split(",") if k]
+            for row in table.read_keys(keys).toJSON().collect():
+                print(row)
+            out = None
+        elif args.delete_keys is not None:
+            # targeted erasure through the normal LWW merge (ordinary
+            # tombstones; batch_id defaults to current + 1)
+            snap = table.snapshot()
+            if snap is None:
+                ap.error("--delete-keys needs a committed table")
+            keys = [k for k in args.delete_keys.split(",") if k]
+            r = table.delete_keys(keys, batch_id=snap["batch_id"] + 1)
+            out = {**r, "rows": table.read().count()}
         else:
-            write_binlog(spark, args.source, params, n_files=16)
+            out = _ingest(spark, table, args)
+    if out is not None:
+        print(json.dumps(out, default=str))
+    spark.stop()
+    return 0
 
-    table = LakeTable(spark, args.table, buckets=args.buckets)
-    extra_kw = {}
-    runner = run_stream
-    if args.mysql:
-        from binlogsub_spark.pipeline import run_stream_mysql as runner
-        from binlogsub_spark.sources.generator import transcripts_table_maps
 
+def _mode(args) -> str:
+    return next((m for m in _MODES if getattr(args, m, False)), "structured")
+
+
+def _check_flags(ap, args) -> None:
+    """Reject flag combinations the chosen mode would silently ignore,
+    before a Spark session starts or --generate writes anything."""
+
+    def given(flag: str) -> bool:
+        return getattr(args, flag) != ap.get_default(flag)
+
+    def opt(flag: str) -> str:
+        return "--" + flag.replace("_", "-")
+
+    maintenance = next(filter(given, _MAINTENANCE), None)
+    if maintenance:
+        stray = next(filter(given, _INGEST), None)
+        if stray:
+            ap.error(f"{opt(stray)} only applies to ingest, not {opt(maintenance)}")
+        return
+    mode = _mode(args)
+    for flag in filter(given, _MODE_ONLY):
+        if flag not in _MODES[mode][2]:
+            wired = "/".join(m for m, (_, _, f) in _MODES.items() if flag in f)
+            ap.error(f"{opt(flag)} is only wired for {wired} mode")
+    if not (args.source and args.checkpoint):
+        ap.error(
+            "--source and --checkpoint are required unless "
+            + "/".join(map(opt, _MAINTENANCE))
+        )
+
+
+def _ingest(spark, table: LakeTable, args) -> dict:
+    """Stream ``--source`` into ``table`` in the chosen mode (after
+    writing a fixture there with ``--generate``); returns the summary."""
+    mode = _mode(args)
+    write, runner, flags = _MODES[mode]
+    write_kw, run_kw = {}, {kw: getattr(args, f) for f, kw in flags.items()}
+    if mode == "mysql":
+        # the fixture frames transactions / GTIDs when the stream uses them,
+        # and the registry's ordinal columns take the fixture's names
+        write_kw = {"xids": args.atomic, "gtids": args.gtid or args.gtid_auto_position}
         name_map: dict = {}
-        for tm in transcripts_table_maps().values():
+        for tm in generator.transcripts_table_maps().values():
             name_map.setdefault((tm.db, tm.table), []).append(tm.columns)
-        extra_kw["name_map"] = name_map
-        if args.gtid:
-            extra_kw["gtid_lineage"] = True
-        if args.gtid_auto_position:
-            extra_kw["gtid_auto_position"] = True
-        if args.dead_letter:
-            extra_kw["dead_letter_path"] = args.dead_letter
-        if args.atomic:
-            extra_kw["atomic_commits"] = True
-    elif args.raw:
-        from binlogsub_spark.pipeline import run_stream_raw as runner
-
-        if args.dead_letter:
-            extra_kw["dead_letter_path"] = args.dead_letter
-    elif args.debezium:
-        from binlogsub_spark.pipeline import run_stream_debezium as runner
-    elif args.canal:
-        from binlogsub_spark.pipeline import run_stream_canal as runner
-    elif args.maxwell:
-        from binlogsub_spark.pipeline import run_stream_maxwell as runner
+        run_kw["name_map"] = name_map
+    if args.generate:
+        params = generator.GeneratorParams(n_events=args.generate)
+        write(spark, args.source, params, n_files=16, **write_kw)
     if args.audit_max_drop is not None:
         from binlogsub_spark.audits import row_count_guard
 
-        extra_kw["audit"] = row_count_guard(args.audit_max_drop)
+        run_kw["audit"] = row_count_guard(args.audit_max_drop)
     q = runner(
-        spark,
-        args.source,
-        table,
-        args.checkpoint,
-        cfg=EngineConfig(table_buckets=args.buckets),
+        spark, args.source, table, args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
         available_now=True,
-        **extra_kw,
+        **run_kw,
     )
     q.awaitTermination(args.timeout_sec)
 
@@ -293,51 +287,16 @@ def main(argv: list[str] | None = None) -> int:
         "snapshot_id": snap.get("snapshot_id"),
         "batch_id": snap.get("batch_id"),
         "watermark": snap.get("watermark"),
-        "events_seen": int(lineage["events"].sum()) if lineage is not None else 0,
+        # a checkpoint replay re-records its batch's files with
+        # replayed=True; those events were already counted once
+        "events_seen": int(lineage.loc[~lineage["replayed"], "events"].sum())
+        if lineage is not None else 0,
         "batches": int(lineage["batch_id"].nunique()) if lineage is not None else 0,
     }
     if snap:
-        fr = table.freshness()
-        out["ingest_lag_seconds"] = (
-            round(fr["ingest_lag_seconds"], 3)
-            if fr["ingest_lag_seconds"] is not None
-            else None
-        )
-    print(json.dumps(out, default=str))
-    spark.stop()
-    return 0
-
-
-# flag -> the ingest modes that use it (None = structured mode)
-_MODE_FLAGS = {
-    "dead_letter": ("mysql", "raw"),
-    "atomic": ("mysql",),
-    "gtid": ("mysql",),
-    "gtid_auto_position": ("mysql",),
-    "audit_max_drop": (None,),
-}
-_MAINTENANCE = ("changes", "rebucket", "freshness", "compact", "vacuum", "get", "delete_keys")
-
-
-def _check_flags(ap, args) -> None:
-    """Reject flag combinations the chosen mode would silently ignore,
-    before a Spark session starts or --generate writes anything."""
-
-    def given(flag: str) -> bool:
-        return getattr(args, flag) != ap.get_default(flag)
-
-    mode = next(
-        (m for m in ("raw", "mysql", "debezium", "canal", "maxwell") if given(m)), None
-    )
-    for flag, modes in _MODE_FLAGS.items():
-        if given(flag) and mode not in modes:
-            wired = "/".join(m or "structured" for m in modes)
-            ap.error(f"--{flag.replace('_', '-')} is only wired for {wired} mode")
-    if not any(map(given, _MAINTENANCE)) and not (args.source and args.checkpoint):
-        ap.error(
-            "--source and --checkpoint are required unless "
-            "--" + "/--".join(f.replace("_", "-") for f in _MAINTENANCE)
-        )
+        lag = table.freshness()["ingest_lag_seconds"]
+        out["ingest_lag_seconds"] = round(lag, 3) if lag is not None else None
+    return out
 
 
 def _run_changes(spark, args) -> dict:
@@ -349,11 +308,6 @@ def _run_changes(spark, args) -> dict:
     from pyspark.sql import functions as F
 
     table = LakeTable(spark, args.table, buckets=args.buckets)
-    snap = table.snapshot()
-    if snap and snap.get("buckets"):
-        # the committed manifest knows the table's true bucket count —
-        # never trust the CLI default for an existing table
-        table = LakeTable(spark, args.table, buckets=int(snap["buckets"]))
     parts = args.changes.split(",")
     from_id = None if parts[0].strip().lower() in ("none", "") else int(parts[0])
     to_id = int(parts[1]) if len(parts) > 1 and parts[1].strip() else None

@@ -148,22 +148,35 @@ def generate_binlog(
     return events
 
 
+def _delivery_ordered(df: DataFrame, n_files: int) -> DataFrame:
+    """The one fixture layout: range-partitioned by arrival order and sorted
+    within each partition, so a file-based streaming source replays the
+    stream in delivery order (replayed duplicates arrive in later files,
+    like the reference's reconnect)."""
+    return df.repartitionByRange(n_files, "delivery_seq").sortWithinPartitions(
+        "delivery_seq"
+    )
+
+
+def _write_delivery_ordered(
+    df: DataFrame, path: str, n_files: int, cols=None, text: bool = False
+) -> None:
+    """Write ``df`` (which carries ``delivery_seq``) in the delivery-ordered
+    layout: ``cols`` (default every column) as parquet, or the one
+    ``value`` column as JSON-lines text."""
+    writer = _delivery_ordered(df, n_files).select(*(cols or df.columns)).write
+    writer = writer.mode("overwrite")
+    (writer.text if text else writer.parquet)(path)
+
+
 def write_binlog(
     spark: SparkSession,
     path: str,
     params: GeneratorParams = GeneratorParams(),
     n_files: int = 16,
 ) -> None:
-    """Materialize the stream as parquet, range-partitioned by arrival order
-    so a file-based streaming source replays it in delivery order (replayed
-    duplicates arrive in later files, like the reference's reconnect)."""
-    df = generate_binlog(spark, params)
-    (
-        df.repartitionByRange(n_files, "delivery_seq")
-        .sortWithinPartitions("delivery_seq")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    """Materialize the stream as delivery-ordered parquet."""
+    _write_delivery_ordered(generate_binlog(spark, params), path, n_files)
 
 
 def flatten_for_wire(events: DataFrame) -> DataFrame:
@@ -193,16 +206,11 @@ def write_raw_binlog(
     payload:binary) parquet, range-partitioned by arrival order — the
     engine input that exercises the Arrow decode kernels end-to-end."""
     from binlogsub_spark.codec import encode_decoded_events
+    from binlogsub_spark.plans.envelope import RAW_SCHEMA
 
     flat = flatten_for_wire(generate_binlog(spark, params))
     raw = encode_decoded_events(flat, passthrough=("delivery_seq",))
-    (
-        raw.repartitionByRange(n_files, "delivery_seq")
-        .sortWithinPartitions("delivery_seq")
-        .drop("delivery_seq")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    _write_delivery_ordered(raw, path, n_files, RAW_SCHEMA.fieldNames())
 
 
 def write_debezium_json(
@@ -220,13 +228,7 @@ def write_debezium_json(
     df = envelope_to_debezium_json(
         generate_binlog(spark, params), passthrough=("delivery_seq",)
     )
-    (
-        df.repartitionByRange(n_files, "delivery_seq")
-        .sortWithinPartitions("delivery_seq")
-        .select("value")
-        .write.mode("overwrite")
-        .text(path)
-    )
+    _write_delivery_ordered(df, path, n_files, ["value"], text=True)
 
 
 def write_canal_json(
@@ -241,27 +243,21 @@ def write_canal_json(
     analog of Kafka's (partition, offset); ``read_canal_lines`` splits it
     back. (A plain ``value``-only zone also decodes — ordering then falls
     back to the message id; see sources/canal.py.)"""
-    from pyspark.sql import functions as F
-
     from binlogsub_spark.sources.canal import envelope_to_canal_json
 
     df = envelope_to_canal_json(
         generate_binlog(spark, params), passthrough=("delivery_seq",)
     )
-    (
-        df.repartitionByRange(n_files, "delivery_seq")
-        .sortWithinPartitions("delivery_seq")
-        .select(
-            F.concat_ws(
-                "\t",
-                F.col("file_seq").cast("string"),
-                F.col("log_pos").cast("string"),
-                F.col("value"),
-            ).alias("value")
-        )
-        .write.mode("overwrite")
-        .text(path)
+    framed = df.withColumn(
+        "value",
+        F.concat_ws(
+            "\t",
+            F.col("file_seq").cast("string"),
+            F.col("log_pos").cast("string"),
+            F.col("value"),
+        ),
     )
+    _write_delivery_ordered(framed, path, n_files, ["value"], text=True)
 
 
 def read_canal_lines(df):
@@ -291,13 +287,7 @@ def write_maxwell_json(
     df = envelope_to_maxwell_json(
         generate_binlog(spark, params), passthrough=("delivery_seq",)
     )
-    (
-        df.repartitionByRange(n_files, "delivery_seq")
-        .sortWithinPartitions("delivery_seq")
-        .select("value")
-        .write.mode("overwrite")
-        .text(path)
-    )
+    _write_delivery_ordered(df, path, n_files, ["value"], text=True)
 
 
 # ------------------------------------------------- genuine MySQL variant --
@@ -366,7 +356,7 @@ def write_mysql_binlog(
     ``xids=True`` additionally frames an XID_EVENT commit marker after
     every change (one transaction per change, matching the GTID-per-change
     model) at ``log_pos + 64`` — required by the transaction-atomic ingest
-    mode (``--atomic`` / ``apply_mysql_batch(atomic_commits=True)``),
+    mode (``--atomic`` / ``apply_mysql_batch(stash_path=...)``),
     which defers rows-events until their file's commit marker arrives."""
     from binlogsub_spark.mysql_binlog import encode_rows_df
 
@@ -388,7 +378,8 @@ def write_mysql_binlog(
             F.array_position(F.array(*[F.lit(t) for t in TOOL_ENUM]), F.col("tool")),
         ).cast("long").alias("tool"),
         "ts",
-    ).repartitionByRange(n_files, "delivery_seq").sortWithinPartitions("delivery_seq")
+    )
+    enc_in = _delivery_ordered(enc_in, n_files)
     raw = encode_rows_df(
         enc_in.drop("delivery_seq"),
         tmaps[12],

@@ -1,5 +1,6 @@
-"""CLI flag validation: a flag the chosen mode would ignore is an argparse
-error before any Spark session starts."""
+"""CLI flag validation: a flag the chosen mode would ignore (a mode-only
+flag in another ingest mode, an ingest flag in a maintenance mode) is an
+argparse error before any Spark session starts."""
 
 from __future__ import annotations
 
@@ -29,13 +30,19 @@ _REJECTED = [
     _INGEST + ["--atomic"],
     _INGEST + ["--raw", "--gtid"],
     _INGEST + ["--debezium", "--gtid-auto-position"],
-    _INGEST + ["--raw", "--audit-max-drop", "0.5"],
-    _INGEST + ["--mysql", "--audit-max-drop", "0"],
     ["--table", "tbl", "--generate", "10"],
+    ["--table", "tbl", "--compact", "--mysql"],
+    ["--table", "tbl", "--vacuum", "3", "--atomic"],
+    ["--table", "tbl", "--get", "k", "--dead-letter", "d"],
+    ["--table", "tbl", "--freshness", "--audit-max-drop", "0.5"],
+    _INGEST + ["--rebucket", "8"],
 ]
 _ACCEPTED = [
     _INGEST,
     _INGEST + ["--audit-max-drop", "0"],
+    _INGEST + ["--raw", "--audit-max-drop", "0.5"],
+    _INGEST + ["--mysql", "--audit-max-drop", "0"],
+    _INGEST + ["--debezium", "--audit-max-drop", "0.5"],
     _INGEST + ["--raw", "--dead-letter", "dl"],
     _INGEST + ["--mysql", "--atomic", "--gtid", "--gtid-auto-position", "--dead-letter", "dl"],
     ["--table", "tbl", "--vacuum", "0"],

@@ -16,7 +16,7 @@ COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 def _table_with_data(spark, path, buckets=8, n_events=3000):
     t = LakeTable(spark, str(path), buckets=buckets)
     ev = generate_binlog(spark, GeneratorParams(n_events=n_events, dup_tail=300))
-    apply_batch(t, ev, batch_id=1, cfg=EngineConfig(table_buckets=buckets))
+    apply_batch(t, ev, batch_id=1, cfg=EngineConfig())
     return t
 
 
@@ -91,14 +91,14 @@ def test_rebucket_is_invisible_to_changes(spark, tmp_path):
     ev2 = generate_binlog(
         spark, GeneratorParams(n_events=1000, dup_tail=0, seed=99)
     )
-    apply_batch(t, ev2, batch_id=2, cfg=EngineConfig(table_buckets=32))
+    apply_batch(t, ev2, batch_id=2, cfg=EngineConfig())
     post = t.snapshot()["snapshot_id"]
     got = t.changes(pre, post).count()
 
     # reference: the same second batch applied WITHOUT the rebucket
     t_ref = _table_with_data(spark, tmp_path / "ref", buckets=8)
     pre_ref = t_ref.snapshot()["snapshot_id"]
-    apply_batch(t_ref, ev2, batch_id=2, cfg=EngineConfig(table_buckets=8))
+    apply_batch(t_ref, ev2, batch_id=2, cfg=EngineConfig())
     want = t_ref.changes(pre_ref).count()
     assert got == want
 
@@ -112,13 +112,13 @@ def test_ingest_continues_after_rebucket_lww_correct(spark, tmp_path):
     ev2 = generate_binlog(spark, params2)
 
     t = LakeTable(spark, str(tmp_path / "t"), buckets=8)
-    apply_batch(t, ev1, batch_id=1, cfg=EngineConfig(table_buckets=8))
+    apply_batch(t, ev1, batch_id=1, cfg=EngineConfig())
     t.rebucket(32)
-    apply_batch(t, ev2, batch_id=2, cfg=EngineConfig(table_buckets=32))
+    apply_batch(t, ev2, batch_id=2, cfg=EngineConfig())
 
     t_ref = LakeTable(spark, str(tmp_path / "ref"), buckets=8)
-    apply_batch(t_ref, ev1, batch_id=1, cfg=EngineConfig(table_buckets=8))
-    apply_batch(t_ref, ev2, batch_id=2, cfg=EngineConfig(table_buckets=8))
+    apply_batch(t_ref, ev1, batch_id=1, cfg=EngineConfig())
+    apply_batch(t_ref, ev2, batch_id=2, cfg=EngineConfig())
 
     a = t.read().select(COLS)
     b = t_ref.read().select(COLS)

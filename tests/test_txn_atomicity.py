@@ -89,7 +89,7 @@ def test_atomic_batches_defer_then_apply(spark, tmp_path):
     # batch 1: all 8 rows-events but commit marker only after the first 4
     b1 = _frames(spark, changes, [(1, 4 + 128 * 3 + 64)])
     m1 = apply_mysql_batch(
-        table, b1, 1, cfg, atomic_commits=True, stash_path=stash,
+        table, b1, 1, cfg, stash_path=stash,
         registry_cache=cache, name_map=_name_map(),
     )
     assert table.read().count() == 4  # never half a transaction
@@ -99,7 +99,7 @@ def test_atomic_batches_defer_then_apply(spark, tmp_path):
     # batch 2: just the trailing XID — the stash drains, all 8 visible
     b2 = _frames(spark, _changes(spark, 0), [(1, 4 + 128 * 7 + 64)])
     m2 = apply_mysql_batch(
-        table, b2, 2, cfg, atomic_commits=True, stash_path=stash,
+        table, b2, 2, cfg, stash_path=stash,
         registry_cache=cache, name_map=_name_map(),
     )
     assert m2["deferred"] == 0
@@ -118,16 +118,16 @@ def test_atomic_batch_replay_is_idempotent(spark, tmp_path):
     cfg = EngineConfig()
     cache: dict = {}
     b1 = _frames(spark, changes, [(1, 4 + 128 * 2 + 64)])
-    apply_mysql_batch(table, b1, 1, cfg, atomic_commits=True, stash_path=stash,
+    apply_mysql_batch(table, b1, 1, cfg, stash_path=stash,
                       registry_cache=cache, name_map=_name_map())
     b2 = _frames(spark, _changes(spark, 0), [(1, 4 + 128 * 5 + 64)])
-    apply_mysql_batch(table, b2, 2, cfg, atomic_commits=True, stash_path=stash,
+    apply_mysql_batch(table, b2, 2, cfg, stash_path=stash,
                       registry_cache=cache, name_map=_name_map())
     snap = table.snapshot()["snapshot_id"]
     rows = table.read().count()
     # replay batch 2 (merge no-ops on the committed batch_id)
     m = apply_mysql_batch(
-        table, b2, 2, cfg, atomic_commits=True, stash_path=stash,
+        table, b2, 2, cfg, stash_path=stash,
         registry_cache=cache, name_map=_name_map(),
     )
     assert m["replayed"]

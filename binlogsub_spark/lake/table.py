@@ -18,18 +18,24 @@ required Iceberg-style semantics itself, on plain parquet + JSON manifests:
   mid-stream lands without rewriting history
   (reference epoch flush: /root/reference/packet.cc:141-148).
 * **Idempotent commits**: a manifest carries the high-water ``batch_id``;
-  replaying an already-committed micro-batch is a no-op. Together with
-  LWW dedup this upgrades the reference's at-least-once replay
-  (/root/reference/process.cc:163-191) to exactly-once-effective.
+  replaying an already-committed micro-batch is a no-op that commits
+  nothing. Together with LWW dedup this upgrades the reference's
+  at-least-once replay (reference process.cc:163-191) to
+  exactly-once-effective. A retry after a crash between the manifest
+  write and the ``CURRENT`` swap replaces its own dead manifest.
 * **LWW across batches**: rows persist hidden version columns
   (_op,_ts,_file_seq,_log_pos); tombstones (_op='D') are kept so a
   later-arriving *older* change cannot resurrect a deleted key, and are
   dropped from the read view.
 
-Checkpoint/position state (the reference's Redis hash
-/root/reference/business.cc:35-73) becomes the manifest watermark plus an
-append-only ``_lineage`` parquet log of per-batch, per-file_seq offsets and
-applied/skipped metrics.
+Checkpoint/position state (the reference's Redis hash, business.cc:35-73,
+a store separate from its sink) lives in the manifest itself: each merge
+manifest carries the batch's per-file
+``(file_seq, max_log_pos, events)`` frontier, the monotone watermark
+derived from it and the applied count, so data, offsets, lineage and
+metrics commit in one ``CURRENT`` swap. :meth:`LakeTable.lineage` reads
+them back from the committed manifests; ``vacuum`` expires a snapshot's
+lineage with its manifest.
 """
 
 from __future__ import annotations
@@ -45,14 +51,22 @@ from binlogsub_spark.operators.dedup import lww_reduce
 from binlogsub_spark.plans.envelope import MERGE_KEY, VERSION_COLUMNS
 
 
-def _atomic_write(path: str, text: str) -> None:
+def _atomic_write(path: str, text: str, exclusive: bool = False) -> None:
     """Write-then-rename: readers (and a restart) never see a torn file.
-    The dot-prefixed temp name never matches a ``snap-`` listing."""
+    The dot-prefixed temp name never matches a ``snap-`` listing.
+    ``exclusive`` links the temp into place instead, which raises
+    FileExistsError when ``path`` exists."""
     d, name = os.path.split(path)
     tmp = os.path.join(d, f".{name}.tmp-{uuid.uuid4().hex}")
     with open(tmp, "w") as f:
         f.write(text)
-    os.replace(tmp, path)
+    if not exclusive:
+        os.replace(tmp, path)
+        return
+    try:
+        os.link(tmp, path)
+    finally:
+        os.remove(tmp)
 
 
 def bucket_expr(col, buckets: int):
@@ -89,7 +103,6 @@ class LakeTable:
         self.buckets = buckets
         self.manifest_dir = os.path.join(self.path, "_manifests")
         self.data_dir = os.path.join(self.path, "data")
-        self.lineage_dir = os.path.join(self.path, "_lineage")
         # The committed manifest is authoritative for the bucket count: a
         # handle opened with a stale ctor arg (e.g. after rebucket()) would
         # otherwise compute _bucket with the wrong modulus and strand rows
@@ -106,17 +119,19 @@ class LakeTable:
         """Current snapshot, or a historical one by id (time travel — every
         manifest is immutable, so any committed state stays readable)."""
         if snapshot_id is not None:
-            p = os.path.join(self.manifest_dir, f"snap-{snapshot_id:08d}.json")
-            if not os.path.exists(p):
-                return None
-            with open(p) as f:
-                return json.load(f)
+            return self._load(f"snap-{snapshot_id:08d}.json")
         ptr = self._current_pointer()
         if not os.path.exists(ptr):
             return None
         with open(ptr) as f:
-            name = f.read().strip()
-        with open(os.path.join(self.manifest_dir, name)) as f:
+            return self._load(f.read().strip())
+
+    def _load(self, name: str) -> dict | None:
+        """The manifest file ``name``, or None when there is none."""
+        p = os.path.join(self.manifest_dir, name)
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
             return json.load(f)
 
     def _require(self, snapshot_id: int | None = None) -> dict:
@@ -134,18 +149,13 @@ class LakeTable:
     def history(self) -> list[dict]:
         if not os.path.isdir(self.manifest_dir):
             return []
-        snaps = sorted(
-            n for n in os.listdir(self.manifest_dir) if n.startswith("snap-")
-        )
-        out = []
-        for n in snaps:
-            with open(os.path.join(self.manifest_dir, n)) as f:
-                out.append(json.load(f))
-        return out
+        names = sorted(os.listdir(self.manifest_dir))
+        return [self._load(n) for n in names if n.startswith("snap-")]
 
     def _commit(self, manifest: dict, publish: bool = True) -> None:
         """Atomic snapshot publish with optimistic concurrency: the manifest
-        file create is exclusive ('x' mode), so two writers racing to
+        file create is exclusive (a hard link of a fully written temp, so
+        a crash never leaves a torn manifest), so two writers racing to
         publish the same snapshot_id fail loudly instead of silently
         clobbering each other (single-writer-per-table is the deployment
         contract, as with Iceberg's metastore swap; this guard turns a
@@ -155,33 +165,51 @@ class LakeTable:
         manifest lands on disk marked ``staged`` but CURRENT does not
         move — readers keep seeing the prior state until
         :meth:`publish_staged` swaps the pointer (or
-        :meth:`abort_staged` discards the data)."""
+        :meth:`abort_staged` discards the data).
+
+        An uncommitted manifest already holding this id (it is beyond
+        CURRENT, so it never published) with the SAME ``batch_id`` is this
+        batch's dead attempt — a crash between the manifest write and the
+        CURRENT swap, or a staged attempt never resolved — and is replaced;
+        one with another ``batch_id`` belongs to a different writer."""
         import time
 
         os.makedirs(self.manifest_dir, exist_ok=True)
-        name = f"snap-{manifest['snapshot_id']:08d}.json"
+        sid = manifest["snapshot_id"]
+        name = f"snap-{sid:08d}.json"
+        path = os.path.join(self.manifest_dir, name)
         cur = self.snapshot()
-        if cur is not None and cur["snapshot_id"] >= manifest["snapshot_id"]:
+        if cur is not None and cur["snapshot_id"] >= sid:
             raise RuntimeError(
-                f"concurrent commit detected: snapshot {manifest['snapshot_id']}"
+                f"concurrent commit detected: snapshot {sid}"
                 f" already overtaken by {cur['snapshot_id']}"
             )
         manifest["committed_at"] = time.time()  # wall clock of the publish
         if not publish:
             manifest["staged"] = True
-        with open(os.path.join(self.manifest_dir, name), "x") as f:
-            json.dump(manifest, f, indent=1, default=str)
+        text = json.dumps(manifest, indent=1, default=str)
+        try:
+            _atomic_write(path, text, exclusive=True)
+        except FileExistsError:
+            held = (self.snapshot(sid) or {}).get("batch_id")
+            if held != manifest["batch_id"]:
+                raise RuntimeError(
+                    f"concurrent commit detected: uncommitted snapshot {sid} "
+                    f"holds batch {held}, not {manifest['batch_id']}; "
+                    f"abort_staged({sid}) discards it"
+                ) from None
+            _atomic_write(path, text)
         if publish:
             _atomic_write(self._current_pointer(), name)
-
 
     # ------------------------------------------------ write-audit-publish
     def publish_staged(self, snapshot_id: int) -> dict:
         """Make a staged snapshot CURRENT (the audit passed). Validates the
         staged snapshot still extends the current state — if another
         writer published in between, this raises instead of silently
-        dropping their commit. The manifest is rewritten without the
-        ``staged`` marker, then the pointer swaps atomically."""
+        dropping their commit. The manifest is committed again without the
+        ``staged`` marker (it replaces the staged file, same batch_id),
+        then the pointer swaps atomically."""
         m = self.snapshot(snapshot_id)
         if m is None or not m.get("staged"):
             raise ValueError(f"snapshot {snapshot_id} is not a staged snapshot")
@@ -193,23 +221,19 @@ class LakeTable:
                 f"but CURRENT is {cur_id}: another commit landed during audit"
             )
         m.pop("staged")
-        name = f"snap-{snapshot_id:08d}.json"
-        _atomic_write(
-            os.path.join(self.manifest_dir, name),
-            json.dumps(m, indent=1, default=str),
-        )
-        _atomic_write(self._current_pointer(), name)
+        self._commit(m)
         return m
 
     def abort_staged(self, snapshot_id: int) -> None:
-        """Discard a staged snapshot (the audit failed): delete its
-        manifest and its commit directory. CURRENT never pointed at it,
-        so readers are untouched."""
+        """Discard an uncommitted snapshot — a staged one whose audit
+        failed, or any manifest beyond CURRENT that a crashed commit left:
+        delete its manifest and its commit directory. CURRENT never
+        pointed at it, so readers are untouched."""
         import shutil
 
-        m = self.snapshot(snapshot_id)
-        if m is None or not m.get("staged"):
-            raise ValueError(f"snapshot {snapshot_id} is not a staged snapshot")
+        cur_id = (self.snapshot() or {}).get("snapshot_id", 0)
+        if self.snapshot(snapshot_id) is None or snapshot_id <= cur_id:
+            raise ValueError(f"snapshot {snapshot_id} is not an uncommitted snapshot")
         commit_rel = f"commit-{snapshot_id:08d}"
         shutil.rmtree(os.path.join(self.data_dir, commit_rel), ignore_errors=True)
         os.remove(os.path.join(self.manifest_dir, f"snap-{snapshot_id:08d}.json"))
@@ -544,7 +568,7 @@ class LakeTable:
         self,
         upserts: DataFrame,
         batch_id: int,
-        watermark: dict | None = None,
+        frontier=(),
         touched_buckets: list[int] | None = None,
         publish: bool = True,
     ) -> dict:
@@ -554,7 +578,12 @@ class LakeTable:
         any number of rows per key — callers with hot keys pass them
         through the salted ``partial_lww_reduce`` first. Returns
         {applied, replayed, snapshot_id}. Replaying an already-committed
-        batch_id is a committed no-op.
+        batch_id is a no-op that commits nothing.
+
+        ``frontier``: the batch's per-file ``(file_seq, max_log_pos,
+        events)`` rows (``pipeline._per_file``). The manifest records them
+        as the batch's lineage and advances the monotone watermark to
+        their max, in the same atomic commit as the data.
 
         One strategy, two full exchanges: the caller's salted partial
         reduce (map-side combine bounds a hot key's share) -> ONE
@@ -680,6 +709,7 @@ class LakeTable:
             merged = lww_reduce(colocated, key=MERGE_KEY + ["_bucket"])
 
             snapshot_id = (snap["snapshot_id"] + 1) if snap else 1
+            lineage = [[int(r[0]), int(r[1]), int(r[2])] for r in frontier]
             bucket_locations = dict(snap["bucket_locations"]) if snap else {
                 str(b): None for b in range(self.buckets)
             }
@@ -736,8 +766,9 @@ class LakeTable:
                 "bucket_locations": bucket_locations,
                 "buckets": self.buckets,
                 "watermark": self._advance_watermark(
-                    (snap or {}).get("watermark"), watermark
+                    (snap or {}).get("watermark"), lineage
                 ),
+                "lineage": lineage,
                 "metrics": {
                     "applied": applied,
                     "max_event_ts": self._advance_event_ts(
@@ -758,16 +789,18 @@ class LakeTable:
                 winners.unpersist()
 
     @staticmethod
-    def _advance_watermark(old: dict | None, new: dict | None) -> dict | None:
-        """Monotone offset watermark (T1): micro-batches may arrive out of
-        delivery order after a restart; the committed frontier never goes
-        backwards (the reference's position context only moves forward,
+    def _advance_watermark(old: dict | None, lineage: list) -> dict | None:
+        """Monotone offset watermark (T1): the max ``(file_seq, log_pos)``
+        of the parent's watermark and the batch's per-file rows.
+        Micro-batches may arrive out of delivery order after a restart;
+        the committed frontier never goes backwards (the reference's
+        position context only moves forward,
         /root/reference/packet.cc:56-68)."""
-        if not new:
+        if not lineage:
             return old
-        if not old:
-            return new
-        return max(old, new, key=lambda w: (w["file_seq"], w["log_pos"]))
+        fs, lp, _ = max(lineage)
+        new = {"file_seq": fs, "log_pos": lp}
+        return max(old or new, new, key=lambda w: (w["file_seq"], w["log_pos"]))
 
     @staticmethod
     def _advance_event_ts(old, new):
@@ -872,38 +905,30 @@ class LakeTable:
         return self.merge(tombstones, batch_id=batch_id, touched_buckets=touched)
 
     # ----------------------------------------------------------- lineage
-    LINEAGE_ARROW_FIELDS = [
-        ("batch_id", "int64"),
-        ("file_seq", "int32"),
-        ("max_log_pos", "int64"),
-        ("events", "int64"),
-        ("applied", "int64"),
-        ("skipped", "int64"),
-        ("replayed", "bool"),
-        ("snapshot_id", "int64"),
-    ]
-
-    def append_lineage(self, rows: list[tuple]) -> None:
-        """Per-batch, per-file_seq offset/metrics log. Driver-side pyarrow
-        write — it is metadata (a handful of rows per batch, like the
-        manifest), not a distributed dataset; a Spark job here would cost
-        more in scheduling than the data is worth."""
-        if not rows:
-            return
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        os.makedirs(self.lineage_dir, exist_ok=True)
-        names = [n for n, _ in self.LINEAGE_ARROW_FIELDS]
-        schema = pa.schema([(n, t) for n, t in self.LINEAGE_ARROW_FIELDS])
-        cols = list(zip(*rows))
-        tbl = pa.table({n: list(c) for n, c in zip(names, cols)}, schema=schema)
-        pq.write_table(
-            tbl, os.path.join(self.lineage_dir, f"lineage-{uuid.uuid4().hex}.parquet")
-        )
-
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self.lineage_dir)
+        """Per-batch, per-file_seq offsets and metrics, read from the
+        committed merge manifests: one row per (batch, file_seq) with the
+        batch's ``applied`` and ``skipped`` (its events minus applied) and
+        the ``snapshot_id`` that committed it. Replays, staged or aborted
+        attempts and full rewrites (compact/backfill/rebucket) add none;
+        ``vacuum`` expires a snapshot's rows with its manifest."""
+        cur = self.snapshot()
+        rows = []
+        for m in self.history():
+            if cur is None or m["snapshot_id"] > cur["snapshot_id"]:
+                continue  # beyond CURRENT: staged or a dead attempt
+            lin, applied = m.get("lineage", []), m["metrics"].get("applied", 0)
+            # a bootstrap's rows are not binlog events (events=0): skip none
+            skipped = max(sum(r[2] for r in lin) - applied, 0)
+            rows += [
+                (m["batch_id"], fs, lp, ev, applied, skipped, m["snapshot_id"])
+                for fs, lp, ev in lin
+            ]
+        return self.spark.createDataFrame(
+            rows,
+            "batch_id long, file_seq int, max_log_pos long, events long, "
+            "applied long, skipped long, snapshot_id long",
+        )
 
     # ---------------------------------------------------------- maintenance
     def vacuum(self, keep_snapshots: int = 10) -> dict:
@@ -1035,6 +1060,7 @@ class LakeTable:
             },
             schema_json=json.dumps((schema or self._schema(snap)).jsonValue()),
             metrics=metrics,
+            lineage=[],  # a rewrite ingests no batch
         )
         self._commit(manifest)
         return snapshot_id

@@ -14,8 +14,9 @@ a revoked credential, a deleted prefix. The micro-batch analog:
   empty batch triggers a cheap PROBE of the source (default: a Hadoop
   FileSystem ``exists()`` on the source path — storage-layer round-trip,
   no Spark job, no data read);
-- probe results append to a driver-side ``_heartbeats`` parquet log next
-  to the table's ``_lineage`` (same rationale: metadata, not a dataset);
+- probe results append to a driver-side ``_heartbeats`` parquet log in
+  the table directory (metadata, not a dataset: a Spark job would cost
+  more in scheduling than the rows are worth);
 - ``max_failures`` CONSECUTIVE probe failures raise
   :class:`SourceLivenessError` out of ``foreachBatch``, failing the query
   so the supervisor restarts it from checkpoint — the micro-batch

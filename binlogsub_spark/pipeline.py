@@ -163,66 +163,56 @@ def _commit(
       path-specific metric keys merged into the result.
 
     The core then runs, once and in this order: persist ``source`` (when
-    asked), frontier, watermark, ``LakeTable.merge``, the audit gate,
-    unpersist, compaction every ``cfg.compact_every`` snapshots,
-    ``append_lineage``, and the metrics dict. ``stage_timings`` receives
-    ``lineage_sec`` (the frontier jobs + their driver collect barrier) and
-    ``merge_sec`` (upsert build + MERGE + audit)."""
+    asked), frontier, ``LakeTable.merge`` (which commits the per-file rows
+    as lineage and derives the watermark from them, in the same manifest
+    as the data), the audit gate (an audit that rejects or raises aborts
+    the staged snapshot), unpersist, compaction every
+    ``cfg.compact_every`` snapshots, and the metrics dict.
+    ``stage_timings`` receives ``lineage_sec`` (the frontier jobs + their
+    driver collect barrier) and ``merge_sec`` (upsert build + MERGE +
+    audit)."""
     if persist:
         source.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         t0 = time.time()
-        fresh = table.snapshot() is None
-        per_file, touched = frontier(source, fresh)
-        watermark = None
-        if per_file:
-            top = max(per_file, key=lambda r: (r["file_seq"], r["max_log_pos"]))
-            watermark = {"file_seq": top["file_seq"], "log_pos": top["max_log_pos"]}
+        per_file, touched = frontier(source, table.snapshot() is None)
         t1 = time.time()
         partials, extra = upserts(source)
         res = table.merge(
             partials,
             batch_id=batch_id,
-            watermark=watermark,
+            frontier=per_file,
             touched_buckets=touched,
             publish=audit is None,
         )
         if audit is not None and not res["replayed"]:
-            if audit(table, res["snapshot_id"]):
-                table.publish_staged(res["snapshot_id"])
-            else:
+            try:
+                if not audit(table, res["snapshot_id"]):
+                    raise ValueError(
+                        f"audit rejected batch {batch_id} (staged snapshot "
+                        f"{res['snapshot_id']} aborted; table state unchanged)"
+                    )
+            except Exception:
                 table.abort_staged(res["snapshot_id"])
-                raise ValueError(
-                    f"audit rejected batch {batch_id} (staged snapshot "
-                    f"{res['snapshot_id']} aborted; table state unchanged)"
-                )
+                raise
+            table.publish_staged(res["snapshot_id"])
         if stage_timings is not None:
             stage_timings["lineage_sec"] = round(t1 - t0, 3)
             stage_timings["merge_sec"] = round(time.time() - t1, 3)
     finally:
         if persist:
             source.unpersist(blocking=False)
-    applied, replayed, snapshot_id = (
-        res["applied"], res["replayed"], res["snapshot_id"]
-    )
+    replayed, snapshot_id = res["replayed"], res["snapshot_id"]
     if cfg.compact_every and not replayed and snapshot_id % cfg.compact_every == 0:
         # bound the number of live commit dirs a read must union; commits
         # stay immutable, so this is safe mid-stream (new snapshot only)
         table.compact()
     total = sum(r["events"] for r in per_file)
-    skipped = total - applied  # scope-filtered + LWW losers + replays
-    table.append_lineage(
-        [
-            (batch_id, r["file_seq"], r["max_log_pos"], r["events"], applied,
-             skipped, replayed, snapshot_id)
-            for r in per_file
-        ]
-    )
     return {
         "batch_id": batch_id,
         "events": total,
-        "applied": applied,
-        "skipped": skipped,
+        "applied": res["applied"],
+        "skipped": total - res["applied"],  # scope-filtered + LWW losers + replays
         "replayed": replayed,
         "snapshot_id": snapshot_id,
         **extra,
@@ -336,11 +326,9 @@ def bootstrap_from_snapshot(
         F.lit(file_seq).cast("int").alias("_file_seq"),
         F.lit(log_pos).cast("long").alias("_log_pos"),
     )
-    return table.merge(
-        stamped,
-        batch_id=batch_id,
-        watermark={"file_seq": file_seq, "log_pos": log_pos},
-    )
+    # the cut is the batch's one-file frontier; its rows are not binlog
+    # events, so it counts none
+    return table.merge(stamped, batch_id=batch_id, frontier=[(file_seq, log_pos, 0)])
 
 
 def apply_batch_multi(

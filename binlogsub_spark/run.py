@@ -281,17 +281,14 @@ def _ingest(spark, table: LakeTable, args) -> dict:
     q.awaitTermination(args.timeout_sec)
 
     snap = table.snapshot() or {}
-    lineage = table.lineage().toPandas() if snap else None
+    lineage = table.lineage().toPandas()
     out = {
         "rows": table.read().count() if snap else 0,
         "snapshot_id": snap.get("snapshot_id"),
         "batch_id": snap.get("batch_id"),
         "watermark": snap.get("watermark"),
-        # a checkpoint replay re-records its batch's files with
-        # replayed=True; those events were already counted once
-        "events_seen": int(lineage.loc[~lineage["replayed"], "events"].sum())
-        if lineage is not None else 0,
-        "batches": int(lineage["batch_id"].nunique()) if lineage is not None else 0,
+        "events_seen": int(lineage["events"].sum()),
+        "batches": int(lineage["batch_id"].nunique()),
     }
     if snap:
         lag = table.freshness()["ingest_lag_seconds"]

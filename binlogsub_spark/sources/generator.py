@@ -357,7 +357,9 @@ def write_mysql_binlog(
     every change (one transaction per change, matching the GTID-per-change
     model) at ``log_pos + 64`` — required by the transaction-atomic ingest
     mode (``--atomic`` / ``apply_mysql_batch(stash_path=...)``),
-    which defers rows-events until their file's commit marker arrives."""
+    which defers rows-events until their file's commit marker arrives.
+    With ``xids`` or ``gtids`` the output is re-ranged by transaction, so
+    each file carries its transactions whole, the same way on every run."""
     from binlogsub_spark.mysql_binlog import encode_rows_df
 
     tmaps = transcripts_table_maps()
@@ -380,17 +382,18 @@ def write_mysql_binlog(
         "ts",
     )
     enc_in = _delivery_ordered(enc_in, n_files)
+    reranged = xids or gtids
     raw = encode_rows_df(
         enc_in.drop("delivery_seq"),
         tmaps[12],
         rows_per_event=1,  # one change per event: every change keeps its
         # own (file_seq, log_pos) for the LWW version triple
         checksum=checksum,
-        # control frames at each partition head — except in gtids mode,
-        # where the union is re-ranged below and maps (log_pos 0) would
-        # all collapse into the lowest-range file; that mode re-emits
-        # them per OUTPUT partition instead
-        include_table_map=not gtids,
+        # control frames at each partition head — except when the union
+        # is re-ranged below, where maps (log_pos 0) would all collapse
+        # into the lowest-range file; that layout re-emits them per
+        # OUTPUT partition instead
+        include_table_map=not reranged,
         file_seq_col="file_seq",
         log_pos_col="log_pos",
         op_col="op",
@@ -419,12 +422,14 @@ def write_mysql_binlog(
             (F.col("delivery_seq") + 1).cast("long").alias("gno"),
         )
         raw = raw.unionByName(encode_gtids_df(txs, checksum=checksum))
-        # the union writes GTID frames as SEPARATE parquet files; a file
-        # streaming source would then deliver whole micro-batches of
-        # rows-events with no GTID frame in sight. Re-range the union on
-        # the owning transaction's position (GTID sits at log_pos-1 ->
-        # +1; XID at +64 -> -64; type byte at header offset 5) so every
-        # parquet file carries its transactions whole, like a real binlog
+    if reranged:
+        # the union writes GTID/XID frames as SEPARATE parquet files; a
+        # file streaming source would then deliver whole micro-batches of
+        # rows-events with no GTID or commit frame in sight. Re-range the
+        # union on the owning transaction's position (GTID sits at
+        # log_pos-1 -> +1; XID at +64 -> -64; type byte at header offset
+        # 5) so every parquet file carries its transactions whole, like a
+        # real binlog
         from binlogsub_spark.mysql_binlog import GTID_LOG_EVENT, XID_EVENT
 
         etype = F.expr("substring(payload, 5, 1)")
@@ -481,7 +486,17 @@ def write_mysql_binlog(
         raw = raw.mapInArrow(
             _prepend_maps, schema="file_seq int, log_pos long, payload binary"
         )
-    raw.write.mode("overwrite").parquet(path)
+    # the range exchanges sample EVERY key (up to Spark's 1M-key cap):
+    # their file bounds then depend on the frames alone, not on the
+    # sampler's seed, which Spark derives from an RDD id that differs
+    # from run to run — so each run writes the same files
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(10**6))
+    try:
+        raw.write.mode("overwrite").parquet(path)
+    finally:
+        spark.conf.set(key, old)
 
 
 def write_mysql_binlog_files(

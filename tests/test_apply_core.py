@@ -142,7 +142,7 @@ def test_lineage_and_watermark_every_path(spark, tmp_path, inputs, path):
     """Per batch, lineage accounts for every input event once, each file's
     max_log_pos is that file's max input log_pos, the manifest watermark is
     the max (file_seq, log_pos) applied so far, and a replayed batch_id
-    appends replayed=True, applied=0 rows."""
+    commits nothing: no lineage row, the manifest unchanged."""
     table_dir, seen, cache = tmp_path / "t", [], {}
     for i in (1, 2):
         m, src = _apply(spark, inputs, path, table_dir, i, cache)
@@ -156,15 +156,19 @@ def test_lineage_and_watermark_every_path(spark, tmp_path, inputs, path):
         lin = table.lineage().where(F.col("batch_id") == i).collect()
         assert sum(r["events"] for r in lin) == m["events"] == src.count()
         assert {r["file_seq"]: r["max_log_pos"] for r in lin} == frontier
-        assert all(r["applied"] == m["applied"] and not r["replayed"] for r in lin)
+        assert all(
+            r["applied"] == m["applied"]
+            and r["skipped"] == m["skipped"]
+            and r["snapshot_id"] == m["snapshot_id"]
+            for r in lin
+        )
         fs, lp = max(seen)
         assert table.snapshot()["watermark"] == {"file_seq": fs, "log_pos": lp}
 
+    before = (table.snapshot(), sorted(table.lineage().collect()))
     m, _ = _apply(spark, inputs, path, table_dir, 2, cache)
     assert m["replayed"] and m["applied"] == 0
-    lin = table.lineage().where((F.col("batch_id") == 2) & F.col("replayed")).collect()
-    assert lin and all(r["applied"] == 0 for r in lin)
-    assert sum(r["events"] for r in lin) == m["events"]
+    assert (table.snapshot(), sorted(table.lineage().collect())) == before
 
 
 # --------------------------------------------------- persist_source tri-state

@@ -55,6 +55,8 @@ def test_bootstrap_equals_full_replay(spark, tmp_path):
     res = bootstrap_from_snapshot(boot, pre.read(), cut_fs, cut_lp)
     assert res["applied"] > 0 and not res["replayed"]
     assert boot.snapshot()["watermark"] == {"file_seq": cut_fs, "log_pos": cut_lp}
+    # the cut is the bootstrap's one lineage row; its rows are not events
+    assert [tuple(r)[:4] for r in boot.lineage().collect()] == [(-1, cut_fs, cut_lp, 0)]
 
     # tail = everything above the cut PLUS a redelivered overlap just below
     # it (at-least-once): the overlap must be fully absorbed by LWW

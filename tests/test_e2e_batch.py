@@ -160,6 +160,7 @@ def test_full_rewrite_commits_written_buckets(spark, tmp_path, rewrite):
     apply_batch(table, ev, batch_id=1)
     parent = table.snapshot()
     before = sorted(table.read().collect())
+    lineage = sorted(table.lineage().collect())
     if rewrite == "compact":
         sid = table.compact()["snapshot_id"]
     elif rewrite == "backfill":
@@ -188,6 +189,9 @@ def test_full_rewrite_commits_written_buckets(spark, tmp_path, rewrite):
     }
     after = table.read().drop("text_len") if rewrite == "backfill" else table.read()
     assert before == sorted(after.collect())
+    # a rewrite ingests no batch: no lineage row, the watermark carries over
+    assert sorted(table.lineage().collect()) == lineage
+    assert snap["watermark"] == parent["watermark"]
 
 
 def test_time_travel_read(spark, tmp_path):

@@ -61,3 +61,43 @@ def test_distributions(spark):
 def test_total_order_unique(spark):
     df = generate_binlog(spark, GeneratorParams(n_events=4000, dup_tail=0))
     assert df.select("file_seq", "log_pos").distinct().count() == 4000
+
+
+def test_mysql_xids_layout_deterministic(spark, tmp_path):
+    """``write_mysql_binlog(xids=True)`` splits the frames across its files
+    the same way on every run, and every rows-event lands in the file that
+    carries its XID commit marker (a stream over it sees stable batches of
+    whole transactions)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from binlogsub_spark.mysql_binlog import (
+        DELETE_ROWS_EVENT_V2,
+        WRITE_ROWS_EVENT_V2,
+        XID_EVENT,
+    )
+    from binlogsub_spark.sources.generator import write_mysql_binlog
+
+    p = GeneratorParams(n_events=3000, n_convs=60, dup_tail=100)
+
+    def files(name):
+        path = str(tmp_path / name)
+        write_mysql_binlog(spark, path, p, n_files=5, xids=True)
+        out = []
+        for f in sorted(glob.glob(f"{path}/part-*.parquet")):
+            t = pq.read_table(f).to_pydict()
+            out.append(sorted(zip(t["file_seq"], t["log_pos"], t["payload"])))
+        return out
+
+    first, second = files("a"), files("b")
+    assert [len(f) for f in first] == [len(f) for f in second]
+    assert first == second
+    for rows in first:
+        kinds = [(fs, lp, payload[4]) for fs, lp, payload in rows]
+        xids = {(fs, lp - 64) for fs, lp, k in kinds if k == XID_EVENT}
+        events = {
+            (fs, lp) for fs, lp, k in kinds
+            if WRITE_ROWS_EVENT_V2 <= k <= DELETE_ROWS_EVENT_V2
+        }
+        assert events and events <= xids

@@ -96,6 +96,39 @@ def bucket_expr(col, buckets: int):
     ).cast("int")
 
 
+def _colocate(
+    df: DataFrame, buckets: int, touched: list[int] | None = None
+) -> DataFrame:
+    """Direct bucket partitioning: one partition per bucket, so each bucket
+    lands whole in one task (one file per bucket dir) and no two buckets
+    share a task. Without ``touched`` the partition id is ``_bucket``
+    itself (``buckets`` partitions). With a sorted ``touched`` list only
+    those buckets get partitions: a dense ``_slot`` column maps
+    ``touched[i]`` to partition ``i``; a bucket missing from ``touched``
+    gets slot -1 (repartitionById takes it modulo, to the last partition)
+    for the caller to count and refuse."""
+    if touched is None:
+        return df.repartitionById(buckets, "_bucket")
+    slot = F.array_position(F.array(*map(F.lit, touched)), F.col("_bucket")) - 1
+    return df.withColumn("_slot", slot.cast("int")).repartitionById(
+        len(touched), "_slot"
+    )
+
+
+def _colocated_lww(
+    df: DataFrame, buckets: int, touched: list[int] | None = None
+) -> DataFrame:
+    """The merge tail: :func:`_colocate`, then the complete LWW reduce
+    inside each partition. The reduce groups by the partition id column
+    (``_slot`` as well as ``_bucket`` when ``touched`` is given — Spark
+    cannot tell the slot is a function of the bucket) so it adds no
+    exchange, and by ``_bucket`` first so its output order already
+    satisfies the ``partitionBy("_bucket")`` writer, which then adds no
+    sort."""
+    parts = ["_bucket"] if touched is None else ["_bucket", "_slot"]
+    return lww_reduce(_colocate(df, buckets, touched), key=parts + MERGE_KEY)
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, path: str, buckets: int = 32):
         self.spark = spark
@@ -586,12 +619,14 @@ class LakeTable:
         their max, in the same atomic commit as the data.
 
         One strategy, two full exchanges: the caller's salted partial
-        reduce (map-side combine bounds a hot key's share) -> ONE
-        bucket-colocation exchange of (upserts ∪ touched current rows) ->
-        a partition-local complete LWW reduce (grouping by
-        ``(_bucket, key)`` is satisfied by the colocation's hash
-        partitioning) -> a shuffle-free write, one file per bucket dir
-        (plan-asserted in tests/test_plans.py).
+        reduce (map-side combine bounds a hot key's share) -> ONE direct
+        bucket-colocation exchange of (upserts ∪ touched current rows),
+        ``repartitionById`` with one partition per touched bucket (bucket
+        ``touched[i]`` to partition ``i``; one per table bucket in observe
+        mode) -> a partition-local complete LWW reduce grouped by the
+        partition id and the key -> a shuffle- and sort-free write, one
+        task and one file per touched bucket dir (plan-asserted in
+        tests/test_plans.py).
 
         ``touched_buckets``: a pre-computed SUPERSET of the hash buckets the
         batch touches (``bucket_expr`` over the batch's merge keys). With it
@@ -600,6 +635,10 @@ class LakeTable:
         key column cheaply (column-pruned parquet scan) piggyback the bucket
         set on their lineage aggregation. A superset only rewrites extra
         buckets byte-identically — never wrong, at worst slightly wasteful.
+        A set that misses a bucket of the batch raises ``ValueError``
+        after the write and before the commit (counted by the write's
+        Observation): the row would land in a commit dir the manifest
+        does not point that bucket at.
         Without it the merge persists ``upserts`` and runs a small distinct
         job (the right trade when ``upserts`` is an expensive computed plan
         whose recomputation would dominate).
@@ -692,21 +731,6 @@ class LakeTable:
                 unioned = _align(self._scan(snap, touched), 0).unionByName(w2)
             else:
                 unioned = w2
-            # Bucket-colocation partition count: len(touched) slots for
-            # len(touched) distinct _bucket values is a balls-in-bins trap
-            # (hash collisions leave ~1/e of the slots empty and pile 2-3
-            # buckets on others — a 2-3x straggler on the sort+agg+write
-            # stage, guide §2.5 "too few distinct values"). 4x slots make
-            # double-ups rare; empty slots cost nothing; each bucket still
-            # lands WHOLE in exactly one task (one file per bucket dir).
-            n_parts = max(4 * (self.buckets if touched is None else len(touched)), 1)
-            # one bucket-colocation exchange, then a PARTITION-LOCAL
-            # complete reduce: grouping by (_bucket, key) is satisfied by
-            # the repartition's HashPartitioning(_bucket), so the final LWW
-            # aggregation adds NO second exchange (plan-asserted in
-            # tests/test_plans.py)
-            colocated = unioned.repartition(n_parts, "_bucket")
-            merged = lww_reduce(colocated, key=MERGE_KEY + ["_bucket"])
 
             snapshot_id = (snap["snapshot_id"] + 1) if snap else 1
             lineage = [[int(r[0]), int(r[1]), int(r[2])] for r in frontier]
@@ -732,13 +756,27 @@ class LakeTable:
                     obs_metrics.append(
                         F.collect_set(F.col("_bucket")).alias("touched")
                     )
+                else:
+                    # rows of a bucket the caller left out of
+                    # touched_buckets (slot -1): written, but the manifest
+                    # would keep pointing that bucket at its old commit
+                    stray = F.col("_slot") < 0
+                    obs_metrics += [
+                        F.count(F.when(stray, 1)).alias("stray_rows"),
+                        F.collect_set(F.when(stray, F.col("_bucket"))).alias(
+                            "stray_buckets"
+                        ),
+                    ]
+                # one partition per touched bucket (per bucket in observe
+                # mode), then the partition-local complete reduce
+                merged = _colocated_lww(unioned, self.buckets, touched)
                 to_write = merged.observe(obs, *obs_metrics).select(
                     *schema.fieldNames(), "_bucket"
                 )
                 (
                     # already bucket-colocated by the merge shuffle: each
-                    # task holds whole buckets -> one file per bucket dir,
-                    # no extra exchange
+                    # task holds one whole bucket -> one file per bucket
+                    # dir, no extra exchange
                     to_write.write.partitionBy("_bucket")
                     .mode("overwrite")
                     .parquet(os.path.join(self.data_dir, commit_rel))
@@ -747,6 +785,15 @@ class LakeTable:
                 batch_max_ts = obs.get["max_event_ts"]
                 if touched is None:
                     touched = sorted(int(b) for b in obs.get["touched"])
+                elif obs.get["stray_rows"]:
+                    stray_buckets = sorted(int(b) for b in obs.get["stray_buckets"])
+                    raise ValueError(
+                        f"batch {batch_id}: {obs.get['stray_rows']} row(s) in "
+                        f"bucket(s) {stray_buckets[:5]} missing from "
+                        "touched_buckets; the caller's set is not a superset "
+                        f"of the batch's buckets (bucket_expr over "
+                        f"{self.buckets} buckets). Nothing was committed."
+                    )
                 if obs.get["live_rows"] > 0:
                     for b in touched:
                         bucket_locations[str(b)] = commit_rel
@@ -1080,8 +1127,7 @@ class LakeTable:
         df = self._scan(snap).withColumn(name, col)
         schema = T.StructType([f for f in df.schema.fields if f.name != "_bucket"])
         sid = self._rewrite(
-            snap, df.repartition(self.buckets, "_bucket"), {"backfill": name},
-            schema=schema,
+            snap, _colocate(df, self.buckets), {"backfill": name}, schema=schema
         )
         return {"snapshot_id": sid}
 
@@ -1103,10 +1149,8 @@ class LakeTable:
         Spark's default codec: ingest throughput is the SLO there, storage
         is the SLO here)."""
         snap = self._require()
-        df = (
-            self._scan(snap)
-            .repartition(self.buckets, "_bucket")
-            .sortWithinPartitions(*MERGE_KEY)
+        df = _colocate(self._scan(snap), self.buckets).sortWithinPartitions(
+            *MERGE_KEY
         )
         sid = self._rewrite(snap, df, {"compaction": True}, compression="zstd")
         return {"snapshot_id": sid}
@@ -1141,7 +1185,7 @@ class LakeTable:
             "_bucket", bucket_expr(MERGE_KEY[0], new_buckets)
         )
         if new_buckets % old_buckets and old_buckets % new_buckets:
-            df = df.repartition(new_buckets, "_bucket")
+            df = _colocate(df, new_buckets)
         sid = self._rewrite(
             snap, df, {"rebucket": [old_buckets, new_buckets]}, buckets=new_buckets
         )

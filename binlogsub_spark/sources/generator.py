@@ -29,6 +29,7 @@ Baked-in distributions (FIXTURES.md §1):
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -148,6 +149,22 @@ def generate_binlog(
     return events
 
 
+@contextmanager
+def _exhaustive_range_sampling(spark: SparkSession):
+    """Range exchanges inside the block sample EVERY key (up to Spark's
+    1M-key cap): their file bounds then depend on the rows alone, not on
+    the sampler's seed, which Spark derives from an RDD id that differs
+    from write to write — so each write of the same params gives the same
+    files."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(10**6))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
 def _delivery_ordered(df: DataFrame, n_files: int) -> DataFrame:
     """The one fixture layout: range-partitioned by arrival order and sorted
     within each partition, so a file-based streaming source replays the
@@ -166,7 +183,8 @@ def _write_delivery_ordered(
     ``value`` column as JSON-lines text."""
     writer = _delivery_ordered(df, n_files).select(*(cols or df.columns)).write
     writer = writer.mode("overwrite")
-    (writer.text if text else writer.parquet)(path)
+    with _exhaustive_range_sampling(df.sparkSession):
+        (writer.text if text else writer.parquet)(path)
 
 
 def write_binlog(
@@ -486,17 +504,8 @@ def write_mysql_binlog(
         raw = raw.mapInArrow(
             _prepend_maps, schema="file_seq int, log_pos long, payload binary"
         )
-    # the range exchanges sample EVERY key (up to Spark's 1M-key cap):
-    # their file bounds then depend on the frames alone, not on the
-    # sampler's seed, which Spark derives from an RDD id that differs
-    # from run to run — so each run writes the same files
-    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(10**6))
-    try:
+    with _exhaustive_range_sampling(spark):
         raw.write.mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set(key, old)
 
 
 def write_mysql_binlog_files(

@@ -36,8 +36,8 @@ def _explain(df) -> str:
 
 def _merge_jvm_df():
     from binlogsub_spark.config import EngineConfig
-    from binlogsub_spark.lake.table import LakeTable, bucket_expr
-    from binlogsub_spark.operators.dedup import lww_reduce, partial_lww_reduce
+    from binlogsub_spark.lake.table import _colocated_lww, bucket_expr
+    from binlogsub_spark.operators.dedup import partial_lww_reduce
     from binlogsub_spark.pipeline import prepare_upserts
     from binlogsub_spark.plans.envelope import MERGE_KEY
     from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
@@ -48,9 +48,9 @@ def _merge_jvm_df():
     w = up.withColumn("_bucket", bucket_expr(MERGE_KEY[0], 16)).withColumn(
         "_origin", F.lit(-1)
     )
-    # the merge's heavy tail: colocate once, partition-local final reduce
-    colocated = w.repartition(64, "_bucket")
-    return lww_reduce(colocated, key=MERGE_KEY + ["_bucket"])
+    # the merge's heavy tail as a fresh 16-bucket table runs it: one
+    # partition per bucket, then the partition-local final reduce
+    return _colocated_lww(w, 16)
 
 
 def _raw_decode_df():

@@ -101,3 +101,28 @@ def test_mysql_xids_layout_deterministic(spark, tmp_path):
             if WRITE_ROWS_EVENT_V2 <= k <= DELETE_ROWS_EVENT_V2
         }
         assert events and events <= xids
+
+
+def test_raw_layout_deterministic(spark, tmp_path):
+    """Two ``write_raw_binlog`` writes of the same params in one session
+    split the rows across their files the same way (a stream over either
+    sees the same micro-batch boundaries)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from binlogsub_spark.sources.generator import write_raw_binlog
+
+    p = GeneratorParams(n_events=3000, n_convs=60, dup_tail=100)
+
+    def files(name):
+        path = str(tmp_path / name)
+        write_raw_binlog(spark, path, p, n_files=5)
+        return [
+            pq.read_table(f).to_pydict()
+            for f in sorted(glob.glob(f"{path}/part-*.parquet"))
+        ]
+
+    first, second = files("a"), files("b")
+    assert len(first) == 5
+    assert first == second

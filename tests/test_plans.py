@@ -182,3 +182,59 @@ def test_band_store_bucketed_join_is_one_sided(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql("DROP TABLE IF EXISTS t_band_store_plan")
+
+
+def test_merge_colocates_one_partition_per_touched_bucket(
+    spark, tmp_path, monkeypatch
+):
+    """The merge as ``apply_batch`` runs it: exactly two exchanges (the
+    salted partial reduce, then one ``shufflepartitionidpassthrough`` with
+    one partition per touched bucket, or per table bucket on a fresh
+    table), and neither an exchange nor a sort between the final
+    aggregate and the partitioned write."""
+    from binlogsub_spark.lake import table as table_mod
+    from binlogsub_spark.lake.table import LakeTable
+    from binlogsub_spark.pipeline import apply_batch
+    from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
+
+    seen = []
+    colocated_lww = table_mod._colocated_lww
+
+    def spy(df, buckets, touched=None):
+        out = colocated_lww(df, buckets, touched)
+        seen.append((touched, out))
+        return out
+
+    monkeypatch.setattr(table_mod, "_colocated_lww", spy)
+    ev = generate_binlog(
+        spark, GeneratorParams(n_events=3000, n_convs=40, dup_tail=100)
+    )
+    table = LakeTable(spark, str(tmp_path / "t"), buckets=16)
+    apply_batch(table, ev.where("delivery_seq < 2000"), batch_id=1)
+    apply_batch(table, ev.where("delivery_seq >= 2000"), batch_id=2)
+    # the write plan of the last merge, as Spark ran it
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    write_plan = next(
+        p
+        for p in (
+            runs.apply(i).physicalPlanDescription()
+            for i in range(runs.size() - 1, -1, -1)
+        )
+        if "InsertIntoHadoopFsRelationCommand" in p
+    )
+
+    (fresh_touched, fresh), (touched, rewrite) = seen
+    assert fresh_touched is None and touched
+    for merged, parts in ((fresh, 16), (rewrite, len(touched))):
+        plan = _plan(merged)
+        exchanges = [l for l in plan.splitlines() if "Exchange" in l]
+        assert len(exchanges) == 2, plan
+        assert "shufflepartitionidpassthrough(" in exchanges[0], plan
+        assert f"), {parts}), REPARTITION_BY_NUM" in exchanges[0], plan
+        assert "partial_max" in plan.split("Exchange", 1)[0], plan
+
+    final = write_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    above_aggregate = final.split("SortAggregate", 1)[0]
+    assert "WriteFiles" in above_aggregate, write_plan
+    assert "Exchange" not in above_aggregate, write_plan
+    assert "Sort" not in above_aggregate, write_plan

@@ -96,37 +96,21 @@ def bucket_expr(col, buckets: int):
     ).cast("int")
 
 
-def _colocate(
-    df: DataFrame, buckets: int, touched: list[int] | None = None
-) -> DataFrame:
-    """Direct bucket partitioning: one partition per bucket, so each bucket
-    lands whole in one task (one file per bucket dir) and no two buckets
-    share a task. Without ``touched`` the partition id is ``_bucket``
-    itself (``buckets`` partitions). With a sorted ``touched`` list only
-    those buckets get partitions: a dense ``_slot`` column maps
-    ``touched[i]`` to partition ``i``; a bucket missing from ``touched``
-    gets slot -1 (repartitionById takes it modulo, to the last partition)
-    for the caller to count and refuse."""
-    if touched is None:
-        return df.repartitionById(buckets, "_bucket")
-    slot = F.array_position(F.array(*map(F.lit, touched)), F.col("_bucket")) - 1
-    return df.withColumn("_slot", slot.cast("int")).repartitionById(
-        len(touched), "_slot"
-    )
+def _colocate(df: DataFrame, buckets: int) -> DataFrame:
+    """Direct bucket partitioning: ``_bucket`` is the partition id
+    (``repartitionById``, ``buckets`` partitions), so each bucket lands
+    whole in one task (one file per bucket dir) and no two buckets share
+    a task. A partition whose bucket has no rows runs an empty task."""
+    return df.repartitionById(buckets, "_bucket")
 
 
-def _colocated_lww(
-    df: DataFrame, buckets: int, touched: list[int] | None = None
-) -> DataFrame:
+def _colocated_lww(df: DataFrame, buckets: int) -> DataFrame:
     """The merge tail: :func:`_colocate`, then the complete LWW reduce
-    inside each partition. The reduce groups by the partition id column
-    (``_slot`` as well as ``_bucket`` when ``touched`` is given — Spark
-    cannot tell the slot is a function of the bucket) so it adds no
-    exchange, and by ``_bucket`` first so its output order already
-    satisfies the ``partitionBy("_bucket")`` writer, which then adds no
-    sort."""
-    parts = ["_bucket"] if touched is None else ["_bucket", "_slot"]
-    return lww_reduce(_colocate(df, buckets, touched), key=parts + MERGE_KEY)
+    inside each partition. The reduce groups by ``_bucket`` first, so the
+    partitioning already clusters it (no exchange) and its output order
+    already satisfies the ``partitionBy("_bucket")`` writer, which then
+    adds no sort."""
+    return lww_reduce(_colocate(df, buckets), key=["_bucket", *MERGE_KEY])
 
 
 class LakeTable:
@@ -621,12 +605,11 @@ class LakeTable:
         One strategy, two full exchanges: the caller's salted partial
         reduce (map-side combine bounds a hot key's share) -> ONE direct
         bucket-colocation exchange of (upserts ∪ touched current rows),
-        ``repartitionById`` with one partition per touched bucket (bucket
-        ``touched[i]`` to partition ``i``; one per table bucket in observe
-        mode) -> a partition-local complete LWW reduce grouped by the
-        partition id and the key -> a shuffle- and sort-free write, one
-        task and one file per touched bucket dir (plan-asserted in
-        tests/test_plans.py).
+        ``repartitionById`` with ``_bucket`` as the partition id (one
+        partition per table bucket; an untouched bucket's task is empty)
+        -> a partition-local complete LWW reduce grouped by ``_bucket`` and
+        the key -> a shuffle- and sort-free write, one task and one file
+        per touched bucket dir (plan-asserted in tests/test_plans.py).
 
         ``touched_buckets``: a pre-computed SUPERSET of the hash buckets the
         batch touches (``bucket_expr`` over the batch's merge keys). With it
@@ -635,10 +618,13 @@ class LakeTable:
         key column cheaply (column-pruned parquet scan) piggyback the bucket
         set on their lineage aggregation. A superset only rewrites extra
         buckets byte-identically — never wrong, at worst slightly wasteful.
-        A set that misses a bucket of the batch raises ``ValueError``
-        after the write and before the commit (counted by the write's
-        Observation): the row would land in a commit dir the manifest
-        does not point that bucket at.
+        A non-empty set that misses a bucket of the batch raises
+        ``ValueError`` after the write and before the commit (counted by
+        the write's Observation): the row would land in a commit dir the
+        manifest does not point that bucket at. An EMPTY set is trusted,
+        not checked: it skips the write and commits the batch with
+        ``applied`` 0, so it must only be passed for a batch with no rows
+        in scope.
         Without it the merge persists ``upserts`` and runs a small distinct
         job (the right trade when ``upserts`` is an expensive computed plan
         whose recomputation would dominate).
@@ -758,18 +744,16 @@ class LakeTable:
                     )
                 else:
                     # rows of a bucket the caller left out of
-                    # touched_buckets (slot -1): written, but the manifest
-                    # would keep pointing that bucket at its old commit
-                    stray = F.col("_slot") < 0
+                    # touched_buckets: written, but the manifest would
+                    # keep pointing that bucket at its old commit
+                    stray = ~F.col("_bucket").isin(touched)
                     obs_metrics += [
                         F.count(F.when(stray, 1)).alias("stray_rows"),
                         F.collect_set(F.when(stray, F.col("_bucket"))).alias(
                             "stray_buckets"
                         ),
                     ]
-                # one partition per touched bucket (per bucket in observe
-                # mode), then the partition-local complete reduce
-                merged = _colocated_lww(unioned, self.buckets, touched)
+                merged = _colocated_lww(unioned, self.buckets)
                 to_write = merged.observe(obs, *obs_metrics).select(
                     *schema.fieldNames(), "_bucket"
                 )

@@ -1,7 +1,7 @@
-"""Direct bucket colocation: every bucket lands whole in one task, a merge
-pays one task per touched bucket and a compaction one per table bucket,
-and a ``touched_buckets`` set that misses a bucket of the batch fails
-before the commit instead of hiding the row."""
+"""Direct bucket colocation: every bucket lands whole in one task (one
+partition per table bucket, in a merge as in a compaction), and a
+``touched_buckets`` set that misses a bucket of the batch fails before
+the commit instead of hiding the row."""
 
 from __future__ import annotations
 
@@ -55,7 +55,7 @@ def base(spark, tmp_path):
     return table, ev
 
 
-def test_merge_runs_one_task_and_file_per_touched_bucket(base, last_stage_tasks):
+def test_merge_writes_one_file_per_touched_bucket(base, last_stage_tasks):
     table, ev = base
     up = _upserts(ev.where("delivery_seq >= 2000"))
     convs = sorted(r[0] for r in up.select("conv_id").distinct().collect())[:3]
@@ -66,7 +66,9 @@ def test_merge_runs_one_task_and_file_per_touched_bucket(base, last_stage_tasks)
     tasks = last_stage_tasks(
         lambda: table.merge(up, batch_id=2, touched_buckets=touched)
     )
-    assert tasks == len(touched)
+    # one task per table bucket: the untouched ones run empty and write
+    # nothing
+    assert tasks == BUCKETS
     locations = table.snapshot()["bucket_locations"]
     commit = locations[str(touched[0])]
     assert sorted(int(b) for b, c in locations.items() if c == commit) == touched

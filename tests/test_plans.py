@@ -184,13 +184,11 @@ def test_band_store_bucketed_join_is_one_sided(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_band_store_plan")
 
 
-def test_merge_colocates_one_partition_per_touched_bucket(
-    spark, tmp_path, monkeypatch
-):
-    """The merge as ``apply_batch`` runs it: exactly two exchanges (the
-    salted partial reduce, then one ``shufflepartitionidpassthrough`` with
-    one partition per touched bucket, or per table bucket on a fresh
-    table), and neither an exchange nor a sort between the final
+def test_merge_colocates_one_partition_per_bucket(spark, tmp_path, monkeypatch):
+    """The merge as ``apply_batch`` runs it, on a fresh table and on a
+    rewrite: exactly two exchanges (the salted partial reduce, then one
+    ``shufflepartitionidpassthrough`` with one partition per table
+    bucket), and neither an exchange nor a sort between the final
     aggregate and the partitioned write."""
     from binlogsub_spark.lake import table as table_mod
     from binlogsub_spark.lake.table import LakeTable
@@ -200,9 +198,9 @@ def test_merge_colocates_one_partition_per_touched_bucket(
     seen = []
     colocated_lww = table_mod._colocated_lww
 
-    def spy(df, buckets, touched=None):
-        out = colocated_lww(df, buckets, touched)
-        seen.append((touched, out))
+    def spy(df, buckets):
+        out = colocated_lww(df, buckets)
+        seen.append(out)
         return out
 
     monkeypatch.setattr(table_mod, "_colocated_lww", spy)
@@ -223,14 +221,13 @@ def test_merge_colocates_one_partition_per_touched_bucket(
         if "InsertIntoHadoopFsRelationCommand" in p
     )
 
-    (fresh_touched, fresh), (touched, rewrite) = seen
-    assert fresh_touched is None and touched
-    for merged, parts in ((fresh, 16), (rewrite, len(touched))):
+    assert len(seen) == 2  # the fresh merge and the rewrite
+    for merged in seen:
         plan = _plan(merged)
         exchanges = [l for l in plan.splitlines() if "Exchange" in l]
         assert len(exchanges) == 2, plan
         assert "shufflepartitionidpassthrough(" in exchanges[0], plan
-        assert f"), {parts}), REPARTITION_BY_NUM" in exchanges[0], plan
+        assert "), 16), REPARTITION_BY_NUM" in exchanges[0], plan
         assert "partial_max" in plan.split("Exchange", 1)[0], plan
 
     final = write_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]

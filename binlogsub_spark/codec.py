@@ -208,34 +208,26 @@ def _gather_headers(data: np.ndarray, starts: np.ndarray, dt: np.dtype) -> np.nd
     return np.ascontiguousarray(m).view(dt).reshape(len(starts))
 
 
-def _fixed_bytes(sl, width: int) -> np.ndarray:
-    """The values of a ``binary_slice`` output as one flat uint8 array of
-    ``len(sl) * width`` bytes (zero-copy). The kernel clamps the slice to
-    each value's length, so a frame shorter than the slice makes the
-    output ragged: that raises ``ValueError`` rather than reading the next
-    frame's bytes."""
-    starts, ends, data = _binary_buffers(sl)
-    if not (ends - starts == width).all():
-        raise ValueError(
-            f"frame shorter than its {width}-byte fixed field; validate "
-            "frames before decoding (skip_invalid=True or split_deadletter)"
-        )
-    lo = int(starts[0]) if len(starts) else 0
-    return data[lo : lo + len(starts) * width]
-
-
 def _headers_from_arrow(frames, dt: np.dtype) -> np.ndarray:
     """Header gather via the C++ ``binary_slice`` kernel: one memcpy of the
-    first ``hl`` bytes per frame, viewed as the structured header dtype.
-    The numpy fancy gather above moves ~9 B of index+data traffic per
-    header byte (it materializes an (n, hl) int64 index matrix first);
+    first ``hl`` bytes per frame, viewed zero-copy as the structured header
+    dtype. The numpy fancy gather above moves ~9 B of index+data traffic
+    per header byte (it materializes an (n, hl) int64 index matrix first);
     this path moves exactly the header bytes (measured 287 ms -> ~40 ms
-    per 1M frames). Raises ``ValueError`` on a frame shorter than the
-    header."""
+    per 1M frames). The kernel clamps the slice to each frame's length, so
+    a frame shorter than the header makes the output ragged: that raises
+    ``ValueError`` rather than reading the next frame's bytes."""
     import pyarrow.compute as pc
 
     hl = dt.itemsize
-    return _fixed_bytes(pc.binary_slice(frames, start=0, stop=hl), hl).view(dt)
+    starts, ends, data = _binary_buffers(pc.binary_slice(frames, start=0, stop=hl))
+    if not (ends - starts == hl).all():
+        raise ValueError(
+            f"frame shorter than its {hl}-byte fixed field; validate "
+            "frames before decoding (skip_invalid=True or split_deadletter)"
+        )
+    lo = int(starts[0]) if len(starts) else 0
+    return data[lo : lo + len(starts) * hl].view(dt)
 
 
 def _as_string(binarr):
@@ -259,11 +251,31 @@ def _conv_field(frames, dt: np.dtype):
 def _conv_key(field):
     """The conv_id key of a ``_conv_field`` slice: TRAILING NUL padding is
     stripped, embedded NULs are data ('ab\\0cd' and 'ab\\0ce' are distinct
-    keys). The decode and the touched-bucket kernel both use this one
-    rule — the kernel's bucket must be the bucket the merge writes."""
+    keys). :func:`raw_conv_key` applies the same rule JVM-side to derive
+    the touched buckets, so it must stay in step with this one: the
+    bucket of the frame's key must be the bucket the merge writes."""
     import pyarrow.compute as pc
 
     return pc.ascii_rtrim(_as_string(field), characters="\x00")
+
+
+def raw_conv_key(payload: str = "payload"):
+    """A frame's conv_id as a JVM column over the raw ``payload`` bytes,
+    so ``bucket_expr(raw_conv_key(), n)`` is the frame's COW bucket with no
+    Python pass. The version byte picks the epoch's 24-byte conv field
+    (offsets from ``_HEADER_DTYPES``), and the :func:`_conv_key` rule
+    applies: trailing NUL padding is stripped, embedded NULs are kept. A
+    frame of an unknown epoch gives NULL."""
+    p = F.col(payload)
+    version = F.substring(p, _VERSION_OFFSET + 1, 1)
+    field = F.coalesce(*[
+        F.when(
+            version == F.lit(bytes([v])),
+            F.substring(p, dt.fields["conv_id"][1] + 1, dt["conv_id"].itemsize),
+        )
+        for v, dt in _HEADER_DTYPES.items()
+    ])
+    return F.rtrim(field.cast("string"), F.lit("\x00"))
 
 
 def _text_field(frames, dt: np.dtype):
@@ -531,10 +543,9 @@ def _scope_mask(
     starts: np.ndarray, ends: np.ndarray, data: np.ndarray, scope_codes: frozenset
 ) -> np.ndarray:
     """Boolean mask of frames whose scope byte is in ``scope_codes``
-    (frames too short to carry one are out). The ONE implementation both
-    the decode kernel and the touched-bucket kernel use — they must agree,
-    because the touched-bucket pass derives the bucket superset for the
-    exact frame set the decode pass keeps."""
+    (frames too short to carry one are out): the decode kernel's scope
+    filter. The touched-bucket superset needs no scope mask — it covers
+    every frame (see ``pipeline.apply_raw_batch``)."""
     return ((ends - starts) > _SCOPE_OFFSET) & np.isin(
         _byte_at(starts, ends, data, _SCOPE_OFFSET), list(scope_codes)
     )
@@ -609,94 +620,6 @@ def decode_raw_events(
     # the frame header bytes, so shipping the framed outer columns across
     # the Arrow boundary (16 B/row of pure serialization) buys nothing
     return raw_df.select("payload").mapInArrow(_decode, schema=out_schema)
-
-
-# IEEE 802.3 CRC32 lookup table (the polynomial zlib/Spark's crc32 use)
-_CRC32_TABLE = None
-
-
-def _crc32_table() -> np.ndarray:
-    global _CRC32_TABLE
-    if _CRC32_TABLE is None:
-        t = np.arange(256, dtype=np.uint32)
-        for _ in range(8):
-            t = np.where(t & 1, (t >> 1) ^ np.uint32(0xEDB88320), t >> 1)
-        _CRC32_TABLE = t
-    return _CRC32_TABLE
-
-
-def crc32_of_fixed(mat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Vectorized CRC32 over a fixed-width byte matrix with per-row true
-    lengths (NUL-padded fields): one table-lookup step per byte COLUMN,
-    all rows in lockstep — the numpy twin of Spark's ``crc32`` /
-    zlib.crc32, bit-for-bit. Powers in-kernel bucket derivation
-    (``bucket_expr`` is CRC32-based for exactly this dual-computability).
-
-    ``mat``: (n, width) uint8; ``lengths``: (n,) int. Returns (n,) uint32.
-    """
-    table = _crc32_table()
-    n, width = mat.shape
-    crc = np.full(n, 0xFFFFFFFF, dtype=np.uint32)
-    for j in range(width):
-        active = lengths > j
-        if not active.any():
-            break
-        c = crc[active]
-        crc[active] = (c >> np.uint32(8)) ^ table[(c ^ mat[active, j]) & np.uint32(0xFF)]
-    return crc ^ np.uint32(0xFFFFFFFF)
-
-
-def raw_touched_buckets_df(
-    raw_df: DataFrame, buckets: int, scope_codes: frozenset | None = None
-) -> DataFrame:
-    """Per-kernel-batch DISTINCT COW bucket ids of the in-scope frames —
-    the touched-bucket superset for the one-pass MERGE, computed INSIDE the
-    kernel (conv_id slice -> the decode's key rule -> vectorized CRC32 ->
-    unique), so the job ships at most ``buckets`` rows per Arrow batch to
-    the JVM instead of one row per frame (a per-frame stats pass spent
-    ~70% of the raw path's wall time at 2M events shipping and
-    hash-aggregating rows whose only consumer was this set).
-
-    A frame long enough to carry its epoch's conv field is ALL the
-    validation the superset needs — frames the decode later rejects (bad
-    enum, len mismatch, utf8) at worst contribute a harmless extra bucket.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    out_schema = T.StructType([T.StructField("bucket", T.IntegerType())])
-
-    def _buckets(batches) -> Iterator["pa.RecordBatch"]:
-        for rb in batches:
-            arr = rb.column(rb.schema.get_field_index("payload"))
-            starts, ends, data = _binary_buffers(arr)
-            versions = _byte_at(starts, ends, data, _VERSION_OFFSET)
-            if scope_codes is not None:  # out of scope: in no epoch group
-                versions[~_scope_mask(starts, ends, data, scope_codes)] = 0
-            parts = []
-            for v, dt in _HEADER_DTYPES.items():
-                w = dt["conv_id"].itemsize
-                g = np.flatnonzero(
-                    (versions == v) & (ends - starts >= dt.fields["conv_id"][1] + w)
-                )
-                if not g.size:
-                    continue
-                # slice ONLY the conv bytes of every frame, then keep the group's
-                field = _take(_conv_field(arr, dt), g)
-                mat = _fixed_bytes(field, w).reshape(-1, w)
-                lengths = pc.binary_length(_conv_key(field)).to_numpy()
-                parts.append(
-                    (crc32_of_fixed(mat, lengths) % np.uint32(buckets)).astype(np.int32)
-                )
-            out = (
-                np.unique(np.concatenate(parts))
-                if parts
-                else np.zeros(0, dtype=np.int32)
-            )
-            yield pa.RecordBatch.from_pydict({"bucket": pa.array(out)})
-
-    # payload-only projection: the kernel never needs the framing columns
-    return raw_df.select("payload").mapInArrow(_buckets, schema=out_schema)
 
 
 def split_deadletter(raw_df: DataFrame) -> tuple[DataFrame, DataFrame]:

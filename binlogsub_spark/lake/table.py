@@ -70,26 +70,25 @@ def _atomic_write(path: str, text: str, exclusive: bool = False) -> None:
 
 
 def bucket_expr(col, buckets: int):
-    """Deterministic key->bucket clustering (CRC32 of the UTF-8 bytes,
+    """Deterministic key->bucket clustering (CRC-32 of the UTF-8 bytes,
     stable across runs). ``col``: column name or Column. This is THE one
-    definition of the bucket hash — callers that precompute
-    ``touched_buckets`` supersets (apply_batch/apply_raw_batch) MUST use
-    it too, or their superset invariant silently breaks and merge strands
-    rows in unregistered bucket partitions.
+    definition of the bucket hash: every path derives buckets with it,
+    including the ``touched_buckets`` supersets of the apply paths (the
+    raw wire path hashes ``codec.raw_conv_key``, the conv_id read from the
+    payload bytes). A second implementation would have to agree with it
+    bit for bit on every key, or the merge strands rows in unregistered
+    bucket partitions.
 
-    CRC32 (not xxhash64) because the hash must be computable BOTH as a
-    whole-stage-codegen Spark expression AND as a vectorized numpy kernel
-    (codec.crc32_of_fixed) — the raw wire path derives the touched-bucket
-    set INSIDE its Arrow kernel and ships only distinct bucket ids to the
-    JVM, so the two sides must agree bit-for-bit on every key.
+    CRC-32 stays because it is the persisted layout: every committed row
+    sits in the bucket dir this hash named, so changing the hash would
+    strand existing tables' rows. ``tests/test_codec.py`` pins it against
+    ``zlib.crc32``.
 
     A NULL key hashes like the empty string instead of propagating NULL:
     a NULL _bucket would otherwise write a ``_bucket=None`` partition
     that corrupts the table layout (and a null merge key must stay
     MERGEABLE so a write-audit-publish guard can inspect and reject the
-    staged batch, rather than the write crashing half-done). The numpy
-    side never sees NULL (wire frames always carry key bytes), so dual
-    computability is preserved."""
+    staged batch, rather than the write crashing half-done)."""
     c = F.col(col) if isinstance(col, str) else col
     return F.pmod(
         F.crc32(F.encode(F.coalesce(c, F.lit("")), "UTF-8")), F.lit(buckets)
@@ -618,13 +617,10 @@ class LakeTable:
         key column cheaply (column-pruned parquet scan) piggyback the bucket
         set on their lineage aggregation. A superset only rewrites extra
         buckets byte-identically — never wrong, at worst slightly wasteful.
-        A non-empty set that misses a bucket of the batch raises
-        ``ValueError`` after the write and before the commit (counted by
-        the write's Observation): the row would land in a commit dir the
-        manifest does not point that bucket at. An EMPTY set is trusted,
-        not checked: it skips the write and commits the batch with
-        ``applied`` 0, so it must only be passed for a batch with no rows
-        in scope.
+        A set that misses a bucket of the batch (an empty set included)
+        raises ``ValueError`` after the write and before the commit
+        (counted by the write's Observation): the row would land in a
+        commit dir the manifest does not point that bucket at.
         Without it the merge persists ``upserts`` and runs a small distinct
         job (the right trade when ``upserts`` is an expensive computed plan
         whose recomputation would dominate).
@@ -724,70 +720,68 @@ class LakeTable:
                 str(b): None for b in range(self.buckets)
             }
             commit_rel = f"commit-{snapshot_id:08d}"
-            applied, batch_max_ts = 0, None
-            if touched is None or touched:
-                obs = Observation(f"merge-{batch_id}")
-                obs_metrics = [
-                    F.count(F.when(F.col("_origin") == -1, 1)).alias("applied"),
-                    F.count("*").alias("live_rows"),
-                    # event-time frontier of THIS batch's winners — rides
-                    # the write job, no separate max() job
-                    F.max(
-                        F.when(F.col("_origin") == -1, F.col("_ts"))
-                    ).alias("max_event_ts"),
+            obs = Observation(f"merge-{batch_id}")
+            obs_metrics = [
+                F.count(F.when(F.col("_origin") == -1, 1)).alias("applied"),
+                F.count("*").alias("live_rows"),
+                # event-time frontier of THIS batch's winners — rides
+                # the write job, no separate max() job
+                F.max(
+                    F.when(F.col("_origin") == -1, F.col("_ts"))
+                ).alias("max_event_ts"),
+            ]
+            if touched is None:
+                # observe mode: the EXACT touched set rides the write
+                # (bounded by the bucket count, not the row count)
+                obs_metrics.append(
+                    F.collect_set(F.col("_bucket")).alias("touched")
+                )
+            else:
+                # rows of a bucket the caller left out of
+                # touched_buckets: written, but the manifest would
+                # keep pointing that bucket at its old commit
+                stray = ~F.col("_bucket").isin(touched)
+                obs_metrics += [
+                    F.count(F.when(stray, 1)).alias("stray_rows"),
+                    F.collect_set(F.when(stray, F.col("_bucket"))).alias(
+                        "stray_buckets"
+                    ),
                 ]
-                if touched is None:
-                    # observe mode: the EXACT touched set rides the write
-                    # (bounded by the bucket count, not the row count)
-                    obs_metrics.append(
-                        F.collect_set(F.col("_bucket")).alias("touched")
-                    )
-                else:
-                    # rows of a bucket the caller left out of
-                    # touched_buckets: written, but the manifest would
-                    # keep pointing that bucket at its old commit
-                    stray = ~F.col("_bucket").isin(touched)
-                    obs_metrics += [
-                        F.count(F.when(stray, 1)).alias("stray_rows"),
-                        F.collect_set(F.when(stray, F.col("_bucket"))).alias(
-                            "stray_buckets"
-                        ),
-                    ]
-                merged = _colocated_lww(unioned, self.buckets)
-                to_write = merged.observe(obs, *obs_metrics).select(
-                    *schema.fieldNames(), "_bucket"
+            merged = _colocated_lww(unioned, self.buckets)
+            to_write = merged.observe(obs, *obs_metrics).select(
+                *schema.fieldNames(), "_bucket"
+            )
+            (
+                # already bucket-colocated by the merge shuffle: each
+                # task holds one whole bucket -> one file per bucket
+                # dir, no extra exchange
+                to_write.write.partitionBy("_bucket")
+                .mode("overwrite")
+                .parquet(os.path.join(self.data_dir, commit_rel))
+            )
+            applied = obs.get["applied"]
+            batch_max_ts = obs.get["max_event_ts"]
+            if touched is None:
+                touched = sorted(int(b) for b in obs.get["touched"])
+            elif obs.get["stray_rows"]:
+                stray_buckets = sorted(int(b) for b in obs.get["stray_buckets"])
+                raise ValueError(
+                    f"batch {batch_id}: {obs.get['stray_rows']} row(s) in "
+                    f"bucket(s) {stray_buckets[:5]} missing from "
+                    "touched_buckets; the caller's set is not a superset "
+                    f"of the batch's buckets (bucket_expr over "
+                    f"{self.buckets} buckets). Nothing was committed."
                 )
-                (
-                    # already bucket-colocated by the merge shuffle: each
-                    # task holds one whole bucket -> one file per bucket
-                    # dir, no extra exchange
-                    to_write.write.partitionBy("_bucket")
-                    .mode("overwrite")
-                    .parquet(os.path.join(self.data_dir, commit_rel))
-                )
-                applied = obs.get["applied"]
-                batch_max_ts = obs.get["max_event_ts"]
-                if touched is None:
-                    touched = sorted(int(b) for b in obs.get["touched"])
-                elif obs.get["stray_rows"]:
-                    stray_buckets = sorted(int(b) for b in obs.get["stray_buckets"])
-                    raise ValueError(
-                        f"batch {batch_id}: {obs.get['stray_rows']} row(s) in "
-                        f"bucket(s) {stray_buckets[:5]} missing from "
-                        "touched_buckets; the caller's set is not a superset "
-                        f"of the batch's buckets (bucket_expr over "
-                        f"{self.buckets} buckets). Nothing was committed."
-                    )
-                if obs.get["live_rows"] > 0:
-                    for b in touched:
-                        bucket_locations[str(b)] = commit_rel
-                # else: the batch contributed NOTHING to these buckets (a
-                # one-pass touched SUPERSET where every event was scope-
-                # filtered away, against buckets with no prior data) — the
-                # commit dir holds zero parquet files, so pointing
-                # bucket_locations at it would make every later read fail
-                # schema inference. Keep prior locations; the manifest
-                # still advances batch_id/watermark.
+            if obs.get["live_rows"] > 0:
+                for b in touched:
+                    bucket_locations[str(b)] = commit_rel
+            # else: the batch contributed NOTHING to these buckets (a
+            # one-pass touched SUPERSET where every event was scope-
+            # filtered away, against buckets with no prior data) — the
+            # commit dir holds zero parquet files, so pointing
+            # bucket_locations at it would make every later read fail
+            # schema inference. Keep prior locations; the manifest
+            # still advances batch_id/watermark.
 
             manifest = {
                 "snapshot_id": snapshot_id,

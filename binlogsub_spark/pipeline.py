@@ -107,14 +107,14 @@ def _plan_parses_json(df: DataFrame) -> bool:
         return False
 
 
-def _per_file(source: DataFrame, bucket_key=None, buckets: int = 0) -> list:
+def _per_file(source: DataFrame, bucket_key, buckets: int) -> list:
     """Per-file_seq offset frontier + event counts (the per-partition
-    lineage of the north rule) over the pruned (file_seq, log_pos)
-    projection — never the payload columns. With ``bucket_key`` the same
-    pass hashes the merge key to its COW bucket (``bucket_expr``) and
-    collects each file's bucket SET: a superset of the buckets the merge
-    touches (superset because scope filtering happens later), which lets
-    the merge skip its own distinct-buckets job."""
+    lineage of the north rule) over a pruned projection of ``source``.
+    Given a ``bucket_key`` (a Column of the merge key, or None) the same
+    pass hashes it to its COW bucket (``bucket_expr``, the one bucket hash)
+    and collects each file's bucket SET; their union is a superset of the
+    buckets the merge touches (superset because scope filtering happens
+    later), which lets the merge skip its own distinct-buckets job."""
     sel = [F.col("file_seq"), F.col("log_pos")]
     aggs = [F.max("log_pos").alias("max_log_pos"), F.count("*").alias("events")]
     if bucket_key is not None:
@@ -146,7 +146,7 @@ def _commit(
     source: DataFrame,
     batch_id: int,
     cfg: EngineConfig,
-    frontier,
+    key,
     upserts,
     persist: bool = False,
     audit=None,
@@ -155,27 +155,34 @@ def _commit(
     """The one commit core every apply path ends in (the reference's
     "keyed sink + checkpoint" stage). A path supplies only what differs:
 
-    * ``frontier(source, fresh) -> (per_file, touched)``: the per-file
-      rows of :func:`_per_file` and a superset of the touched COW buckets,
-      or None to leave bucket discovery to the merge — on a ``fresh``
-      (empty) table the exact set rides the merge write's Observation;
+    * ``key``: a Column of each source row's merge key (conv_id), or None
+      when the key exists only after decode. On a non-empty table the
+      frontier job hashes it (:func:`_per_file`) and the union of the
+      per-file bucket sets goes to the merge as ``touched_buckets``;
+      without it (or on an empty table, where the exact set rides the
+      merge write's Observation) the merge discovers the buckets itself;
     * ``upserts(source) -> (partials, extra)``: pre-reduced upserts plus
       path-specific metric keys merged into the result.
 
     The core then runs, once and in this order: persist ``source`` (when
-    asked), frontier, ``LakeTable.merge`` (which commits the per-file rows
-    as lineage and derives the watermark from them, in the same manifest
-    as the data), the audit gate (an audit that rejects or raises aborts
-    the staged snapshot), unpersist, compaction every
+    asked), the frontier job, ``LakeTable.merge`` (which commits the
+    per-file rows as lineage and derives the watermark from them, in the
+    same manifest as the data), the audit gate (an audit that rejects or
+    raises aborts the staged snapshot), unpersist, compaction every
     ``cfg.compact_every`` snapshots, and the metrics dict.
-    ``stage_timings`` receives ``lineage_sec`` (the frontier jobs + their
+    ``stage_timings`` receives ``lineage_sec`` (the frontier job + its
     driver collect barrier) and ``merge_sec`` (upsert build + MERGE +
     audit)."""
     if persist:
         source.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         t0 = time.time()
-        per_file, touched = frontier(source, table.snapshot() is None)
+        if table.snapshot() is None:
+            key = None  # the merge observes the exact set on its write
+        per_file = _per_file(source, key, table.buckets)
+        touched = None
+        if key is not None:
+            touched = sorted({b for r in per_file for b in r["buckets"]})
         t1 = time.time()
         partials, extra = upserts(source)
         res = table.merge(
@@ -243,13 +250,13 @@ def apply_batch(
     never becomes visible. The IBusiness-callback extension point
     (§2.8), moved to where a lake engine needs it: the commit gate.
 
-    The per-file_seq lineage job reads ONLY (file_seq, log_pos, key) — for
-    a columnar source that scan is column-pruned and nearly free — and the
-    same aggregation collects the touched-bucket SET per file, so the merge
-    runs as ONE job over the source (no winners persist, no distinct-buckets
-    job: exactly one full scan of the batch, zero block-store traffic).
-    On a first batch into an empty table the lineage job drops the bucket
-    hash entirely and the touched set rides the merge's Observation.
+    The frontier job reads ONLY (file_seq, log_pos, key) — for a columnar
+    source that scan is column-pruned and nearly free — and the same
+    aggregation collects the touched-bucket SET per file from the
+    before/after image's conv_id, so the merge runs as ONE job over the
+    source (no winners persist, no distinct-buckets job). On a first batch
+    into an empty table the frontier job drops the bucket hash and the
+    touched set rides the merge's Observation.
 
     ``persist_source`` is tri-state. ``None`` (default) auto-detects: a
     source whose plan parses JSON (a ``from_json`` / ``JsonToStructs``
@@ -269,20 +276,14 @@ def apply_batch(
     if persist_source is None:
         persist_source = _plan_parses_json(events)
 
-    def frontier(src: DataFrame, fresh: bool):
-        if fresh:
-            return _per_file(src), None
-        img_conv = F.when(
-            F.col("op") == OP_DELETE, F.col("before.conv_id")
-        ).otherwise(F.col("after.conv_id"))
-        per_file = _per_file(src, img_conv, table.buckets)
-        return per_file, sorted({b for r in per_file for b in r["buckets"]})
-
     def upserts(src: DataFrame):
         return partial_lww_reduce(prepare_upserts(src, cfg), salt=cfg.skew_salt), {}
 
+    key = F.when(F.col("op") == OP_DELETE, F.col("before.conv_id")).otherwise(
+        F.col("after.conv_id")
+    )
     return _commit(
-        table, events, batch_id, cfg, frontier, upserts,
+        table, events, batch_id, cfg, key, upserts,
         persist=persist_source, audit=audit, stage_timings=stage_timings,
     )
 
@@ -560,27 +561,20 @@ def apply_raw_batch(
     audit=None,
 ) -> dict:
     """Raw wire path: payload:binary -> Arrow decode -> scope filter ->
-    salted partial LWW -> MERGE. The per-partition lineage stats come from
-    the framed header columns (file_seq/log_pos), which the source carries
-    OUTSIDE the payload — so the stats job reads a column-pruned
-    projection and NEVER touches the payload bytes (round-2 persisted the
-    full binary column through the block store just for this count,
-    tripling per-event cost).
+    salted partial LWW -> MERGE. The per-file lineage comes from the framed
+    header columns (file_seq/log_pos), which the source carries OUTSIDE
+    the payload; nothing is ever cached (no block-store traffic).
 
-    Job structure (nothing is ever cached, no block-store traffic):
-      1. per-file lineage = a PURE-JVM aggregation over the pruned
-         (file_seq, log_pos) columns — no payload read, no Python;
-      2. touched COW buckets = one header-only kernel pass that derives
-         each frame's bucket IN-KERNEL (vectorized CRC32, the same hash
-         ``bucket_expr`` compiles to JVM-side) and emits only per-batch
-         DISTINCT bucket ids — at most ``table.buckets`` rows per Arrow
-         batch cross into the JVM (the r4 shape shipped one (file_seq,
-         log_pos, conv_id) row PER FRAME here and spent ~70% of the raw
-         path's wall time on it). Skipped on a first batch into an empty
-         table: there is no current state to prune, so the merge observes
-         the EXACT set on its write job (one fewer pass over every
-         payload byte);
-      3. full decode (pruned to the scoped columns, scope filter in-kernel
+    Job structure:
+      1. the frontier job: one PURE-JVM aggregation (no Python) of the
+         per-file lineage and, on a non-empty table, each file's touched
+         COW buckets: ``bucket_expr`` over ``codec.raw_conv_key``, the
+         conv_id read JVM-side at its fixed header offset. The
+         set covers every frame, out-of-scope and invalid ones included:
+         an extra bucket is rewritten byte-identically. On a first batch
+         into an empty table it is skipped and the merge observes the
+         EXACT set on its write job;
+      2. full decode (pruned to the scoped columns, scope filter in-kernel
          on the scope byte) -> salted partial LWW -> one-pass MERGE.
 
     ``dead_letter_path`` routes structurally corrupt frames to a
@@ -591,7 +585,7 @@ def apply_raw_batch(
     from binlogsub_spark.codec import (
         DECODED_SCHEMA,
         decode_raw_events,
-        raw_touched_buckets_df,
+        raw_conv_key,
         scope_codes_for,
         split_deadletter,
     )
@@ -606,13 +600,6 @@ def apply_raw_batch(
         if c in decodable
     ]
 
-    def frontier(src: DataFrame, fresh: bool):
-        per_file = _per_file(src)
-        if fresh:
-            return per_file, None
-        touched = raw_touched_buckets_df(src, table.buckets, scope_codes=codes)
-        return per_file, sorted(r["bucket"] for r in touched.distinct().collect())
-
     def upserts(src: DataFrame):
         extra, skip_invalid = {}, True
         if dead_letter_path is not None:
@@ -625,7 +612,9 @@ def apply_raw_batch(
         partials = partial_lww_reduce(flat_to_upserts(decoded, cfg), salt=cfg.skew_salt)
         return partials, extra
 
-    return _commit(table, raw_events, batch_id, cfg, frontier, upserts, audit=audit)
+    return _commit(
+        table, raw_events, batch_id, cfg, raw_conv_key(), upserts, audit=audit
+    )
 
 
 def run_stream_raw(
@@ -920,8 +909,8 @@ def apply_mysql_batch(
         return partials, {**extra, **deferred}
 
     metrics = _commit(
-        table, raw_frames, batch_id, cfg, lambda src, fresh: (_per_file(src), None),
-        upserts, persist=persist_source, audit=audit,
+        table, raw_frames, batch_id, cfg, None, upserts,
+        persist=persist_source, audit=audit,
     )
     if deferred:
         # stash partitions <= batch_id-2 can never be read again (batch N

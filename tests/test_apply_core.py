@@ -121,7 +121,7 @@ def _apply(spark, root, path: str, table_dir, i: int, registry_cache: dict):
 JOBS = {
     "structured": (6, 7),
     "debezium": (6, 7),
-    "raw": (6, 9),
+    "raw": (6, 7),
     "mysql": (7, 11),
     "multi": (12, 14),
 }

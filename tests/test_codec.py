@@ -255,75 +255,64 @@ def test_decode_unvalidated_short_frame_raises(spark):
             decode_raw_events(raw, skip_invalid=False).collect()
 
 
-def test_crc32_of_fixed_matches_zlib_and_spark(spark):
-    """The in-kernel bucket hash must agree BIT-FOR-BIT with zlib.crc32
-    and with the JVM expression bucket_expr compiles to — the raw path's
-    touched-bucket superset is only sound if every key lands in the same
-    bucket on both sides."""
+def test_bucket_expr_is_zlib_crc32(spark):
+    """The persisted bucket layout: ``bucket_expr(k, n)`` is
+    ``zlib.crc32(k.encode()) % n``. Changing the hash would strand every
+    existing table's rows in the wrong bucket dirs."""
     import zlib
 
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from binlogsub_spark.codec import crc32_of_fixed
     from binlogsub_spark.lake.table import bucket_expr
 
     keys = [
         "", "a", "conv_00000001", "conv_99999999", "x" * 24,
-        "Ünïcode-kéy", "k\t key", "0123456789abcdefghijklmn",
+        "Ünïcode-kéy", "k\t key", "ab\0cd", "0123456789abcdefghijklmn",
     ] + [f"conv_{i:08d}" for i in range(50)]
-    raw = [k.encode("utf-8") for k in keys]
-    assert all(len(b) <= 24 for b in raw)
-    mat = np.zeros((len(raw), 24), dtype=np.uint8)
-    lengths = np.zeros(len(raw), dtype=np.int64)
-    for i, b in enumerate(raw):
-        mat[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
-        lengths[i] = len(b)
-    got = crc32_of_fixed(mat, lengths)
-    exp = np.array([zlib.crc32(b) & 0xFFFFFFFF for b in raw], dtype=np.uint32)
-    np.testing.assert_array_equal(got, exp)
-
-    # and against the Spark-side bucket expression, for several moduli
     df = spark.createDataFrame([(k,) for k in keys], "conv_id string")
     for buckets in (8, 32, 61):
-        jvm = {
+        got = {
             r["conv_id"]: r["b"]
             for r in df.select(
                 "conv_id", bucket_expr("conv_id", buckets).alias("b")
             ).collect()
         }
-        for k, crc in zip(keys, got):
-            assert jvm[k] == int(crc % buckets), (k, buckets)
+        assert got == {k: zlib.crc32(k.encode()) % buckets for k in keys}
 
 
-def test_raw_touched_buckets_superset(spark):
-    """raw_touched_buckets_df must cover every bucket the decoded frames'
-    keys hash to (superset invariant of the one-pass merge)."""
-    from pyspark.sql import functions as F
-
-    from binlogsub_spark.codec import (
-        decode_raw_events,
-        raw_touched_buckets_df,
-        scope_codes_for,
-    )
+def test_raw_conv_key_bucket_matches_decoded_key(spark):
+    """Per frame, the touched bucket the raw path derives from the payload
+    bytes (``bucket_expr(raw_conv_key())``) is the bucket of the decoded
+    conv_id the merge writes: generated frames plus v1 and v2 frames keyed
+    with embedded, leading and all-NUL bytes, non-ASCII, empty and
+    full-width keys, at several bucket counts. A frame of an unknown epoch
+    has no key."""
+    from binlogsub_spark.codec import encode_record, raw_conv_key
     from binlogsub_spark.lake.table import bucket_expr
-    from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
+    from binlogsub_spark.plans.envelope import RAW_SCHEMA
     from tests.test_raw_pipeline import _raw
 
-    ev = generate_binlog(spark, GeneratorParams(n_events=3000, dup_tail=0))
-    raw = _raw(spark, ev)
-    codes = scope_codes_for("^test$", "^transcripts$")
-    touched = {
-        r["bucket"]
-        for r in raw_touched_buckets_df(raw, 16, scope_codes=codes)
-        .distinct()
-        .collect()
-    }
-    needed = {
-        r["b"]
-        for r in decode_raw_events(raw, columns=["conv_id"], scope_codes=codes)
-        .select(bucket_expr("conv_id", 16).alias("b"))
-        .distinct()
-        .collect()
-    }
-    assert needed <= touched, (sorted(needed), sorted(touched))
+    keys = ["ab\0cd", "ab\0ce", "", "\0\0", "\0lead", "é中文🙂", "x" * 24]
+    edge = [
+        (10_000 + v, 4 + i, encode_record(
+            10_000 + v, 4 + i, 0, "U", v, 0, "user", None, i, k, "t"
+        ))
+        for v in (1, 2)
+        for i, k in enumerate(keys)
+    ]
+    generated = _raw(
+        spark, generate_binlog(spark, GeneratorParams(n_events=3000, dup_tail=0))
+    )
+    raw = generated.unionByName(spark.createDataFrame(edge, RAW_SCHEMA))
+    pos = ["file_seq", "log_pos"]
+    joined = raw.select(*pos, raw_conv_key().alias("raw_key")).join(
+        decode_raw_events(raw, columns=[*pos, "conv_id"]), pos
+    )
+    assert joined.count() == raw.count() == 3000 + len(edge)
+    for buckets in (8, 32, 97):
+        assert joined.where(
+            bucket_expr("raw_key", buckets) != bucket_expr("conv_id", buckets)
+        ).count() == 0
+    assert joined.where(~F.col("raw_key").eqNullSafe(F.col("conv_id"))).count() == 0
+
+    unknown = b"\0" * 21 + b"\x07" + b"\0" * 40
+    bad = spark.createDataFrame([(1, 4, unknown)], RAW_SCHEMA)
+    assert bad.select(raw_conv_key().alias("k")).first()["k"] is None

@@ -110,3 +110,22 @@ def test_touched_buckets_missing_a_bucket_fails_before_commit(
     apply_batch(ref, ev.where("delivery_seq < 2000"), batch_id=1)
     ref.merge(up, batch_id=2)
     assert sorted(table.read().collect()) == sorted(ref.read().collect())
+
+
+def test_empty_touched_buckets_is_checked_not_trusted(base):
+    """``touched_buckets=[]`` with rows in the batch raises before the
+    commit (the write's stray-row count sees every row), so ``CURRENT``
+    does not move; a batch with no rows still commits ``applied`` 0."""
+    table, ev = base
+    up = _upserts(ev.where("delivery_seq >= 2000"))
+    before = table.snapshot()
+
+    with pytest.raises(ValueError, match="missing from touched_buckets"):
+        table.merge(up, batch_id=2, touched_buckets=[])
+    assert table.snapshot() == before
+
+    res = table.merge(up.limit(0), batch_id=2, touched_buckets=[])
+    assert res["applied"] == 0 and not res["replayed"]
+    snap = table.snapshot()
+    assert snap["batch_id"] == 2
+    assert snap["bucket_locations"] == before["bucket_locations"]

@@ -235,10 +235,12 @@ def test_cli_raw_dead_letter(spark, tmp_path, monkeypatch, capsys):
 
 def test_embedded_nul_key_update_lands(spark, tmp_path):
     """A key with an embedded NUL must hash to the same bucket in the
-    touched-bucket kernel as in the merge: batch 2 on a non-fresh table
-    updates ``conv_1\\x00x`` and a plain key, and both updates are read
-    back (a kernel that cut the key at its first NUL marked the wrong
-    bucket, and the update was silently lost)."""
+    raw path's touched-bucket set (``bucket_expr`` over
+    ``codec.raw_conv_key``, read from the payload bytes) as in the merge
+    (over the decoded key): batch 2 on a non-fresh table updates
+    ``conv_1\\x00x`` and a plain key, and both updates are read back (a
+    key rule that cut the key at its first NUL marked the wrong bucket,
+    and the update was silently lost)."""
     from binlogsub_spark.codec import encode_record
     from binlogsub_spark.plans.envelope import RAW_SCHEMA
 

@@ -1405,10 +1405,8 @@ def q_cdc_mysql_pipeline_e2e(spark, sf):
         name_map.setdefault((tm.db, tm.table), []).append(tm.columns)
     tmp = tempfile.mkdtemp(prefix="binlogsub_mysql_e2e_")
     table = LakeTable(spark, os.path.join(tmp, "tbl"), buckets=16)
-    apply_mysql_batch(
-        table, frames, batch_id=1, cfg=EngineConfig(), name_map=name_map,
-        persist_source=True,  # frames are an in-flight per-row encode
-    )
+    # frames are an in-flight mapInArrow encode: persisted by default
+    apply_mysql_batch(table, frames, batch_id=1, cfg=EngineConfig(), name_map=name_map)
     return table.read().select(
         "conv_id", F.col("turn_idx").cast("long").alias("turn_idx"),
         "role", "text", "tool", "ts",

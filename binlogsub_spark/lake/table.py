@@ -44,6 +44,7 @@ import json
 import os
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql import types as T
 
@@ -97,18 +98,24 @@ def bucket_expr(col, buckets: int):
 
 def _colocate(df: DataFrame, buckets: int) -> DataFrame:
     """Direct bucket partitioning: ``_bucket`` is the partition id
-    (``repartitionById``, ``buckets`` partitions), so each bucket lands
-    whole in one task (one file per bucket dir) and no two buckets share
-    a task. A partition whose bucket has no rows runs an empty task."""
-    return df.repartitionById(buckets, "_bucket")
+    (``repartitionById``) over ``min(buckets, spark.sql.shuffle.partitions)``
+    partitions. The id is taken modulo the partition count, so bucket ``b``
+    lands whole in partition ``b mod n``: a bucket never spans two tasks
+    (one file per bucket dir), while a task writes several whole buckets.
+    So the write stage runs at most the session's shuffle width of tasks,
+    whatever the bucket count; with fewer buckets than that, one
+    partition per bucket."""
+    n = min(buckets, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    return df.repartitionById(n, "_bucket")
 
 
 def _colocated_lww(df: DataFrame, buckets: int) -> DataFrame:
     """The merge tail: :func:`_colocate`, then the complete LWW reduce
     inside each partition. The reduce groups by ``_bucket`` first, so the
-    partitioning already clusters it (no exchange) and its output order
-    already satisfies the ``partitionBy("_bucket")`` writer, which then
-    adds no sort."""
+    partitioning already clusters it (no exchange) and its sorted output
+    keeps each partition's buckets contiguous, which satisfies the
+    ``partitionBy("_bucket")`` writer: it adds no sort and writes one
+    file per bucket dir."""
     return lww_reduce(_colocate(df, buckets), key=["_bucket", *MERGE_KEY])
 
 
@@ -604,11 +611,12 @@ class LakeTable:
         One strategy, two full exchanges: the caller's salted partial
         reduce (map-side combine bounds a hot key's share) -> ONE direct
         bucket-colocation exchange of (upserts ∪ touched current rows),
-        ``repartitionById`` with ``_bucket`` as the partition id (one
-        partition per table bucket; an untouched bucket's task is empty)
-        -> a partition-local complete LWW reduce grouped by ``_bucket`` and
-        the key -> a shuffle- and sort-free write, one task and one file
-        per touched bucket dir (plan-asserted in tests/test_plans.py).
+        ``repartitionById`` with ``_bucket`` as the partition id over
+        ``min(buckets, spark.sql.shuffle.partitions)`` partitions (bucket
+        ``b`` in partition ``b mod n``, whole) -> a partition-local
+        complete LWW reduce grouped by ``_bucket`` and the key -> a
+        shuffle- and sort-free write, one file per touched bucket dir
+        (plan-asserted in tests/test_plans.py).
 
         ``touched_buckets``: a pre-computed SUPERSET of the hash buckets the
         batch touches (``bucket_expr`` over the batch's merge keys). With it
@@ -753,8 +761,8 @@ class LakeTable:
             )
             (
                 # already bucket-colocated by the merge shuffle: each
-                # task holds one whole bucket -> one file per bucket
-                # dir, no extra exchange
+                # task holds whole buckets, sorted by _bucket -> one
+                # file per bucket dir, no extra exchange or sort
                 to_write.write.partitionBy("_bucket")
                 .mode("overwrite")
                 .parquet(os.path.join(self.data_dir, commit_rel))
@@ -866,15 +874,25 @@ class LakeTable:
             "ingest_lag_seconds": lag,
         }
 
+    def _key_frame(self, keys) -> DataFrame:
+        """A one-column ``conv_id`` frame over a key list, built from a
+        ``pyarrow.Table`` so Spark plans it as a LocalRelation (no
+        parallelized RDD, no Python worker)."""
+        return self.spark.createDataFrame(
+            pa.table({MERGE_KEY[0]: pa.array(sorted(set(keys)), pa.string())})
+        )
+
     def _buckets_of(self, keys_df: DataFrame) -> list[int]:
         """The sorted distinct buckets a one-column key frame hashes to
-        (one small job; bounded by the bucket count, never the key count)."""
-        return sorted(
-            r["b"]
-            for r in keys_df.select(bucket_expr(MERGE_KEY[0], self.buckets).alias("b"))
-            .distinct()
-            .collect()
-        )
+        (``bucket_expr``, the one bucket hash). Over a local frame
+        (:meth:`_key_frame`) the optimizer folds the projection into the
+        relation, so the collect runs no Spark job and the driver dedupes;
+        any other frame pays one small distinct job (bounded by the bucket
+        count, never the key count)."""
+        b = keys_df.select(bucket_expr(MERGE_KEY[0], self.buckets).alias("b"))
+        if not keys_df.isLocal():
+            b = b.distinct()
+        return sorted({r["b"] for r in b.collect()})
 
     def delete_keys(self, keys, batch_id: int) -> dict:
         """Targeted erasure (right-to-be-forgotten): tombstone every live
@@ -899,9 +917,7 @@ class LakeTable:
         lifecycle the Spark engine adds."""
         key_col = MERGE_KEY[0]
         if isinstance(keys, (list, tuple, set)):
-            keys_df = self.spark.createDataFrame(
-                [(k,) for k in sorted(keys)], f"{key_col} string"
-            )
+            keys_df = self._key_frame(keys)
         else:
             keys_df = keys.select(key_col).distinct()
         touched = self._buckets_of(keys_df)
@@ -999,15 +1015,12 @@ class LakeTable:
         thanks to the clustered sort + parquet min/max pushdown). Same
         pruning shape as :meth:`delete_keys`, read-only."""
         keys = sorted(set(keys))
-        key_col = MERGE_KEY[0]
-        buckets = self._buckets_of(
-            self.spark.createDataFrame([(k,) for k in keys], f"{key_col} string")
-        )
+        buckets = self._buckets_of(self._key_frame(keys))
         snap = self._require()
         return (
             self._scan(snap, buckets)
             .where(F.col("_op") != "D")
-            .where(F.col(key_col).isin(keys))
+            .where(F.col(MERGE_KEY[0]).isin(keys))
             .select(*self._user_cols(snap))
         )
 
@@ -1119,7 +1132,11 @@ class LakeTable:
         group instead of scanning the bucket — and sorted keys compress
         markedly better. The sort is partition-local
         (``sortWithinPartitions`` after the bucket colocation), no extra
-        exchange.
+        exchange. It leads with ``_bucket``: a task holds several whole
+        buckets, and the ``partitionBy("_bucket")`` writer needs them
+        contiguous. A key-only sort would not satisfy it, so the planner
+        would replace it with its own sort on ``_bucket`` alone and drop
+        the key order.
 
         The rewrite is zstd-compressed: compaction is the one write whose
         output lives long and is read many times, so it trades a little
@@ -1128,7 +1145,7 @@ class LakeTable:
         is the SLO here)."""
         snap = self._require()
         df = _colocate(self._scan(snap), self.buckets).sortWithinPartitions(
-            *MERGE_KEY
+            "_bucket", *MERGE_KEY
         )
         sid = self._rewrite(snap, df, {"compaction": True}, compression="zstd")
         return {"snapshot_id": sid}

@@ -89,19 +89,22 @@ def prepare_upserts(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     return project_schema_epoch(flatten_envelope(scope_filter(events, cfg), cfg))
 
 
-def _plan_parses_json(df: DataFrame) -> bool:
+def _expensive_source(df: DataFrame) -> bool:
     """True when the analyzed plan holds a ``JsonToStructs`` node (a
-    ``from_json`` parse) — the marker of an expensive computed source whose
-    re-evaluation per job dominates (the JSON-lines landing zones). One JVM
-    call reads the plan's tree-pattern bits (no optimization run, no
-    per-node walk), so a column merely NAMED like ``from_json_x`` does not
-    count; any failure means "not detectably expensive" rather than an
-    error."""
+    ``from_json`` parse: the JSON-lines landing zones) or a Python UDF (a
+    ``mapInArrow`` / ``pandas_udf`` pass, such as the binlog-file split)
+    — the markers of a computed source whose re-evaluation in every job
+    of the apply dominates. One JVM call per pattern reads the plan's
+    tree-pattern bits (no optimization run, no per-node walk), so a
+    column merely NAMED like ``from_json_x`` does not count; any failure
+    means "not detectably expensive" rather than an error."""
     try:
         trees = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
-        json_to_struct = getattr(getattr(trees, "TreePattern$"), "MODULE$")
-        return df._jdf.queryExecution().analyzed().containsPattern(
-            json_to_struct.JSON_TO_STRUCT()
+        patterns = getattr(getattr(trees, "TreePattern$"), "MODULE$")
+        plan = df._jdf.queryExecution().analyzed()
+        return any(
+            plan.containsPattern(p)
+            for p in (patterns.JSON_TO_STRUCT(), patterns.PYTHON_UDF())
         )
     except Exception:
         return False
@@ -148,7 +151,7 @@ def _commit(
     cfg: EngineConfig,
     key,
     upserts,
-    persist: bool = False,
+    persist: bool | None = False,
     audit=None,
     stage_timings: dict | None = None,
 ) -> dict:
@@ -165,7 +168,8 @@ def _commit(
       path-specific metric keys merged into the result.
 
     The core then runs, once and in this order: persist ``source`` (when
-    asked), the frontier job, ``LakeTable.merge`` (which commits the
+    asked; ``persist=None`` asks :func:`_expensive_source`), the frontier
+    job, ``LakeTable.merge`` (which commits the
     per-file rows as lineage and derives the watermark from them, in the
     same manifest as the data), the audit gate (an audit that rejects or
     raises aborts the staged snapshot), unpersist, compaction every
@@ -173,6 +177,8 @@ def _commit(
     ``stage_timings`` receives ``lineage_sec`` (the frontier job + its
     driver collect barrier) and ``merge_sec`` (upsert build + MERGE +
     audit)."""
+    if persist is None:
+        persist = _expensive_source(source)
     if persist:
         source.persist(StorageLevel.MEMORY_AND_DISK)
     try:
@@ -258,23 +264,21 @@ def apply_batch(
     into an empty table the frontier job drops the bucket hash and the
     touched set rides the merge's Observation.
 
-    ``persist_source`` is tri-state. ``None`` (default) auto-detects: a
-    source whose plan parses JSON (a ``from_json`` / ``JsonToStructs``
-    node — the Debezium/Canal/Maxwell landing zones) is persisted so each
-    line is tokenized once instead of in both jobs (guide §4.4's
-    duplication trap — measured 3.96 s -> 3.24 s on a 2M-line Debezium
-    batch, local[32]); any other source is not. ``True`` always persists
-    (for callers whose input is some other EXPENSIVE computed plan, e.g.
-    an in-flight encode); ``False`` never does (e.g. memory-constrained
-    executors on a huge batch).
+    ``persist_source`` is tri-state. ``None`` (default) auto-detects
+    (:func:`_expensive_source`): a source whose plan parses JSON (a
+    ``from_json`` / ``JsonToStructs`` node — the Debezium/Canal/Maxwell
+    landing zones) or runs a Python UDF is persisted so each line is
+    computed once instead of in both jobs (guide §4.4's duplication trap
+    — measured 3.96 s -> 3.24 s on a 2M-line Debezium batch, local[32]);
+    any other source is not. ``True`` always persists (for callers whose
+    input is some other EXPENSIVE computed plan); ``False`` never does
+    (e.g. memory-constrained executors on a huge batch).
 
     ``stage_timings`` (a mutable dict) receives wall seconds of the two
     jobs — ``lineage_sec`` (the pruned per-file aggregation + its driver
     collect barrier) and ``merge_sec`` (the one-pass MERGE write) — so
     scaling runs can attribute parallel-efficiency loss to a stage."""
     cfg = cfg or EngineConfig()
-    if persist_source is None:
-        persist_source = _plan_parses_json(events)
 
     def upserts(src: DataFrame):
         return partial_lww_reduce(prepare_upserts(src, cfg), salt=cfg.skew_salt), {}
@@ -744,7 +748,7 @@ def apply_mysql_batch(
     checksum: bool = True,
     registry_cache: dict | None = None,
     dead_letter_path: str | None = None,
-    persist_source: bool = False,
+    persist_source: bool | None = None,
     gtid_lineage: bool = False,
     skip_gtids=None,
     track_gtid_set: bool = False,
@@ -797,6 +801,12 @@ def apply_mysql_batch(
     would otherwise leave the next batch's leading rows with a NULL
     gtid (un-taggable, un-skippable); the cached frontier seeds the
     as-of assignment instead.
+
+    ``persist_source``: tri-state, as in :func:`apply_batch`. The frames
+    feed the frontier job, the table-map registry and the merge, so a
+    computed source (``binlog_files_to_frames``' ``mapInArrow`` split, an
+    in-flight encode) is persisted by default and split once per apply; a
+    parquet frames table is read in place.
 
     ``audit``: the write-audit-publish gate, as in :func:`apply_batch`."""
     from binlogsub_spark.mysql_binlog import (

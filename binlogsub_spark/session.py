@@ -9,8 +9,11 @@ cluster over ~100 TB):
   ``mapInArrow`` kernel; batch size bounds executor-side Python memory the
   same way the reference bounds its single packet buffer
   (/root/reference/packet.cc:288-301 grows one buffer; we cap batch rows).
-* shuffle.partitions defaults to the local core count; a real deployment
-  sets it to ~2-3x total cores and lets AQE coalesce.
+* shuffle.partitions defaults to the local core count (at least 8); a
+  real deployment sets it to ~2-3x total cores and lets AQE coalesce. It
+  also sets the merge's write width: the bucket colocation runs
+  ``min(buckets, shuffle.partitions)`` tasks, each writing whole buckets
+  (``lake.table._colocate``).
 """
 
 from __future__ import annotations

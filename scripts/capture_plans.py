@@ -48,8 +48,9 @@ def _merge_jvm_df():
     w = up.withColumn("_bucket", bucket_expr(MERGE_KEY[0], 16)).withColumn(
         "_origin", F.lit(-1)
     )
-    # the merge's heavy tail as a fresh 16-bucket table runs it: one
-    # partition per bucket, then the partition-local final reduce
+    # the merge's heavy tail as a fresh 16-bucket table runs it:
+    # min(16 buckets, 8 shuffle partitions) partitions, each bucket whole
+    # in partition b mod 8, then the partition-local final reduce
     return _colocated_lww(w, 16)
 
 

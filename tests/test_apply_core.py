@@ -17,7 +17,7 @@ from binlogsub_spark.codec import encode_decoded_events
 from binlogsub_spark.config import EngineConfig
 from binlogsub_spark.lake.table import LakeTable
 from binlogsub_spark.pipeline import (
-    _plan_parses_json,
+    _expensive_source,
     apply_batch,
     apply_batch_multi,
     apply_mysql_batch,
@@ -187,10 +187,12 @@ def persist_calls(monkeypatch, spark):
     return calls
 
 
-def test_plan_parses_json_matches_node_not_name(spark):
+def test_expensive_source_matches_node_not_name(spark):
     text = spark.createDataFrame([('{"a": 1}',)], "value string")
-    assert _plan_parses_json(text.select(F.from_json("value", "a int").alias("j")))
-    assert not _plan_parses_json(text.withColumnRenamed("value", "from_json_x"))
+    assert _expensive_source(text.select(F.from_json("value", "a int").alias("j")))
+    assert not _expensive_source(text.withColumnRenamed("value", "from_json_x"))
+    assert _expensive_source(text.mapInArrow(lambda it: it, "value string"))
+    assert not _expensive_source(text.withColumnRenamed("value", "mapInArrow"))
 
 
 def test_explicit_false_never_persists(spark, tmp_path, inputs, persist_calls):
@@ -214,3 +216,30 @@ def test_json_source_auto_persists(spark, tmp_path, inputs, persist_calls):
     src = _source(spark, inputs, "debezium", 1)
     apply_batch(LakeTable(spark, str(tmp_path / "t"), buckets=8), src, 1)
     assert len(persist_calls) == 1 and persist_calls[0] is src
+
+
+def test_mysql_file_split_auto_persists_once(
+    spark, tmp_path, inputs, persist_calls
+):
+    """``binlog_files_to_frames`` is a ``mapInArrow`` split: the MySQL
+    apply persists it once, so the frontier job, the registry and the
+    merge split each file once. A parquet frames table is not persisted."""
+    from binlogsub_spark.mysql_binlog import binlog_files_to_frames
+    from binlogsub_spark.sources.generator import write_mysql_binlog_files
+
+    write_mysql_binlog_files(spark, str(tmp_path / "binlogs"), P)
+    src = binlog_files_to_frames(spark, str(tmp_path / "binlogs"))
+    m = apply_mysql_batch(
+        LakeTable(spark, str(tmp_path / "files"), buckets=8), src, 1,
+        name_map=_name_map(),
+    )
+    assert m["applied"] > 0
+    assert len(persist_calls) == 1 and persist_calls[0] is src
+
+    persist_calls.clear()
+    apply_mysql_batch(
+        LakeTable(spark, str(tmp_path / "parquet"), buckets=8),
+        _source(spark, inputs, "mysql", 1), 1, name_map=_name_map(),
+        registry_cache={},
+    )
+    assert persist_calls == []

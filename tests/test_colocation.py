@@ -1,12 +1,15 @@
-"""Direct bucket colocation: every bucket lands whole in one task (one
-partition per table bucket, in a merge as in a compaction), and a
+"""Direct bucket colocation: every bucket lands whole in one task, over
+``min(buckets, spark.sql.shuffle.partitions)`` partitions (bucket ``b`` in
+partition ``b mod n``, in a merge as in a compaction), and a
 ``touched_buckets`` set that misses a bucket of the batch fails before
-the commit instead of hiding the row."""
+the commit instead of hiding the row. A key list hashes to its buckets
+on the driver, with no Spark job."""
 
 from __future__ import annotations
 
 import glob
 import os
+import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,15 +24,20 @@ from binlogsub_spark.sources.generator import GeneratorParams, generate_binlog
 BUCKETS = 32
 
 
+def _width(spark, buckets: int) -> int:
+    """Partitions (and write tasks) of a colocation over ``buckets``."""
+    return min(buckets, int(spark.conf.get("spark.sql.shuffle.partitions")))
+
+
 def _upserts(ev):
     cfg = EngineConfig()
     return partial_lww_reduce(prepare_upserts(ev, cfg), salt=cfg.skew_salt)
 
 
-def _buckets_of(up) -> list[int]:
+def _buckets_of(up, buckets: int = BUCKETS) -> list[int]:
     return sorted(
         r["b"]
-        for r in up.select(bucket_expr(MERGE_KEY[0], BUCKETS).alias("b"))
+        for r in up.select(bucket_expr(MERGE_KEY[0], buckets).alias("b"))
         .distinct()
         .collect()
     )
@@ -44,44 +52,111 @@ def _files_per_bucket(table: LakeTable, commit_rel: str) -> dict[int, int]:
     }
 
 
-@pytest.fixture
-def base(spark, tmp_path):
-    """A 32-bucket table holding the first 2000 events, and the stream."""
+def _make_base(spark, path, buckets: int):
+    """A ``buckets``-bucket table holding the first 2000 events, and the
+    stream."""
     ev = generate_binlog(
         spark, GeneratorParams(n_events=3000, n_convs=80, dup_tail=0)
     )
-    table = LakeTable(spark, str(tmp_path / "t"), buckets=BUCKETS)
+    table = LakeTable(spark, str(path), buckets=buckets)
     apply_batch(table, ev.where("delivery_seq < 2000"), batch_id=1)
     return table, ev
 
 
-def test_merge_writes_one_file_per_touched_bucket(base, last_stage_tasks):
-    table, ev = base
+@pytest.fixture
+def base(spark, tmp_path):
+    """A 32-bucket table (more buckets than shuffle partitions)."""
+    return _make_base(spark, tmp_path / "t", BUCKETS)
+
+
+def _merge_three_convs(spark, table, ev, last_stage_tasks) -> None:
+    """Merge three conversations of the stream's tail into ``table``: the
+    write stage runs ``min(buckets, shuffle partitions)`` tasks (a task
+    with no touched bucket runs empty and writes nothing), and each
+    touched bucket dir gets exactly one file."""
     up = _upserts(ev.where("delivery_seq >= 2000"))
     convs = sorted(r[0] for r in up.select("conv_id").distinct().collect())[:3]
     up = up.where(F.col("conv_id").isin(convs))
-    touched = _buckets_of(up)
-    assert 0 < len(touched) < BUCKETS
+    touched = _buckets_of(up, table.buckets)
+    assert 0 < len(touched) < table.buckets
 
     tasks = last_stage_tasks(
         lambda: table.merge(up, batch_id=2, touched_buckets=touched)
     )
-    # one task per table bucket: the untouched ones run empty and write
-    # nothing
-    assert tasks == BUCKETS
+    assert tasks == _width(spark, table.buckets)
     locations = table.snapshot()["bucket_locations"]
     commit = locations[str(touched[0])]
     assert sorted(int(b) for b, c in locations.items() if c == commit) == touched
     assert _files_per_bucket(table, commit) == {b: 1 for b in touched}
 
 
-def test_compact_runs_one_task_and_file_per_bucket(base, last_stage_tasks):
-    table, _ = base
+def _compact(spark, table, last_stage_tasks) -> None:
     live = {int(b) for b, c in table.snapshot()["bucket_locations"].items() if c}
+    assert len(live) == table.buckets
     tasks = last_stage_tasks(table.compact)
-    assert tasks == BUCKETS
+    assert tasks == _width(spark, table.buckets)
     commit = table.snapshot()["bucket_locations"][str(min(live))]
     assert _files_per_bucket(table, commit) == {b: 1 for b in live}
+
+
+def test_merge_writes_one_file_per_touched_bucket(spark, base, last_stage_tasks):
+    """32 buckets share the session's 8 shuffle partitions: bucket ``b``
+    is written whole by task ``b mod 8``."""
+    table, ev = base
+    assert _width(spark, BUCKETS) == 8
+    _merge_three_convs(spark, table, ev, last_stage_tasks)
+
+
+def test_compact_runs_one_task_and_file_per_bucket(spark, base, last_stage_tasks):
+    """Each bucket is compacted by one task into one file; 32 buckets
+    share 8 tasks."""
+    _compact(spark, base[0], last_stage_tasks)
+
+
+def test_fewer_buckets_than_partitions_get_one_each(spark, tmp_path, last_stage_tasks):
+    """4 buckets under 8 shuffle partitions: 4 partitions, one per bucket,
+    in a merge as in a compaction."""
+    table, ev = _make_base(spark, tmp_path / "t4", 4)
+    assert _width(spark, 4) == 4
+    _merge_three_convs(spark, table, ev, last_stage_tasks)
+    _compact(spark, table, last_stage_tasks)
+
+
+def test_compact_write_sorts_by_bucket_then_key(spark, base):
+    """The compaction's one sort is ``(_bucket, conv_id, turn_idx)``: it
+    satisfies the partitioned writer (which adds no sort of its own) and
+    keeps each bucket file in key order."""
+    table, _ = base
+    table.compact()
+    # the status store is fed by the listener bus asynchronously
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    runs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    write_plan = next(
+        p
+        for p in (
+            runs.apply(i).physicalPlanDescription()
+            for i in range(runs.size() - 1, -1, -1)
+        )
+        if "InsertIntoHadoopFsRelationCommand" in p
+    )
+    final = write_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert final.count(" Sort (") == 1, write_plan
+    orders = [l for l in write_plan.splitlines() if l.startswith("Arguments: [_bucket")]
+    assert orders and all("conv_id" in o and "turn_idx" in o for o in orders), write_plan
+
+
+def test_key_list_buckets_run_no_spark_job(spark, base, count_jobs):
+    """``read_keys`` and ``delete_keys(list)`` hash their keys through
+    ``bucket_expr`` over a local relation: no Spark job, and the buckets
+    equal the persisted layout's CRC-32 rule, NUL, empty and non-ASCII
+    keys included."""
+    table, _ = base
+    keys = ["conv_1", "", "\0", "ab\0cd", "é中文🙂", "conv_1"]
+    got = {}
+    assert count_jobs(
+        lambda: got.update(b=table._buckets_of(table._key_frame(keys)))
+    ) == 0
+    assert got["b"] == sorted({zlib.crc32(k.encode()) % BUCKETS for k in keys})
 
 
 def test_touched_buckets_missing_a_bucket_fails_before_commit(

@@ -187,9 +187,10 @@ def test_band_store_bucketed_join_is_one_sided(spark, tmp_path):
 def test_merge_colocates_one_partition_per_bucket(spark, tmp_path, monkeypatch):
     """The merge as ``apply_batch`` runs it, on a fresh table and on a
     rewrite: exactly two exchanges (the salted partial reduce, then one
-    ``shufflepartitionidpassthrough`` with one partition per table
-    bucket), and neither an exchange nor a sort between the final
-    aggregate and the partitioned write."""
+    ``shufflepartitionidpassthrough`` over ``min(buckets, shuffle
+    partitions)`` partitions, each bucket whole in partition ``b mod n``),
+    and neither an exchange nor a sort between the final aggregate and
+    the partitioned write."""
     from binlogsub_spark.lake import table as table_mod
     from binlogsub_spark.lake.table import LakeTable
     from binlogsub_spark.pipeline import apply_batch
@@ -210,7 +211,9 @@ def test_merge_colocates_one_partition_per_bucket(spark, tmp_path, monkeypatch):
     table = LakeTable(spark, str(tmp_path / "t"), buckets=16)
     apply_batch(table, ev.where("delivery_seq < 2000"), batch_id=1)
     apply_batch(table, ev.where("delivery_seq >= 2000"), batch_id=2)
-    # the write plan of the last merge, as Spark ran it
+    # the write plan of the last merge, as Spark ran it (the status store
+    # is fed by the listener bus asynchronously)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     runs = spark._jsparkSession.sharedState().statusStore().executionsList()
     write_plan = next(
         p
@@ -227,7 +230,8 @@ def test_merge_colocates_one_partition_per_bucket(spark, tmp_path, monkeypatch):
         exchanges = [l for l in plan.splitlines() if "Exchange" in l]
         assert len(exchanges) == 2, plan
         assert "shufflepartitionidpassthrough(" in exchanges[0], plan
-        assert "), 16), REPARTITION_BY_NUM" in exchanges[0], plan
+        # min(16 buckets, the session's 8 shuffle partitions)
+        assert "), 8), REPARTITION_BY_NUM" in exchanges[0], plan
         assert "partial_max" in plan.split("Exchange", 1)[0], plan
 
     final = write_plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]

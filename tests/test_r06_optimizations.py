@@ -21,9 +21,10 @@ def _plan(df) -> str:
 
 def test_merge_final_reduce_adds_no_exchange(spark):
     """The merge tail must be exactly TWO exchanges: the salted partial
-    reduce and the direct bucket colocation, one partition per table
-    bucket; the final LWW reduce grouped by ``_bucket`` must ride that
-    partitioning (a third Exchange here is the round-5 shape regressing)."""
+    reduce and the direct bucket colocation over ``min(buckets, shuffle
+    partitions)`` partitions; the final LWW reduce grouped by ``_bucket``
+    must ride that partitioning (a third Exchange here is the round-5
+    shape regressing)."""
     ev = generate_binlog(spark, GeneratorParams(n_events=5000, dup_tail=100))
     up = partial_lww_reduce(prepare_upserts(ev, EngineConfig()))
     w = up.withColumn("_bucket", bucket_expr(MERGE_KEY[0], 16)).withColumn(
@@ -32,9 +33,10 @@ def test_merge_final_reduce_adds_no_exchange(spark):
     plan = _plan(_colocated_lww(w, 16))
     exchanges = [l for l in plan.splitlines() if "Exchange" in l]
     assert len(exchanges) == 2, plan
-    # the top exchange is the colocation, with one partition per bucket
+    # the top exchange is the colocation, over min(16 buckets, the
+    # session's 8 shuffle partitions)
     assert "shufflepartitionidpassthrough(" in exchanges[0], plan
-    assert "), 16), REPARTITION_BY_NUM" in exchanges[0], plan
+    assert "), 8), REPARTITION_BY_NUM" in exchanges[0], plan
     # the final aggregate sits ABOVE the bucket exchange with no exchange
     # of its own between them
     above_bucket_exchange = plan.split("Exchange", 1)[0]

@@ -93,41 +93,6 @@ def cosine_topk(
     )
 
 
-def _bucket_ids(df: DataFrame, vec_col: str, planes: int, seed: int, id_col: str) -> DataFrame:
-    """Sign-random-projection bucket per vector, via a deterministic plane
-    matrix derived from (seed, plane, dim) hashing — computed in numpy per
-    Arrow batch (no driver-side randomness, resumable)."""
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("bucket", T.LongType())]
-    )
-
-    def _hash_planes(dim: int) -> np.ndarray:
-        # deterministic pseudo-random hyperplanes: hash -> uniform(-1, 1)
-        idx = np.arange(planes * dim, dtype=np.uint64)
-        x = idx * np.uint64(6364136223846793005) + np.uint64(seed)
-        x ^= x >> np.uint64(33)
-        x *= np.uint64(0xFF51AFD7ED558CCD)
-        x ^= x >> np.uint64(33)
-        u = (x.astype(np.float64) / np.float64(2**64)) * 2.0 - 1.0
-        return u.reshape(planes, dim)
-
-    def _bucketize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes_mat = None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if planes_mat is None:
-                planes_mat = _hash_planes(mat.shape[1])
-            bits = (mat @ planes_mat.T) >= 0
-            bucket = np.zeros(len(pdf), dtype=np.int64)
-            for i in range(planes):
-                bucket |= bits[:, i].astype(np.int64) << i
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(np.int64), "bucket": bucket})
-
-    return df.select(id_col, vec_col).mapInPandas(_bucketize, schema=schema)
-
-
 def _bucket_ids_multi(
     df: DataFrame, vec_col: str, planes: int, tables: int, seed: int, id_col: str
 ) -> DataFrame:
@@ -196,24 +161,14 @@ def lsh_topk(
     recalls ~25% of true neighbors while 8 tables x 3 planes recalls
     ~90%+. Cost stays one scan + an equi-join; candidates grow ~linearly
     with tables."""
-    if tables <= 1:
-        cb = _bucket_ids(corpus, vec_col, planes, seed, id_col).withColumnRenamed(
-            id_col, "c_id"
-        )
-        qb = _bucket_ids(queries, vec_col, planes, seed, id_col).withColumnRenamed(
-            id_col, "q_id"
-        )
-        join_keys = ["bucket"]
-    else:
-        cb = _bucket_ids_multi(
-            corpus, vec_col, planes, tables, seed, id_col
-        ).withColumnRenamed(id_col, "c_id")
-        qb = _bucket_ids_multi(
-            queries, vec_col, planes, tables, seed, id_col
-        ).withColumnRenamed(id_col, "q_id")
-        join_keys = ["tbl", "bucket"]
+    cb = _bucket_ids_multi(
+        corpus, vec_col, planes, tables, seed, id_col
+    ).withColumnRenamed(id_col, "c_id")
+    qb = _bucket_ids_multi(
+        queries, vec_col, planes, tables, seed, id_col
+    ).withColumnRenamed(id_col, "q_id")
     cand = (
-        qb.join(cb, join_keys)
+        qb.join(cb, ["tbl", "bucket"])
         .where(F.col("q_id") != F.col("c_id"))
         .select("q_id", "c_id")
         .distinct()

@@ -13,10 +13,15 @@ required Iceberg-style semantics itself, on plain parquet + JSON manifests:
   the bucket count is the knob bounding per-commit rewrite volume; bucket
   dirs are Spark partition dirs, so reads get partition pruning for free.
 * **Schema-union evolution**: each commit records its schema; the table
-  schema is the union. Readers null-backfill old files (Iceberg
-  add-column semantics). This is how the in-band ``tool`` column appearing
-  mid-stream lands without rewriting history
+  schema is the union. Readers project every commit dir through the
+  manifest schema (typed reads, nothing inferred): an older file's
+  narrower column widens on read and a column it lacks reads as NULL
+  (Iceberg add-column semantics). This is how the in-band ``tool`` column
+  appearing mid-stream lands without rewriting history
   (reference epoch flush: /root/reference/packet.cc:141-148).
+* **The manifest is the layout**: a bucket points at a commit only if that
+  commit wrote the bucket's ``_bucket=`` dir (:func:`_written_buckets`),
+  and a scan checks that every commit dir it needs still exists.
 * **Idempotent commits**: a manifest carries the high-water ``batch_id``;
   replaying an already-committed micro-batch is a no-op that commits
   nothing. Together with LWW dedup this upgrades the reference's
@@ -94,6 +99,17 @@ def bucket_expr(col, buckets: int):
     return F.pmod(
         F.crc32(F.encode(F.coalesce(c, F.lit("")), "UTF-8")), F.lit(buckets)
     ).cast("int")
+
+
+def _written_buckets(commit_dir: str) -> set[int]:
+    """The buckets a finished write made: its ``_bucket=`` partition dirs.
+    The one bucket-map rule of every write: a bucket points at a commit
+    exactly when that commit holds its dir."""
+    return {
+        int(d.split("=", 1)[1])
+        for d in os.listdir(commit_dir)
+        if d.startswith("_bucket=")
+    }
 
 
 def _colocate(df: DataFrame, buckets: int) -> DataFrame:
@@ -333,24 +349,6 @@ class LakeTable:
         return T.StructType(fields)
 
     # --------------------------------------------------------------- reads
-    def _read_commit(
-        self, commit_rel: str, buckets: list[int], target: T.StructType
-    ) -> DataFrame:
-        commit_dir = os.path.join(self.data_dir, commit_rel)
-        df = (
-            self.spark.read.option("basePath", commit_dir)
-            .parquet(commit_dir)
-            .where(F.col("_bucket").isin(buckets))  # partition-pruned scan
-        )
-        cols = []
-        have = set(df.columns)
-        for f in target.fields:
-            cols.append(
-                F.col(f.name) if f.name in have
-                else F.lit(None).cast(f.dataType).alias(f.name)  # null-backfill
-            )
-        return df.select(*cols, F.col("_bucket"))
-
     def read_internal(
         self, buckets: list[int] | None = None, snapshot_id: int | None = None
     ) -> DataFrame:
@@ -360,7 +358,14 @@ class LakeTable:
         return self._scan(self._require(snapshot_id), buckets)
 
     def _scan(self, snap: dict, buckets: list[int] | None = None) -> DataFrame:
-        schema = self._schema(snap)
+        """The snapshot's rows (``buckets``: a subset) with ``_bucket``.
+        Every commit dir is read with the manifest schema, so Spark infers
+        nothing (no job at build time): an older file's narrower column
+        widens on read and a column it lacks reads as NULL. A commit dir
+        that ``vacuum()`` removed raises here, before any job."""
+        schema = T.StructType(
+            list(self._schema(snap).fields) + [T.StructField("_bucket", T.IntegerType())]
+        )
         locs: dict[str, str | None] = snap["bucket_locations"]
         # "all buckets" means the SNAPSHOT's bucket space, not the current
         # handle's — time travel across a rebucket() reads the old layout.
@@ -370,12 +375,24 @@ class LakeTable:
             b = int(b_str)
             if commit is not None and b in want:
                 by_commit.setdefault(commit, []).append(b)
-        if not by_commit:
-            return self.spark.createDataFrame(
-                [], T.StructType(list(schema.fields) + [T.StructField("_bucket", T.IntegerType())])
+        # a manifest can outlive its data files (vacuum keeps the last N
+        # manifests but prunes commit dirs unreachable from them)
+        dirs = {c: os.path.join(self.data_dir, c) for c in by_commit}
+        missing = sorted(c for c, d in dirs.items() if not os.path.isdir(d))
+        if missing:
+            raise ValueError(
+                f"snapshot {snap['snapshot_id']} of table {self.path} needs "
+                f"commit dirs expired by vacuum(): {missing}; read a newer "
+                "snapshot or raise vacuum's keep_snapshots"
             )
+        if not by_commit:
+            return self.spark.createDataFrame([], schema)
         parts = [
-            self._read_commit(commit, bs, schema) for commit, bs in by_commit.items()
+            self.spark.read.schema(schema)
+            .option("basePath", dirs[c])
+            .parquet(dirs[c])
+            .where(F.col("_bucket").isin(bs))  # partition-pruned scan
+            for c, bs in by_commit.items()
         ]
         df = parts[0]
         for p in parts[1:]:
@@ -450,26 +467,6 @@ class LakeTable:
             )
             to_changed = sorted(int(b) for b, l in locs_to.items() if l is not None)
             changed = sorted(set(from_changed) | set(to_changed))
-        # a manifest can outlive its data files (vacuum keeps the last N
-        # manifests but prunes commit dirs unreachable from them) — fail
-        # with a clear driver-side error instead of a mid-job read failure
-        from_set, to_set = set(from_changed), set(to_changed)
-        need_commits = {
-            loc
-            for locs, want in ((locs_to, to_set), (locs_from, from_set))
-            for b, loc in locs.items()
-            if loc is not None and int(b) in want
-        }
-        missing = sorted(
-            c for c in need_commits
-            if not os.path.isdir(os.path.join(self.data_dir, c))
-        )
-        if missing:
-            raise ValueError(
-                f"changes({from_snapshot_id}, {to_snapshot_id}) needs commit "
-                f"dirs expired by vacuum(): {missing}; re-run with a newer "
-                "from_snapshot or raise vacuum's keep_snapshots"
-            )
         schema = self._schema(to_snap)
         user_cols = self._user_cols(to_snap)
         payload = [c for c in user_cols if c not in MERGE_KEY]
@@ -625,23 +622,23 @@ class LakeTable:
         key column cheaply (column-pruned parquet scan) piggyback the bucket
         set on their lineage aggregation. A superset only rewrites extra
         buckets byte-identically — never wrong, at worst slightly wasteful.
-        A set that misses a bucket of the batch (an empty set included)
-        raises ``ValueError`` after the write and before the commit
-        (counted by the write's Observation): the row would land in a
-        commit dir the manifest does not point that bucket at.
-        Without it the merge persists ``upserts`` and runs a small distinct
-        job (the right trade when ``upserts`` is an expensive computed plan
+        Without it, a fresh table needs no set before the write (there is
+        no current state to union in), so that merge is one job too; a
+        non-empty table persists ``upserts`` and runs a small distinct job
+        (the right trade when ``upserts`` is an expensive computed plan
         whose recomputation would dominate).
 
-        Applied/skipped metrics ride the write job via Observation — the
-        merge never runs a separate metrics join or count over the data.
+        The new bucket map is the ``_bucket=`` dirs the write made
+        (:func:`_written_buckets`): only those point at the new commit,
+        every other bucket keeps its prior location, so a touched bucket
+        with no rows never points at a commit without its dir. A written
+        bucket missing from ``touched_buckets`` (an empty set included)
+        raises ``ValueError`` before the commit: the manifest would leave
+        that bucket at its old commit and hide the batch's rows.
 
-        Observe mode is chosen automatically: on a table with NO committed
-        snapshot and no ``touched_buckets``, the touched-bucket set is not
-        needed BEFORE the job (there is no current state to union in), so
-        the EXACT set rides the write job's Observation (``collect_set`` of
-        ``_bucket`` — bounded by the bucket count) and the whole merge is
-        ONE job over ``upserts`` with zero pre-jobs.
+        Applied count and event-time frontier ride the write job via
+        Observation — the merge never runs a separate metrics join or
+        count over the data.
 
         ``publish=False`` runs the full merge but STAGES the snapshot
         (write-audit-publish): data and manifest land on disk, CURRENT
@@ -655,17 +652,21 @@ class LakeTable:
             # a replayed batch_id is a committed no-op: no job over the batch
             return {"applied": 0, "replayed": True, "snapshot_id": snap["snapshot_id"]}
 
-        observe = snap is None and touched_buckets is None
         winners = upserts.withColumn(
             "_bucket", bucket_expr(MERGE_KEY[0], self.buckets)
         )
-        one_pass = touched_buckets is not None or observe
-        if not one_pass:
+        discover = snap is not None and touched_buckets is None
+        if discover:
             winners.persist()
         try:
-            if observe:
-                touched = None  # resolved from the write job's Observation
-            elif one_pass:
+            if discover:
+                # job 1 (small): which buckets does this batch touch? This is
+                # the copy-on-write pruning decision — the rest is one job.
+                touched = sorted(
+                    r["_bucket"]
+                    for r in winners.select("_bucket").distinct().collect()
+                )
+            elif touched_buckets is not None:
                 touched = sorted({int(b) for b in touched_buckets})
                 if touched and (touched[0] < 0 or touched[-1] >= self.buckets):
                     # an out-of-range bucket proves the caller hashed with a
@@ -677,12 +678,7 @@ class LakeTable:
                         "hashed with a different bucket count"
                     )
             else:
-                # job 1 (small): which buckets does this batch touch? This is
-                # the copy-on-write pruning decision — the rest is one job.
-                touched = sorted(
-                    r["_bucket"]
-                    for r in winners.select("_bucket").distinct().collect()
-                )
+                touched = None  # fresh table: the buckets the write writes
 
             old_schema = self._schema(snap) if snap else None
             new_schema = T.StructType(
@@ -728,36 +724,19 @@ class LakeTable:
                 str(b): None for b in range(self.buckets)
             }
             commit_rel = f"commit-{snapshot_id:08d}"
+            commit_dir = os.path.join(self.data_dir, commit_rel)
             obs = Observation(f"merge-{batch_id}")
-            obs_metrics = [
-                F.count(F.when(F.col("_origin") == -1, 1)).alias("applied"),
-                F.count("*").alias("live_rows"),
-                # event-time frontier of THIS batch's winners — rides
-                # the write job, no separate max() job
-                F.max(
-                    F.when(F.col("_origin") == -1, F.col("_ts"))
-                ).alias("max_event_ts"),
-            ]
-            if touched is None:
-                # observe mode: the EXACT touched set rides the write
-                # (bounded by the bucket count, not the row count)
-                obs_metrics.append(
-                    F.collect_set(F.col("_bucket")).alias("touched")
+            is_new = F.col("_origin") == -1
+            to_write = (
+                _colocated_lww(unioned, self.buckets)
+                .observe(
+                    obs,
+                    F.count(F.when(is_new, 1)).alias("applied"),
+                    # event-time frontier of THIS batch's winners — rides
+                    # the write job, no separate max() job
+                    F.max(F.when(is_new, F.col("_ts"))).alias("max_event_ts"),
                 )
-            else:
-                # rows of a bucket the caller left out of
-                # touched_buckets: written, but the manifest would
-                # keep pointing that bucket at its old commit
-                stray = ~F.col("_bucket").isin(touched)
-                obs_metrics += [
-                    F.count(F.when(stray, 1)).alias("stray_rows"),
-                    F.collect_set(F.when(stray, F.col("_bucket"))).alias(
-                        "stray_buckets"
-                    ),
-                ]
-            merged = _colocated_lww(unioned, self.buckets)
-            to_write = merged.observe(obs, *obs_metrics).select(
-                *schema.fieldNames(), "_bucket"
+                .select(*schema.fieldNames(), "_bucket")
             )
             (
                 # already bucket-colocated by the merge shuffle: each
@@ -765,31 +744,21 @@ class LakeTable:
                 # file per bucket dir, no extra exchange or sort
                 to_write.write.partitionBy("_bucket")
                 .mode("overwrite")
-                .parquet(os.path.join(self.data_dir, commit_rel))
+                .parquet(commit_dir)
             )
             applied = obs.get["applied"]
             batch_max_ts = obs.get["max_event_ts"]
-            if touched is None:
-                touched = sorted(int(b) for b in obs.get["touched"])
-            elif obs.get["stray_rows"]:
-                stray_buckets = sorted(int(b) for b in obs.get["stray_buckets"])
+            written = _written_buckets(commit_dir)
+            stray = [] if touched is None else sorted(written - set(touched))
+            if stray:
                 raise ValueError(
-                    f"batch {batch_id}: {obs.get['stray_rows']} row(s) in "
-                    f"bucket(s) {stray_buckets[:5]} missing from "
-                    "touched_buckets; the caller's set is not a superset "
+                    f"batch {batch_id}: rows in bucket(s) {stray[:5]} missing "
+                    "from touched_buckets; the caller's set is not a superset "
                     f"of the batch's buckets (bucket_expr over "
                     f"{self.buckets} buckets). Nothing was committed."
                 )
-            if obs.get["live_rows"] > 0:
-                for b in touched:
-                    bucket_locations[str(b)] = commit_rel
-            # else: the batch contributed NOTHING to these buckets (a
-            # one-pass touched SUPERSET where every event was scope-
-            # filtered away, against buckets with no prior data) — the
-            # commit dir holds zero parquet files, so pointing
-            # bucket_locations at it would make every later read fail
-            # schema inference. Keep prior locations; the manifest
-            # still advances batch_id/watermark.
+            for b in written:
+                bucket_locations[str(b)] = commit_rel
 
             manifest = {
                 "snapshot_id": snapshot_id,
@@ -818,7 +787,7 @@ class LakeTable:
                 **({} if publish else {"staged": True}),
             }
         finally:
-            if not one_pass:
+            if discover:
                 winners.unpersist()
 
     @staticmethod
@@ -1070,8 +1039,8 @@ class LakeTable:
         """Commit ``df`` (all rows, with ``_bucket``) as the next snapshot,
         replacing every bucket: the shared tail of compact, backfill and
         rebucket. The bucket map comes from the ``_bucket=`` dirs actually
-        written, so a bucket with no rows stays ``None``. ``buckets`` and
-        ``schema`` default to the snapshot's."""
+        written (:func:`_written_buckets`), so a bucket with no rows stays
+        ``None``. ``buckets`` and ``schema`` default to the snapshot's."""
         snapshot_id = snap["snapshot_id"] + 1
         commit_rel = f"commit-{snapshot_id:08d}"
         commit_dir = os.path.join(self.data_dir, commit_rel)
@@ -1081,11 +1050,7 @@ class LakeTable:
             if compression:
                 w = w.option("compression", compression)
             w.parquet(commit_dir)
-            written = {
-                d.split("=", 1)[1]
-                for d in os.listdir(commit_dir)
-                if d.startswith("_bucket=")
-            }
+            written = _written_buckets(commit_dir)
         n = buckets or self.buckets
         manifest = dict(
             snap,
@@ -1093,7 +1058,7 @@ class LakeTable:
             parent=snap["snapshot_id"],
             buckets=n,
             bucket_locations={
-                str(b): (commit_rel if str(b) in written else None)
+                str(b): (commit_rel if b in written else None)
                 for b in range(n)
             },
             schema_json=json.dumps((schema or self._schema(snap)).jsonValue()),

@@ -162,8 +162,8 @@ def _commit(
       when the key exists only after decode. On a non-empty table the
       frontier job hashes it (:func:`_per_file`) and the union of the
       per-file bucket sets goes to the merge as ``touched_buckets``;
-      without it (or on an empty table, where the exact set rides the
-      merge write's Observation) the merge discovers the buckets itself;
+      without it (or on an empty table, where the merge's bucket map is
+      the bucket dirs its write made) the merge discovers the buckets itself;
     * ``upserts(source) -> (partials, extra)``: pre-reduced upserts plus
       path-specific metric keys merged into the result.
 
@@ -184,7 +184,7 @@ def _commit(
     try:
         t0 = time.time()
         if table.snapshot() is None:
-            key = None  # the merge observes the exact set on its write
+            key = None  # the merge maps the buckets its write made
         per_file = _per_file(source, key, table.buckets)
         touched = None
         if key is not None:
@@ -262,7 +262,7 @@ def apply_batch(
     before/after image's conv_id, so the merge runs as ONE job over the
     source (no winners persist, no distinct-buckets job). On a first batch
     into an empty table the frontier job drops the bucket hash and the
-    touched set rides the merge's Observation.
+    merge maps the bucket dirs its write made.
 
     ``persist_source`` is tri-state. ``None`` (default) auto-detects
     (:func:`_expensive_source`): a source whose plan parses JSON (a
@@ -341,7 +341,6 @@ def apply_batch_multi(
     events: DataFrame,
     batch_id: int,
     cfgs: EngineConfig | dict[str, EngineConfig] | None = None,
-    persist_source: bool = True,
 ) -> dict:
     """Route one envelope micro-batch into N lake tables — the
     one-subscriber-many-tables production shape (the reference dispatches
@@ -358,8 +357,7 @@ def apply_batch_multi(
     ``table_name == name`` filter runs regardless, so even a broad shared
     scope cannot cross-route rows.
     """
-    if persist_source:
-        events.persist(StorageLevel.MEMORY_AND_DISK)
+    events.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         out = {}
         for name, table in tables.items():
@@ -369,10 +367,11 @@ def apply_batch_multi(
                     scope=SchemaScope(table_regex=f"^{re.escape(name)}$")
                 )
             sub = events.where(F.col("table_name") == name)
-            out[name] = apply_batch(table, sub, batch_id, cfg)
+            # already cached above: the inner auto-detect would see the
+            # JSON parse in ``sub``'s analyzed plan and cache it again
+            out[name] = apply_batch(table, sub, batch_id, cfg, persist_source=False)
     finally:
-        if persist_source:
-            events.unpersist(blocking=False)
+        events.unpersist(blocking=False)
     return out
 
 
@@ -576,8 +575,8 @@ def apply_raw_batch(
          conv_id read JVM-side at its fixed header offset. The
          set covers every frame, out-of-scope and invalid ones included:
          an extra bucket is rewritten byte-identically. On a first batch
-         into an empty table it is skipped and the merge observes the
-         EXACT set on its write job;
+         into an empty table it is skipped and the merge maps the
+         bucket dirs its write made;
       2. full decode (pruned to the scoped columns, scope filter in-kernel
          on the scope byte) -> salted partial LWW -> one-pass MERGE.
 
@@ -760,8 +759,9 @@ def apply_mysql_batch(
     scope filter at the registry level -> broadcast -> vectorized wave
     decode -> salted LWW -> COW MERGE. Frame counts in lineage include
     control events (table maps etc.), matching how binlog positions
-    advance over them. Bucket discovery is left to the merge (its
-    Observation on a fresh table, a distinct job over the winners after).
+    advance over them. Bucket discovery is left to the merge (the bucket
+    dirs its write made on a fresh table, a distinct job over the winners
+    after).
 
     ``registry_cache`` (a mutable dict) persists table maps ACROSS
     micro-batches — the reference's table-map cache (packet.cc:194-200):

@@ -3,8 +3,8 @@ replay accounting, the same Spark job count per call, and the tri-state
 ``persist_source`` auto-detection.
 
 Each path gets the same logical stream split into two micro-batches by
-binlog file: batch 1 lands in an empty table (fresh: the touched-bucket set
-rides the merge's Observation), batch 2 continues it (non-fresh: the merge
+binlog file: batch 1 lands in an empty table (fresh: the bucket map is the
+bucket dirs the merge wrote), batch 2 continues it (non-fresh: the merge
 unions the touched buckets' current rows).
 """
 
@@ -119,11 +119,11 @@ def _apply(spark, root, path: str, table_dir, i: int, registry_cache: dict):
 # Spark jobs per apply call: (fresh table, non-fresh table). Any job the
 # commit core adds or drops shows up here.
 JOBS = {
-    "structured": (6, 7),
-    "debezium": (6, 7),
-    "raw": (6, 7),
-    "mysql": (7, 11),
-    "multi": (12, 14),
+    "structured": (6, 6),
+    "debezium": (6, 6),
+    "raw": (6, 6),
+    "mysql": (7, 10),
+    "multi": (12, 12),
 }
 
 
@@ -215,6 +215,21 @@ def test_column_named_from_json_is_not_a_parse(
 def test_json_source_auto_persists(spark, tmp_path, inputs, persist_calls):
     src = _source(spark, inputs, "debezium", 1)
     apply_batch(LakeTable(spark, str(tmp_path / "t"), buckets=8), src, 1)
+    assert len(persist_calls) == 1 and persist_calls[0] is src
+
+
+def test_multi_routing_persists_the_batch_once(
+    spark, tmp_path, inputs, persist_calls
+):
+    """``apply_batch_multi`` caches the batch once; each destination's
+    apply runs over that cache instead of caching its filtered frame."""
+    src = _source(spark, inputs, "debezium", 1)
+    tables = {
+        name: LakeTable(spark, str(tmp_path / name), buckets=8)
+        for name in ("transcripts", "transcripts_audit")
+    }
+    out = apply_batch_multi(tables, src, 1)
+    assert out["transcripts"]["applied"] > 0
     assert len(persist_calls) == 1 and persist_calls[0] is src
 
 

@@ -3,7 +3,8 @@
 partition ``b mod n``, in a merge as in a compaction), and a
 ``touched_buckets`` set that misses a bucket of the batch fails before
 the commit instead of hiding the row. A key list hashes to its buckets
-on the driver, with no Spark job."""
+on the driver, with no Spark job. A write's bucket map is the bucket dirs
+it made, and a scan reads with the manifest schema, inferring none."""
 
 from __future__ import annotations
 
@@ -204,3 +205,50 @@ def test_empty_touched_buckets_is_checked_not_trusted(base):
     snap = table.snapshot()
     assert snap["batch_id"] == 2
     assert snap["bucket_locations"] == before["bucket_locations"]
+
+
+def test_scans_run_no_schema_inference_job(spark, base, count_jobs):
+    """Every commit dir is read with the manifest schema, so building a
+    scan, a key lookup or a change feed over three live commit dirs runs
+    no Spark job (no per-dir schema inference), and running one runs only
+    its own jobs."""
+    table, ev = base
+    up = _upserts(ev.where("delivery_seq >= 2000"))
+    convs = sorted(r[0] for r in up.select("conv_id").distinct().collect())
+    for batch_id, cs in ((2, convs[:3]), (3, convs[3:6])):
+        part = up.where(F.col("conv_id").isin(cs))
+        table.merge(part, batch_id=batch_id, touched_buckets=_buckets_of(part))
+    snap = table.snapshot()
+    assert len({c for c in snap["bucket_locations"].values() if c}) == 3
+
+    built = {}
+    assert count_jobs(lambda: built.update(
+        scan=table._scan(snap), keys=table.read_keys(convs[:2]),
+        feed=table.changes(1),
+    )) == 0
+    assert count_jobs(built["keys"].collect) == 1
+    assert count_jobs(built["feed"].collect) == 3
+    assert count_jobs(table.read().count) == 2
+
+
+def test_superset_bucket_with_no_rows_keeps_its_location(spark, tmp_path):
+    """The bucket map is the ``_bucket=`` dirs the write made: with a
+    ``touched_buckets`` superset of every bucket, only the buckets that got
+    rows point at the new commit, and a bucket with no rows keeps its
+    prior location (here: none), fresh table or not."""
+    up = _upserts(
+        generate_binlog(spark, GeneratorParams(n_events=1000, n_convs=40, dup_tail=0))
+    )
+    convs = sorted(r[0] for r in up.select("conv_id").distinct().collect())
+    table = LakeTable(spark, str(tmp_path / "sparse"), buckets=BUCKETS)
+    filled: set[int] = set()
+    for batch_id, cs in ((1, convs[:3]), (2, convs[3:6])):
+        part = up.where(F.col("conv_id").isin(cs))
+        table.merge(part, batch_id=batch_id, touched_buckets=list(range(BUCKETS)))
+        filled |= set(_buckets_of(part))
+        locs = table.snapshot()["bucket_locations"]
+        assert {int(b) for b, c in locs.items() if c} == filled
+        assert {c for c in locs.values() if c} == {f"commit-{batch_id:08d}"}
+        assert _files_per_bucket(table, f"commit-{batch_id:08d}") == {
+            b: 1 for b in filled
+        }

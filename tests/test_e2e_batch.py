@@ -448,6 +448,12 @@ def test_changes_after_vacuum_fails_cleanly(spark, tmp_path):
     shutil.rmtree(f"{tmp_path}/t/data/{a_commit}")
     with pytest.raises(ValueError, match="expired by vacuum"):
         table.changes(None).count()
+    # every other scan takes the same check
+    with pytest.raises(ValueError, match="expired by vacuum"):
+        table.read().count()
+    key = ev.where("after.conv_id IS NOT NULL").select("after.conv_id").first()[0]
+    with pytest.raises(ValueError, match="expired by vacuum"):
+        table.read_keys([key]).count()
 
 
 def test_all_filtered_batch_does_not_brick_table(spark, tmp_path):
@@ -455,6 +461,8 @@ def test_all_filtered_batch_does_not_brick_table(spark, tmp_path):
     superset non-empty, zero winners) must commit a harmless no-op — not a
     manifest pointing at an empty commit dir that breaks every later read
     (round-4 review finding)."""
+    import os
+
     from pyspark.sql import functions as F
 
     from binlogsub_spark.config import EngineConfig
@@ -469,10 +477,15 @@ def test_all_filtered_batch_does_not_brick_table(spark, tmp_path):
     assert m["applied"] == 0 and m["events"] == 500
     assert table.read().count() == 0  # readable, empty — not AnalysisException
     assert table.changes(None).count() == 0
+    # the superset's buckets wrote no rows: each keeps its prior location
+    assert set(table.snapshot()["bucket_locations"].values()) == {None}
     # and real data afterwards lands normally
     m2 = apply_batch(table, ev, batch_id=2, cfg=EngineConfig(), persist_source=True)
     assert m2["applied"] > 0
     assert table.read().count() > 0
+    # every bucket the batch wrote points at a commit dir that exists
+    locs = table.snapshot()["bucket_locations"].values()
+    assert all(os.path.isdir(f"{tmp_path}/t/data/{c}") for c in locs if c)
 
 
 def test_mysql_epoch_backfill_keeps_column_type(spark, tmp_path):

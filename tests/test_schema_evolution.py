@@ -4,6 +4,9 @@ schema-union + null-backfill (SURVEY.md §5 test #4; reference epoch flush
 
 from __future__ import annotations
 
+from decimal import Decimal
+
+import pytest
 from pyspark.sql import functions as F
 
 from binlogsub_spark.lake.table import LakeTable
@@ -85,34 +88,48 @@ def test_schema_type_conflict_raises(spark, tmp_path):
     assert table.snapshot()["batch_id"] == 1
 
 
-def test_schema_lossless_widening_allowed(spark, tmp_path):
-    """int -> bigint is a lossless widening: the table column widens
-    (normal schema evolution) instead of raising; a later narrow batch
-    casts up into the widened column."""
+# Every lossless widening ``LakeTable._widens_to`` allows: (narrow type,
+# wide type, a narrow value, a value only the wide type holds).
+WIDENINGS = [
+    ("tinyint", "smallint", 7, 300),
+    ("tinyint", "int", 7, 70_000),
+    ("tinyint", "bigint", 7, 2**40),
+    ("smallint", "int", 300, 70_000),
+    ("smallint", "bigint", 300, 2**40),
+    ("int", "bigint", 7, 2**40),
+    ("float", "double", 1.5, 0.1),
+    ("decimal(5,2)", "decimal(7,2)", Decimal("123.45"), Decimal("12345.67")),
+    ("decimal(5,2)", "decimal(6,3)", Decimal("123.45"), Decimal("123.456")),
+    ("decimal(5,2)", "decimal(12,4)", Decimal("123.45"), Decimal("12345678.9012")),
+]
+
+
+@pytest.mark.parametrize(
+    "narrow,wide,small,big", WIDENINGS, ids=[f"{n}-{w}" for n, w, _, _ in WIDENINGS]
+)
+def test_schema_lossless_widening_allowed(spark, tmp_path, narrow, wide, small, big):
+    """A lossless widening: the table column widens (normal schema
+    evolution) instead of raising. The first commit's row, in a bucket the
+    wide batch leaves alone, reads back through the widened column from
+    its own (narrow) file; a later narrow batch casts up into the widened
+    column."""
     table = LakeTable(spark, str(tmp_path / "tbl"), buckets=4)
-    narrow = spark.createDataFrame(
-        [("c1", 0, 7, "I", 1.0, 0, 100)],
-        "conv_id string, turn_idx int, score int, _op string, "
-        "_ts double, _file_seq int, _log_pos long",
-    )
-    table.merge(narrow, batch_id=1)
-    wide = spark.createDataFrame(
-        [("c2", 0, 2**40, "I", 2.0, 0, 200)],
-        "conv_id string, turn_idx int, score long, _op string, "
-        "_ts double, _file_seq int, _log_pos long",
-    )
-    table.merge(wide, batch_id=2)
-    final = table.read()
-    assert dict(final.dtypes)["score"] == "bigint"
-    got = {r["conv_id"]: r["score"] for r in final.collect()}
-    assert got == {"c1": 7, "c2": 2**40}
-    # and a narrow batch into the widened table still casts up cleanly
-    table.merge(
-        spark.createDataFrame(
-            [("c3", 0, 9, "I", 3.0, 0, 300)],
-            "conv_id string, turn_idx int, score int, _op string, "
+
+    def _batch(conv, value, dtype, ts):
+        return spark.createDataFrame(
+            [(conv, 0, value, "I", ts, 0, int(ts * 100))],
+            f"conv_id string, turn_idx int, score {dtype}, _op string, "
             "_ts double, _file_seq int, _log_pos long",
-        ),
-        batch_id=3,
-    )
-    assert table.read().where("conv_id = 'c3'").first()["score"] == 9
+        )
+
+    table.merge(_batch("c1", small, narrow, 1.0), batch_id=1)
+    table.merge(_batch("c2", big, wide, 2.0), batch_id=2)  # c1, c2: buckets 1, 3
+    snap = table.snapshot()
+    assert snap["bucket_locations"]["1"] == "commit-00000001"
+    final = table.read()
+    assert final.schema["score"].dataType.simpleString() == wide
+    got = {r["conv_id"]: r["score"] for r in final.collect()}
+    assert got == {"c1": small, "c2": big}
+    # and a narrow batch into the widened table still casts up cleanly
+    table.merge(_batch("c3", small, narrow, 3.0), batch_id=3)
+    assert table.read().where("conv_id = 'c3'").first()["score"] == small

@@ -50,7 +50,6 @@ from pyspark.sql import types as T
 
 from binlogsub_spark.codec import (
     _binary_buffers,
-    _gather_headers,
     read_lenenc_int,
     uint_korr,
     write_lenenc_int,
@@ -620,68 +619,82 @@ class _VarlenAcc:
         self.lens.append(lens)
 
 
-def _read_column_values(
-    data: np.ndarray, pos: np.ndarray, rows: np.ndarray, col: MysqlColumn
-):
-    """Parse one column's values for the given frame rows (vectorized).
-    Returns (values ndarray | _VarlenAcc-part, widths per row) and advances
-    nothing — caller advances pos. The per-type dispatch mirrors
-    ParseColumnValue (event.cc:413-809), one numpy pass per type."""
-    p = pos[rows]
+_FIXED_WIDTH = {
+    **_INT_WIDTH,
+    MYSQL_TYPE_YEAR: 1,
+    MYSQL_TYPE_FLOAT: 4,
+    MYSQL_TYPE_DOUBLE: 8,
+    MYSQL_TYPE_DATE: 3,
+    MYSQL_TYPE_NEWDATE: 3,
+    MYSQL_TYPE_TIMESTAMP: 4,
+    MYSQL_TYPE_DATETIME: 8,
+    MYSQL_TYPE_TIME: 3,
+}
+# fractional-second types: base bytes + (fsp + 1) // 2
+_FSP_BASE_WIDTH = {MYSQL_TYPE_DATETIME2: 5, MYSQL_TYPE_TIMESTAMP2: 4, MYSQL_TYPE_TIME2: 3}
+
+
+def _head_width(col: MysqlColumn) -> int:
+    """Bytes of one value that the column's metadata fixes: the whole value
+    for fixed-width types, the length prefix for length-prefixed ones."""
     c = col.ctype
-    if c in _INT_WIDTH:
-        w = _INT_WIDTH[c]
-        vals = _signed(uint_korr(data, p, w), w)
-        return vals, np.full(len(p), w, dtype=np.int64)
-    if c == MYSQL_TYPE_YEAR:
-        return data[p].astype(np.int64) + 1900, np.ones(len(p), dtype=np.int64)
-    if c == MYSQL_TYPE_FLOAT:
-        return (
-            np.ascontiguousarray(_gather_fixed(data, p, 4)).view("<f4").ravel().astype(np.float64),
-            np.full(len(p), 4, dtype=np.int64),
-        )
-    if c == MYSQL_TYPE_DOUBLE:
-        return (
-            np.ascontiguousarray(_gather_fixed(data, p, 8)).view("<f8").ravel(),
-            np.full(len(p), 8, dtype=np.int64),
-        )
+    if c in _FIXED_WIDTH:
+        return _FIXED_WIDTH[c]
+    if c in _FSP_BASE_WIDTH:
+        return _FSP_BASE_WIDTH[c] + (int(col.meta or 0) + 1) // 2
     if c in (MYSQL_TYPE_VARCHAR, MYSQL_TYPE_VAR_STRING):
-        lp = 1 if int(col.meta) < 256 else 2
-        lens = uint_korr(data, p, lp).astype(np.int64)
-        return ("varlen", p + lp, lens), lens + lp
+        return 1 if int(col.meta) < 256 else 2
     if c in (MYSQL_TYPE_BLOB, MYSQL_TYPE_JSON):  # JSON stores blob-style
-        lp = int(col.meta or (4 if c == MYSQL_TYPE_JSON else 2))
-        lens = uint_korr(data, p, lp).astype(np.int64)
-        return ("varlen", p + lp, lens), lens + lp
-    if c == MYSQL_TYPE_STRING:  # ENUM/SET codes or CHAR text (event.cc:607-636)
+        return int(col.meta or (4 if c == MYSQL_TYPE_JSON else 2))
+    if c == MYSQL_TYPE_STRING:  # ENUM/SET codes or CHAR length prefix
         real, size = col.meta
         if real in (MYSQL_TYPE_ENUM, MYSQL_TYPE_SET):
-            return (
-                uint_korr(data, p, size).astype(np.int64),
-                np.full(len(p), size, dtype=np.int64),
-            )
-        lp = 1 if size < 256 else 2  # CHAR: length-prefixed like VARCHAR
-        lens = uint_korr(data, p, lp).astype(np.int64)
-        return ("varlen", p + lp, lens), lens + lp
+            return size
+        return 1 if size < 256 else 2
+    if c == MYSQL_TYPE_NEWDECIMAL:
+        return decimal_bin_size(*col.meta)
+    if c == MYSQL_TYPE_BIT:
+        return (int(col.meta) + 7) // 8
+    raise ValueError(f"unsupported decode type {c}")
+
+
+def _read_column_values(data: np.ndarray, p: np.ndarray, col: MysqlColumn):
+    """Parse one column's values at positions ``p`` (vectorized): a values
+    ndarray, or ``("varlen", value starts, value lengths)`` for
+    length-prefixed columns. The caller bounds-checks and advances. The
+    per-type dispatch mirrors ParseColumnValue (event.cc:413-809), one
+    numpy pass per type."""
+    c = col.ctype
+    if _is_varlen(col):
+        lp = _head_width(col)
+        return ("varlen", p + lp, uint_korr(data, p, lp).astype(np.int64))
+    if c in _INT_WIDTH:
+        w = _INT_WIDTH[c]
+        return _signed(uint_korr(data, p, w), w)
+    if c == MYSQL_TYPE_YEAR:
+        return data[p].astype(np.int64) + 1900
+    if c == MYSQL_TYPE_FLOAT:
+        return np.ascontiguousarray(_gather_fixed(data, p, 4)).view("<f4").ravel().astype(np.float64)
+    if c == MYSQL_TYPE_DOUBLE:
+        return np.ascontiguousarray(_gather_fixed(data, p, 8)).view("<f8").ravel()
+    if c == MYSQL_TYPE_STRING:  # ENUM/SET codes (event.cc:607-636)
+        return uint_korr(data, p, col.meta[1]).astype(np.int64)
     if c == MYSQL_TYPE_NEWDECIMAL:
         prec, scale = col.meta
         decode = _decode_newdecimal_scaled if prec <= 18 else _decode_newdecimal_wide
-        vals, size = decode(data, p, prec, scale)
-        return vals, np.full(len(p), size, dtype=np.int64)
+        return decode(data, p, prec, scale)[0]
     if c in (MYSQL_TYPE_DATE, MYSQL_TYPE_NEWDATE):
         # 3-byte packed (year << 9 | month << 5 | day), event.cc:563-598
         v = uint_korr(data, p, 3).astype(np.int64)
-        days = _days_from_civil(v >> 9, (v >> 5) & 15, v & 31)
-        return days, np.full(len(p), 3, dtype=np.int64)
+        return _days_from_civil(v >> 9, (v >> 5) & 15, v & 31)
     if c == MYSQL_TYPE_TIMESTAMP:  # v1: u32 LE epoch seconds (event.cc:534-541)
-        secs = uint_korr(data, p, 4).astype(np.int64)
-        return secs * 1_000_000, np.full(len(p), 4, dtype=np.int64)
+        return uint_korr(data, p, 4).astype(np.int64) * 1_000_000
     if c == MYSQL_TYPE_DATETIME:  # v1: u64 LE YYYYMMDDHHMMSS (event.cc:542-554)
         v = uint_korr(data, p, 8).astype(np.int64)
         d, t = v // 1_000_000, v % 1_000_000
         days = _days_from_civil(d // 10000, (d // 100) % 100, d % 100)
         secs = (t // 10000) * 3600 + ((t // 100) % 100) * 60 + t % 100
-        return (days * 86400 + secs) * 1_000_000, np.full(len(p), 8, dtype=np.int64)
+        return (days * 86400 + secs) * 1_000_000
     if c == MYSQL_TYPE_TIME:
         # v1: SIGNED 3-byte LE HHMMSS pack (sint3korr in MySQL; the
         # reference reads it unsigned, event.cc:555-562 — a negative-TIME
@@ -689,13 +702,11 @@ def _read_column_values(
         v = _signed(uint_korr(data, p, 3), 3)
         av = np.abs(v)
         us = ((av // 10000) * 3600 + ((av // 100) % 100) * 60 + av % 100) * 1_000_000
-        return np.where(v < 0, -us, us), np.full(len(p), 3, dtype=np.int64)
+        return np.where(v < 0, -us, us)
     if c == MYSQL_TYPE_BIT:  # big-endian bit field (event.cc:703-710)
-        nb = (int(col.meta) + 7) // 8
-        return _u_be(data, p, nb).astype(np.int64), np.full(len(p), nb, dtype=np.int64)
+        return _u_be(data, p, _head_width(col)).astype(np.int64)
     if c == MYSQL_TYPE_DATETIME2:
-        fsp = int(col.meta or 0)
-        nb = (fsp + 1) // 2
+        nb = (int(col.meta or 0) + 1) // 2
         packed = _u_be(data, p, 5).astype(np.int64) & ((1 << 39) - 1)
         ym = (packed >> 22) & ((1 << 17) - 1)
         year, month = ym // 13, ym % 13
@@ -707,21 +718,16 @@ def _read_column_values(
             _u_be(data, p + 5, nb).astype(np.int64) * 10 ** (6 - 2 * nb) if nb else 0
         )
         days = _days_from_civil(year, month, day)
-        epoch_us = (
-            (days * 86400 + hour * 3600 + minute * 60 + second) * 1_000_000 + micros
-        )
-        return epoch_us, np.full(len(p), 5 + nb, dtype=np.int64)
+        return (days * 86400 + hour * 3600 + minute * 60 + second) * 1_000_000 + micros
     if c == MYSQL_TYPE_TIMESTAMP2:
-        fsp = int(col.meta or 0)
-        nb = (fsp + 1) // 2
+        nb = (int(col.meta or 0) + 1) // 2
         secs = _u_be(data, p, 4).astype(np.int64)
         micros = (
             _u_be(data, p + 4, nb).astype(np.int64) * 10 ** (6 - 2 * nb) if nb else 0
         )
-        return secs * 1_000_000 + micros, np.full(len(p), 4 + nb, dtype=np.int64)
+        return secs * 1_000_000 + micros
     if c == MYSQL_TYPE_TIME2:
-        fsp = int(col.meta or 0)
-        nb = (fsp + 1) // 2
+        nb = (int(col.meta or 0) + 1) // 2
         intpart = _u_be(data, p, 3).astype(np.int64) - 0x800000
         frac = _u_be(data, p + 3, nb).astype(np.int64) if nb else np.zeros(len(p), np.int64)
         neg = intpart < 0
@@ -732,8 +738,33 @@ def _read_column_values(
         total_us = (
             ((v >> 12) & 0x3FF) * 3600 + ((v >> 6) & 0x3F) * 60 + (v & 0x3F)
         ) * 1_000_000 + (frac * 10 ** (6 - 2 * nb) if nb else 0)
-        return np.where(neg, -total_us, total_us), np.full(len(p), 3 + nb, dtype=np.int64)
+        return np.where(neg, -total_us, total_us)
     raise ValueError(f"unsupported decode type {c}")
+
+
+_OVERRUN = "rows-event parse overran the event body"
+
+
+def _read_column(
+    data: np.ndarray, pos: np.ndarray, body_end: np.ndarray, rows: np.ndarray,
+    col: MysqlColumn,
+):
+    """One column's values for the frames ``rows``, advancing ``pos`` past
+    them. Each value's end is checked against its frame's body end BEFORE
+    any byte past the length prefix is gathered, so a damaged length never
+    reads the next frame's bytes or past the buffer."""
+    p, end = pos[rows], body_end[rows]
+    head = _head_width(col)
+    if (p + head > end).any():
+        raise ValueError(_OVERRUN)
+    vals = _read_column_values(data, p, col)
+    widths = head
+    if isinstance(vals, tuple):  # varlen: the bytes follow the prefix
+        widths = head + vals[2]
+        if (p + widths > end).any():
+            raise ValueError(_OVERRUN)
+    pos[rows] += widths
+    return vals
 
 
 def _is_varlen(col: MysqlColumn) -> bool:
@@ -851,7 +882,11 @@ def decode_rows_frames(
     bitmap, and update after-images share theirs (decode_mysql_events
     sub-groups by bitmap signature first, so MINIMAL/NOBLOB row images
     decode fine — each shape is its own uniform group; the before and
-    after column sets may differ when the whole group is updates)."""
+    after column sets may differ when the whole group is updates).
+
+    Every read is bounds-checked against its frame's body before it
+    happens: a frame whose bitmaps or values would run past the body
+    raises ``ValueError`` and never reads the next frame's bytes."""
     n = len(starts)
     width = len(tmap.columns)
     nbm = (width + 7) // 8
@@ -862,9 +897,11 @@ def decode_rows_frames(
     width_vals, pos = read_lenenc_int(data, pos)
     if n and not (width_vals == width).all():
         raise ValueError("rows-event width != table-map column count")
+    is_update = np.isin(type_codes, UPDATE_ROWS_EVENTS)
+    if (pos + np.where(is_update, 2 * nbm, nbm) > body_end).any():
+        raise ValueError(_OVERRUN)
     pres1 = _bit_matrix(data, pos, nbm, width)
     pos = pos + nbm
-    is_update = np.isin(type_codes, UPDATE_ROWS_EVENTS)
     pres2 = pres1.copy()
     if is_update.any():
         pres2[is_update] = _bit_matrix(data, pos[is_update], nbm, width)
@@ -909,6 +946,8 @@ def decode_rows_frames(
         # ---- image pass 0: the sole image of I/D frames (recorded as
         # main) AND the before image of U frames (stashed when
         # include_before, else parsed only to advance)
+        if (pos[act] + nb_null_b > body_end[act]).any():
+            raise ValueError(_OVERRUN)
         null_b = _bit_matrix(data, pos[act], nb_null_b, len(before_cols))
         pos[act] += nb_null_b
         stash: dict[int, tuple] = {}
@@ -917,8 +956,7 @@ def decode_rows_frames(
             rows = act[notnull]
             vals = None
             if len(rows):
-                vals, widths = _read_column_values(data, pos, rows, tmap.columns[ci])
-                pos[rows] += widths
+                vals = _read_column(data, pos, body_end, rows, tmap.columns[ci])
             if n_non and ci in col_waves:
                 _record_wave(
                     col_waves, varlen_acc, varlen_cols, ci, data, n_non,
@@ -936,6 +974,8 @@ def decode_rows_frames(
                     )
         # ---- image pass 1: the after image of U frames (recorded as main)
         if len(upd):
+            if (pos[upd] + nb_null_a > body_end[upd]).any():
+                raise ValueError(_OVERRUN)
             null_a = _bit_matrix(data, pos[upd], nb_null_a, len(main_cols))
             pos[upd] += nb_null_a
             for ordinal, ci in enumerate(main_cols):
@@ -943,8 +983,7 @@ def decode_rows_frames(
                 rows = upd[notnull]
                 vals = None
                 if len(rows):
-                    vals, widths = _read_column_values(data, pos, rows, tmap.columns[ci])
-                    pos[rows] += widths
+                    vals = _read_column(data, pos, body_end, rows, tmap.columns[ci])
                 _record_wave(
                     col_waves, varlen_acc, varlen_cols, ci, data, len(upd),
                     null_a[:, ordinal], vals, np.ones(len(rows), dtype=bool),
@@ -958,8 +997,6 @@ def decode_rows_frames(
                         len(upd), rec_nulls, vals, keep_of_rows,
                     )
         active = pos < body_end
-        if (pos > body_end).any():
-            raise ValueError("rows-event parse overran the event body")
 
     # ------------------------------------------------ assemble columns --
     frame_idx = (
@@ -1331,11 +1368,10 @@ def crc32_frames(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
     slices runs the same workload at ~0.3 us/frame (3 GB/s), so the "loop"
     below is the FASTER implementation: the per-frame cost is one C call
     on a no-copy buffer slice, with offsets pre-converted to Python ints in
-    bulk (the round-2 version paid np-scalar indexing + a bytes copy per
-    frame). More importantly the hot decode path no longer calls this at
-    all — the reference itself never verifies CRC, it only strips the
-    trailer (/root/reference/packet.cc:117-119); verification lives in the
-    dead-letter demux."""
+    bulk. ``validate_mysql_frames`` calls it on every checksummed batch, so
+    the decoder, the dead-letter sink and the table-map registry all drop
+    a frame whose trailer does not match (the reference only strips the
+    trailer, /root/reference/packet.cc:117-119)."""
     n = len(starts)
     out = np.empty(n, dtype=np.uint32)
     if n == 0:
@@ -1348,39 +1384,6 @@ def crc32_frames(data: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.n
     return out
 
 
-def validate_mysql_frames(
-    data: np.ndarray,
-    starts: np.ndarray,
-    ends: np.ndarray,
-    checksum: bool = False,
-    verify_crc: bool = True,
-) -> np.ndarray:
-    """Per-frame reason codes (0 = ok): header-length sanity, the event's
-    own event_len against the frame's actual size, and (when checksums are
-    on AND ``verify_crc``) CRC32 over header+body — the engine-side analog
-    of the server's checksum verification; a corrupt frame must
-    dead-letter, never abort the stream (same contract as
-    codec.validate_reasons). The decode hot path passes
-    ``verify_crc=False`` and relies on the length checks (parity with the
-    reference, which only strips the trailer, packet.cc:117-119); the
-    demux (split_deadletter_mysql) verifies fully."""
-    n = len(starts)
-    lens = ends - starts
-    reasons = np.zeros(n, dtype=np.uint8)
-    reasons[lens < HEADER_LEN] = 1  # short_frame
-    ok = np.flatnonzero(reasons == 0)
-    if len(ok):
-        event_len = uint_korr(data, starts[ok] + 9, 4).astype(np.int64)
-        reasons[ok[event_len != lens[ok]]] = 2  # len_mismatch
-    if checksum and verify_crc:
-        ok = np.flatnonzero(reasons == 0)
-        if len(ok):
-            got = crc32_frames(data, starts[ok], lens[ok] - 4)
-            want = uint_korr(data, ends[ok] - 4, 4).astype(np.uint32)
-            reasons[ok[got != want]] = 3  # bad_crc
-    return reasons
-
-
 def _table_has_unsupported_type(tm: TableMap) -> bool:
     for c in tm.columns:
         try:
@@ -1390,34 +1393,64 @@ def _table_has_unsupported_type(tm: TableMap) -> bool:
     return False
 
 
-def probe_mysql_semantics(
+def validate_mysql_frames(
     data: np.ndarray,
     starts: np.ndarray,
     ends: np.ndarray,
-    reasons: np.ndarray,
-    registry: dict[int, TableMap],
-    known_table_ids: frozenset | None,
+    checksum: bool = False,
+    registry: dict[int, TableMap] | None = None,
+    known_table_ids: frozenset | None = None,
 ) -> np.ndarray:
-    """Semantic probe over structurally-valid rows-event frames: flags the
-    failures the wave decoder would otherwise hit mid-task — unknown
-    table_id (map lost: NOT the scope filter, which needs the id to be
-    known), width mismatch against the registry, and unsupported column
-    types (geometry and other exotic codes). Cheap: type-byte gather,
-    one lenenc read, per-TABLE (not per-frame) type checks."""
+    """The one verdict on each frame: a ``MYSQL_REASON_NAMES`` code, 0 = ok.
+
+    Structural checks first: short frame, the event's own event_len
+    against the frame's size, and (when ``checksum`` is on) CRC32 over
+    header+body — the engine-side analog of the server's checksum
+    verification. With a ``registry`` the structurally valid rows-events
+    are then checked against it: a pre-5.1.16 (v0) generation, a
+    post-header too short to read, a table_id in neither ``registry`` nor
+    ``known_table_ids`` (a lost table map; a known id missing from the
+    registry is the scope filter and stays ok), a table with a column the
+    engine cannot type, a width that differs from the table map, and
+    bitmaps that run past the body.
+
+    The decoder drops exactly the non-ok frames and the dead-letter sink
+    records exactly them, so a corrupt frame never aborts the stream and
+    the sink never changes what is applied. Every read stays inside its
+    own frame."""
+    n = len(starts)
+    lens = ends - starts
+    trailer = 4 if checksum else 0
+    reasons = np.zeros(n, dtype=np.uint8)
+    reasons[lens < HEADER_LEN + trailer] = 1  # short_frame
     ok = np.flatnonzero(reasons == 0)
-    if len(ok) == 0:
+    if len(ok):
+        event_len = uint_korr(data, starts[ok] + 9, 4).astype(np.int64)
+        reasons[ok[event_len != lens[ok]]] = 2  # len_mismatch
+    if checksum:
+        ok = np.flatnonzero(reasons == 0)
+        if len(ok):
+            got = crc32_frames(data, starts[ok], lens[ok] - 4)
+            want = uint_korr(data, ends[ok] - 4, 4).astype(np.uint32)
+            reasons[ok[got != want]] = 3  # bad_crc
+    if registry is None:
         return reasons
+    ok = np.flatnonzero(reasons == 0)
     tcodes = data[starts[ok] + 4]
     # pre-5.1.16 rows generations (v0): layout unknown to the decoder —
     # dead-letter explicitly instead of silently ignoring row data
     reasons[ok[np.isin(tcodes, ROWS_EVENTS_V0)]] = 7  # unsupported_event
-    ridx = ok[np.isin(tcodes, ROWS_EVENTS)]
-    if len(ridx) == 0:
-        return reasons
-    rcodes = tcodes[np.isin(tcodes, ROWS_EVENTS)]
+    is_rows = np.isin(tcodes, ROWS_EVENTS)
+    ridx, rcodes = ok[is_rows], tcodes[is_rows]
+    body_end = ends[ridx] - trailer
+    # table_id + flags (+ the v2 extra-data length) + one width byte
+    short = starts[ridx] + HEADER_LEN + 9 + 2 * (rcodes >= WRITE_ROWS_EVENT_V2) > body_end
+    reasons[ridx[short]] = 1  # short_frame
+    ridx, rcodes, body_end = ridx[~short], rcodes[~short], body_end[~short]
     tids = uint_korr(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
     for tid in np.unique(tids):
-        sel = ridx[tids == tid]
+        in_tid = tids == tid
+        sel = ridx[in_tid]
         tm = registry.get(int(tid))
         if tm is None:
             if known_table_ids is None or int(tid) not in known_table_ids:
@@ -1426,9 +1459,19 @@ def probe_mysql_semantics(
         if _table_has_unsupported_type(tm):
             reasons[sel] = 6  # unsupported_type
             continue
-        pos = _rows_post_header_pos(data, starts[sel], rcodes[tids == tid])
-        width_vals, _ = read_lenenc_int(data, pos)
-        reasons[sel[width_vals != len(tm.columns)]] = 5  # width_mismatch
+        # the width field must be the table map's column count, compared as
+        # its lenenc bytes so no read leaves the body
+        want = np.frombuffer(write_lenenc_int(len(tm.columns)), dtype=np.uint8)
+        pos = _rows_post_header_pos(data, starts[sel], rcodes[in_tid])
+        end = body_end[in_tid]
+        fits = pos + len(want) <= end
+        same = np.zeros(len(sel), dtype=bool)
+        same[fits] = (_gather_fixed(data, pos[fits], len(want)) == want).all(axis=1)
+        reasons[sel[~same]] = 5  # width_mismatch
+        nbm = (len(tm.columns) + 7) // 8
+        n_bitmaps = 1 + np.isin(rcodes[in_tid], UPDATE_ROWS_EVENTS)
+        overrun = same & (pos + len(want) + nbm * n_bitmaps > end)
+        reasons[sel[overrun]] = 1  # short_frame
     return reasons
 
 
@@ -1437,20 +1480,17 @@ def split_deadletter_mysql(
     checksum: bool = False,
     registry: dict[int, TableMap] | None = None,
     known_table_ids: set[int] | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, dead_letter) demux for MySQL frames; the dead side carries
-    a ``_reason`` column naming the failed check. This is where the FULL
-    verification runs (CRC included). With ``registry`` the semantic probe
-    also dead-letters rows-events the decoder could not handle — unknown
-    table_ids (pass ``known_table_ids`` = every id ever seen, so the
-    scope filter is distinguishable from a LOST table map), width
-    mismatches, unsupported column types — instead of losing them
-    silently inside the decode kernel."""
+) -> DataFrame:
+    """The dead-letter side of a MySQL frame batch: every frame whose
+    ``validate_mysql_frames`` verdict is not ok, with a ``_reason`` column
+    naming the failed check. Pass the ``registry`` and ``known_table_ids``
+    the decode uses (``known_table_ids`` = every id ever seen, so the scope
+    filter is distinguishable from a LOST table map): the sink then holds
+    exactly the frames ``decode_mysql_events`` drops."""
     import pyarrow as pa
 
-    flag_schema = T.StructType(
-        list(raw_df.schema.fields)
-        + [T.StructField("_valid", T.BooleanType()), T.StructField("_reason", T.StringType())]
+    dead_schema = T.StructType(
+        list(raw_df.schema.fields) + [T.StructField("_reason", T.StringType())]
     )
     known = frozenset(known_table_ids) if known_table_ids is not None else None
 
@@ -1458,19 +1498,16 @@ def split_deadletter_mysql(
         for rb in batches:
             arr = rb.column(rb.schema.get_field_index("payload"))
             starts, ends, data = _binary_buffers(arr)
-            reasons = validate_mysql_frames(data, starts, ends, checksum=checksum)
-            if registry is not None:
-                reasons = probe_mysql_semantics(
-                    data, starts, ends, reasons, registry, known
+            reasons = validate_mysql_frames(
+                data, starts, ends, checksum, registry, known
+            )
+            dead = np.flatnonzero(reasons)
+            if len(dead):
+                yield rb.take(pa.array(dead)).append_column(
+                    "_reason", pa.array(MYSQL_REASON_NAMES[reasons[dead]])
                 )
-            rb = rb.append_column("_valid", pa.array(reasons == 0))
-            yield rb.append_column("_reason", pa.array(MYSQL_REASON_NAMES[reasons]))
 
-    flagged = raw_df.mapInArrow(_flag, schema=flag_schema)
-    return (
-        flagged.where(F.col("_valid")).drop("_valid", "_reason"),
-        flagged.where(~F.col("_valid")).drop("_valid"),
-    )
+    return raw_df.mapInArrow(_flag, schema=dead_schema)
 
 
 # ----------------------------------------------------- binlog FILE source --
@@ -1567,16 +1604,26 @@ def extract_table_maps(raw_df: DataFrame, checksum: bool = False) -> dict[int, T
     """One column-pruned pass over the frames: keep only TABLE_MAP events
     (type byte at offset 4 — a JVM-side substring filter, so the scan never
     ships rows-event payloads to Python), parse the few survivors on the
-    driver. The result is the broadcastable schema registry."""
-    frames = (
-        raw_df.select("payload")
+    driver. A map whose structural/CRC verdict is not ok is never parsed:
+    a damaged map neither aborts the apply nor retypes a table, and its
+    rows-events dead-letter as ``unknown_table_id``. The result is the
+    broadcastable schema registry."""
+    frames = [
+        bytes(r[0])
+        for r in raw_df.select("payload")
         .where(F.expr(f"substring(payload, 5, 1) = X'{TABLE_MAP_EVENT:02X}'"))
         .collect()
-    )
+    ]
+    lens = np.array([len(f) for f in frames], dtype=np.int64)
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    data = np.frombuffer(b"".join(frames), dtype=np.uint8)
+    reasons = validate_mysql_frames(data, starts, ends, checksum)
     registry: dict[int, TableMap] = {}
-    for r in frames:
-        tm = parse_table_map(bytes(r[0]), checksum=checksum)
-        registry[tm.table_id] = tm
+    for frame, reason in zip(frames, reasons):
+        if reason == 0:
+            tm = parse_table_map(frame, checksum=checksum)
+            registry[tm.table_id] = tm
     return registry
 
 
@@ -1657,6 +1704,21 @@ def registry_from_json(s: str) -> dict[int, TableMap]:
     return out
 
 
+def _decode_dropping_failures(g: np.ndarray, decode) -> list:
+    """``decode(g)`` over frame indices ``g`` -> ``[(frames, decoded)]``.
+    A group that raises ``ValueError`` is decoded again in halves, so only
+    the frames that fail on their own drop, never their neighbours."""
+    try:
+        return [(g, decode(g))]
+    except ValueError:
+        if len(g) == 1:
+            return []
+        h = len(g) // 2
+        return _decode_dropping_failures(g[:h], decode) + _decode_dropping_failures(
+            g[h:], decode
+        )
+
+
 def decode_mysql_events(
     raw_df: DataFrame,
     registry: dict[int, TableMap] | None = None,
@@ -1664,17 +1726,20 @@ def decode_mysql_events(
     checksum: bool = False,
     skip_invalid: bool = True,
     include_before: bool = False,
-    on_error: str = "skip",
     known_table_ids: set[int] | None = None,
 ) -> DataFrame:
     """Framed MySQL binlog events -> typed change records via mapInArrow.
 
-    NOTE ``skip_invalid`` drops frames on LENGTH checks only — CRC is NOT
-    verified on the hot path (parity with the reference, which only strips
-    the trailer, packet.cc:117-119). A bit-flipped frame with
-    self-consistent lengths would decode into garbage values; callers that
-    need CRC-checked dropping route through split_deadletter_mysql first,
-    which always verifies fully.
+    Each batch first takes the ``validate_mysql_frames`` verdict (CRC
+    included whenever ``checksum`` is on, then the rows-event checks
+    against the registry and ``known_table_ids``) and decodes only the
+    frames whose verdict is ok: exactly the frames
+    ``split_deadletter_mysql`` does not record. ``skip_invalid=False``
+    trusts the caller instead: a frame whose verdict is not ok raises
+    ``ValueError`` naming its reason. Rows-events whose table_id is in
+    ``known_table_ids`` but not in ``registry`` are the intentional scope
+    filter; without ``known_table_ids`` every id outside the registry
+    counts as unknown.
 
     ``registry`` maps table_id -> TableMap (extracted+broadcast if omitted);
     ``column_overrides`` replaces a table's parsed columns with named/
@@ -1683,31 +1748,23 @@ def decode_mysql_events(
 
     Control events (FORMAT_DESCRIPTION, ROTATE, TABLE_MAP, XID, QUERY) are
     consumed and skipped — they carry no row payload. The output schema is
-    the UNION of the registry's column layouts (by name, first-seen order):
-    rows from a table that lacks a column get NULL there — exactly the
-    engine's schema-union evolution (T5), expressed over genuine frames
-    (MySQL's ALTER assigns a new table_id, so two epochs of one logical
-    table are two registry entries).
+    the UNION of the registry's decodable column layouts (by name,
+    first-seen order; a table with a column the engine cannot type is
+    left out, its frames fail the verdict): rows from a table that lacks
+    a column get NULL there — exactly the engine's schema-union evolution
+    (T5), expressed over genuine frames (MySQL's ALTER assigns a new
+    table_id, so two epochs of one logical table are two registry
+    entries).
 
     Frames group by (table_id, bitmap signature), so any binlog_row_image
     (FULL/MINIMAL/NOBLOB) decodes — absent image columns become NULLs.
     ``include_before`` adds "_before_<col>" output columns carrying UPDATE
     before images (parity with the reference Row old_columns, row.h:40-41).
-
-    ``on_error='skip'`` (default) drops a sub-group that fails semantic
-    decode instead of aborting the task — the 'one bad frame cannot kill
-    the stream' contract; route frames through split_deadletter_mysql
-    first for reason-coded accounting. ``on_error='raise'`` propagates.
-    Rows-events whose table_id is in neither ``registry`` nor
-    ``known_table_ids`` indicate LOST TABLE MAPS (restart mid-file): they
-    raise under 'raise' and are dropped under 'skip' (dead-letter them
-    upstream via split_deadletter_mysql(known_table_ids=...) to make the
-    loss visible); ids in known_table_ids but not registry are the
-    intentional scope filter."""
+    A group that still fails to decode (a value running past its body
+    when checksums are off) is decoded again in halves, so only the frames
+    that fail drop; the task never aborts."""
     import pyarrow as pa
 
-    if on_error not in ("skip", "raise"):
-        raise ValueError("on_error must be 'skip' or 'raise'")
     if registry is None:
         registry = extract_table_maps(raw_df, checksum=checksum)
     if column_overrides:
@@ -1722,19 +1779,11 @@ def decode_mysql_events(
             )
             for tid, tm in registry.items()
         }
-    # tables with columns the engine cannot type (geometry and other exotic
-    # wire types; JSON and 39-65-digit decimals ARE supported) are excluded
-    # up front: their frames dead-letter with reason 'unsupported_type' in
-    # split_deadletter_mysql rather than breaking the union schema or
-    # aborting mid-task
-    registry = {
-        tid: tm
-        for tid, tm in registry.items()
-        if not _table_has_unsupported_type(tm)
-    }
     union_cols: list[MysqlColumn] = []
     seen: dict[str, MysqlColumn] = {}
     for tm in registry.values():
+        if _table_has_unsupported_type(tm):
+            continue  # its frames fail the verdict as unsupported_type
         for c in tm.columns:
             if c.name not in seen:
                 seen[c.name] = c
@@ -1891,95 +1940,67 @@ def decode_mysql_events(
         for rb in batches:
             arr = rb.column(rb.schema.get_field_index("payload"))
             starts, ends, data = _binary_buffers(arr)
-            file_seq = rb.column(0).to_numpy(zero_copy_only=False)
-            log_pos = rb.column(1).to_numpy(zero_copy_only=False)
             if len(starts) == 0:
                 continue
-            if skip_invalid:
-                # corrupt frames dead-letter upstream (split_deadletter_mysql,
-                # which DOES verify CRC); here they are dropped on the cheap
-                # length checks only so one bad frame can't abort the task —
-                # the hot path never pays per-frame CRC (the reference only
-                # strips the trailer, packet.cc:117-119)
-                keep = (
-                    validate_mysql_frames(
-                        data, starts, ends, checksum=checksum, verify_crc=False
-                    )
-                    == 0
+            reasons = validate_mysql_frames(
+                data, starts, ends, checksum, reg, known_ids
+            )
+            if not skip_invalid and reasons.any():
+                bad = int(np.flatnonzero(reasons)[0])
+                raise ValueError(
+                    f"frame at log_pos {rb.column(1)[bad].as_py()} failed "
+                    f"validation: {MYSQL_REASON_NAMES[reasons[bad]]}"
                 )
-                if not keep.all():
-                    starts, ends = starts[keep], ends[keep]
-                    file_seq, log_pos = file_seq[keep], log_pos[keep]
-                if len(starts) == 0:
-                    continue
-            headers = _gather_headers(data, starts, _HEADER_DT)
-            tcodes = headers["type_code"]
-            rows_mask = np.isin(tcodes, ROWS_EVENTS)
-            if not rows_mask.any():
-                continue
-            ridx = np.flatnonzero(rows_mask)
+            file_seq = rb.column(0).to_numpy(zero_copy_only=False)
+            log_pos = rb.column(1).to_numpy(zero_copy_only=False)
+            tcodes = data[starts + 4]
+            ridx = np.flatnonzero((reasons == 0) & np.isin(tcodes, ROWS_EVENTS))
             table_ids = uint_korr(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
             for tid in np.unique(table_ids):
                 tm = reg.get(int(tid))
                 if tm is None:
-                    if known_ids is not None and int(tid) not in known_ids:
-                        # NOT the scope filter: the table map was never seen
-                        # (lost mid-restart?) — dropping silently would be
-                        # unrecoverable data loss
-                        if on_error == "raise":
-                            raise ValueError(
-                                f"rows-event for unknown table_id {int(tid)}: "
-                                "table map missing from registry and cache"
-                            )
-                    continue  # out-of-scope (known) or skip-mode unknown
+                    continue  # known but out of scope
                 g_all = ridx[table_ids == tid]
                 # sub-group by bitmap signature: each sub-group is uniform,
                 # so MINIMAL/NOBLOB images decode alongside FULL ones
-                try:
-                    sig = _rows_signatures(
-                        data, starts[g_all], tcodes[g_all], len(tm.columns)
+                sig = _rows_signatures(
+                    data, starts[g_all], tcodes[g_all], len(tm.columns)
+                )
+                _, inv = np.unique(sig, axis=0, return_inverse=True)
+
+                def _frames(g):
+                    return decode_rows_frames(
+                        data, starts[g], ends[g], tcodes[g], tm,
+                        checksum=checksum, include_before=include_before,
                     )
-                    _, inv = np.unique(sig, axis=0, return_inverse=True)
-                except Exception:
-                    if on_error == "raise":
-                        raise
-                    continue  # malformed prefixes: drop the tid group
+
                 for si in range(int(inv.max()) + 1):
-                    g = g_all[inv == si]
-                    try:
-                        dec = decode_rows_frames(
-                            data, starts[g], ends[g], tcodes[g], tm,
-                            checksum=checksum, include_before=include_before,
-                        )
-                    except ValueError:
-                        if on_error == "raise":
-                            raise
-                        continue  # semantic failure: sub-group dropped
-                    fi = dec["frame_idx"]
-                    n_rows = len(fi)
-                    if n_rows == 0:
-                        continue
-                    cols_out = {
-                        "file_seq": pa.array(file_seq[g][fi].astype("int32")),
-                        "log_pos": pa.array(log_pos[g][fi].astype("int64")),
-                        "op": pa.array(dec["op"], type=pa.string()),
-                    }
-                    by_name = {c.name: c for c in tm.columns}
-                    for prefix in ("", "_before_") if include_before else ("",):
-                        for uc in union_cols:
-                            c = by_name.get(uc.name, uc)
-                            packed = dec.get(prefix + c.name)
-                            if packed is None:
-                                # column absent from this table epoch or not
-                                # present in the row image: schema-union /
-                                # partial-image backfill
-                                cols_out[prefix + uc.name] = _pa_nulls(
-                                    n_rows, uc.spark_type()
-                                )
-                            else:
-                                cols_out[prefix + uc.name] = _assemble_col(
-                                    c, packed, n_rows
-                                )
-                    yield pa.RecordBatch.from_pydict(cols_out)
+                    for g, dec in _decode_dropping_failures(g_all[inv == si], _frames):
+                        fi = dec["frame_idx"]
+                        n_rows = len(fi)
+                        if n_rows == 0:
+                            continue
+                        cols_out = {
+                            "file_seq": pa.array(file_seq[g][fi].astype("int32")),
+                            "log_pos": pa.array(log_pos[g][fi].astype("int64")),
+                            "op": pa.array(dec["op"], type=pa.string()),
+                        }
+                        by_name = {c.name: c for c in tm.columns}
+                        for prefix in ("", "_before_") if include_before else ("",):
+                            for uc in union_cols:
+                                c = by_name.get(uc.name, uc)
+                                packed = dec.get(prefix + c.name)
+                                if packed is None:
+                                    # column absent from this table epoch or not
+                                    # present in the row image: schema-union /
+                                    # partial-image backfill
+                                    cols_out[prefix + uc.name] = _pa_nulls(
+                                        n_rows, uc.spark_type()
+                                    )
+                                else:
+                                    cols_out[prefix + uc.name] = _assemble_col(
+                                        c, packed, n_rows
+                                    )
+                        yield pa.RecordBatch.from_pydict(cols_out)
 
     return raw_df.mapInArrow(_decode, schema=out_schema)

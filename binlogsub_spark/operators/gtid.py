@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 GtidSet = dict[str, list[tuple[int, int]]]
 
@@ -226,28 +226,24 @@ def _group_rows(rows):
 def filter_executed(
     events: DataFrame,
     executed: GtidSet | str,
-    uuid_col: str = "server_uuid",
-    gno_col: str = "gno",
+    uuid_col: str | Column = "server_uuid",
+    gno_col: str | Column = "gno",
 ) -> DataFrame:
     """Drop events whose transaction is already in ``executed`` — the
     resume-replay dedup a GTID auto-position dump performs server-side,
     done here relationally: the interval table (tiny) broadcasts, events
     anti-join on ``uuid`` + BETWEEN. One broadcast, no shuffle of the
-    event stream, no per-row Python."""
+    event stream, no per-row Python. The keys are column names or
+    Columns; an event with a NULL key is kept, and an empty set returns
+    ``events`` unchanged."""
     if isinstance(executed, str):
         executed = parse_gtid_set(executed)
-    spark = events.sparkSession
-    rows = [
-        (u, s, e) for u, ivls in executed.items() for s, e in ivls
-    ]
-    ivl = spark.createDataFrame(
-        rows or [("", -1, -1)], "xuuid string, xs long, xe long"
-    )
-    cond = (
-        (F.lower(F.col(uuid_col)) == F.col("xuuid"))
-        & (F.col(gno_col) >= F.col("xs"))
-        & (F.col(gno_col) <= F.col("xe"))
-    )
+    rows = [(u, s, e) for u, ivls in executed.items() for s, e in ivls]
+    if not rows:
+        return events
+    ivl = events.sparkSession.createDataFrame(rows, "xuuid string, xs long, xe long")
+    uuid, gno = (F.col(c) if isinstance(c, str) else c for c in (uuid_col, gno_col))
+    cond = (F.lower(uuid) == F.col("xuuid")) & gno.between(F.col("xs"), F.col("xe"))
     return events.join(F.broadcast(ivl), cond, "left_anti")
 
 
@@ -255,22 +251,10 @@ def filter_executed_gtids(
     df: DataFrame, executed: GtidSet | str, gtid_col: str = "gtid"
 ) -> DataFrame:
     """``filter_executed`` over a ``uuid:gno`` string column (the shape
-    ``assign_gtids`` leaves on decoded rows): split inline inside the
-    anti-join condition — no extra projection, rows with a NULL gtid
-    (no GTID events in their file) are kept, the event stream never
-    shuffles."""
-    if isinstance(executed, str):
-        executed = parse_gtid_set(executed)
-    spark = df.sparkSession
-    rows = [(u, s, e) for u, ivls in executed.items() for s, e in ivls]
-    if not rows:
-        return df
-    ivl = spark.createDataFrame(rows, "xuuid string, xs long, xe long")
+    ``assign_gtids`` leaves on decoded rows), split inline inside the
+    anti-join condition."""
     g = F.col(gtid_col)
-    gno = F.substring_index(g, ":", -1).cast("long")
-    cond = (
-        (F.lower(F.substring_index(g, ":", 1)) == F.col("xuuid"))
-        & (gno >= F.col("xs"))
-        & (gno <= F.col("xe"))
+    return filter_executed(
+        df, executed, F.substring_index(g, ":", 1),
+        F.substring_index(g, ":", -1).cast("long"),
     )
-    return df.join(F.broadcast(ivl), cond, "left_anti")

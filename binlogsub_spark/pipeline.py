@@ -767,10 +767,13 @@ def apply_mysql_batch(
     micro-batches — the reference's table-map cache (packet.cc:194-200):
     a batch that lost its TABLE_MAP frames to a restart still decodes,
     and genuinely-unknown table_ids become detectable instead of
-    silently dropped. ``dead_letter_path`` routes structurally corrupt
-    AND semantically undecodable frames (unknown table_id, width
-    mismatch, unsupported type) to a reason-coded parquet sink before
-    decode; metrics then carry a ``dead_letter`` count.
+    silently dropped. The decode drops every frame whose
+    ``validate_mysql_frames`` verdict is not ok: structurally corrupt
+    (CRC included when ``checksum`` is on) AND semantically undecodable
+    frames (unknown table_id, width mismatch, unsupported type).
+    ``dead_letter_path`` records exactly those frames in a reason-coded
+    parquet sink, with the same registry and known ids, and never changes
+    what is applied; metrics then carry a ``dead_letter`` count.
 
     ``stash_path`` enforces TRANSACTION-atomic visibility: frames past the
     last XID_EVENT of their binlog file (a transaction the batch boundary
@@ -841,17 +844,15 @@ def apply_mysql_batch(
         overrides = (
             override_columns_by_table(registry, name_map) if name_map else None
         )
-        decode_src, skip_invalid = src, True
         if dead_letter_path is not None:
-            decode_src, dead = split_deadletter_mysql(
+            dead = split_deadletter_mysql(
                 src, checksum=checksum,
                 registry=registry, known_table_ids=known_ids,
             )
             extra["dead_letter"] = _write_by_batch(dead, batch_id, dead_letter_path)
-            skip_invalid = False  # already fully verified
         decoded = decode_mysql_events(
-            decode_src, registry, column_overrides=overrides, checksum=checksum,
-            skip_invalid=skip_invalid, known_table_ids=known_ids,
+            src, registry, column_overrides=overrides, checksum=checksum,
+            known_table_ids=known_ids,
         )
         if (
             gtid_lineage

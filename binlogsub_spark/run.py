@@ -115,8 +115,9 @@ def main(argv: list[str] | None = None) -> int:
     )
     ap.add_argument(
         "--dead-letter", default=None,
-        help="mysql/raw mode: parquet path for reason-coded undecodable "
-        "frames (batch_id-partitioned, idempotent on replay)",
+        help="mysql/raw mode: parquet path recording the frames the decoder "
+        "drops, reason-coded (batch_id-partitioned, idempotent on replay; "
+        "the table is the same without it)",
     )
     ap.add_argument(
         "--changes", default=None, metavar="FROM[,TO]",

@@ -89,6 +89,8 @@ def _source(spark, root, path: str, i: int):
     """The batch DataFrame the path's apply function takes."""
     if path == "debezium":
         return decode_debezium(spark.read.text(str(root / f"debezium{i}")))
+    if path == "mysql_dead_letter":
+        path = "mysql"
     return spark.read.parquet(str(root / f"{path}{i}"))
 
 
@@ -106,23 +108,26 @@ def _apply(spark, root, path: str, table_dir, i: int, registry_cache: dict):
     table = LakeTable(spark, str(table_dir), buckets=8)
     if path == "raw":
         return apply_raw_batch(table, src, batch_id, cfg), src
-    if path == "mysql":
+    if path.startswith("mysql"):
         # table maps sit at the head of the first binlog file only; later
         # batches decode through the cross-batch cache, as the stream does
+        dead = f"{table_dir}_dead" if path == "mysql_dead_letter" else None
         return apply_mysql_batch(
             table, src, batch_id, cfg, name_map=_name_map(),
-            registry_cache=registry_cache,
+            registry_cache=registry_cache, dead_letter_path=dead,
         ), src
     return apply_batch(table, src, batch_id, cfg), src
 
 
 # Spark jobs per apply call: (fresh table, non-fresh table). Any job the
-# commit core adds or drops shows up here.
+# commit core adds or drops shows up here. The MySQL dead-letter sink costs
+# exactly its one write job on top of the plain MySQL path.
 JOBS = {
     "structured": (6, 6),
     "debezium": (6, 6),
     "raw": (6, 6),
     "mysql": (7, 10),
+    "mysql_dead_letter": (8, 11),
     "multi": (12, 12),
 }
 

@@ -111,6 +111,21 @@ def test_split_and_filter_executed_resume(spark):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_filter_executed_gtids_and_empty_set(spark):
+    """The ``uuid:gno`` string form runs the same anti-join (upper-case
+    uuids match, a NULL gtid is kept); an empty executed set returns the
+    input itself, with no join."""
+    from binlogsub_spark.operators.gtid import filter_executed_gtids
+
+    rows = [(f"{U1.upper()}:{g}", g) for g in range(1, 8)] + [(None, 0)]
+    df = spark.createDataFrame(rows, "gtid string, n long")
+    out = filter_executed_gtids(df, {U1: [(2, 4)]})
+    assert sorted(r["n"] for r in out.collect()) == [0, 1, 5, 6, 7]
+    assert filter_executed_gtids(df, "") is df
+    events = df.select("*", *split_gtid("gtid"))
+    assert filter_executed(events, {}) is events
+
+
 def test_executed_roundtrip_through_collect(spark):
     from binlogsub_spark.operators.gtid import collect_gtid_set
 

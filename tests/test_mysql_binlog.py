@@ -16,6 +16,7 @@ from binlogsub_spark.codec import _gather_headers
 from binlogsub_spark.mysql_binlog import (
     _HEADER_DT,
     DELETE_ROWS_EVENT_V2,
+    HEADER_LEN,
     MYSQL_TYPE_BLOB,
     MYSQL_TYPE_DATETIME2,
     MYSQL_TYPE_DOUBLE,
@@ -36,6 +37,7 @@ from binlogsub_spark.mysql_binlog import (
     UPDATE_ROWS_EVENT_V2,
     WRITE_ROWS_EVENT_V1,
     WRITE_ROWS_EVENT_V2,
+    validate_mysql_frames,
     MysqlColumn,
     TableMap,
     decode_mysql_events,
@@ -358,8 +360,8 @@ def test_crc32_frames_matches_zlib():
 
 
 def test_validate_verify_crc_flag():
-    """A bit-flipped payload passes the cheap length checks (decode hot
-    path, verify_crc=False) but is caught by the demux-grade full check."""
+    """A bit-flipped payload with intact lengths fails the CRC check, which
+    runs whenever checksums are on."""
     from binlogsub_spark.mysql_binlog import validate_mysql_frames
 
     tm = _tmap()
@@ -371,10 +373,6 @@ def test_validate_verify_crc_flag():
     data, starts, ends = _frames_np([bytes(frame)])
     full = validate_mysql_frames(data, starts, ends, checksum=True)
     assert full.tolist() == [3]  # bad_crc
-    cheap = validate_mysql_frames(
-        data, starts, ends, checksum=True, verify_crc=False
-    )
-    assert cheap.tolist() == [0]
 
 
 def test_full_type_matrix_decode():
@@ -661,28 +659,20 @@ def test_semantic_deadletter_and_unknown_tid(spark):
     df = _frames_df(spark, frames)
     registry = {31: tm, 55: json_tm}
     known = {31, 55, 77}
-    valid, dead = split_deadletter_mysql(
-        df, registry=registry, known_table_ids=known
-    )
+    dead = split_deadletter_mysql(df, registry=registry, known_table_ids=known)
     reasons = {r["log_pos"]: r["_reason"] for r in dead.collect()}
     assert reasons == {
         1: "unknown_table_id",
         3: "unsupported_type",
         4: "width_mismatch",
     }
-    # the whole batch still decodes: one good row, nothing raises
-    got = decode_mysql_events(
-        valid, registry, skip_invalid=False, known_table_ids=known
-    ).collect()
+    # the decode drops exactly those frames: one good row, nothing raises
+    got = decode_mysql_events(df, registry, known_table_ids=known).collect()
     assert [(r["pk"], r["txt"]) for r in got] == [(1, "ok")]
-    # decode alone (no demux) also survives the same soup silently
-    got2 = decode_mysql_events(df, registry, known_table_ids=known).collect()
-    assert [(r["pk"], r["txt"]) for r in got2] == [(1, "ok")]
-    # ... but on_error='raise' surfaces the first decode error (the
-    # width mismatch on the lowest tid group precedes the unknown id)
-    with pytest.raises(Exception, match="width != table-map|unknown table_id"):
+    # skip_invalid=False trusts its caller: a failing frame raises, named
+    with pytest.raises(Exception, match="failed validation: (unknown_table_id|uns|wid)"):
         decode_mysql_events(
-            df, registry, known_table_ids=known, on_error="raise"
+            df, registry, skip_invalid=False, known_table_ids=known
         ).collect()
 
 
@@ -855,12 +845,11 @@ def test_rows_v0_generation_deadletters(spark):
     v0 = _finish_event(20, tm.table_id.to_bytes(6, "little") + b"\x00" * 4)
     ok = encode_rows_event(WRITE_ROWS_EVENT_V2, tm, [(1, 10, "fine", 1.0)])
     df = _frames_df(spark, [v0, ok], tmaps=[tm])
-    valid, dead = split_deadletter_mysql(
+    dead = split_deadletter_mysql(
         df, registry={tm.table_id: tm}, known_table_ids={tm.table_id}
     )
     reasons = [r["_reason"] for r in dead.collect()]
     assert reasons == ["unsupported_event"]
-    assert valid.count() == 2  # table map + the good rows event
 
 
 # --------------------------------------------------- wide decimals (39-65) --
@@ -925,3 +914,107 @@ try:
         assert int(got[0]) == scaled
 except ImportError:  # pragma: no cover
     pass
+
+
+# ------------------------------------------------------ one frame verdict --
+# offset of the VARCHAR length byte in a one-row v2 write of _small_tmap:
+# header + table_id + flags + extra-data + width + bitmap + null bitmap +
+# pk (LONGLONG) + a (LONG)
+_TXT_LEN_AT = 19 + 6 + 2 + 2 + 1 + 1 + 1 + 8 + 4
+
+
+def _three_writes(checksum: bool):
+    tm = _small_tmap(31)
+    frames = [
+        bytearray(encode_rows_event(
+            WRITE_ROWS_EVENT_V2, tm, [(pk, pk * 10, f"row{pk}", 1.0)],
+            checksum=checksum,
+        ))
+        for pk in (1, 2, 3)
+    ]
+    assert frames[1][_TXT_LEN_AT] == len("row2")
+    frames[1][_TXT_LEN_AT] = 200  # the middle frame's text now overruns
+    return tm, [bytes(f) for f in frames]
+
+
+def test_overrun_raises_before_reading_past_the_body():
+    """A VARCHAR length that runs past its frame raises ValueError before
+    the gather, never IndexError from reading past the buffer."""
+    tm, frames = _three_writes(checksum=False)
+    data, starts, ends = _frames_np(frames)
+    codes = np.full(3, WRITE_ROWS_EVENT_V2, np.uint8)
+    with pytest.raises(ValueError, match="overran"):
+        decode_rows_frames(data, starts, ends, codes, tm)
+    keep = [0, 2]
+    dec = decode_rows_frames(data, starts[keep], ends[keep], codes[keep], tm)
+    assert dec["pk"][0].tolist() == [1, 3]
+
+
+def test_overrun_drops_only_the_damaged_frame(spark):
+    """Checksums off: the three frames share one bitmap group in one Arrow
+    batch; the group is decoded again in halves, so pk 1 and pk 3 land."""
+    tm, frames = _three_writes(checksum=False)
+    df = _frames_df(spark, frames, tmaps=[tm]).coalesce(1)
+    got = decode_mysql_events(df, {tm.table_id: tm}).collect()
+    assert sorted((r["pk"], r["txt"]) for r in got) == [(1, "row1"), (3, "row3")]
+
+
+def test_damaged_table_map_is_not_parsed(spark):
+    """A table map whose CRC fails never enters the registry."""
+    good, bad = _small_tmap(31), bytearray(encode_table_map(_small_tmap(32), checksum=True))
+    bad[HEADER_LEN] ^= 0x40  # table_id 32 -> 96, CRC now fails
+    df = _frames_df(spark, [encode_table_map(good, checksum=True), bytes(bad)])
+    assert set(extract_table_maps(df, checksum=True)) == {31}
+
+
+_VERDICT_BATCH = (
+    (WRITE_ROWS_EVENT_V2, [(1, 10, "one", 1.0), (2, None, "two", 2.0)]),
+    (UPDATE_ROWS_EVENT_V2, [((1, 10, "one", 1.0), (1, 11, "uno", 1.5))]),
+    (DELETE_ROWS_EVENT_V2, [(2, None, "two", 2.0)]),
+    (WRITE_ROWS_EVENT_V2, [(3, 30, "", None)]),
+    (WRITE_ROWS_EVENT_V1, [(4, 40, "four", 4.0)]),
+)
+
+
+@settings(max_examples=50, deadline=None)
+@given(
+    frame=st.integers(0, len(_VERDICT_BATCH)),
+    at=st.integers(0, 10_000),
+    flip=st.integers(1, 255),
+    truncate=st.booleans(),
+)
+def test_verdict_drops_every_damaged_frame_property(frame, at, flip, truncate):
+    """Hypothesis: one flipped byte or one truncation anywhere in a small
+    checksummed batch (table map + rows-events of every kind). The
+    reason-ok rows-events decode together without raising, and the damaged
+    frame is decoded only if its verdict is ok, which with CRC32 it never
+    is."""
+    from binlogsub_spark.mysql_binlog import ROWS_EVENTS
+
+    tm = _small_tmap(31)
+    frames = [encode_table_map(tm, checksum=True)] + [
+        encode_rows_event(code, tm, rows, checksum=True)
+        for code, rows in _VERDICT_BATCH
+    ]
+    damaged = bytearray(frames[frame])
+    at %= len(damaged)
+    if truncate:
+        del damaged[at:]
+    else:
+        damaged[at] ^= flip
+    frames[frame] = bytes(damaged)
+    data, starts, ends = _frames_np(frames)
+    reasons = validate_mysql_frames(
+        data, starts, ends, True, {tm.table_id: tm}, frozenset({tm.table_id})
+    )
+    assert reasons[frame] != 0
+    ok = np.flatnonzero(reasons == 0)
+    codes = data[starts[ok] + 4]
+    rows_ok = ok[np.isin(codes, ROWS_EVENTS)]
+    dec = decode_rows_frames(
+        data, starts[rows_ok], ends[rows_ok], data[starts[rows_ok] + 4], tm,
+        checksum=True,
+    )
+    decoded = set(rows_ok[dec["frame_idx"]].tolist())
+    assert decoded == set(rows_ok.tolist())
+    assert frame not in decoded or reasons[frame] == 0

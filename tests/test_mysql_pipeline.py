@@ -238,7 +238,6 @@ def test_mysql_frames_deadletter_and_resilient_decode(spark, tmp_path):
     src = str(tmp_path / "m")
     write_mysql_binlog(spark, src, GeneratorParams(n_events=2000, dup_tail=0), n_files=4)
     raw = spark.read.parquet(src)
-    n = raw.count()
     m = F.col("log_pos") % 40
     corrupted = raw.withColumn(
         "payload",
@@ -249,14 +248,13 @@ def test_mysql_frames_deadletter_and_resilient_decode(spark, tmp_path):
             "concat(substring(payload, 1, length(payload) - 4), X'00000000')"))
         .otherwise(F.col("payload")),
     )
-    valid, dead = split_deadletter_mysql(corrupted, checksum=True)
+    dead = split_deadletter_mysql(corrupted, checksum=True)
     got = {r["_reason"]: r["n"] for r in dead.groupBy("_reason").agg(
         F.count("*").alias("n")).collect()}
     # control frames have log_pos 0 (m==0), data frames log_pos%40 in {4,12,20,28,36}
     for reason, k in (("short_frame", 4), ("len_mismatch", 12), ("bad_crc", 20)):
         want = corrupted.where(m == k).count()
         assert got.get(reason, 0) == want > 0, (reason, got)
-    assert valid.count() + dead.count() == n
 
     # decoder over the corrupted stream: survives, decodes only valid rows
     reg = scope_registry(extract_table_maps(raw, checksum=True), EngineConfig())
@@ -427,3 +425,68 @@ def test_dead_letter_sink_and_metrics(spark, tmp_path):
     dead2 = spark.read.parquet(dl)
     assert dead2.count() == n_bad  # unchanged, not doubled
     assert set(dead2.select("batch_id").distinct().toPandas()["batch_id"]) == {1}
+
+
+def test_dead_letter_sink_never_changes_the_table(spark, tmp_path):
+    """Checksums on: one rows frame with a flipped text byte and one whose
+    VARCHAR length was raised both fail their CRC. The decode drops them
+    whether or not a dead-letter sink is set, so both tables read back
+    equal to the batch applied without those two frames, neither holds the
+    flipped text, and the sink records both frames as bad_crc."""
+    from binlogsub_spark.mysql_binlog import MYSQL_RAW_SCHEMA, decode_mysql_events
+
+    src = str(tmp_path / "m")
+    write_mysql_binlog(spark, src, GeneratorParams(n_events=600, n_convs=20, dup_tail=0), n_files=2)
+    frames = [
+        (r["file_seq"], r["log_pos"], bytes(r["payload"]))
+        for r in spark.read.parquet(src).collect()
+    ]
+    inserts = decode_mysql_events(
+        spark.createDataFrame(frames, MYSQL_RAW_SCHEMA),
+        {12: transcripts_table_maps()[12]}, checksum=True,
+    ).where("op = 'I'").collect()
+    # rows-events have unique positions (table maps all sit at log_pos 0)
+    at = {(fs, lp): i for i, (fs, lp, _) in enumerate(frames) if lp}
+    picks = []
+    for r in inserts:
+        i, text = at[(r["file_seq"], r["log_pos"])], r["text"].encode()
+        if len(text) >= 5 and frames[i][2].count(text) == 1:
+            picks.append((i, frames[i][2].find(text)))
+        if len(picks) == 2:
+            break
+    (flip_i, flip_at), (len_i, len_at) = picks
+    flipped = bytearray(frames[flip_i][2])
+    flipped[flip_at] ^= 0x02  # 'H' -> 'J': a plausible value, lengths intact
+    raised = bytearray(frames[len_i][2])
+    raised[len_at - 1] += 1  # high byte of the 2-byte length prefix: +256
+    damaged = {flip_i: bytes(flipped), len_i: bytes(raised)}
+
+    def _batch(drop: bool):
+        rows = [
+            (fs, lp, damaged.get(i, p))
+            for i, (fs, lp, p) in enumerate(frames)
+            if not (drop and i in damaged)
+        ]
+        return spark.createDataFrame(rows, MYSQL_RAW_SCHEMA)
+
+    def _apply(name, drop=False, dead=None):
+        t = LakeTable(spark, str(tmp_path / name), buckets=8)
+        m = apply_mysql_batch(
+            t, _batch(drop), batch_id=1, cfg=EngineConfig(), name_map=_name_map(),
+            dead_letter_path=dead,
+        )
+        return _final(t.read()), m
+
+    dead_path = str(tmp_path / "dead")
+    plain, _ = _apply("plain")
+    sunk, m = _apply("sunk", dead=dead_path)
+    want, _ = _apply("want", drop=True)
+    assert plain == sunk == want
+    flipped_text = bytes(flipped[flip_at : flip_at + 5]).decode(errors="replace")
+    assert not any(flipped_text in (v[1] or "") for v in plain.values())
+    dead = spark.read.parquet(dead_path).collect()
+    assert m["dead_letter"] == 2
+    assert sorted((r["file_seq"], r["log_pos"], r["_reason"]) for r in dead) == sorted(
+        frames[i][:2] + ("bad_crc",) for i in damaged
+    )
+    assert len(want) > 100  # the batch still lands: only two frames dropped

@@ -293,13 +293,18 @@ def _parse_container(buf, code: int, pos: int):
 
 
 def binary_to_json_value(buf):
-    """Full binary JSON value (type byte + payload) -> Python value."""
+    """Full binary JSON value (type byte + payload) -> Python value. A
+    malformed document (an offset or count past its bytes, an unknown
+    literal, an offset cycle) raises ``ValueError``."""
     if len(buf) == 0:
         return None
     code = buf[0]
-    if code in (J_SMALL_OBJECT, J_LARGE_OBJECT, J_SMALL_ARRAY, J_LARGE_ARRAY):
-        return _parse_container(buf, code, 1)
-    return _parse_value(buf, code, 1)
+    try:
+        if code in (J_SMALL_OBJECT, J_LARGE_OBJECT, J_SMALL_ARRAY, J_LARGE_ARRAY):
+            return _parse_container(buf, code, 1)
+        return _parse_value(buf, code, 1)
+    except (IndexError, KeyError, struct.error, RecursionError) as e:
+        raise ValueError(f"malformed binary JSON: {e!r}") from e
 
 
 def binary_to_json_text(buf) -> str:

@@ -658,39 +658,38 @@ def _head_width(col: MysqlColumn) -> int:
     raise ValueError(f"unsupported decode type {c}")
 
 
-def _read_column_values(data: np.ndarray, p: np.ndarray, col: MysqlColumn):
+def _read_column_values(data: np.ndarray, p: np.ndarray, col: MysqlColumn, w: int):
     """Parse one column's values at positions ``p`` (vectorized): a values
     ndarray, or ``("varlen", value starts, value lengths)`` for
-    length-prefixed columns. The caller bounds-checks and advances. The
-    per-type dispatch mirrors ParseColumnValue (event.cc:413-809), one
-    numpy pass per type."""
+    length-prefixed columns. ``w`` is the column's ``_head_width``, which
+    the caller has bounds-checked: every fixed read here is ``w`` bytes
+    wide. The per-type dispatch mirrors ParseColumnValue (event.cc:413-809),
+    one numpy pass per type."""
     c = col.ctype
     if _is_varlen(col):
-        lp = _head_width(col)
-        return ("varlen", p + lp, uint_korr(data, p, lp).astype(np.int64))
+        return ("varlen", p + w, uint_korr(data, p, w).astype(np.int64))
     if c in _INT_WIDTH:
-        w = _INT_WIDTH[c]
         return _signed(uint_korr(data, p, w), w)
     if c == MYSQL_TYPE_YEAR:
-        return data[p].astype(np.int64) + 1900
+        return uint_korr(data, p, w).astype(np.int64) + 1900
     if c == MYSQL_TYPE_FLOAT:
-        return np.ascontiguousarray(_gather_fixed(data, p, 4)).view("<f4").ravel().astype(np.float64)
+        return np.ascontiguousarray(_gather_fixed(data, p, w)).view("<f4").ravel().astype(np.float64)
     if c == MYSQL_TYPE_DOUBLE:
-        return np.ascontiguousarray(_gather_fixed(data, p, 8)).view("<f8").ravel()
+        return np.ascontiguousarray(_gather_fixed(data, p, w)).view("<f8").ravel()
     if c == MYSQL_TYPE_STRING:  # ENUM/SET codes (event.cc:607-636)
-        return uint_korr(data, p, col.meta[1]).astype(np.int64)
+        return uint_korr(data, p, w).astype(np.int64)
     if c == MYSQL_TYPE_NEWDECIMAL:
         prec, scale = col.meta
         decode = _decode_newdecimal_scaled if prec <= 18 else _decode_newdecimal_wide
         return decode(data, p, prec, scale)[0]
     if c in (MYSQL_TYPE_DATE, MYSQL_TYPE_NEWDATE):
         # 3-byte packed (year << 9 | month << 5 | day), event.cc:563-598
-        v = uint_korr(data, p, 3).astype(np.int64)
+        v = uint_korr(data, p, w).astype(np.int64)
         return _days_from_civil(v >> 9, (v >> 5) & 15, v & 31)
     if c == MYSQL_TYPE_TIMESTAMP:  # v1: u32 LE epoch seconds (event.cc:534-541)
-        return uint_korr(data, p, 4).astype(np.int64) * 1_000_000
+        return uint_korr(data, p, w).astype(np.int64) * 1_000_000
     if c == MYSQL_TYPE_DATETIME:  # v1: u64 LE YYYYMMDDHHMMSS (event.cc:542-554)
-        v = uint_korr(data, p, 8).astype(np.int64)
+        v = uint_korr(data, p, w).astype(np.int64)
         d, t = v // 1_000_000, v % 1_000_000
         days = _days_from_civil(d // 10000, (d // 100) % 100, d % 100)
         secs = (t // 10000) * 3600 + ((t // 100) % 100) * 60 + t % 100
@@ -699,47 +698,41 @@ def _read_column_values(data: np.ndarray, p: np.ndarray, col: MysqlColumn):
         # v1: SIGNED 3-byte LE HHMMSS pack (sint3korr in MySQL; the
         # reference reads it unsigned, event.cc:555-562 — a negative-TIME
         # bug there; we follow the server) -> signed microseconds
-        v = _signed(uint_korr(data, p, 3), 3)
+        v = _signed(uint_korr(data, p, w), w)
         av = np.abs(v)
         us = ((av // 10000) * 3600 + ((av // 100) % 100) * 60 + av % 100) * 1_000_000
         return np.where(v < 0, -us, us)
     if c == MYSQL_TYPE_BIT:  # big-endian bit field (event.cc:703-710)
-        return _u_be(data, p, _head_width(col)).astype(np.int64)
+        return _u_be(data, p, w).astype(np.int64)
+    # fractional-second types: base bytes, then w - base fraction bytes
+    base = _FSP_BASE_WIDTH[c]
+    nb = w - base
+    frac = _u_be(data, p + base, nb).astype(np.int64)
     if c == MYSQL_TYPE_DATETIME2:
-        nb = (int(col.meta or 0) + 1) // 2
-        packed = _u_be(data, p, 5).astype(np.int64) & ((1 << 39) - 1)
+        packed = _u_be(data, p, base).astype(np.int64) & ((1 << 39) - 1)
         ym = (packed >> 22) & ((1 << 17) - 1)
         year, month = ym // 13, ym % 13
         day = (packed >> 17) & 0x1F
         hour = (packed >> 12) & 0x1F
         minute = (packed >> 6) & 0x3F
         second = packed & 0x3F
-        micros = (
-            _u_be(data, p + 5, nb).astype(np.int64) * 10 ** (6 - 2 * nb) if nb else 0
-        )
         days = _days_from_civil(year, month, day)
-        return (days * 86400 + hour * 3600 + minute * 60 + second) * 1_000_000 + micros
+        secs = days * 86400 + hour * 3600 + minute * 60 + second
+        return secs * 1_000_000 + frac * 10 ** (6 - 2 * nb)
     if c == MYSQL_TYPE_TIMESTAMP2:
-        nb = (int(col.meta or 0) + 1) // 2
-        secs = _u_be(data, p, 4).astype(np.int64)
-        micros = (
-            _u_be(data, p + 4, nb).astype(np.int64) * 10 ** (6 - 2 * nb) if nb else 0
-        )
-        return secs * 1_000_000 + micros
-    if c == MYSQL_TYPE_TIME2:
-        nb = (int(col.meta or 0) + 1) // 2
-        intpart = _u_be(data, p, 3).astype(np.int64) - 0x800000
-        frac = _u_be(data, p + 3, nb).astype(np.int64) if nb else np.zeros(len(p), np.int64)
-        neg = intpart < 0
-        adjust = neg & (frac != 0)
-        intpart = intpart + adjust
-        frac = np.where(adjust, 0x100**nb - frac, frac)
-        v = np.abs(intpart)
-        total_us = (
-            ((v >> 12) & 0x3FF) * 3600 + ((v >> 6) & 0x3F) * 60 + (v & 0x3F)
-        ) * 1_000_000 + (frac * 10 ** (6 - 2 * nb) if nb else 0)
-        return np.where(neg, -total_us, total_us)
-    raise ValueError(f"unsupported decode type {c}")
+        secs = _u_be(data, p, base).astype(np.int64)
+        return secs * 1_000_000 + frac * 10 ** (6 - 2 * nb)
+    # TIME2
+    intpart = _u_be(data, p, base).astype(np.int64) - 0x800000
+    neg = intpart < 0
+    adjust = neg & (frac != 0)
+    intpart = intpart + adjust
+    frac = np.where(adjust, 0x100**nb - frac, frac)
+    v = np.abs(intpart)
+    total_us = (
+        ((v >> 12) & 0x3FF) * 3600 + ((v >> 6) & 0x3F) * 60 + (v & 0x3F)
+    ) * 1_000_000 + frac * 10 ** (6 - 2 * nb)
+    return np.where(neg, -total_us, total_us)
 
 
 _OVERRUN = "rows-event parse overran the event body"
@@ -757,7 +750,7 @@ def _read_column(
     head = _head_width(col)
     if (p + head > end).any():
         raise ValueError(_OVERRUN)
-    vals = _read_column_values(data, p, col)
+    vals = _read_column_values(data, p, col, head)
     widths = head
     if isinstance(vals, tuple):  # varlen: the bytes follow the prefix
         widths = head + vals[2]
@@ -1415,9 +1408,8 @@ def validate_mysql_frames(
     bitmaps that run past the body.
 
     The decoder drops exactly the non-ok frames and the dead-letter sink
-    records exactly them, so a corrupt frame never aborts the stream and
-    the sink never changes what is applied. Every read stays inside its
-    own frame."""
+    records exactly them, so the sink never changes what is applied.
+    Every read stays inside its own frame."""
     n = len(starts)
     lens = ends - starts
     trailer = 4 if checksum else 0
@@ -1705,11 +1697,11 @@ def registry_from_json(s: str) -> dict[int, TableMap]:
 
 
 def _decode_dropping_failures(g: np.ndarray, decode) -> list:
-    """``decode(g)`` over frame indices ``g`` -> ``[(frames, decoded)]``.
+    """``decode(g)`` over frame indices ``g`` -> ``[decoded, ...]``.
     A group that raises ``ValueError`` is decoded again in halves, so only
     the frames that fail on their own drop, never their neighbours."""
     try:
-        return [(g, decode(g))]
+        return [decode(g)]
     except ValueError:
         if len(g) == 1:
             return []
@@ -1734,12 +1726,12 @@ def decode_mysql_events(
     included whenever ``checksum`` is on, then the rows-event checks
     against the registry and ``known_table_ids``) and decodes only the
     frames whose verdict is ok: exactly the frames
-    ``split_deadletter_mysql`` does not record. ``skip_invalid=False``
-    trusts the caller instead: a frame whose verdict is not ok raises
-    ``ValueError`` naming its reason. Rows-events whose table_id is in
-    ``known_table_ids`` but not in ``registry`` are the intentional scope
-    filter; without ``known_table_ids`` every id outside the registry
-    counts as unknown.
+    ``split_deadletter_mysql`` does not record. ``skip_invalid`` is kept
+    for existing callers; only ``True`` is supported and the value is not
+    read (``split_deadletter_mysql`` names the failing frames). Rows-events
+    whose table_id is in ``known_table_ids`` but not in ``registry`` are
+    the intentional scope filter; without ``known_table_ids`` every id
+    outside the registry counts as unknown.
 
     ``registry`` maps table_id -> TableMap (extracted+broadcast if omitted);
     ``column_overrides`` replaces a table's parsed columns with named/
@@ -1760,9 +1752,11 @@ def decode_mysql_events(
     (FULL/MINIMAL/NOBLOB) decodes — absent image columns become NULLs.
     ``include_before`` adds "_before_<col>" output columns carrying UPDATE
     before images (parity with the reference Row old_columns, row.h:40-41).
-    A group that still fails to decode (a value running past its body
-    when checksums are off) is decoded again in halves, so only the frames
-    that fail drop; the task never aborts."""
+    With checksums off a damaged value can pass the verdict. A group whose
+    decode or column assembly raises ``ValueError`` on one (a value past
+    its body, an ENUM code past its values, malformed binary JSON) is
+    decoded again in halves, so only the frames that fail drop; the sink
+    does not record them. Damage that still decodes is applied as read."""
     import pyarrow as pa
 
     if registry is None:
@@ -1918,6 +1912,8 @@ def decode_mysql_events(
 
             lut = pa.array([None] + list(c.enum_values), type=pa.string())
             idx = np.where(nulls, 0, vals).astype(np.int64)
+            if (idx >= len(lut)).any():
+                raise ValueError(f"column {c.name!r}: ENUM code past its values")
             return pc.take(lut, pa.array(idx))
         if c.ctype == MYSQL_TYPE_STRING and c.set_values:
             # SET bitmask -> comma-joined member names (bit i -> member i,
@@ -1945,16 +1941,14 @@ def decode_mysql_events(
             reasons = validate_mysql_frames(
                 data, starts, ends, checksum, reg, known_ids
             )
-            if not skip_invalid and reasons.any():
-                bad = int(np.flatnonzero(reasons)[0])
-                raise ValueError(
-                    f"frame at log_pos {rb.column(1)[bad].as_py()} failed "
-                    f"validation: {MYSQL_REASON_NAMES[reasons[bad]]}"
-                )
             file_seq = rb.column(0).to_numpy(zero_copy_only=False)
             log_pos = rb.column(1).to_numpy(zero_copy_only=False)
-            tcodes = data[starts + 4]
-            ridx = np.flatnonzero((reasons == 0) & np.isin(tcodes, ROWS_EVENTS))
+            # the type byte is read only where the verdict passed: a failed
+            # frame may be shorter than a header, or the batch's last bytes
+            ok = np.flatnonzero(reasons == 0)
+            tcodes = np.zeros(len(starts), dtype=np.uint8)
+            tcodes[ok] = data[starts[ok] + 4]
+            ridx = ok[np.isin(tcodes[ok], ROWS_EVENTS)]
             table_ids = uint_korr(data, starts[ridx] + HEADER_LEN, 6).astype(np.int64)
             for tid in np.unique(table_ids):
                 tm = reg.get(int(tid))
@@ -1967,40 +1961,45 @@ def decode_mysql_events(
                     data, starts[g_all], tcodes[g_all], len(tm.columns)
                 )
                 _, inv = np.unique(sig, axis=0, return_inverse=True)
+                by_name = {c.name: c for c in tm.columns}
 
-                def _frames(g):
-                    return decode_rows_frames(
+                def _batch(g):
+                    """Frames ``g`` -> one output RecordBatch (None when
+                    they carry no rows); decode and column assembly both
+                    run inside the halving retry."""
+                    dec = decode_rows_frames(
                         data, starts[g], ends[g], tcodes[g], tm,
                         checksum=checksum, include_before=include_before,
                     )
+                    fi = dec["frame_idx"]
+                    n_rows = len(fi)
+                    if n_rows == 0:
+                        return None
+                    cols_out = {
+                        "file_seq": pa.array(file_seq[g][fi].astype("int32")),
+                        "log_pos": pa.array(log_pos[g][fi].astype("int64")),
+                        "op": pa.array(dec["op"], type=pa.string()),
+                    }
+                    for prefix in ("", "_before_") if include_before else ("",):
+                        for uc in union_cols:
+                            c = by_name.get(uc.name, uc)
+                            packed = dec.get(prefix + c.name)
+                            if packed is None:
+                                # column absent from this table epoch or not
+                                # present in the row image: schema-union /
+                                # partial-image backfill
+                                cols_out[prefix + uc.name] = _pa_nulls(
+                                    n_rows, uc.spark_type()
+                                )
+                            else:
+                                cols_out[prefix + uc.name] = _assemble_col(
+                                    c, packed, n_rows
+                                )
+                    return pa.RecordBatch.from_pydict(cols_out)
 
                 for si in range(int(inv.max()) + 1):
-                    for g, dec in _decode_dropping_failures(g_all[inv == si], _frames):
-                        fi = dec["frame_idx"]
-                        n_rows = len(fi)
-                        if n_rows == 0:
-                            continue
-                        cols_out = {
-                            "file_seq": pa.array(file_seq[g][fi].astype("int32")),
-                            "log_pos": pa.array(log_pos[g][fi].astype("int64")),
-                            "op": pa.array(dec["op"], type=pa.string()),
-                        }
-                        by_name = {c.name: c for c in tm.columns}
-                        for prefix in ("", "_before_") if include_before else ("",):
-                            for uc in union_cols:
-                                c = by_name.get(uc.name, uc)
-                                packed = dec.get(prefix + c.name)
-                                if packed is None:
-                                    # column absent from this table epoch or not
-                                    # present in the row image: schema-union /
-                                    # partial-image backfill
-                                    cols_out[prefix + uc.name] = _pa_nulls(
-                                        n_rows, uc.spark_type()
-                                    )
-                                else:
-                                    cols_out[prefix + uc.name] = _assemble_col(
-                                        c, packed, n_rows
-                                    )
-                        yield pa.RecordBatch.from_pydict(cols_out)
+                    for out in _decode_dropping_failures(g_all[inv == si], _batch):
+                        if out is not None:
+                            yield out
 
     return raw_df.mapInArrow(_decode, schema=out_schema)
